@@ -10,6 +10,8 @@ interprets its AST directly against the storage API, SURVEY §3.1).
 Every statement returns a DataFrame (DDL returns a one-row status
 frame) so a REPL can treat results uniformly, like the reference's
 wire protocol does with string vs array responses (src/encoding.c).
+Status and meta replies are local relations, so building and
+collecting them runs no Spark job.
 """
 
 from __future__ import annotations
@@ -18,13 +20,14 @@ import tempfile
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql import types as Ty
 
 from raft_c_spark.catalog import Catalog, CatalogError
 from raft_c_spark.frontend import ast
 from raft_c_spark.frontend.eval import eval_timeunit
 from raft_c_spark.frontend.parser import parse
 from raft_c_spark.operators import tsdb
-from raft_c_spark.sources.tsstore import TimeSeriesStore
+from raft_c_spark.sources.tsstore import TimeSeriesStore, local_frame
 
 
 class ExecutionError(RuntimeError):
@@ -75,8 +78,14 @@ class Engine:
 
     # -- helpers -----------------------------------------------------------
 
+    def _text_frame(self, column: str, values: list[str]) -> DataFrame:
+        """One string column as a local relation: building and
+        collecting a reply runs no Spark job."""
+        schema = Ty.StructType([Ty.StructField(column, Ty.StringType())])
+        return local_frame(self.spark, [(v,) for v in values], schema)
+
     def _status(self, msg: str) -> DataFrame:
-        return self.spark.createDataFrame([(msg,)], "status: string")
+        return self._text_frame("status", [msg])
 
     def _db(self) -> str:
         if self.current_db is None:
@@ -129,12 +138,8 @@ class Engine:
         """.databases / .timeseries — executor-stubbed in the reference
         (src/statement_execute.c:467-471); implemented fully."""
         if stmt.command == "databases":
-            names = self.catalog.databases()
-            return self.spark.createDataFrame(
-                [(n,) for n in names] or [], "database: string"
-            )
-        names = sorted(self.catalog.series(self._db()))
-        return self.spark.createDataFrame([(n,) for n in names] or [], "series: string")
+            return self._text_frame("database", self.catalog.databases())
+        return self._text_frame("series", sorted(self.catalog.series(self._db())))
 
     # -- DML ---------------------------------------------------------------
 
@@ -161,24 +166,17 @@ class Engine:
     def _exec_select(self, stmt: ast.Select, now: int | None) -> DataFrame:
         db = self._db()
         opts = self.catalog.series_opts(db, stmt.ts_name)
-        points = self.store.read(
-            db,
-            series=stmt.ts_name,
-            retention_ns=opts.get("retention_ns"),
-            now=now,
-        )
 
-        t0 = t1 = None
+        # t0/t1: the statement's range; lo/hi: the bounds the store
+        # scan applies
+        t0 = t1 = lo = hi = None
         if isinstance(stmt.selector, ast.Interval):
             t0 = eval_timeunit(stmt.selector.start, now)
             t1 = eval_timeunit(stmt.selector.end, now)
             if t0 > t1:
                 raise tsdb.InvalidRangeError(f"invalid range: {t0} > {t1}")
             if stmt.sampling is None:
-                points = points.filter(
-                    (F.col("timestamp") >= F.lit(t0))
-                    & (F.col("timestamp") <= F.lit(t1))
-                )
+                lo, hi = t0, t1
             # when sampling, sample_by owns the range: ts_avg_sample
             # normalizes t0 *down* to an interval multiple and scans
             # [t0_norm, t1] (src/timeseries.c:1273-1276) — a pre-filter
@@ -187,7 +185,15 @@ class Engine:
             # S_SINGLE point lookup (AT <time>): exact-ns equality,
             # may return several rows (duplicate-ns points are legal)
             t_at = eval_timeunit(stmt.selector, now)
-            points = points.filter(F.col("timestamp") == F.lit(t_at))
+            lo = hi = t_at
+        points = self.store.read(
+            db,
+            series=stmt.ts_name,
+            retention_ns=opts.get("retention_ns"),
+            now=now,
+            t0=lo,
+            t1=hi,
+        )
 
         if stmt.where:
             points = tsdb.where_chain(

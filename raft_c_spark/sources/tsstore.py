@@ -15,6 +15,18 @@ storage layer is "not Sparkable") with series+day partitioned parquet:
 - sort-on-write within partitions ≙ the flush draining buckets in
   timestamp order (src/partition.c:78-97).
 
+The store schema is fixed (``STORE_SCHEMA``) and never inferred.
+Inference would cost a Spark job per read and would retype partition
+values: series ``007`` would read back as the int 7 (and match series
+``7``), series ``2024-01-01`` as a date.
+
+Statement job budget: a single-series ``read`` lists only that
+series' directory and runs no Spark job before the query executes; an
+``insert_rows`` batch under the ``insert`` policy is one write job
+over an Arrow-backed local relation (no parallelize, count or
+shuffle). The ``ignore``/``update`` policies and bulk ``insert_df``
+frames take the anti-join / merge path.
+
 Scale notes: appends are partitioned writes (no global shuffle unless
 requested); range reads prune by directory then row-group; a series is
 spread over its days, so one hot series parallelizes across time — the
@@ -27,9 +39,11 @@ from __future__ import annotations
 import os
 import shutil
 
-from pyspark.sql import DataFrame, SparkSession
+import pyarrow as pa
+from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as Ty
+from pyspark.sql.pandas.types import to_arrow_schema
 
 DAY_NS = 86_400_000_000_000
 
@@ -40,6 +54,39 @@ POINT_SCHEMA = Ty.StructType(
         Ty.StructField("value", Ty.DoubleType(), False),
     ]
 )
+
+#: on-disk layout: the point columns plus the ``day`` partition column
+STORE_SCHEMA = Ty.StructType(
+    POINT_SCHEMA.fields + [Ty.StructField("day", Ty.LongType(), False)]
+)
+
+
+def _day(ns: str) -> Column:
+    """The day partition of a timestamp expression. Writes and range
+    reads derive it from this one expression: integer ``div`` (float
+    division loses precision at epoch-ns magnitudes > 2^53), which
+    truncates toward zero — Python's ``//`` floors, so a pre-1970 point
+    would land in another directory."""
+    return F.expr(f"{ns} div {DAY_NS}L")
+
+
+def _with_day(df: DataFrame) -> DataFrame:
+    return df.withColumn("day", _day("timestamp"))
+
+
+def local_frame(
+    spark: SparkSession, rows: list[tuple], schema: Ty.StructType
+) -> DataFrame:
+    """Driver-side rows as a local relation. ``createDataFrame`` from an
+    Arrow table builds no RDD, so neither building nor collecting the
+    frame runs a Spark job; ``createDataFrame(list)`` parallelizes, and
+    its collect is a job."""
+    arrow = to_arrow_schema(schema)
+    columns = list(zip(*rows)) if rows else [()] * len(arrow)
+    table = pa.Table.from_arrays(
+        [pa.array(c, f.type) for c, f in zip(columns, arrow)], schema=arrow
+    )
+    return spark.createDataFrame(table, schema)
 
 
 class TimeSeriesStore:
@@ -105,10 +152,25 @@ class TimeSeriesStore:
             for t, v in rows:
                 first.setdefault(int(t), (t, v))
             rows = list(first.values())
-        df = self.spark.createDataFrame(
-            [(series, int(t), float(v)) for t, v in rows], POINT_SCHEMA
+        if not rows:
+            return 0
+        df = local_frame(
+            self.spark, [(series, int(t), float(v)) for t, v in rows], POINT_SCHEMA
         )
-        return self.insert_df(db, df, duplication)
+        if duplication in ("ignore", "update"):
+            return self.insert_df(db, df, duplication)
+        # one write job: the batch is already on the driver, so it needs
+        # no checkpoint, count or shuffle; one task writes one sorted
+        # file per touched (series, day)
+        (
+            _with_day(df)
+            .coalesce(1)
+            .sortWithinPartitions("series", "day", "timestamp")
+            .write.mode("append")
+            .partitionBy("series", "day")
+            .parquet(self._points_path(db))
+        )
+        return len(rows)
 
     def insert_df(self, db: str, df: DataFrame, duplication: str = "insert") -> int:
         """Append canonical-schema points. ``duplication='ignore'``
@@ -158,9 +220,7 @@ class TimeSeriesStore:
                     ["series", "timestamp"],
                     "left_anti",
                 )
-        # integer `div` — float division would lose precision at
-        # epoch-ns magnitudes (> 2^53)
-        out = out.withColumn("day", F.expr(f"timestamp div {DAY_NS}L"))
+        out = _with_day(out)
         # one materialization for the count AND the write (reviewer
         # r8): without it the dedup/anti-join pipeline re-executed for
         # each — up to 3x the batch cost on the ignore path (the
@@ -168,9 +228,8 @@ class TimeSeriesStore:
         out = out.localCheckpoint(eager=True)
         n = out.count()
         if n == 0:
-            # an empty partitioned write still creates the directory
-            # (with only a _SUCCESS marker), which later reads reject
-            # as schemaless — skip it
+            # an empty partitioned write would only leave a _SUCCESS
+            # marker — skip it
             return 0
         (
             out.repartition("series", "day")
@@ -204,7 +263,7 @@ class TimeSeriesStore:
             .filter(F.col("_rn") == 1)
             .drop("_rn", "_seq")
         )
-        out = out.withColumn("day", F.expr(f"timestamp div {DAY_NS}L"))
+        out = _with_day(out)
         n = out.count()
         if n == 0:
             return 0
@@ -236,21 +295,24 @@ class TimeSeriesStore:
 
     # -- read --------------------------------------------------------------
 
-    def _read_raw(self, db: str) -> DataFrame | None:
+    def _read_raw(self, db: str, series: str | None = None) -> DataFrame | None:
+        """The store, or one series of it, in ``STORE_SCHEMA``; None when
+        there is no directory to read. With ``series`` only that
+        series' directory is listed."""
         path = self._points_path(db)
         bak = path + ".pre_compact"
         if not os.path.exists(path) and os.path.exists(bak):
             # a compact() crashed between its two renames: the backup
             # IS the store — restore it before reading
             os.rename(bak, path)
-        if not os.path.exists(path):
+        src = path if series is None else self._series_dir(db, series)
+        if src is None or not os.path.exists(src):
             return None
-        try:
-            return self.spark.read.parquet(path)
-        except Exception:
-            # directory exists but holds no data files (e.g. crashed or
-            # skipped write left only markers) → empty store
-            return None
+        return (
+            self.spark.read.schema(STORE_SCHEMA)
+            .option("basePath", path)
+            .parquet(src)
+        )
 
     def read(
         self,
@@ -258,21 +320,32 @@ class TimeSeriesStore:
         series: str | None = None,
         retention_ns: int | None = None,
         now: int | None = None,
+        t0: int | None = None,
+        t1: int | None = None,
     ) -> DataFrame:
-        """Canonical points frame; ``series``/range filters prune
-        partition directories and row groups. Retention honored at
+        """Canonical points frame; ``series`` lists only that series'
+        directory (a series with none reads empty). ``t0``/``t1`` keep
+        timestamps in ``[t0, t1]`` (either may be None); the same
+        bounds on ``day`` prune day directories — ``div`` is monotonic,
+        so every point in range sits in a day between the bounds' days
+        — and row-group stats prune the rest. Retention honored at
         read time (the reference parses-but-ignores it — SURVEY §1.3)."""
-        raw = self._read_raw(db)
-        if raw is None:
-            return self.spark.createDataFrame([], POINT_SCHEMA)
-        out = raw
-        if series is not None:
-            out = out.filter(F.col("series") == series)
+        out = self._read_raw(db, series)
+        if out is None:
+            return local_frame(self.spark, [], POINT_SCHEMA)
         if retention_ns is not None:
             import time as _time
 
             cutoff = (now if now is not None else _time.time_ns()) - retention_ns
-            out = out.filter(F.col("timestamp") >= F.lit(cutoff))
+            t0 = cutoff if t0 is None else max(t0, cutoff)
+        if t0 is not None:
+            out = out.filter(
+                (F.col("timestamp") >= F.lit(t0)) & (F.col("day") >= _day(f"{t0}L"))
+            )
+        if t1 is not None:
+            out = out.filter(
+                (F.col("timestamp") <= F.lit(t1)) & (F.col("day") <= _day(f"{t1}L"))
+            )
         return out.select("series", "timestamp", "value")
 
     # -- maintenance -------------------------------------------------------

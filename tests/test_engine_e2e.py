@@ -4,6 +4,7 @@ real on-disk series via the language, query it back."""
 
 from __future__ import annotations
 
+import os
 import random
 
 import pytest
@@ -411,7 +412,10 @@ def test_point_io_roundtrip(spark, tmp_path):
 
 
 def test_empty_insert_then_read(engine):
-    """An empty batch must not poison the store directory."""
+    """An empty batch must not poison the store directory. A ``points/``
+    directory that holds only a ``_SUCCESS`` marker, and a series with
+    no directory of its own, read as empty for SELECT, an ``ignore``
+    INSERT and an ``update`` upsert."""
     engine.execute("CREATEDB d")
     engine.execute("USE d")
     engine.execute("CREATE s")
@@ -419,6 +423,24 @@ def test_empty_insert_then_read(engine):
     assert engine.execute("SELECT value FROM s").count() == 0
     engine.execute(f"INSERT INTO s VALUES ({BASE}, 5.0)")
     assert _rows(engine.execute("SELECT value FROM s")) == [(BASE, 5.0)]
+
+    survivors = {"ignore": [(BASE, 1.0)], "update": [(BASE, 2.0)]}
+    for store in ("marker", "other"):
+        for policy, want in survivors.items():
+            db = f"{store}_{policy}"
+            engine.execute(f"CREATEDB {db}")
+            engine.execute(f"USE {db}")
+            engine.execute(f"CREATE p '{policy}'")
+            engine.execute("CREATE q")
+            if store == "marker":
+                points = engine.store._points_path(db)
+                os.makedirs(points)
+                open(os.path.join(points, "_SUCCESS"), "w").close()
+            else:
+                engine.execute(f"INSERT INTO q VALUES ({BASE}, 9.0)")
+            assert engine.execute("SELECT value FROM p").count() == 0
+            engine.execute(f"INSERT INTO p VALUES ({BASE}, 1.0), ({BASE}, 2.0)")
+            assert _rows(engine.execute("SELECT value FROM p")) == want
 
 
 def test_f2_ooo_fixture_full(spark, tmp_path):
