@@ -22,10 +22,13 @@ shared-/tmp + ``_done``-marker scheme it replaces lacked:
 
 from __future__ import annotations
 
+import hashlib
 import os
 import shutil
 
 from pyspark.sql import DataFrame
+
+from raft_c_spark.sources.parquet import fingerprint, read_parquet
 
 _REPO_ROOT = os.path.dirname(
     os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
@@ -97,22 +100,23 @@ def cached_parquet(df: DataFrame, key: str) -> DataFrame:
         staging = f"{final}.tmp.{os.getpid()}"
         df.write.mode("overwrite").parquet(staging)
         publish_atomic(staging, final)
-    return df.sparkSession.read.parquet(final)
+    return read_parquet(df.sparkSession, final)
 
 
 def data_cache_key(sf_dir: str, table: str) -> str:
-    """Cache key tied to the actual data file (basename + mtime +
-    size), so persisted indexes/signatures can NEVER go stale when the
-    driver regenerates the testdata between rounds — a new file means
-    a new key and a fresh build. Single definition (reviewer r8: two
-    verbatim copies lived in plans/dedup.py and plans/similarity.py —
-    a staleness fix to one would silently miss the other)."""
-    import os as _os
-
-    path = _os.path.join(sf_dir, f"{table}.parquet")
-    try:
-        st = _os.stat(path)
-        tag = f"{int(st.st_mtime)}_{st.st_size}"
-    except OSError:
+    """Cache key tied to the actual data (sf dir basename + the
+    table's ``fingerprint``: mtime in ns and size of the file, or a
+    digest of every file's for a directory), so persisted
+    indexes/signatures can NEVER go stale when the data is rewritten —
+    even in place, same size, within the same second — a new file
+    means a new key and a fresh build. Single definition (two verbatim
+    copies once lived in plans/dedup.py and plans/similarity.py — a
+    staleness fix to one would silently miss the other)."""
+    fp = fingerprint(os.path.join(sf_dir, f"{table}.parquet"))
+    if fp is None:
         tag = "nofile"
-    return f"{_os.path.basename(sf_dir.rstrip('/'))}_{tag}"
+    elif len(fp) == 1 and fp[0][0] == ".":
+        tag = f"{fp[0][2]}_{fp[0][1]}"
+    else:
+        tag = hashlib.sha1(repr(fp).encode()).hexdigest()[:16]
+    return f"{os.path.basename(sf_dir.rstrip('/'))}_{tag}"

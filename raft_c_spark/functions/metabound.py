@@ -28,11 +28,12 @@ import os
 from pyspark.sql import DataFrame
 
 from raft_c_spark.functions.planshape import plan_has_node
+from raft_c_spark.sources.parquet import fingerprint, local_path
 
-#: (path, mtime_ns, size) -> footer num_rows; footer reads are
+#: (path, fingerprint) -> footer num_rows; footer reads are
 #: driver-side file I/O, memoized the same way dedup's row-group
 #: probe is.
-_FOOTER_ROWS_CACHE: dict[tuple[str, int, int], int] = {}
+_FOOTER_ROWS_CACHE: dict[tuple[str, tuple], int] = {}
 
 #: Logical-plan node names that can make output rows EXCEED the sum of
 #: the scanned files' rows. Matched as line-leading node-name prefixes
@@ -76,14 +77,10 @@ def rows_upper_bound(df: DataFrame) -> int | None:
         import pyarrow.parquet as pq
 
         for f in files:
-            for pre in ("file://", "file:"):
-                if f.startswith(pre):
-                    f = f[len(pre):]
-                    break
-            if not f.endswith(".parquet") or not os.path.isfile(f):
+            f = local_path(f)
+            if f is None or not f.endswith(".parquet") or not os.path.isfile(f):
                 return None
-            st = os.stat(f)
-            key = (f, st.st_mtime_ns, st.st_size)
+            key = (f, fingerprint(f))
             n = _FOOTER_ROWS_CACHE.get(key)
             if n is None:
                 n = pq.ParquetFile(f).metadata.num_rows

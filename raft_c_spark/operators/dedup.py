@@ -22,6 +22,8 @@ import os
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
+from raft_c_spark.sources.parquet import fingerprint, local_path, read_parquet
+
 # Mersenne prime 2^31-1: universal-hash modulus for MinHash
 # permutations (h_i(x) = (a_i*x + b_i) mod p). 31-bit domain keeps
 # every intermediate product < 2^62, inside int64 under ANSI mode
@@ -301,7 +303,7 @@ def ngram_jaccard_pairs(
             f"_v1"
         )
         if os.path.isdir(cache_path(pair_key)):
-            return df.sparkSession.read.parquet(cache_path(pair_key))
+            return read_parquet(df.sparkSession, cache_path(pair_key))
     if unit == "word" and strategy == "auto":
         strategy = "prefix"
     if unit == "word" and strategy == "bitmap":
@@ -441,7 +443,7 @@ def ngram_containment_pairs(
             f"_{unit}_v1"
         )
         if os.path.isdir(cache_path(pair_key)):
-            return df.sparkSession.read.parquet(cache_path(pair_key))
+            return read_parquet(df.sparkSession, cache_path(pair_key))
     shingle_fn = word_shingles if unit == "word" else char_shingles
     sh = shingle_fn(df, id_col, text_col, n)
     if cache_key is not None:
@@ -521,11 +523,11 @@ def _widen(df: DataFrame) -> DataFrame:
     return df.repartition(p) if _effective_splits(df) < p else df
 
 
-#: (path, mtime_ns, size) -> num_row_groups — footer probes are
+#: (path, fingerprint) -> num_row_groups — footer probes are
 #: driver-side file reads; memoizing them keeps repeated _widen calls
 #: over the same corpus (every dedup op re-parses the same parquet
 #: lineage) from re-reading footers on each call (advisor r6)
-_ROW_GROUP_CACHE: dict[tuple[str, int, int], int] = {}
+_ROW_GROUP_CACHE: dict[tuple[str, tuple], int] = {}
 
 #: Logical-plan nodes that mean the frame is NOT a bare projection /
 #: filter over a file scan. Downstream of any of these the frame's
@@ -568,7 +570,7 @@ def _effective_splits(df: DataFrame) -> int:
     plain split count otherwise (footer reads over thousands of
     files, or non-file sources, are not worth it — many files imply
     enough parallelism anyway). Footer row-group counts are memoized
-    per (path, mtime, size). Non-scan-shaped frames short-circuit to
+    per (path, fingerprint). Non-scan-shaped frames short-circuit to
     "wide enough" WITHOUT the ``df.rdd`` partition probe — see
     ``_NON_SCAN_NODES``."""
     try:
@@ -591,14 +593,10 @@ def _effective_splits(df: DataFrame) -> int:
         import pyarrow.parquet as pq
 
         for f in files:
-            for pre in ("file://", "file:"):
-                if f.startswith(pre):
-                    f = f[len(pre):]
-                    break
-            if not f.endswith(".parquet") or not os.path.isfile(f):
+            f = local_path(f)
+            if f is None or not f.endswith(".parquet") or not os.path.isfile(f):
                 return parts
-            st = os.stat(f)
-            key = (f, st.st_mtime_ns, st.st_size)
+            key = (f, fingerprint(f))
             n = _ROW_GROUP_CACHE.get(key)
             if n is None:
                 n = pq.ParquetFile(f).num_row_groups
@@ -1125,7 +1123,7 @@ def minhash_lsh_pairs(
         from raft_c_spark.functions.diskcache import cache_path, cached_parquet
 
         if os.path.isdir(cache_path(pair_key)):
-            return df.sparkSession.read.parquet(cache_path(pair_key))
+            return read_parquet(df.sparkSession, cache_path(pair_key))
     sig = minhash_signatures(df, id_col, text_col, n, num_perm)
     if cache_key is not None:
         sig = _persisted_signatures(sig, cache_key, id_col, text_col, n, num_perm)
@@ -1247,7 +1245,7 @@ def minhash_lsh_pairs_between(
             f"_n{n}_p{num_perm}_b{bands}_t{thr}_v1"
         )
         if os.path.isdir(cache_path(pair_key)):
-            return new_df.sparkSession.read.parquet(cache_path(pair_key))
+            return read_parquet(new_df.sparkSession, cache_path(pair_key))
     sig_new = minhash_signatures(new_df, id_col, text_col, n, num_perm).cache()
     sig_corp = minhash_signatures(corpus_df, id_col, text_col, n, num_perm)
     if corpus_cache_key is not None:
@@ -1474,7 +1472,7 @@ def simhash_pairs(
             f"_w{SIMHASH_WEIGHT_CAP}_v3"  # v3: tf×capped-idf votes
         )
         if os.path.isdir(cache_path(pair_key)):
-            return df.sparkSession.read.parquet(cache_path(pair_key))
+            return read_parquet(df.sparkSession, cache_path(pair_key))
     sig = simhash60(df, id_col, text_col)
     if cache_key is not None:
         from raft_c_spark.functions.diskcache import cached_parquet
@@ -2028,7 +2026,7 @@ def repeated_substring_spans(
             f"_L{min_len}_c{min_count}_v1"
         )
         if _os.path.isdir(cache_path(key)):
-            return df.sparkSession.read.parquet(cache_path(key))
+            return read_parquet(df.sparkSession, cache_path(key))
 
     L = min_len
     norm = F.lower(F.trim(F.regexp_replace(F.col(text_col), r"\s+", " ")))

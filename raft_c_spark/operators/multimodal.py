@@ -36,6 +36,8 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as Ty
 
+from raft_c_spark.sources.parquet import read_parquet
+
 #: media row schema: opaque payload + typed metadata (the engine never
 #: interprets the bytes outside a decode kernel)
 MEDIA_SCHEMA = Ty.StructType(
@@ -633,7 +635,7 @@ def synthetic_media(spark, n: int = 64, seed: int = 42) -> DataFrame:
     the ``decode="real"`` kernels genuinely decode all three for
     actual pixel/sample/frame features. Served as a parquet scan (see
     synthetic_media_path)."""
-    return spark.read.parquet(synthetic_media_path(n, seed))
+    return read_parquet(spark, synthetic_media_path(n, seed))
 
 
 #: aHash chunk layout: 64 bits → 5 pigeonhole chunks (13+13+13+13+12).

@@ -23,6 +23,8 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
+from raft_c_spark.sources.parquet import read_parquet
+
 #: hex digits of the md5 used as the sampling key: 6 digits → fraction
 #: granularity 1/16^6 ≈ 6e-8, far below any practical mixture weight
 HEX_DIGITS = 6
@@ -258,7 +260,7 @@ def write_shards(
         "shard"
     ).parquet(path)
     return (
-        df.sparkSession.read.parquet(path)
+        read_parquet(df.sparkSession, path)
         .groupBy("shard")
         .agg(
             F.count(F.lit(1)).alias("n_rows"),
@@ -574,7 +576,7 @@ def importance_weights(
             f"_b{num_buckets}_v1"
         )
         if _os.path.isdir(cache_path(key)):
-            return df.sparkSession.read.parquet(cache_path(key))
+            return read_parquet(df.sparkSession, cache_path(key))
     toks = F.regexp_extract_all(
         F.lower(F.col(text_col)), F.lit("[a-z0-9]+"), F.lit(0)
     )

@@ -21,9 +21,11 @@ import os
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
+from raft_c_spark.sources.parquet import fingerprint, read_parquet
+
 
 #: session-lifetime memo of embedding dimensionality per source-file
-#: set: (sorted input files + (size, mtime_ns) stats, vec_col,
+#: set: (sorted input files + their fingerprints, vec_col,
 #: exprId-normalized analyzed-plan fingerprint) → dim. vec_dim is a
 #: schema-class property (every well-formed corpus has one dim —
 #: with_norm's guard rejects ragged columns), but Spark cannot answer
@@ -31,9 +33,9 @@ from pyspark.sql import functions as F
 #: each caller paid a first() probe JOB per invocation — five
 #: sim/dedup queries × 0.2-0.8 s of pure job overhead at bench scale
 #: (guide §5: driver actions in the query path). Two advisor-r13
-#: hardenings: (1) memoization is SKIPPED unless every input file's
-#: os.stat succeeds — a URI form the strip cannot resolve (s3://,
-#: hdfs://) would otherwise stat as a constant (-1,-1) and a path
+#: hardenings: (1) memoization is SKIPPED unless every input file has
+#: a fingerprint — a URI form that is not local (s3://, hdfs://)
+#: would otherwise stat as a constant (-1,-1) and a path
 #: overwritten mid-session could keep returning a stale dim; (2) the
 #: key carries a plan fingerprint (analyzed plan with `#<exprId>`
 #: tokens stripped — exprIds differ across invocations of the same
@@ -67,19 +69,13 @@ def vec_dim(df: DataFrame, vec_col: str) -> int:
     if files:
         stats = []
         for f in sorted(files):
-            p = f
-            for pre in ("file://", "file:"):
-                if p.startswith(pre):
-                    p = p[len(pre):]
-                    break
-            try:
-                st = os.stat(p)
-            except OSError:
+            stamp = fingerprint(f)
+            if stamp is None:
                 # unresolvable stat → no invalidation signal → never
                 # memoize (advisor r13 item 1); probe as before
                 stats = None
                 break
-            stats.append((f, st.st_size, st.st_mtime_ns))
+            stats.append((f, stamp))
         fp = _plan_fingerprint(df)
         if stats is not None and fp is not None:
             key = (tuple(stats), vec_col, fp)
@@ -877,7 +873,7 @@ def ivf_index(
             np.save(os.path.join(staging, "centroids.npy"), centroids)
             diskcache.publish_atomic(staging, final)
         return (
-            df.sparkSession.read.parquet(os.path.join(final, "assigned")),
+            read_parquet(df.sparkSession, os.path.join(final, "assigned")),
             np.load(os.path.join(final, "centroids.npy")),
         )
 
@@ -1203,7 +1199,7 @@ def lsh_index(
             .parquet(staging)
         )
         diskcache.publish_atomic(staging, final)
-    return df.sparkSession.read.parquet(final)
+    return read_parquet(df.sparkSession, final)
 
 
 def lsh_bucketed_topk(

@@ -17,6 +17,8 @@ import math
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from raft_c_spark.sources.parquet import read_parquet
+
 #: small per-language stopword probes (word-boundary matched, lowercased)
 STOPWORDS: dict[str, list[str]] = {
     "en": ["the", "and", "of", "to", "is", "in"],
@@ -832,7 +834,7 @@ def ngram_lm_score(
 
         key = f"lmscore_{cache_key}_{id_col}_{text_col}_v1"
         if _os.path.isdir(cache_path(key)):
-            return df.sparkSession.read.parquet(cache_path(key))
+            return read_parquet(df.sparkSession, cache_path(key))
     toks = F.regexp_extract_all(
         F.lower(F.col(text_col)), F.lit("[a-z0-9]+"), F.lit(0)
     )

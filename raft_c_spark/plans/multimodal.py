@@ -9,6 +9,7 @@ from __future__ import annotations
 from pyspark.sql import functions as F
 
 from raft_c_spark.operators import multimodal as mm
+from raft_c_spark.sources.parquet import read_parquet
 
 
 MM_FEATURES_N = 128
@@ -466,7 +467,7 @@ def q_mm_image_dedup(spark, sf_dir):
     pixels, so the driver hash match certifies the decode."""
     from raft_c_spark.operators import multimodal as mm
 
-    media = spark.read.parquet(image_dedup_corpus_path())
+    media = read_parquet(spark, image_dedup_corpus_path())
     return mm.ahash_pairs(mm.image_ahash(media), max_hamming=MM_DEDUP_MAXHAM)
 
 
@@ -633,7 +634,7 @@ def q_mm_audio_dedup(spark, sf_dir):
     match certifies the audio decode bit-exactly."""
     from raft_c_spark.operators import multimodal as mm
 
-    media = spark.read.parquet(audio_dedup_corpus_path())
+    media = read_parquet(spark, audio_dedup_corpus_path())
     return mm.ahash_pairs(mm.audio_ahash(media), max_hamming=MM_DEDUP_MAXHAM)
 
 
@@ -789,7 +790,7 @@ def q_mm_video_dedup(spark, sf_dir):
     image/audio/video decode-certifying dedup triple."""
     from raft_c_spark.operators import multimodal as mm
 
-    media = spark.read.parquet(video_dedup_corpus_path())
+    media = read_parquet(spark, video_dedup_corpus_path())
     return mm.ahash_pairs(mm.video_ahash(media), max_hamming=MM_DEDUP_MAXHAM)
 
 

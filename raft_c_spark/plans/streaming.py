@@ -16,6 +16,7 @@ from pyspark.sql import types as Ty
 
 from raft_c_spark.functions.exact import exact_avg, sql_avg
 from raft_c_spark.session import ensure_runtime_confs
+from raft_c_spark.sources.parquet import read_parquet
 from raft_c_spark.streaming.ingest import WATERMARK
 
 HOUR_NS = 3_600_000_000_000
@@ -500,7 +501,7 @@ def q_stream_enrich_join(spark, sf_dir):
         .withColumn("event_time", F.col("ts").cast("timestamp"))
     )
     dim = (
-        spark.read.parquet(os.path.join(sf_dir, "customer.parquet"))
+        read_parquet(spark, os.path.join(sf_dir, "customer.parquet"))
         .select(
             F.col("c_custkey").alias("user_id"),
             F.col("c_mktsegment").alias("segment"),

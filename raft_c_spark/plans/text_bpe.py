@@ -21,6 +21,7 @@ from __future__ import annotations
 from collections.abc import Mapping
 
 from raft_c_spark.operators import bpe, sampling
+from raft_c_spark.sources.parquet import read_parquet
 from raft_c_spark.sources.testdata import load_table
 
 #: training/encode parameters (also baked into cache + ground-truth
@@ -151,7 +152,7 @@ def bpe_counts_frame(spark, sf_dir: str):
     # to have cached_parquet discard the frame would re-run that job on
     # every warm call — the lm-score pattern (reviewer r10)
     if _os.path.isdir(cache_path(key)):
-        return spark.read.parquet(cache_path(key))
+        return read_parquet(spark, cache_path(key))
     docs = load_table(spark, sf_dir, "documents")
     merges = bpe.train_bpe(
         docs,

@@ -21,6 +21,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from raft_c_spark.session import ensure_runtime_confs
+from raft_c_spark.sources.parquet import read_parquet
 
 TABLES = [
     "region",
@@ -39,8 +40,11 @@ DEFAULT_SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
 
 
 def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
+    """``<sf_dir>/<name>.parquet`` through ``sources.parquet.read_parquet``:
+    the first read of a file version infers its schema (one Spark job),
+    every later one reuses it and starts no job until the file changes."""
     ensure_runtime_confs(spark)
-    return spark.read.parquet(f"{sf_dir}/{name}.parquet")
+    return read_parquet(spark, f"{sf_dir}/{name}.parquet")
 
 
 def corpus_paths(table: str) -> list[str]:
