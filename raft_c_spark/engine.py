@@ -170,17 +170,24 @@ class Engine:
         # t0/t1: the statement's range; lo/hi: the bounds the store
         # scan applies
         t0 = t1 = lo = hi = None
+        interval = (
+            eval_timeunit(stmt.sampling, now) if stmt.sampling is not None else None
+        )
         if isinstance(stmt.selector, ast.Interval):
             t0 = eval_timeunit(stmt.selector.start, now)
             t1 = eval_timeunit(stmt.selector.end, now)
             if t0 > t1:
                 raise tsdb.InvalidRangeError(f"invalid range: {t0} > {t1}")
-            if stmt.sampling is None:
+            if interval is None:
                 lo, hi = t0, t1
-            # when sampling, sample_by owns the range: ts_avg_sample
-            # normalizes t0 *down* to an interval multiple and scans
-            # [t0_norm, t1] (src/timeseries.c:1273-1276) — a pre-filter
-            # at t0 would wrongly drop points in [t0_norm, t0)
+            elif interval > 0:
+                # sample_by owns the range: ts_avg_sample normalizes t0
+                # *down* to an interval multiple and scans [t0_norm, t1]
+                # (src/timeseries.c:1273-1276) — a pre-filter at t0
+                # would wrongly drop points in [t0_norm, t0). The scan
+                # takes that same range; a non-positive interval is
+                # left for sample_by to reject.
+                lo, hi = t0 - t0 % interval, t1
         elif stmt.selector is not None:
             # S_SINGLE point lookup (AT <time>): exact-ns equality,
             # may return several rows (duplicate-ns points are legal)
@@ -218,7 +225,6 @@ class Engine:
                     raise ExecutionError(
                         "FILL supports single-aggregate sampling only"
                     )
-                interval = eval_timeunit(stmt.sampling, now)
                 out = tsdb.sample_by(
                     points, interval, t0=t0, t1=t1,
                     group_by_series=False, fns=fns,
@@ -247,7 +253,6 @@ class Engine:
             return out
 
         if stmt.sampling is not None:
-            interval = eval_timeunit(stmt.sampling, now)
             # honor the requested aggregate when the sampler supports
             # it (extension — the reference always computes avg in
             # sampling mode, whatever function was written); latest/

@@ -22,10 +22,12 @@ values: series ``007`` would read back as the int 7 (and match series
 
 Statement job budget: a single-series ``read`` lists only that
 series' directory and runs no Spark job before the query executes; an
-``insert_rows`` batch under the ``insert`` policy is one write job
-over an Arrow-backed local relation (no parallelize, count or
-shuffle). The ``ignore``/``update`` policies and bulk ``insert_df``
-frames take the anti-join / merge path.
+``insert_rows`` batch under the ``insert`` policy runs no Spark job at
+all — the driver already holds the points, so it writes one sorted
+Arrow parquet file per touched (series, day) and publishes it by
+rename (≙ the reference's local append, src/timeseries.c:621-682).
+The ``ignore``/``update`` policies and bulk ``insert_df`` frames take
+the anti-join / merge path as Spark jobs.
 
 Scale notes: appends are partitioned writes (no global shuffle unless
 requested); range reads prune by directory then row-group; a series is
@@ -38,12 +40,16 @@ from __future__ import annotations
 
 import os
 import shutil
+import uuid
 
 import pyarrow as pa
+import pyarrow.parquet as pq
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as Ty
 from pyspark.sql.pandas.types import to_arrow_schema
+
+from raft_c_spark.functions.diskcache import publish_atomic
 
 DAY_NS = 86_400_000_000_000
 
@@ -70,6 +76,32 @@ def _day(ns: str) -> Column:
     return F.expr(f"{ns} div {DAY_NS}L")
 
 
+def _day_of(ns: int) -> int:
+    """``_day`` on the driver: truncates toward zero like ``div``."""
+    return -(-ns // DAY_NS) if ns < 0 else ns // DAY_NS
+
+
+#: a point file's columns; ``series`` and ``day`` live in its path
+_FILE_SCHEMA = to_arrow_schema(Ty.StructType(POINT_SCHEMA.fields[1:]))
+
+
+def _write_points(day_dir: str, points: list[tuple[int, float]]) -> None:
+    """One sorted parquet file of ``(timestamp, value)`` points in a
+    ``day=`` directory, written under a dot name (Spark's file index
+    skips names starting with '.' or '_', so readers never list a
+    half-written file) and published by rename."""
+    points.sort(key=lambda p: p[0])
+    ts, vs = zip(*points)
+    table = pa.Table.from_arrays(
+        [pa.array(ts, pa.int64()), pa.array(vs, pa.float64())], schema=_FILE_SCHEMA
+    )
+    os.makedirs(day_dir, exist_ok=True)
+    name = f"part-{uuid.uuid4()}.snappy.parquet"
+    staging = os.path.join(day_dir, f".{name}.tmp")
+    pq.write_table(table, staging, compression="snappy")
+    publish_atomic(staging, os.path.join(day_dir, name))
+
+
 def _with_day(df: DataFrame) -> DataFrame:
     return df.withColumn("day", _day("timestamp"))
 
@@ -93,9 +125,22 @@ class TimeSeriesStore:
     def __init__(self, spark: SparkSession, warehouse: str):
         self.spark = spark
         self.warehouse = warehouse
+        self._series_parts: dict[str, str] = {}
 
     def _points_path(self, db: str) -> str:
         return os.path.join(self.warehouse, db, "points")
+
+    def _series_part(self, series: str) -> str:
+        """The ``series=<escaped>`` directory name, from the function
+        Spark's partitioned writer uses (Hive escaping: ``cpu:load`` →
+        ``series=cpu%3Aload``, ``""`` → ``__HIVE_DEFAULT_PARTITION__``),
+        so the driver writer, the Spark writers and the readers agree."""
+        part = self._series_parts.get(series)
+        if part is None:
+            catalog = self.spark._jvm.org.apache.spark.sql.catalyst.catalog
+            part = catalog.ExternalCatalogUtils.getPartitionPathString("series", series)
+            self._series_parts[series] = part
+        return part
 
     def _touched_existing(
         self, existing: DataFrame, out: DataFrame
@@ -154,22 +199,18 @@ class TimeSeriesStore:
             rows = list(first.values())
         if not rows:
             return 0
-        df = local_frame(
-            self.spark, [(series, int(t), float(v)) for t, v in rows], POINT_SCHEMA
-        )
         if duplication in ("ignore", "update"):
+            df = local_frame(
+                self.spark, [(series, int(t), float(v)) for t, v in rows], POINT_SCHEMA
+            )
             return self.insert_df(db, df, duplication)
-        # one write job: the batch is already on the driver, so it needs
-        # no checkpoint, count or shuffle; one task writes one sorted
-        # file per touched (series, day)
-        (
-            _with_day(df)
-            .coalesce(1)
-            .sortWithinPartitions("series", "day", "timestamp")
-            .write.mode("append")
-            .partitionBy("series", "day")
-            .parquet(self._points_path(db))
-        )
+        by_day: dict[int, list[tuple[int, float]]] = {}
+        for t, v in rows:
+            t = int(t)
+            by_day.setdefault(_day_of(t), []).append((t, float(v)))
+        series_dir = os.path.join(self._points_path(db), self._series_part(series))
+        for day, points in by_day.items():
+            _write_points(os.path.join(series_dir, f"day={day}"), points)
         return len(rows)
 
     def insert_df(self, db: str, df: DataFrame, duplication: str = "insert") -> int:
@@ -351,27 +392,9 @@ class TimeSeriesStore:
     # -- maintenance -------------------------------------------------------
 
     def _series_dir(self, db: str, series: str) -> str | None:
-        """Actual ``series=<escaped>`` directory for a series name.
-        Spark Hive-escapes partition values on write (':' → '%3A'
-        etc.), so joining the RAW name silently misses any series
-        with a special character (reviewer r8: drop/vacuum no-op'd) —
-        resolve by unescaping the directory names instead."""
-        import re as _re
-
-        base = self._points_path(db)
-        if not os.path.isdir(base):
-            return None
-        for d in os.listdir(base):
-            if not d.startswith("series="):
-                continue
-            raw = _re.sub(
-                "%([0-9A-Fa-f]{2})",
-                lambda m: chr(int(m.group(1), 16)),
-                d[len("series="):],
-            )
-            if raw == series:
-                return os.path.join(base, d)
-        return None
+        """The series' directory, or None when it has none."""
+        path = os.path.join(self._points_path(db), self._series_part(series))
+        return path if os.path.isdir(path) else None
 
     def drop_series(self, db: str, series: str) -> None:
         path = self._series_dir(db, series)

@@ -6,6 +6,7 @@ A regression here is a performance bug even when results stay correct."""
 from __future__ import annotations
 
 import io
+import re
 from contextlib import redirect_stdout
 
 import pytest
@@ -25,9 +26,10 @@ def plan_of(df) -> str:
 
 def test_store_range_scan_pushes_down(spark, tmp_path):
     """Range predicates on the materialized store reach the parquet
-    scan (PushedFilters) AND prune day partitions (PartitionFilters) —
-    the sparse-index + partition-pruning parity of the reference
-    (src/index.c:65-109, src/timeseries.c:882-891)."""
+    scan (PushedFilters) AND prune day partitions (PartitionFilters on
+    both ends of ``day``) — the sparse-index + partition-pruning parity
+    of the reference (src/index.c:65-109, src/timeseries.c:882-891).
+    SAMPLE BY scans its normalized range the same way."""
     eng = Engine(spark, warehouse=str(tmp_path / "wh"))
     eng.execute("CREATEDB d")
     eng.execute("USE d")
@@ -38,15 +40,21 @@ def test_store_range_scan_pushes_down(spark, tmp_path):
         f"({base + i * day}, {float(i)})" for i in range(5)
     )
     eng.execute(f"INSERT INTO s VALUES {rows}")
-    df = eng.execute(
-        f"SELECT value FROM s BETWEEN {base + day} AND {base + 2 * day}"
-    )
-    plan = plan_of(df)
-    assert "PushedFilters: [" in plan
-    assert "GreaterThanOrEqual(timestamp" in plan, plan
-    assert "LessThanOrEqual(timestamp" in plan, plan
-    # day is a physical partition column → partition pruning applies
-    assert "PartitionFilters" in plan
+    for stmt in (
+        f"SELECT value FROM s BETWEEN {base + day} AND {base + 2 * day}",
+        f"SELECT avg(value) FROM s BETWEEN {base + day} AND {base + 2 * day}"
+        " SAMPLE BY 1h",
+    ):
+        plan = plan_of(eng.execute(stmt))
+        assert "PushedFilters: [" in plan
+        assert "GreaterThanOrEqual(timestamp" in plan, plan
+        assert "LessThanOrEqual(timestamp" in plan, plan
+        # day is a physical partition column → partition pruning applies
+        partition_filters = "".join(
+            line for line in plan.splitlines() if "PartitionFilters:" in line
+        )
+        assert re.search(r"\(day#\d+L >= ", partition_filters), plan
+        assert re.search(r"\(day#\d+L <= ", partition_filters), plan
 
 
 def test_events_scan_prunes_columns(spark, sf_dir):
