@@ -1,5 +1,5 @@
 """Queries deliberately registered BEHIND the driver's 50-query
-correctness window (see registry._modules): driver-rows-only checks
+correctness window (see registry.ORDER): driver-rows-only checks
 whose window slots are better spent on hash-oracled queries, plus
 late additions once the window filled. Everything here is still
 pytest-pinned — oracled entries run the same DuckDB comparison in

@@ -1,64 +1,54 @@
 """Central registry of driver-facing queries and their DuckDB oracles.
 
 ``__spark_entry__.queries()`` / ``oracle_sql()`` read from here; each
-plans module contributes its QUERIES/ORACLES dicts. A query without an
-oracle entry is checked rows-only by the driver (reserved for
-genuinely non-SQL-expressible ops). As of round 4 every registered
-query has a hash oracle: engine-specific results get one of two
-treatments — a pure-python replay of the deterministic pipeline
-persisted as a ground-truth parquet the oracle reads (IVF top-k,
-media feature norms), or a contract rewrite where the query returns
-exact values plus in-error-band booleans the oracle expects true
-(HLL/quantile sketches).
+plans module contributes its QUERIES/ORACLES dicts, and ``ORDER``
+fixes the driver's verification order — the external correctness
+driver hash-checks the first ``verification.WINDOW`` queries of it.
+A plan module that fails to import is fatal, and so is any mismatch
+between ``ORDER`` and the modules' query names.
+
+Every registered query has a hash oracle: engine-specific results get
+one of two treatments — a pure-python replay of the deterministic
+pipeline persisted as a ground-truth parquet the oracle reads (IVF
+top-k, media feature norms), or a contract rewrite where the query
+returns exact values plus in-error-band booleans the oracle expects
+true (HLL/quantile sketches).
 """
 
 from __future__ import annotations
 
+import importlib
 from collections.abc import Callable
 
 from pyspark.sql import DataFrame, SparkSession
 
 
 def _modules():
-    """Module order IS the driver's verification order: the
-    correctness driver checks the first 50 queries in registry order,
-    so every query family must land inside that window. Families are
-    ordered reference-parity first, then the LLM-pipeline operator
-    families, then the general-OLAP tpch suite last — the tpch
-    queries that overflow the window were driver-hash-green in both
-    round 1 and round 2 (CORRECTNESS_r01/r02) and every query in this
-    registry is additionally oracle-checked by
-    tests/test_entry_contract.py on every pytest run. From round 5
-    the final ordering additionally applies ``_WINDOW_SWAPS`` so
-    long-stable slots rotate out in favor of never-driver-verified
-    queries."""
-    from raft_c_spark.plans import parity
-
-    mods = [parity]
-    for name in (
-        "language",
-        "dedup",
-        "text",
-        "similarity",
-        "streaming",
-        "multimodal",
-        "semistructured",
-        "sampling",
-        "events_analytics",
-        "extras",
-        "text_bpe",
-        "tpch",
-        "tpch2",
-        "tpch3",
-        "tpch4",
-    ):
-        try:
-            mods.append(
-                __import__(f"raft_c_spark.plans.{name}", fromlist=[name])
-            )
-        except ImportError:
-            pass
-    return mods
+    """The 16 plan modules that contribute QUERIES/ORACLES. Each is
+    imported unconditionally: a module that fails to import is fatal
+    for every consumer, never a silently missing family. Queries are
+    yielded in ``ORDER``, not in this module order."""
+    return [
+        importlib.import_module(f"raft_c_spark.plans.{name}")
+        for name in (
+            "parity",
+            "language",
+            "dedup",
+            "text",
+            "similarity",
+            "streaming",
+            "multimodal",
+            "semistructured",
+            "sampling",
+            "events_analytics",
+            "extras",
+            "text_bpe",
+            "tpch",
+            "tpch2",
+            "tpch3",
+            "tpch4",
+        )
+    ]
 
 
 def _with_cache_hygiene(fn: Callable) -> Callable:
@@ -80,589 +70,178 @@ def _with_cache_hygiene(fn: Callable) -> Callable:
     return wrapped
 
 
-#: Round-5 rotation of the driver's 50-query verification window
-#: (judge's round-4 ask #4): each (out, in) pair swaps a long-stable
-#: slot — parity queries hash-green in the driver window for three
-#: consecutive rounds AND redundantly covered by other in-window
-#: queries plus e2e/hypothesis pytest suites — for a query that has
-#: never been externally hash-verified. Every operator family keeps
-#: at least one in-window representative (ts: range/point/where/
-#: sample_1d/sliding/fill; lang: sample_by/where_limit/multi_agg).
-_WINDOW_SWAPS: list[tuple[str, str]] = [
-    ("ts_min", "tpch_pricing_summary"),
-    ("ts_max", "tpch_shipping_priority"),
-    ("ts_latest", "tpch_waiting_supplier"),
-    ("ts_earliest", "ev_sessionize"),
-    ("ts_avg", "ev_funnel"),
-    ("ts_sample_1h", "sim_knn_join"),
-    ("ts_latest_k", "ds_pipeline_e2e"),
-    ("lang_at_lookup", "dedup_best_survivor"),
-    ("lang_earliest_k", "mm_real_frames"),
-    ("lang_sample_multi", "ts_sample_fill"),
-    # -- round-6 batch (judge's r5 ask #1): every remaining
-    # never-driver-verified query enters the window; each demoted slot
-    # is hash-green in CORRECTNESS_r05 and its family keeps in-window
-    # representatives (ts: range_scan/sample_1d/sample_fill; tpch:
-    # waiting_supplier; text: analyze/lang_profile/clean_corpus/
-    # tfidf_terms + quality_model incoming; ev: salted_agg/join/
-    # exact_percentiles/asof + four incoming; dedup/sim keep their
-    # headline LSH paths).
-    ("ts_point_lookup", "ev_cohort_retention"),
-    ("ts_where_chain", "ev_rolling_zscore"),
-    ("ts_sample_sliding", "ev_rollup_profile"),
-    ("tpch_pricing_summary", "ev_trailing_window"),
-    ("tpch_shipping_priority", "dedup_ngram_word"),
-    ("text_redact_pii", "dedup_minhash_incr"),
-    ("text_chunks", "dedup_repeated_spans"),
-    ("text_repetition", "ds_shard_manifest"),
-    ("text_winnow", "ds_bloom_decontaminate"),
-    ("text_heavy_hitters", "ds_snapshot_diff"),
-    ("ev_sessionize", "sim_topk_ivf_full"),
-    ("ev_funnel", "sim_knn_join_lsh"),
-    ("ev_json_props", "text_quality_model"),
-    ("ev_set_ops", "stream_dedup"),
-    ("dedup_embedding", "lang_sample_fill"),
-    ("sim_knn_join", "mm_real_resize"),
-    # -- round-7 batch: the final four never-driver-verified queries
-    # enter the window (after this, every one of the 100 registered
-    # queries has been inside the driver's DuckDB hash window in some
-    # round). Each demoted slot is hash-green in six consecutive
-    # driver rounds and its family keeps in-window representatives
-    # (ts: sample_1d/sample_fill + the lang_* paths exercise the same
-    # scan/filter operators; lang: sample_by/multi_agg/sample_fill;
-    # dedup: minhash_lsh/simhash/ngram word+char/components/survivor;
-    # text: analyze/clean_corpus/tfidf_terms/quality_model).
-    ("ts_range_scan", "sim_topk_ivf"),
-    ("lang_where_limit", "mm_features"),
-    ("dedup_exact_groups", "mm_frame_index"),
-    ("text_lang_profile", "ev_approx_profile"),
-    # -- round-7 addition: the new leakage-safe split query enters the
-    # window immediately (never driver-verified by definition);
-    # text_tfidf_terms demoted — driver-green r2–r6 (plus the
-    # internal oracle every round) and the text family keeps
-    # analyze/clean_corpus/quality_model in-window.
-    ("text_tfidf_terms", "ds_split_leakage_safe"),
-    # -- round-7 new-operator batch: the four queries added this round
-    # enter the window immediately (never driver-verified by
-    # definition). text_lm_score and sim_cluster_assign land in-window
-    # by module position; the other two swap in. Demoted slots:
-    # ds_mixture_sample (driver-green r3–r6; sampling keeps
-    # source_topk/pack_sequences/split_leakage_safe in-window) and
-    # mm_real_decode (driver-green r4–r6; mm keeps real_frames/
-    # real_resize/frame_index/features in-window).
-    ("ds_mixture_sample", "ds_temperature_mixture"),
-    ("mm_real_decode", "dedup_containment"),
-    # stream_dedup demoted (driver-green r6; the streaming family keeps
-    # tumbling_avg/click_attribution/sliding_rate/session_window
-    # in-window) for the new CUBE data-card query.
-    ("stream_dedup", "ds_dataset_card"),
-    # dedup_semantic's module-position insertion pushed the tail query
-    # out by one; re-seat it by demoting ev_exact_percentiles
-    # (driver-green r3–r6; ev keeps salted_agg/join, cohort, zscore,
-    # trailing, rollup, approx in-window).
-    ("ev_exact_percentiles", "ds_temperature_mixture"),
-    # stream_enrich_join's insertion pushed the tail out by one again;
-    # demote ev_salted_join (driver-green r3–r6; the skew family keeps
-    # ev_salted_agg in-window and the salted==direct equality suite).
-    ("ev_salted_join", "ds_dataset_card"),
-    # mm_real_frames demoted (driver-green r5+r6; mm keeps
-    # real_resize/frame_index/features in-window) for the
-    # fractional-epoch upsampling query.
-    ("mm_real_frames", "ds_epoch_upsample"),
-    # mm_image_dedup's insertion pushed the tail out by one; demote
-    # mm_real_resize (driver-green r6; mm keeps frame_index/features +
-    # the new image_dedup in-window, and the resize chain stays
-    # pinned by test_multimodal).
-    ("mm_real_resize", "ds_temperature_mixture"),
-    # ev_rollup_profile demoted (driver-green r6; ev keeps cohort/
-    # zscore/trailing/approx/salted_agg in-window and the new CUBE
-    # data-card covers grouping-sets semantics) for the MAD anomaly
-    # query.
-    ("ev_rollup_profile", "ev_anomaly_mad"),
-    # mm_audio_dedup's insertion pushed the tail out by one; demote
-    # mm_features (internal-oracle-green r4–r6 but NEVER driver-green
-    # — its only driver row is the r1 err; re-promoted in the r8
-    # batch below; mm keeps frame_index plus the two new
-    # decode-certifying dedup queries in-window).
-    ("mm_features", "ds_dataset_card"),
-    # mm_video_dedup's insertion pushed ev_salted_agg to slot 50;
-    # demote text_quality_model instead (driver-green r6,
-    # internal-oracle-green every round; text keeps
-    # analyze/clean_corpus/lm_score in-window) so the skew family
-    # keeps its in-window representative.
-    ("text_quality_model", "ev_salted_agg"),
-    # -- round-8 batch (judge's r7 ask #1): the two remaining
-    # never-driver-green queries enter the window, this time demoting
-    # slots that HAVE green driver rows (the r7 batch demoted
-    # mm_features in the same batch that promoted it, silently
-    # defeating the rotation's goal — tests/test_window_policy.py now
-    # asserts the net effect keeps every never-driver-green query
-    # in-window). ts_sample_1d demoted: driver-green r1–r7 (seven
-    # consecutive CORRECTNESS rows); ts keeps ts_sample_fill in-window
-    # and the lang_* paths exercise the same scan/bucket operators.
-    ("ts_sample_1d", "mm_features"),
-    # ev_trailing_window demoted: driver-green r6+r7; within-family
-    # swap — ev keeps cohort/zscore/anomaly_mad/approx/salted_agg
-    # in-window and gains session_attribution.
-    ("ev_trailing_window", "ev_session_attribution"),
-    # -- round-8 addition (judge's r7 ask #7): the new retention/
-    # dup-policy language query enters the window immediately (never
-    # driver-verified by definition). lang_sample_by demoted:
-    # driver-green r1–r7, within-family swap — lang keeps multi_agg,
-    # sample_fill and the new retention path in-window.
-    ("lang_sample_by", "lang_retention"),
-    # -- round-8 new operator: DSIR hashed n-gram importance weights
-    # enter the window immediately (never driver-verified by
-    # definition). ds_snapshot_diff demoted: driver-green r6+r7,
-    # within-family — sampling/ds keeps bloom_decontaminate,
-    # shard_manifest, pipeline_e2e, temperature_mixture,
-    # epoch_upsample, split_leakage_safe and the CUBE card in-window.
-    ("ds_snapshot_diff", "ds_importance_dsir"),
-    # Gumbel-top-k resampling (the selection half of DSIR) enters the
-    # window immediately. ds_shard_manifest demoted: driver-green
-    # r6+r7, within-family — the two-phase prefix rank stays pinned by
-    # pytest and the sampling family keeps eight other in-window slots.
-    ("ds_shard_manifest", "ds_dsir_resample"),
-    # -- round-9 freshness batch (judge r8 ask #5): with zero
-    # never-driver-green queries left, rotation switches from
-    # "get everything verified once" to "keep demoted-green claims
-    # fresh" — every query whose NEWEST driver row is r4 or older
-    # (the r1 ev_* quartet, the r2 tpch tail, the r4 ts/lang batch —
-    # 29 queries) re-enters the window this round. Each demoted slot
-    # is driver-green in r8 (most in 3-8 consecutive rounds) and its
-    # family keeps in-window representatives: lang keeps retention +
-    # the three promoted lang_*; ts gains six ts_* slots; dedup keeps
-    # repeated_spans/containment/semantic + the mm dedup triple; sim
-    # keeps topk_ivf/cluster_assign; text keeps lm_score; streaming
-    # keeps sliding_rate/session_window/enrich_join; ev keeps
-    # anomaly_mad/session_attribution + the four promoted ev_*; ds
-    # keeps dataset_card/epoch_upsample/importance_dsir/dsir_resample.
-    ("lang_sample_by", "ev_distinct_users"),
-    ("lang_multi_agg", "ev_running_value"),
-    ("lang_sample_fill", "ev_topk_per_user"),
-    ("ts_sample_fill", "ev_type_pivot"),
-    ("tpch_waiting_supplier", "tpch_brand_part_stats"),
-    ("dedup_ngram_jaccard", "tpch_customer_order_distribution"),
-    ("dedup_minhash_lsh", "tpch_disjunctive_revenue"),
-    ("dedup_simhash", "tpch_forecast_revenue"),
-    ("dedup_embedding_lsh", "tpch_inactive_high_balance"),
-    ("dedup_components", "tpch_large_volume_orders"),
-    ("dedup_best_survivor", "tpch_local_supplier_volume"),
-    ("dedup_minhash_incr", "tpch_nation_volume_shipping"),
-    ("dedup_ngram_word", "tpch_national_market_share"),
-    ("text_analyze", "tpch_priority_late_orders"),
-    ("text_clean_corpus", "tpch_priority_linestatus"),
-    ("sim_topk_exact", "tpch_promo_revenue_share"),
-    ("sim_topk_lsh", "tpch_returned_item_customers"),
-    ("sim_quantize_int8", "tpch_small_quantity_revenue"),
-    ("sim_topk_ivf_full", "tpch_top_supplier"),
-    ("sim_knn_join_lsh", "lang_at_lookup"),
-    ("stream_tumbling_avg", "lang_earliest_k"),
-    ("stream_click_attribution", "lang_sample_multi"),
-    ("ds_pipeline_e2e", "ts_avg"),
-    ("ds_bloom_decontaminate", "ts_earliest"),
-    ("ev_cohort_retention", "ts_latest"),
-    ("ev_rolling_zscore", "ts_latest_k"),
-    ("ev_approx_profile", "ts_max"),
-    ("ds_temperature_mixture", "ts_min"),
-    ("ds_split_leakage_safe", "ts_sample_1h"),
-    # -- round-9 new operators (never driver-verified → in-window
-    # immediately; four this round — dedup_segments,
-    # text_gopher_rules, ds_contamination_overlap, ds_ccnet_buckets —
-    # the latter two land in-window by module position). Net effect
-    # at HEAD (verified by the roster dump in ROUND9.md): the four
-    # demoted slots are dedup_containment and the mm
-    # image/audio/video dedup triple, every one driver-green r7+r8;
-    # mm keeps features + frame_index in-window, dedup keeps
-    # repeated_spans/semantic + the new segment dedup, and the
-    # pigeonhole pair-join shape the mm triple shares stays pinned by
-    # tests/test_multimodal.py + test_plan_quality.py.
-    ("mm_frame_index", "dedup_segments"),
-    ("dedup_semantic", "text_gopher_rules"),
-    # sim_knn_recall (ANN recall@k certification, never
-    # driver-verified) enters the window; stream_enrich_join demoted
-    # (driver-green r7+r8; streaming keeps sliding_rate +
-    # session_window in-window, and the stream-static broadcast shape
-    # stays pinned by tests/test_streaming.py).
-    ("stream_enrich_join", "sim_knn_recall"),
-    # dedup_cut_spans (the ExactSubstr removal half, never
-    # driver-verified) enters the window; sim_topk_ivf demoted
-    # (driver-green r7+r8; sim keeps cluster_assign + the new
-    # knn_recall in-window, and the IVF machinery stays hash-checked
-    # by sim_topk_ivf_full's pytest oracle + recall pins).
-    ("sim_topk_ivf", "dedup_cut_spans"),
-    # ds_training_order (md5-permutation corpus shuffle, never
-    # driver-verified) enters the window; ev_anomaly_mad demoted
-    # (driver-green r7+r8; ev keeps session_attribution plus the four
-    # re-promoted r1 ev_* slots in-window).
-    ("ev_anomaly_mad", "ds_training_order"),
-    # -- round-10 freshness batch (judge r9 ask #1): the 16 queries
-    # whose newest driver row is r5 trip ``stale_out_of_window()`` the
-    # moment CORRECTNESS_r10 lands (cutoff becomes newest < 6), so
-    # they rotate back in BEFORE the artifact exists. Every demoted
-    # slot below is driver-green in r9 (most with 3-5 green rounds)
-    # and stays fresh until r14 by construction; within-family swaps
-    # where the family has in-window slots to spare (ts, ev), tpch
-    # slots otherwise (tpch holds 15 of the 50 — the most
-    # over-represented family; it keeps local_supplier_volume,
-    # priority_linestatus, nation_volume_shipping, promo_revenue_share,
-    # returned_item_customers, small_quantity_revenue in-window plus
-    # the two re-promoted below).
-    ("ts_latest", "ts_point_lookup"),
-    ("ts_min", "ts_where_chain"),
-    ("ts_avg", "ts_sample_sliding"),
-    ("tpch_national_market_share", "tpch_pricing_summary"),
-    ("tpch_brand_part_stats", "tpch_shipping_priority"),
-    ("tpch_top_supplier", "text_redact_pii"),
-    ("tpch_customer_order_distribution", "text_repetition"),
-    ("tpch_disjunctive_revenue", "text_chunks"),
-    ("tpch_forecast_revenue", "text_winnow"),
-    ("tpch_inactive_high_balance", "text_heavy_hitters"),
-    ("ev_distinct_users", "ev_sessionize"),
-    ("ev_type_pivot", "ev_funnel"),
-    ("ev_running_value", "ev_json_props"),
-    ("ev_topk_per_user", "ev_set_ops"),
-    ("tpch_large_volume_orders", "dedup_embedding"),
-    ("tpch_priority_late_orders", "sim_knn_join"),
-    # -- round-10 new operators (never driver-verified → in-window
-    # immediately): BPE token counts + BPE-budget packing (judge r9
-    # ask #7). ts_max and ts_earliest demoted — driver-green in five
-    # rounds each (r1-r4 + r9); ts keeps point_lookup/where_chain/
-    # sample_sliding/latest_k/sample_1h in-window and the min/max/
-    # earliest record-aggregate trio stays pinned by the pytest
-    # oracle suite + hypothesis properties every run.
-    ("ts_max", "text_bpe_tokens"),
-    ("ts_earliest", "ds_pack_bpe"),
-    # ANN auto-tuning certification (judge r9 ask #6, never
-    # driver-verified → in-window). tpch_promo_revenue_share demoted —
-    # driver-green r1/r2/r9; tpch keeps seven in-window
-    # representatives incl. the two re-promoted r10 slots.
-    ("tpch_promo_revenue_share", "sim_knn_recall_tuned"),
-    # Token-budget mixture planning over BPE counts (never
-    # driver-verified → in-window). tpch_returned_item_customers
-    # demoted — driver-green r1/r2/r9; tpch keeps six in-window
-    # representatives.
-    ("tpch_returned_item_customers", "ds_token_budget_mix"),
-    # -- round-10 debt-prepayment batch: the 18 queries whose newest
-    # driver row is r6 would trip ``stale_out_of_window()`` at r11
-    # (cutoff becomes newest < 7), so they rotate in THIS round —
-    # clearing next round's rotation debt by construction instead of
-    # leaving it as a round-11 first-thing chore (ROUND10.md computed
-    # the cohort; DRIVER_SIM_r10.json pre-validates all of them at
-    # sf0.01). Every demoted slot below is driver-green in r9 (fresh
-    # until r14 by construction, most with 3+ green rounds) and every
-    # family keeps in-window representatives: ts keeps point_lookup/
-    # where_chain/sample_sliding + the incoming range_scan; lang keeps
-    # retention/sample_multi + the incoming where_limit; tpch keeps
-    # pricing_summary/shipping_priority; dedup keeps embedding/
-    # cut_spans/segments + the incoming exact_groups; text keeps the
-    # five r5-cohort slots + gopher_rules/bpe_tokens + the three
-    # incoming; ev keeps the four r5-cohort slots + the four incoming;
-    # mm trades features/frame_index for the real-decode triple; ds
-    # keeps training_order/dsir_resample/contamination_overlap/
-    # ccnet_buckets/pack_bpe/token_budget_mix + the four incoming; sim
-    # keeps knn_join/knn_recall/knn_recall_tuned; streaming keeps
-    # sliding_rate/session_window + the incoming dedup.
-    ("ts_latest_k", "ts_range_scan"),
-    ("ts_sample_1h", "lang_where_limit"),
-    ("lang_at_lookup", "text_lang_profile"),
-    ("lang_earliest_k", "text_quality_model"),
-    ("tpch_local_supplier_volume", "text_tfidf_terms"),
-    ("tpch_priority_linestatus", "dedup_exact_groups"),
-    ("tpch_nation_volume_shipping", "ds_decontaminate"),
-    ("tpch_small_quantity_revenue", "ds_mixture_sample"),
-    ("dedup_repeated_spans", "ds_pack_sequences"),
-    ("dedup_semantic", "ds_source_topk"),
-    ("text_lm_score", "ev_asof_purchase_click"),
-    ("ev_session_attribution", "ev_exact_percentiles"),
-    ("mm_features", "ev_rollup_profile"),
-    ("mm_frame_index", "ev_salted_join"),
-    ("ds_dataset_card", "mm_real_decode"),
-    ("ds_epoch_upsample", "mm_real_frames"),
-    ("ds_importance_dsir", "mm_real_resize"),
-    ("sim_cluster_assign", "stream_dedup"),
-    # -- round-10 second new-operator batch (never driver-verified →
-    # in-window immediately): BM25 retrieval, char-level Shannon
-    # entropy, and the per-language BPE compression audit. The two
-    # text queries land in-window by module position (their insertion
-    # shifts the registry tail), so the NET demotions — verified
-    # against the computed roster — are ds_ccnet_buckets (swapped for
-    # the compression audit), stream_session_window, and
-    # sim_knn_recall, all r9-green (fresh until r13); streaming keeps
-    # sliding_rate + the re-promoted dedup in-window, sim keeps
-    # knn_join + knn_recall_tuned (which exercises the same recall
-    # machinery plus the tuning walk), ds keeps ten in-window slots
-    # and the CCNet bucket SQL stays oracle-checked by pytest.
-    ("lang_sample_multi", "text_bm25_topk"),
-    ("stream_sliding_rate", "text_char_entropy"),
-    ("ds_ccnet_buckets", "text_bpe_compression"),
-    # -- round-10 r12-debt prepayment: with the r11 debt cleared
-    # above, the NEXT wave is five queries whose newest driver row is
-    # r7 (they trip the staleness guard at r12); rotating them in now
-    # flattens two rounds of rotation chores into this window and
-    # leaves r11/r12 free to split the r13 wave (the ~40-query r8/r9
-    # re-green echo). Demoted slots are all r9-green singles whose
-    # machinery stays pinned by pytest oracles every run; families
-    # keep representatives (dedup: exact_groups/embedding/cut_spans;
-    # ds: nine other slots incl. the two incoming; text: ten slots;
-    # ev gains salted_agg + trailing_window; ts gains sample_1d).
-    ("lang_sample_multi", "ts_sample_1d"),
-    ("ds_contamination_overlap", "ev_salted_agg"),
-    ("dedup_segments", "ev_trailing_window"),
-    ("ds_training_order", "ds_shard_manifest"),
-    ("text_gopher_rules", "ds_snapshot_diff"),
-    # -- dedup_impact_report (never driver-verified → in-window by
-    # module position; its insertion pushed text_char_entropy out of
-    # the tail, so ds_dsir_resample — r9-green, sampling keeps eight
-    # other in-window slots and the Gumbel-top-k machinery stays
-    # pytest-oracled — demotes to re-seat it).
-    ("ds_dsir_resample", "text_char_entropy"),
-    # -- round-10 third new-operator batch (never driver-verified →
-    # in-window immediately): ts_delta_rate (PromQL-style derivative,
-    # parity-module insertion) and text_collocations (PMI phrase
-    # mining) land in-window by module position — their insertions
-    # pushed text_bm25_topk (never-green, must stay) and
-    # text_quality_model (r6-vintage re-promotion awaiting its r10
-    # green) out of the tail, so the two demotions below re-seat
-    # those; ev_transition_matrix swaps in directly. The three demoted
-    # slots are the window's only already-r9-green members
-    # (dedup_cut_spans, stream_sliding_rate, lang_retention — fresh
-    # until r13, joining the r13 wave rounds 11/12 already plan to
-    # split): dedup keeps embedding/exact_groups/impact_report
-    # in-window and the spans machinery stays pytest-oracled;
-    # streaming keeps the re-promoted stream_dedup; lang keeps
-    # where_limit + retention's §2.1 machinery stays pinned by
-    # tests/test_catalog.py + the r9 artifact.
-    ("dedup_cut_spans", "text_bm25_topk"),
-    ("stream_sliding_rate", "text_quality_model"),
-    ("lang_retention", "ev_transition_matrix"),
-    # -- round-11 registration: ds_lang_kl (staged through r10,
-    # never driver-verified → in-window) lands at slot 42 by module
-    # position; its insertion pushes ds_snapshot_diff (r10-green,
-    # fresh until r14; the two-phase prefix-rank shape stays
-    # pytest-oracled and sampling keeps pack_sequences/source_topk/
-    # token_budget_mix + the incoming bloom_decontaminate/pipeline_e2e
-    # in-window) out of the tail — no swap needed, recorded here so
-    # the roster diff is auditable.
-    # -- round-11 r13-debt first half (judge r10 ask #1): the r13
-    # staleness wave is 36 r8-vintage queries (rotation_debt.py);
-    # this batch rotates 19 back into the window — r12 takes the
-    # remaining 17 (dedup ngram_jaccard/ngram_word/simhash/
-    # minhash_lsh, ds split_leakage_safe/temperature_mixture,
-    # ev cohort_retention/rolling_zscore, lang sample_by/sample_fill,
-    # mm audio_dedup/video_dedup, sim quantize_int8/topk_ivf_full/
-    # topk_lsh, stream_enrich_join, text_clean_corpus). Every demoted
-    # slot below is r10-green in CORRECTNESS_r10 (all 50 in-window
-    # rows were — fresh until r14 by construction) and every family
-    # keeps in-window representatives (per-family roster in the
-    # ROUND11.md notes; verified by tests/test_window_policy.py).
-    # The two watch-item queries (sim_knn_join_lsh, judge #2;
-    # stream_click_attribution, judge #3) rotate in deliberately so
-    # the round's fixed-thread A/B lands alongside fresh driver rows.
-    # -- round-11 new operator: ds_ccnet_buckets_approx (the
-    # rank-certified percentile_approx path, judge r10 ask #7; never
-    # driver-verified → in-window) lands at slot 44 by module
-    # position; its insertion pushes stream_dedup (r10-green, fresh
-    # until r14; streaming keeps tumbling_avg + click_attribution
-    # in-window and the exactly-once dedup machinery stays pinned by
-    # tests/test_streaming.py) out of the tail — recorded here so the
-    # roster diff is auditable.
-    ("ev_exact_percentiles", "ev_anomaly_mad"),
-    ("ev_rollup_profile", "ev_approx_profile"),
-    ("ev_trailing_window", "dedup_best_survivor"),
-    ("ev_set_ops", "dedup_components"),
-    ("ev_salted_join", "dedup_containment"),
-    ("ev_json_props", "dedup_embedding_lsh"),
-    ("ev_sessionize", "dedup_minhash_incr"),
-    ("text_redact_pii", "text_analyze"),
-    ("text_repetition", "ds_bloom_decontaminate"),
-    ("text_chunks", "ds_pipeline_e2e"),
-    ("text_winnow", "sim_knn_join_lsh"),
-    ("text_heavy_hitters", "sim_topk_exact"),
-    ("text_tfidf_terms", "sim_topk_ivf"),
-    ("tpch_pricing_summary", "tpch_waiting_supplier"),
-    ("ts_sample_1d", "ts_sample_fill"),
-    ("ts_sample_sliding", "lang_multi_agg"),
-    ("mm_real_decode", "mm_image_dedup"),
-    ("ds_shard_manifest", "stream_tumbling_avg"),
-    ("ds_mixture_sample", "stream_click_attribution"),
-    # -- round-11 second new-operator batch: text_vocab_growth
-    # (Heaps'-law type-token audit) and text_novelty (per-doc
-    # first-seen-gram fraction) land in-window by module position
-    # (slots 47/48); their insertions pushed ds_token_budget_mix
-    # (r10-green, fresh until r14 — ds keeps eight in-window slots
-    # incl. the pack/mix machinery's pack_bpe + pack_sequences) and
-    # stream_click_attribution out of the tail. The latter is this
-    # round's re-promoted watch item and MUST stay in-window, so it
-    # swaps back in against ev_salted_agg (r10-green; ev keeps
-    # anomaly_mad/approx_profile/transition_matrix/funnel/asof
-    # in-window and the salted==direct equality suite pins the skew
-    # machinery every pytest run).
-    ("ev_salted_agg", "stream_click_attribution"),
-    # -- round-11 third new operator: ts_lttb (LTTB visualization
-    # downsampling, parity-module insertion → in-window at slot 13 by
-    # module position); the tail displacement lands on
-    # sim_knn_recall_tuned (r10-green, fresh until r14 — sim keeps
-    # knn_join/knn_join_lsh/topk_exact/topk_ivf in-window and the
-    # recall-certification machinery stays pytest-oracled by
-    # tests/test_round10b + the sim_knn_recall pins). Recorded here
-    # so the roster diff is auditable.
-    # -- round-11 r12-debt prepayment (the ROUND10 pattern the r10
-    # verdict endorsed): the r13 staleness wave's SECOND half — the
-    # 17 queries rounds 11/12 planned to split — rotates in now, so a
-    # green r11 artifact leaves ZERO rotation debt at the r12 AND r13
-    # cutoffs (rotation_debt.py re-confirms; DRIVER_SIM_r11.json
-    # pre-validates the full registry 141/141 at sf0.01). Every
-    # demoted slot below is r10-green (fresh until r14) and every
-    # family keeps in-window representatives: ts keeps range_scan/
-    # delta_rate/lttb/sample_fill + point_lookup; text keeps analyze/
-    # bpe_tokens/char_entropy/collocations/vocab_growth/novelty + the
-    # incoming clean_corpus; ev keeps transition_matrix/anomaly_mad/
-    # approx_profile + the incoming cohort_retention/rolling_zscore;
-    # mm keeps image_dedup + the incoming audio/video dedup pair;
-    # dedup keeps the five r11-wave re-promotions + the four incoming
-    # (the exact-groups/impact-report machinery stays pytest-oracled
-    # every run); ds keeps lang_kl/ccnet_approx/pack_sequences/
-    # pack_bpe/bloom_decontaminate/pipeline_e2e + the two incoming;
-    # tpch keeps waiting_supplier; lang keeps multi_agg + the two
-    # incoming; sim keeps knn_join_lsh/topk_exact/topk_ivf + the
-    # three incoming; streaming keeps tumbling_avg/click_attribution
-    # + the incoming enrich_join.
-    ("text_lang_profile", "dedup_ngram_jaccard"),
-    ("text_bpe_compression", "dedup_ngram_word"),
-    ("text_quality_model", "dedup_simhash"),
-    ("text_bm25_topk", "dedup_minhash_lsh"),
-    ("ts_where_chain", "ds_split_leakage_safe"),
-    ("ev_funnel", "ds_temperature_mixture"),
-    ("ev_asof_purchase_click", "ev_cohort_retention"),
-    ("mm_real_frames", "ev_rolling_zscore"),
-    ("mm_real_resize", "lang_sample_by"),
-    ("dedup_embedding", "lang_sample_fill"),
-    ("dedup_impact_report", "mm_audio_dedup"),
-    ("dedup_exact_groups", "mm_video_dedup"),
-    ("ds_decontaminate", "sim_quantize_int8"),
-    ("ds_source_topk", "sim_topk_ivf_full"),
-    ("tpch_shipping_priority", "sim_topk_lsh"),
-    ("lang_where_limit", "stream_enrich_join"),
-    ("sim_knn_join", "text_clean_corpus"),
-    # -- round-11 fourth new operator: ev_attribution_models
-    # (multi-touch attribution credit, never driver-verified →
-    # in-window). Within-family swap: ev_transition_matrix demoted —
-    # r10-green (fresh until r14), its pair-aggregate machinery stays
-    # hash-checked by the pytest oracle every run, and ev keeps
-    # anomaly_mad/approx_profile/cohort_retention/rolling_zscore plus
-    # the incoming attribution query in-window.
-    ("ev_transition_matrix", "ev_attribution_models"),
-    # -- round-12 newcomers (judge r11 asks #2/#3; never
-    # driver-verified → in-window immediately): the zlib
-    # compression-ratio quality gate (staged through r11) and the
-    # bucketed-layout zero-Exchange orders⋈lineitem query. Demotions
-    # are r11-green (fresh until r15): lang keeps multi_agg + the two
-    # incoming r9 re-promotions; the sample_fill/sample_by SAMPLE BY
-    # machinery stays pinned by the parity pytest goldens + ts_lttb/
-    # ts_delta_rate in-window. sim_knn_recall_tuned re-enters
-    # DELIBERATELY (the r11 watch item #3 — this round's fixed-thread
-    # CPU bracket should land alongside a fresh driver row; it is
-    # r10-green and would otherwise stale at r15); stream_enrich_join
-    # demotes for it (r11-green; streaming keeps tumbling_avg +
-    # click_attribution + the incoming session_window).
-    ("lang_sample_fill", "text_compression"),
-    ("lang_sample_by", "tpch_bucketed_order_revenue"),
-    ("stream_enrich_join", "sim_knn_recall_tuned"),
-    # -- round-12 r14-rotation first half (judge r11 ask #4): the r14
-    # staleness wave is the 50-query r9-green cohort; this batch
-    # rotates 25 back in so r13 takes the other 25 (the established
-    # split pattern; rotation_debt.py shows ≤25 stale at r14 after a
-    # green r12 artifact). Every demoted slot is r11-green in
-    # CORRECTNESS_r11 (fresh until r15 by construction) and every
-    # family keeps in-window representatives: dedup keeps
-    # minhash_lsh/embedding_lsh/best_survivor/components + the two
-    # incoming span queries; sim keeps knn_join_lsh/topk_exact + the
-    # incoming knn_recall (+ the tuned watch item above); text keeps
-    # analyze/bpe_tokens/novelty + the incoming gopher_rules +
-    # compression; ds keeps bloom_decontaminate/pipeline_e2e/lang_kl/
-    # ccnet_buckets_approx + the three incoming; ev keeps anomaly_mad/
-    # attribution_models + the three incoming; ts keeps delta_rate +
-    # lttb (lttb stays DELIBERATELY — the ask #1 measured-cap fix
-    # needs its fresh driver green with the new plan pin) + the four
-    # incoming record-aggregates; mm keeps image_dedup + the incoming
-    # features; lang/stream/tpch per the notes above.
-    ("dedup_ngram_jaccard", "tpch_brand_part_stats"),
-    ("dedup_minhash_incr", "tpch_customer_order_distribution"),
-    ("dedup_containment", "tpch_disjunctive_revenue"),
-    ("dedup_ngram_word", "tpch_forecast_revenue"),
-    ("dedup_simhash", "tpch_inactive_high_balance"),
-    ("sim_topk_lsh", "tpch_large_volume_orders"),
-    ("sim_topk_ivf", "tpch_local_supplier_volume"),
-    ("sim_topk_ivf_full", "ts_avg"),
-    ("sim_quantize_int8", "ts_earliest"),
-    ("text_clean_corpus", "ts_latest"),
-    ("text_char_entropy", "ts_latest_k"),
-    ("text_collocations", "ev_distinct_users"),
-    ("text_vocab_growth", "ev_running_value"),
-    ("ds_split_leakage_safe", "ev_session_attribution"),
-    ("ds_temperature_mixture", "dedup_cut_spans"),
-    ("ds_pack_sequences", "dedup_repeated_spans"),
-    ("ds_pack_bpe", "ds_ccnet_buckets"),
-    ("ev_approx_profile", "ds_contamination_overlap"),
-    ("ev_rolling_zscore", "ds_dataset_card"),
-    ("ev_cohort_retention", "lang_at_lookup"),
-    ("ts_point_lookup", "lang_earliest_k"),
-    ("ts_range_scan", "mm_features"),
-    ("ts_sample_fill", "sim_knn_recall"),
-    ("mm_audio_dedup", "stream_session_window"),
-    ("mm_video_dedup", "text_gopher_rules"),
-]
-
-
-#: swap pairs _rotated skipped because a member didn't resolve — a
-#: runtime plan-module import failure silently un-rotates window
-#: slots, so the count is surfaced in bench.py's JSON artifact
-#: (``skipped_swaps``) and logged at ERROR, not just warned (advisor
-#: r6); non-empty in a healthy deployment means the externally
-#: verified window has quietly shrunk.
-SKIPPED_SWAPS: list[tuple[str, str]] = []
-
-
-def _rotated(names: list[str]) -> list[str]:
-    """Swap the positions of each ``_WINDOW_SWAPS`` pair in the
-    registry ordering. A pair naming an absent query (e.g. its plan
-    module failed to import — ``_modules`` tolerates that by design)
-    is skipped with an ERROR log + warning instead of crashing every
-    ``all_queries()`` consumer, and recorded in ``SKIPPED_SWAPS``;
-    ``tests/test_entry_contract.py`` asserts all swap names resolve,
-    so a typo still fails CI."""
-    import logging
-    import warnings
-
-    SKIPPED_SWAPS.clear()
-    pos = {n: i for i, n in enumerate(names)}
-    out = list(names)
-    for a, b in _WINDOW_SWAPS:
-        if a not in pos or b not in pos:
-            SKIPPED_SWAPS.append((a, b))
-            logging.getLogger(__name__).error(
-                "window swap names not in registry, skipping: %s", (a, b)
-            )
-            warnings.warn(
-                f"window swap names not in registry, skipping: {(a, b)}",
-                stacklevel=2,
-            )
-            continue
-        pos2 = {n: i for i, n in enumerate(out)}
-        ia, ib = pos2[a], pos2[b]
-        out[ia], out[ib] = out[ib], out[ia]
-    return out
+#: The driver's verification order: ``all_queries()`` yields the
+#: registry in exactly this order, and the external correctness
+#: driver hash-checks its first ``verification.WINDOW`` (50) names.
+#: To rotate a query into or out of that window, move its name here;
+#: ``tests/test_window_policy.py`` checks the result against the
+#: committed ``CORRECTNESS_r*.json`` driver rows.
+ORDER: tuple[str, ...] = (
+    "dedup_minhash_lsh",
+    "lang_earliest_k",
+    "mm_features",
+    "ev_anomaly_mad",
+    "tpch_waiting_supplier",
+    "tpch_large_volume_orders",
+    "text_analyze",
+    "tpch_brand_part_stats",
+    "ev_session_attribution",
+    "ds_contamination_overlap",
+    "stream_tumbling_avg",
+    "lang_multi_agg",
+    "ts_delta_rate",
+    "ts_lttb",
+    "tpch_customer_order_distribution",
+    "ev_attribution_models",
+    "dedup_cut_spans",
+    "mm_image_dedup",
+    "dedup_embedding_lsh",
+    "tpch_local_supplier_volume",
+    "ds_dataset_card",
+    "dedup_best_survivor",
+    "ds_bloom_decontaminate",
+    "ds_pipeline_e2e",
+    "sim_knn_join_lsh",
+    "dedup_components",
+    "sim_topk_exact",
+    "text_compression",
+    "tpch_disjunctive_revenue",
+    "stream_session_window",
+    "ts_latest",
+    "text_bpe_tokens",
+    "text_gopher_rules",
+    "ts_earliest",
+    "sim_knn_recall_tuned",
+    "tpch_bucketed_order_revenue",
+    "dedup_repeated_spans",
+    "ts_latest_k",
+    "ds_ccnet_buckets",
+    "lang_at_lookup",
+    "ts_avg",
+    "stream_click_attribution",
+    "ev_distinct_users",
+    "ds_lang_kl",
+    "tpch_forecast_revenue",
+    "ds_ccnet_buckets_approx",
+    "sim_knn_recall",
+    "tpch_inactive_high_balance",
+    "ev_running_value",
+    "text_novelty",
+    # ---- end of the driver's verification window ----
+    "lang_sample_fill",
+    "stream_enrich_join",
+    "ds_token_budget_mix",
+    "ev_salted_agg",
+    "stream_dedup",
+    "ds_snapshot_diff",
+    "stream_sliding_rate",
+    "ds_temperature_mixture",
+    "ds_dsir_resample",
+    "mm_audio_dedup",
+    "ts_sample_fill",
+    "ev_salted_join",
+    "mm_real_decode",
+    "dedup_impact_report",
+    "dedup_exact_groups",
+    "ev_approx_profile",
+    "ts_point_lookup",
+    "lang_sample_multi",
+    "ds_importance_dsir",
+    "mm_frame_index",
+    "ds_split_leakage_safe",
+    "dedup_semantic",
+    "ds_pack_sequences",
+    "tpch_nation_volume_shipping",
+    "sim_topk_ivf",
+    "tpch_small_quantity_revenue",
+    "sim_cluster_assign",
+    "ds_epoch_upsample",
+    "mm_video_dedup",
+    "ds_training_order",
+    "ev_exact_percentiles",
+    "text_lm_score",
+    "dedup_embedding",
+    "text_repetition",
+    "ts_sample_sliding",
+    "ts_sample_1d",
+    "mm_real_resize",
+    "dedup_segments",
+    "text_chunks",
+    "text_clean_corpus",
+    "ts_min",
+    "sim_topk_ivf_full",
+    "tpch_national_market_share",
+    "ts_range_scan",
+    "lang_retention",
+    "ev_transition_matrix",
+    "text_char_entropy",
+    "ts_sample_1h",
+    "tpch_priority_linestatus",
+    "ds_shard_manifest",
+    "dedup_ngram_jaccard",
+    "tpch_top_supplier",
+    "dedup_minhash_incr",
+    "text_collocations",
+    "ts_where_chain",
+    "ev_type_pivot",
+    "ev_cohort_retention",
+    "dedup_containment",
+    "dedup_ngram_word",
+    "text_vocab_growth",
+    "dedup_simhash",
+    "ev_topk_per_user",
+    "mm_real_frames",
+    "ds_mixture_sample",
+    "text_winnow",
+    "sim_topk_lsh",
+    "tpch_priority_late_orders",
+    "ev_rolling_zscore",
+    "lang_where_limit",
+    "text_tfidf_terms",
+    "tpch_promo_revenue_share",
+    "ts_max",
+    "sim_quantize_int8",
+    "tpch_returned_item_customers",
+    "ds_pack_bpe",
+    "ev_funnel",
+    "ev_rollup_profile",
+    "text_quality_model",
+    "ev_trailing_window",
+    "text_redact_pii",
+    "tpch_shipping_priority",
+    "text_heavy_hitters",
+    "ev_set_ops",
+    "tpch_pricing_summary",
+    "ev_sessionize",
+    "text_bpe_compression",
+    "text_lang_profile",
+    "ds_source_topk",
+    "ds_decontaminate",
+    "sim_knn_join",
+    "text_bm25_topk",
+    "ev_asof_purchase_click",
+    "ev_json_props",
+    "lang_sample_by",
+)
 
 
 def all_queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
+    """Every registered query, in ``ORDER``. A plan-module query name
+    missing from ``ORDER`` (or an ``ORDER`` name no module defines) is
+    a ``ValueError`` naming both sets."""
     out: dict[str, Callable] = {}
     for mod in _modules():
         overlap = out.keys() & mod.QUERIES.keys()
         if overlap:
             raise ValueError(f"duplicate query names: {sorted(overlap)}")
         out.update({k: _with_cache_hygiene(v) for k, v in mod.QUERIES.items()})
-    return {n: out[n] for n in _rotated(list(out))}
+    if set(ORDER) != out.keys():
+        raise ValueError(
+            "registry.ORDER does not match the plan modules' QUERIES: "
+            f"missing from ORDER {sorted(out.keys() - set(ORDER))}, "
+            f"not defined by any module {sorted(set(ORDER) - out.keys())}"
+        )
+    return {n: out[n] for n in ORDER}
 
 
 def all_oracles() -> dict[str, str]:

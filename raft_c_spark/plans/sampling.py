@@ -501,8 +501,8 @@ ORACLES["ds_training_order"] = f"""
 # The r12 window carries 28 rotation/newcomer slots needing their first
 # (or refreshed) driver green, and the artifact is cut; r13 registers
 # this with: QUERIES["ds_psi_drift"] = q_ds_psi_drift;
-# ORACLES["ds_psi_drift"] = PSI_DRIFT_ORACLE_SQL; plus one window swap
-# demoting an r12-green slot (the text_compression staging pattern).
+# ORACLES["ds_psi_drift"] = PSI_DRIFT_ORACLE_SQL; plus a registry.ORDER
+# slot (the text_compression staging pattern).
 
 PSI_BIN_WIDTH = 50
 PSI_N_BINS = 20

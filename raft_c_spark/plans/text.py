@@ -995,7 +995,7 @@ ORACLES["text_novelty"] = f"""
 # pytest-oracle-verified via the driver's own compare in
 # tests/test_round11_ops.py::test_compression_oracle_parity; the
 # registration is the two dict assignments at the end of this block
-# plus the registry window swap — judge r11 ask #2). ---------------------
+# plus its registry.ORDER slot — judge r11 ask #2). --------------------
 
 #: documents-corpus fingerprint — a cheap exact-integer aggregate both
 #: engines compute identically, keying the ground-truth parquet rows

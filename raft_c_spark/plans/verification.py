@@ -2,9 +2,9 @@
 contract — the single source of truth for "how big is the driver's
 hash window" and "what counts as a green driver row", imported by
 ``tests/test_window_policy.py``, ``scripts/gen_driver_green.py`` and
-``scripts/driver_sim.py`` so the rotation policy, its CI guard, and
-the generated COVERAGE audit can never silently disagree (reviewer
-r8: the three had independent copies of both).
+``scripts/driver_sim.py`` so the window guard over
+``registry.ORDER`` and the generated COVERAGE audit can never
+silently disagree.
 """
 
 from __future__ import annotations
@@ -38,8 +38,8 @@ def stale_out_of_window(
 ) -> list[tuple[int, str]]:
     """(newest_row_round, query) for every query OUTSIDE the current
     window whose newest driver row is more than ``STALE_AFTER`` rounds
-    behind the newest artifact — the rotation debt the next round's
-    swap batch must clear."""
+    behind the newest artifact — queries to move into the window by
+    editing ``registry.ORDER``."""
     rows = driver_rows(repo_root)
     cutoff = newest_driver_round(repo_root) - STALE_AFTER
     out = []

@@ -2,8 +2,9 @@
 """Full correctness-driver simulation: build a VANILLA SparkSession
 (the driver's, not ours — default confs plus an arbitrary 200 shuffle
 partitions to catch conf-dependent results), run the first 50
-registry queries at sf0.01 against their DuckDB oracles, and print a
-CORRECTNESS-style per-query report. Exit non-zero on any mismatch.
+queries of ``registry.ORDER`` (the driver's verification window) at
+sf0.01 against their DuckDB oracles, and print a CORRECTNESS-style
+per-query report. Exit non-zero on any mismatch.
 
 Usage: python scripts/driver_sim.py [--sf-dir /root/testdata/sf0.01]
                                     [--window 50 | --all]
@@ -32,9 +33,9 @@ def main() -> int:
         default=None,
         help="write a JSON artifact of the per-query results; 'auto' "
         "names it DRIVER_SIM_r{N}.json for the upcoming round "
-        "(newest CORRECTNESS round + 1) — the judge-r9-ask-#2 "
-        "standing artifact recording that the rotation was "
-        "pre-validated, not just claimed",
+        "(newest CORRECTNESS round + 1) — a standing artifact "
+        "recording that the window order was pre-validated, not "
+        "just claimed",
     )
     args = ap.parse_args()
 

@@ -1,9 +1,8 @@
 #!/usr/bin/env python
 """Regenerate COVERAGE.md's per-query driver-verification table from
-the CORRECTNESS_r*.json artifacts (judge r7 ask #6): the registry's
-rotation comments must never be the source of truth for "which round
-was this query last driver-green" — this table is computed from the
-actual driver rows, so the audit is mechanical. The window size and
+the CORRECTNESS_r*.json artifacts: "which round was this query last
+driver-green" is computed from the actual driver rows, and "is it in
+the window" from ``registry.ORDER``, so the audit is mechanical. The window size and
 green-row parse come from ``raft_c_spark.plans.verification``, the
 same module ``tests/test_window_policy.py`` guards with.
 
@@ -52,8 +51,8 @@ def build_table() -> str:
         "**Last green** = most recent round with an all-green driver row "
         "(rows+schema+hash). **Window** = inside the driver's "
         f"{WINDOW}-query hash window for the NEXT round under the current "
-        "registry rotation. Queries with last green `—` and Window `no` "
-        "would violate the rotation policy "
+        "`registry.ORDER`. Queries with last green `—` and Window `no` "
+        "would violate the window policy "
         "(`tests/test_window_policy.py` fails the build).",
         "",
         "| # | Query | Last green | Driver rows (round:status) | Window |",

@@ -8,6 +8,7 @@ to replicate the driver's exact scale.
 from __future__ import annotations
 
 import os
+import sys
 
 import duckdb
 import pytest
@@ -37,24 +38,29 @@ def test_entry_smoke(spark):
     assert df.schema is not None
 
 
-def test_window_swap_names_resolve():
-    """_rotated() skips swap pairs naming absent queries (so an
-    optional plan module failing to import degrades instead of
-    crashing bench/soak/driver); this test is the strict companion:
-    a typo'd or renamed swap name fails CI here."""
-    import warnings
-
-    from raft_c_spark.plans.registry import _WINDOW_SWAPS
-
-    names = set(entrymod.queries())
-    for a, b in _WINDOW_SWAPS:
-        assert a in names and b in names, f"swap names missing: {(a, b)}"
-    with warnings.catch_warnings():
-        warnings.simplefilter("error")
-        entrymod.queries()  # full rotation must emit no skip warnings
+def test_registry_yields_order_without_duplicates():
     from raft_c_spark.plans import registry
 
-    assert registry.SKIPPED_SWAPS == []  # surfaced counter stays zero
+    assert len(set(registry.ORDER)) == len(registry.ORDER)
+    assert list(registry.all_queries()) == list(registry.ORDER)
+
+
+def test_registry_plan_module_import_failure_is_fatal(monkeypatch):
+    """A plan module that fails to import must fail every consumer,
+    not silently drop its family from the registry."""
+    from raft_c_spark.plans import registry
+
+    monkeypatch.setitem(sys.modules, "raft_c_spark.plans.tpch4", None)
+    with pytest.raises(ImportError):
+        registry.all_queries()
+
+
+def test_registry_rejects_query_missing_from_order(monkeypatch):
+    from raft_c_spark.plans import registry, tpch4
+
+    monkeypatch.setitem(tpch4.QUERIES, "tpch_unlisted_probe", lambda s, d: None)
+    with pytest.raises(ValueError, match="tpch_unlisted_probe"):
+        registry.all_queries()
 
 
 def test_every_query_has_callable_and_name_parity():
