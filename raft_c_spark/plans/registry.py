@@ -102,31 +102,31 @@ ORDER: tuple[str, ...] = (
     "ds_bloom_decontaminate",
     "ds_pipeline_e2e",
     "sim_knn_join_lsh",
-    "dedup_components",
-    "sim_topk_exact",
-    "text_compression",
-    "tpch_disjunctive_revenue",
-    "stream_session_window",
-    "ts_latest",
-    "text_bpe_tokens",
-    "text_gopher_rules",
-    "ts_earliest",
-    "sim_knn_recall_tuned",
-    "tpch_bucketed_order_revenue",
-    "dedup_repeated_spans",
-    "ts_latest_k",
-    "ds_ccnet_buckets",
-    "lang_at_lookup",
-    "ts_avg",
-    "stream_click_attribution",
-    "ev_distinct_users",
-    "ds_lang_kl",
-    "tpch_forecast_revenue",
-    "ds_ccnet_buckets_approx",
-    "sim_knn_recall",
-    "tpch_inactive_high_balance",
-    "ev_running_value",
-    "text_novelty",
+    "stream_sliding_rate",
+    "ds_dsir_resample",
+    "lang_sample_multi",
+    "ds_importance_dsir",
+    "mm_frame_index",
+    "dedup_semantic",
+    "tpch_nation_volume_shipping",
+    "tpch_small_quantity_revenue",
+    "sim_cluster_assign",
+    "ds_epoch_upsample",
+    "ds_training_order",
+    "text_lm_score",
+    "dedup_segments",
+    "ts_min",
+    "tpch_national_market_share",
+    "lang_retention",
+    "ts_sample_1h",
+    "tpch_priority_linestatus",
+    "tpch_top_supplier",
+    "ev_type_pivot",
+    "ev_topk_per_user",
+    "tpch_priority_late_orders",
+    "tpch_promo_revenue_share",
+    "ts_max",
+    "tpch_returned_item_customers",
     # ---- end of the driver's verification window ----
     "lang_sample_fill",
     "stream_enrich_join",
@@ -134,9 +134,9 @@ ORDER: tuple[str, ...] = (
     "ev_salted_agg",
     "stream_dedup",
     "ds_snapshot_diff",
-    "stream_sliding_rate",
+    "dedup_components",
     "ds_temperature_mixture",
-    "ds_dsir_resample",
+    "sim_topk_exact",
     "mm_audio_dedup",
     "ts_sample_fill",
     "ev_salted_join",
@@ -145,63 +145,63 @@ ORDER: tuple[str, ...] = (
     "dedup_exact_groups",
     "ev_approx_profile",
     "ts_point_lookup",
-    "lang_sample_multi",
-    "ds_importance_dsir",
-    "mm_frame_index",
+    "text_compression",
+    "tpch_disjunctive_revenue",
+    "stream_session_window",
     "ds_split_leakage_safe",
-    "dedup_semantic",
+    "ts_latest",
     "ds_pack_sequences",
-    "tpch_nation_volume_shipping",
+    "text_bpe_tokens",
     "sim_topk_ivf",
-    "tpch_small_quantity_revenue",
-    "sim_cluster_assign",
-    "ds_epoch_upsample",
+    "text_gopher_rules",
+    "ts_earliest",
+    "sim_knn_recall_tuned",
     "mm_video_dedup",
-    "ds_training_order",
+    "tpch_bucketed_order_revenue",
     "ev_exact_percentiles",
-    "text_lm_score",
+    "dedup_repeated_spans",
     "dedup_embedding",
     "text_repetition",
     "ts_sample_sliding",
     "ts_sample_1d",
     "mm_real_resize",
-    "dedup_segments",
+    "ts_latest_k",
     "text_chunks",
     "text_clean_corpus",
-    "ts_min",
+    "ds_ccnet_buckets",
     "sim_topk_ivf_full",
-    "tpch_national_market_share",
+    "lang_at_lookup",
     "ts_range_scan",
-    "lang_retention",
+    "ts_avg",
     "ev_transition_matrix",
     "text_char_entropy",
-    "ts_sample_1h",
-    "tpch_priority_linestatus",
+    "stream_click_attribution",
+    "ev_distinct_users",
     "ds_shard_manifest",
     "dedup_ngram_jaccard",
-    "tpch_top_supplier",
+    "ds_lang_kl",
     "dedup_minhash_incr",
     "text_collocations",
     "ts_where_chain",
-    "ev_type_pivot",
+    "tpch_forecast_revenue",
     "ev_cohort_retention",
     "dedup_containment",
     "dedup_ngram_word",
     "text_vocab_growth",
     "dedup_simhash",
-    "ev_topk_per_user",
+    "ds_ccnet_buckets_approx",
     "mm_real_frames",
     "ds_mixture_sample",
     "text_winnow",
     "sim_topk_lsh",
-    "tpch_priority_late_orders",
+    "sim_knn_recall",
     "ev_rolling_zscore",
     "lang_where_limit",
     "text_tfidf_terms",
-    "tpch_promo_revenue_share",
-    "ts_max",
+    "tpch_inactive_high_balance",
+    "ev_running_value",
     "sim_quantize_int8",
-    "tpch_returned_item_customers",
+    "text_novelty",
     "ds_pack_bpe",
     "ev_funnel",
     "ev_rollup_profile",
