@@ -9,7 +9,7 @@ from __future__ import annotations
 from pyspark.sql import functions as F
 
 from raft_c_spark.functions.exact import dec, sql_dec, sql_sum_expr
-from raft_c_spark.plans.tpch import _SQL_DISC_PRICE, _disc_price, _fact_wide
+from raft_c_spark.plans.tpch import _SQL_DISC_PRICE, _disc_price
 from raft_c_spark.sources.testdata import load_table
 
 
@@ -42,10 +42,8 @@ def q_returned_item_customers(spark, sf_dir):
     c = load_table(spark, sf_dir, "customer")
     n = load_table(spark, sf_dir, "nation")
     o = load_table(spark, sf_dir, "orders")
-    l = _fact_wide(
-        load_table(spark, sf_dir, "lineitem").filter(
-            F.col("l_returnflag") == "R"
-        )
+    l = load_table(spark, sf_dir, "lineitem").filter(
+        F.col("l_returnflag") == "R"
     )
     return (
         l.join(o, l.l_orderkey == o.o_orderkey)
