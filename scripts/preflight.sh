@@ -20,9 +20,6 @@ echo "== preflight: full-registry driver simulation (judge r9 ask #2) =="
 # pre-validated by a committed artifact, not a round-notes sentence
 python scripts/driver_sim.py --all --out auto | tail -3
 
-echo "== preflight: BASELINE.md BENCH_HEAD block =="
-python scripts/gen_bench_row.py --check
-
 echo "== preflight: bench (${SF_DIR}) =="
 OUT=$(SPARK_GRAFT_SF_DIR="$SF_DIR" SPARK_GRAFT_BENCH_PASSES=1 python bench.py 2>/dev/null | tail -1)
 echo "$OUT" | python -c '
