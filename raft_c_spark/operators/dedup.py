@@ -191,7 +191,7 @@ def dedup_exact(df: DataFrame, id_col: str, text_col: str) -> DataFrame:
     # shuffle join; FPs and composite-hash collisions die in the
     # id == keep filter, so the result is bit-identical to the
     # broadcast path (pinned by test_dedup_exact_bloom_fallback_exact).
-    # Regime note (measured r11, scripts/ab_dedup_exact_bloom.py): on
+    # Regime note (measured r11, see SCALING.md): on
     # local[32] this tier LOSES to the bare equi-join (~30x at 450k
     # rows) because a local shuffle is ~a memcpy while the probe
     # kernel pays the full text stream through Arrow both ways — the
