@@ -2,9 +2,10 @@
 """Regenerate COVERAGE.md's per-query driver-verification table from
 the CORRECTNESS_r*.json artifacts: "which round was this query last
 driver-green" is computed from the actual driver rows, and "is it in
-the window" from ``registry.ORDER``, so the audit is mechanical. The window size and
-green-row parse come from ``raft_c_spark.plans.verification``, the
-same module ``tests/test_window_policy.py`` guards with.
+the window" from ``registry.ORDER``, so the audit is mechanical. The
+window size and green-row parse come from
+``raft_c_spark.plans.verification``, the same module
+``tests/test_window_policy.py`` guards with.
 
 Usage: python scripts/gen_driver_green.py   (rewrites COVERAGE.md
 between the GENERATED markers; exits non-zero if either marker is

@@ -16,7 +16,7 @@ python -m pytest tests/ -x -q
 
 echo "== preflight: full-registry driver simulation (judge r9 ask #2) =="
 # every registered query vs its DuckDB oracle under the driver's exact
-# conditions, recorded as DRIVER_SIM_r{N}.json — the rotation is
+# conditions, recorded as DRIVER_SIM_r{N}.json — the window order is
 # pre-validated by a committed artifact, not a round-notes sentence
 python scripts/driver_sim.py --all --out auto | tail -3
 
