@@ -1,19 +1,29 @@
-"""Repo-local atomic parquet cache for derived columnar state
-(minhash signatures, shingle codes, simhash vocabularies, expected
-multimodal decode stats).
+"""Repo-local atomic cache for derived on-disk state (minhash
+signatures, shingle codes, simhash vocabularies, vector indexes,
+query-language warehouses, expected multimodal decode stats).
 
 This is the local stand-in for the 100 TB deployment's stored-column /
-materialized-index layout: expensive derived columns are computed once
-per corpus and read back by every subsequent run. Three properties the
-shared-/tmp + ``_done``-marker scheme it replaces lacked:
+materialized-index layout: expensive derived state is computed once
+per corpus and read back by every subsequent run. The module is the
+one owner of that state: :func:`lookup` is the only probe and
+:func:`materialize` the only builder, so no other module names a cache
+or staging path. Their rules:
 
 - **complete keys** — callers must fold every output-affecting
   parameter (shingle width, permutation count, algorithm version)
   into the cache key; the helper just namespaces it;
-- **atomic publish** — the frame is written to a ``.tmp.<pid>``
-  staging dir and ``os.replace``d into place, so a concurrent reader
-  can never observe a half-written parquet and a concurrent writer
-  race resolves to exactly one winner;
+- **private staging, atomic publish** — ``write`` fills
+  ``<final>.tmp.<pid>.<uuid4 hex>``, a name no other process or
+  thread shares, and the result is ``os.replace``d into place, so a
+  reader never observes a half-written entry and a race between
+  writers resolves to exactly one winner;
+- **validity** — an entry is served only while every ``*.parquet``
+  file in it has a readable footer (``pq.read_metadata`` on the
+  driver, no Spark job), checked once per
+  ``sources.parquet.fingerprint`` of the entry; an invalid entry (a
+  truncated file) is renamed aside, removed and rebuilt as a miss;
+- **sweep** — before a build, ``<final>.tmp.<pid>*`` siblings whose
+  pid is no longer alive (a crashed writer's) are removed;
 - **private location** — defaults to ``<repo>/.cache`` (overridable
   via ``RAFT_C_SPARK_CACHE_DIR``) instead of the world-writable
   system tempdir, so another user on a shared host cannot pre-create
@@ -25,7 +35,11 @@ from __future__ import annotations
 import hashlib
 import os
 import shutil
+import uuid
+from typing import Callable
 
+import pyarrow as pa
+import pyarrow.parquet as pq
 from pyspark.sql import DataFrame
 
 from raft_c_spark.sources.parquet import fingerprint, read_parquet
@@ -34,6 +48,10 @@ _REPO_ROOT = os.path.dirname(
     os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 )
 
+#: entry path -> the fingerprint its footers were last read at;
+#: cleared past 4096 entries, like the schema memo
+_VALID: dict[str, tuple] = {}
+
 
 def cache_root() -> str:
     return os.environ.get(
@@ -41,12 +59,11 @@ def cache_root() -> str:
     )
 
 
-#: optional observer called with every cache key consulted (hit-check,
-#: build, or read-back all funnel through ``cache_path``). bench.py
-#: installs one per query so BENCH_FULL can flag queries whose warm
-#: timing shares a materialization with another query (advisor r9:
-#: a shared-cache consumer's warm min measures a parquet read, not
-#: the operator's compute — readers need to see which rows those are).
+#: optional observer called once with the key of every
+#: :func:`lookup` / :func:`materialize` consult. bench.py installs one
+#: per query so BENCH_FULL can flag queries whose warm timing shares a
+#: materialization with another query (a shared-cache consumer's warm
+#: min measures a parquet read, not the operator's compute).
 _key_observer = None
 
 
@@ -55,15 +72,104 @@ def set_key_observer(fn) -> None:
     _key_observer = fn
 
 
-def cache_path(key: str) -> str:
-    """Absolute path for a cache entry. ``key`` must encode every
-    parameter that affects the cached content (data fingerprint,
-    algorithm params, format version)."""
+def _entry_path(key: str) -> str:
+    """Absolute path for a cache entry; reports the consult to the key
+    observer. ``key`` must encode every parameter that affects the
+    cached content (data fingerprint, algorithm params, format
+    version)."""
     if not key or "/" in key or key.startswith("."):
         raise ValueError(f"bad cache key: {key!r}")
     if _key_observer is not None:
         _key_observer(key)
     return os.path.join(cache_root(), key)
+
+
+def _remove(path: str) -> None:
+    if os.path.isdir(path) and not os.path.islink(path):
+        shutil.rmtree(path, ignore_errors=True)
+    else:
+        try:
+            os.unlink(path)
+        except FileNotFoundError:
+            pass
+
+
+def _staging(final: str) -> str:
+    return f"{final}.tmp.{os.getpid()}.{uuid.uuid4().hex}"
+
+
+def _valid(final: str) -> bool:
+    """Whether ``final`` is a complete entry; an invalid one is moved
+    aside (under a staging name, so the sweep collects it if this
+    process dies mid-removal) and removed."""
+    fp = fingerprint(final)
+    if fp is None:
+        return False
+    if _VALID.get(final) == fp:
+        return True
+    single = len(fp) == 1 and fp[0][0] == "."
+    try:
+        for rel, _size, _mtime in fp:
+            if single or rel.endswith(".parquet"):
+                pq.read_metadata(final if single else os.path.join(final, rel))
+    except (OSError, pa.ArrowException):
+        aside = _staging(final)
+        try:
+            os.rename(final, aside)
+        except OSError:
+            return False  # another consult moved it first
+        _remove(aside)
+        return False
+    if len(_VALID) > 4096:
+        _VALID.clear()
+    _VALID[final] = fp
+    return True
+
+
+def lookup(key: str) -> str | None:
+    """Path of the valid entry for ``key``, or ``None`` on a miss."""
+    final = _entry_path(key)
+    return final if _valid(final) else None
+
+
+def _alive(pid: int) -> bool:
+    try:
+        os.kill(pid, 0)
+    except ProcessLookupError:
+        return False
+    except PermissionError:
+        pass  # alive, owned by another user
+    return True
+
+
+def _sweep(final: str) -> None:
+    """Remove the staging siblings of ``final`` left by dead writers."""
+    root, name = os.path.split(final)
+    prefix = f"{name}.tmp."
+    for sib in os.listdir(root):
+        if sib.startswith(prefix):
+            pid = sib[len(prefix):].split(".", 1)[0]
+            if pid.isdigit() and not _alive(int(pid)):
+                _remove(os.path.join(root, sib))
+
+
+def materialize(key: str, write: Callable[[str], object]) -> str:
+    """Path of the valid entry for ``key``, built on a miss by
+    ``write(staging)``, which must create a complete file or
+    directory at ``staging``; it is removed if ``write`` raises."""
+    final = _entry_path(key)
+    if _valid(final):
+        return final
+    os.makedirs(os.path.dirname(final), exist_ok=True)
+    _sweep(final)
+    staging = _staging(final)
+    try:
+        write(staging)
+    except BaseException:
+        _remove(staging)
+        raise
+    publish_atomic(staging, final)
+    return final
 
 
 def publish_atomic(staging: str, final: str) -> None:
@@ -74,33 +180,25 @@ def publish_atomic(staging: str, final: str) -> None:
     try:
         os.replace(staging, final)
     except OSError:
-        if os.path.isfile(staging):
-            os.unlink(staging)
-        else:
-            shutil.rmtree(staging, ignore_errors=True)
+        _remove(staging)
         if not os.path.exists(final):
             raise
 
 
 def cached_parquet(df: DataFrame, key: str) -> DataFrame:
-    """Materialize ``df`` as parquet under ``cache_path(key)`` once
-    and return the read-back frame. Subsequent calls (any process)
-    skip the compute entirely — the caller should build ``df``
-    lazily so a cache hit never triggers its job.
+    """Materialize ``df`` as parquet under ``key`` once and return the
+    read-back frame. Subsequent calls (any process) skip the compute
+    entirely — the caller should build ``df`` lazily so a cache hit
+    never triggers its job.
 
     ``key`` must uniquely fingerprint the EXACT input frame (its
     rows AND columns — ``data_cache_key`` covers the backing file;
     any upstream filter/transform must be folded in too) plus every
     output-affecting parameter: the cache cannot detect that a
     filtered ``df`` was passed under an old key, and serves the
-    stale full-corpus entry silently (advisor r9)."""
-    final = cache_path(key)
-    if not os.path.isdir(final):
-        os.makedirs(cache_root(), exist_ok=True)
-        staging = f"{final}.tmp.{os.getpid()}"
-        df.write.mode("overwrite").parquet(staging)
-        publish_atomic(staging, final)
-    return read_parquet(df.sparkSession, final)
+    stale full-corpus entry silently."""
+    path = materialize(key, lambda staging: df.write.parquet(staging))
+    return read_parquet(df.sparkSession, path)
 
 
 def data_cache_key(sf_dir: str, table: str) -> str:

@@ -71,14 +71,6 @@ def to_ns(col: Column) -> Column:
     return (F.unix_micros(col) * F.lit(1000)).cast("long")
 
 
-def ns_to_ts(col: Column) -> Column:
-    """Derived µs-precision TimestampType column for display/windows.
-
-    Lossy below µs — the long stays the source of truth.
-    """
-    return F.timestamp_micros((col / F.lit(1000)).cast("long"))
-
-
 def bucket_end(ts_col: Column, interval_ns: int) -> Column:
     """Tumbling-bucket *end* label for SAMPLE BY semantics
     (ts_avg_sample, src/timeseries.c:1265-1308): the bucket of point p

@@ -217,63 +217,49 @@ def train_bpe(
     fingerprint the exact input frame, see diskcache.cached_parquet)
     persists the learned merges per corpus so the train pass runs
     once per corpus version."""
-    key = None
-    if cache_key is not None:
-        import os as _os
 
-        from raft_c_spark.functions.diskcache import cache_path
-
-        key = (
-            f"bpemerges_{cache_key}_{text_col}"
-            f"_m{num_merges}_w{max_words}_v{BPE_VERSION}"
+    def learn() -> list[tuple[str, str]]:
+        wc = (
+            word_counts(df, text_col)
+            .orderBy(F.col("cnt").desc(), F.col("word"))
+            .limit(max_words)
+            .collect()
         )
-        if _os.path.isdir(cache_path(key)):
-            import pyarrow.parquet as pq
+        return learn_merges([(r["word"], r["cnt"]) for r in wc], num_merges)
 
-            t = pq.read_table(cache_path(key))
-            return list(
-                zip(t["a"].to_pylist(), t["b"].to_pylist())
-            )
+    if cache_key is None:
+        return learn()
+    import os as _os
 
-    wc = (
-        word_counts(df, text_col)
-        .orderBy(F.col("cnt").desc(), F.col("word"))
-        .limit(max_words)
-        .collect()
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    from raft_c_spark.functions import diskcache
+
+    def write(staging: str) -> None:
+        merges = learn()
+        _os.makedirs(staging)
+        # explicit schema: an EMPTY merge list (degenerate corpus
+        # where no pair repeats) must round-trip as string columns,
+        # not pyarrow's inferred null type
+        pq.write_table(
+            pa.table(
+                {
+                    "a": pa.array([a for a, _ in merges], pa.string()),
+                    "b": pa.array([b for _, b in merges], pa.string()),
+                }
+            ),
+            _os.path.join(staging, "merges.parquet"),
+        )
+
+    t = pq.read_table(
+        diskcache.materialize(
+            f"bpemerges_{cache_key}_{text_col}"
+            f"_m{num_merges}_w{max_words}_v{BPE_VERSION}",
+            write,
+        )
     )
-    merges = learn_merges([(r["word"], r["cnt"]) for r in wc], num_merges)
-
-    if key is not None:
-        import os as _os
-
-        import pyarrow as pa
-        import pyarrow.parquet as pq
-
-        from raft_c_spark.functions import diskcache
-
-        final = diskcache.cache_path(key)
-        if not _os.path.isdir(final):
-            _os.makedirs(diskcache.cache_root(), exist_ok=True)
-            staging = f"{final}.tmp.{_os.getpid()}"
-            _os.makedirs(staging, exist_ok=True)
-            # explicit schema: an EMPTY merge list (degenerate corpus
-            # where no pair repeats) must round-trip as string columns,
-            # not pyarrow's inferred null type
-            pq.write_table(
-                pa.table(
-                    {
-                        "a": pa.array(
-                            [a for a, _ in merges], pa.string()
-                        ),
-                        "b": pa.array(
-                            [b for _, b in merges], pa.string()
-                        ),
-                    }
-                ),
-                _os.path.join(staging, "merges.parquet"),
-            )
-            diskcache.publish_atomic(staging, final)
-    return merges
+    return list(zip(t["a"].to_pylist(), t["b"].to_pylist()))
 
 
 def bpe_token_counts(

@@ -294,7 +294,7 @@ def ngram_jaccard_pairs(
         # folds every dispatch-affecting parameter; the requested
         # strategy (pre-auto-resolution) is deterministic per corpus,
         # so it is a valid key component.
-        from raft_c_spark.functions.diskcache import cache_path
+        from raft_c_spark.functions.diskcache import lookup
 
         thr = str(threshold).replace(".", "p")
         pair_key = (
@@ -302,8 +302,8 @@ def ngram_jaccard_pairs(
             f"_{strategy}_{unit}_df{max_shingle_df}_mb{max_bitmap_shingles}"
             f"_v1"
         )
-        if os.path.isdir(cache_path(pair_key)):
-            return read_parquet(df.sparkSession, cache_path(pair_key))
+        if (hit := lookup(pair_key)) is not None:
+            return read_parquet(df.sparkSession, hit)
     if unit == "word" and strategy == "auto":
         strategy = "prefix"
     if unit == "word" and strategy == "bitmap":
@@ -435,15 +435,15 @@ def ngram_containment_pairs(
         raise ValueError(f"unit must be 'char' or 'word', got {unit!r}")
     pair_key = None
     if cache_key is not None:
-        from raft_c_spark.functions.diskcache import cache_path
+        from raft_c_spark.functions.diskcache import lookup
 
         thr = str(threshold).replace(".", "p")
         pair_key = (
             f"containpairs_{cache_key}_{id_col}_{text_col}_n{n}_t{thr}"
             f"_{unit}_v1"
         )
-        if os.path.isdir(cache_path(pair_key)):
-            return read_parquet(df.sparkSession, cache_path(pair_key))
+        if (hit := lookup(pair_key)) is not None:
+            return read_parquet(df.sparkSession, hit)
     shingle_fn = word_shingles if unit == "word" else char_shingles
     sh = shingle_fn(df, id_col, text_col, n)
     if cache_key is not None:
@@ -1118,12 +1118,10 @@ def minhash_lsh_pairs(
             f"minhashpairs_{cache_key}_{id_col}_{text_col}"
             f"_n{n}_p{num_perm}_b{bands}_t{thr}_v1"
         )
-        import os
+        from raft_c_spark.functions.diskcache import cached_parquet, lookup
 
-        from raft_c_spark.functions.diskcache import cache_path, cached_parquet
-
-        if os.path.isdir(cache_path(pair_key)):
-            return read_parquet(df.sparkSession, cache_path(pair_key))
+        if (hit := lookup(pair_key)) is not None:
+            return read_parquet(df.sparkSession, hit)
     sig = minhash_signatures(df, id_col, text_col, n, num_perm)
     if cache_key is not None:
         sig = _persisted_signatures(sig, cache_key, id_col, text_col, n, num_perm)
@@ -1235,17 +1233,15 @@ def minhash_lsh_pairs_between(
     rows_per_band = num_perm // bands
     pair_key = None
     if pair_cache_key is not None:
-        import os
-
-        from raft_c_spark.functions.diskcache import cache_path, cached_parquet
+        from raft_c_spark.functions.diskcache import cached_parquet, lookup
 
         thr = str(threshold).replace(".", "p")
         pair_key = (
             f"minhashpairsbtw_{pair_cache_key}_{id_col}_{text_col}"
             f"_n{n}_p{num_perm}_b{bands}_t{thr}_v1"
         )
-        if os.path.isdir(cache_path(pair_key)):
-            return read_parquet(new_df.sparkSession, cache_path(pair_key))
+        if (hit := lookup(pair_key)) is not None:
+            return read_parquet(new_df.sparkSession, hit)
     sig_new = minhash_signatures(new_df, id_col, text_col, n, num_perm).cache()
     sig_corp = minhash_signatures(corpus_df, id_col, text_col, n, num_perm)
     if corpus_cache_key is not None:
@@ -1423,14 +1419,6 @@ def simhash60(df: DataFrame, id_col: str, text_col: str) -> DataFrame:
     return agg.select("doc", sim.alias("simhash"))
 
 
-def simhash64(df: DataFrame, id_col: str, text_col: str) -> DataFrame:
-    """Deprecated alias for :func:`simhash60`. The hash narrowed from
-    64 to 60 bits (and the token hash changed xxhash64 → md5) when the
-    pipeline became oracle-replicable in DuckDB — output values and
-    candidate sets are NOT compatible with the old 64-bit variant."""
-    return simhash60(df, id_col, text_col)
-
-
 def simhash_pairs(
     df: DataFrame,
     id_col: str,
@@ -1464,15 +1452,15 @@ def simhash_pairs(
     if cache_key is not None:
         # pair-level cache (same pattern as minhash_lsh_pairs): repeat
         # runs skip the chunk self-join entirely
-        from raft_c_spark.functions.diskcache import cache_path
+        from raft_c_spark.functions.diskcache import lookup
 
         pair_key = (
             f"simhashpairs{SIMHASH_BITS}_{cache_key}_{id_col}_{text_col}"
             f"_h{max_hamming}_c{n_chunks}"
             f"_w{SIMHASH_WEIGHT_CAP}_v3"  # v3: tf×capped-idf votes
         )
-        if os.path.isdir(cache_path(pair_key)):
-            return read_parquet(df.sparkSession, cache_path(pair_key))
+        if (hit := lookup(pair_key)) is not None:
+            return read_parquet(df.sparkSession, hit)
     sig = simhash60(df, id_col, text_col)
     if cache_key is not None:
         from raft_c_spark.functions.diskcache import cached_parquet
@@ -2017,16 +2005,14 @@ def repeated_substring_spans(
     # halves the pipeline's bench cost and at 100 TB spans are a
     # stored column computed once per corpus version anyway.
     if cache_key is not None:
-        import os as _os
-
-        from raft_c_spark.functions.diskcache import cache_path
+        from raft_c_spark.functions.diskcache import lookup
 
         key = (
             f"spans_{cache_key}_{id_col}_{text_col}"
             f"_L{min_len}_c{min_count}_v1"
         )
-        if _os.path.isdir(cache_path(key)):
-            return read_parquet(df.sparkSession, cache_path(key))
+        if (hit := lookup(key)) is not None:
+            return read_parquet(df.sparkSession, hit)
 
     L = min_len
     norm = F.lower(F.trim(F.regexp_replace(F.col(text_col), r"\s+", " ")))

@@ -596,19 +596,12 @@ def synthetic_media_path(n: int = 64, seed: int = 42) -> str:
     storage, not in a driver-constructed frame) and what keeps the
     table independent of session conf (a driver-side pandas hand-off
     needs Arrow enabled; a parquet scan works everywhere)."""
-    import os
-
     import pyarrow as pa
     import pyarrow.parquet as pq
 
     from raft_c_spark.functions import diskcache
 
-    final = diskcache.cache_path(
-        f"media_corpus_v{MEDIA_CORPUS_VERSION}_n{n}_s{seed}.parquet"
-    )
-    if not os.path.exists(final):
-        os.makedirs(diskcache.cache_root(), exist_ok=True)
-        staging = f"{final}.tmp.{os.getpid()}"
+    def write(staging: str) -> None:
         table = pa.Table.from_pylist(
             synthetic_media_rows(n, seed),
             schema=pa.schema(
@@ -624,8 +617,10 @@ def synthetic_media_path(n: int = 64, seed: int = 42) -> str:
             ),
         )
         pq.write_table(table, staging)
-        diskcache.publish_atomic(staging, final)
-    return final
+
+    return diskcache.materialize(
+        f"media_corpus_v{MEDIA_CORPUS_VERSION}_n{n}_s{seed}.parquet", write
+    )
 
 
 def synthetic_media(spark, n: int = 64, seed: int = 42) -> DataFrame:

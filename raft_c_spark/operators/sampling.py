@@ -567,16 +567,14 @@ def importance_weights(
     resampling, mixture design — reads repeatedly, so scoring is paid
     once per corpus, not per query."""
     if cache_key is not None:
-        import os as _os
-
-        from raft_c_spark.functions.diskcache import cache_path
+        from raft_c_spark.functions.diskcache import lookup
 
         key = (
             f"dsirweights_{cache_key}_{id_col}_{text_col}_{target_col}"
             f"_b{num_buckets}_v1"
         )
-        if _os.path.isdir(cache_path(key)):
-            return read_parquet(df.sparkSession, cache_path(key))
+        if (hit := lookup(key)) is not None:
+            return read_parquet(df.sparkSession, hit)
     toks = F.regexp_extract_all(
         F.lower(F.col(text_col)), F.lit("[a-z0-9]+"), F.lit(0)
     )

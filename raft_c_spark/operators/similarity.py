@@ -860,18 +860,14 @@ def ivf_index(
 
         from raft_c_spark.functions import diskcache
 
-        final = diskcache.cache_path(
-            f"ivf_{cache_key}_l{n_lists}_s{seed}_v2"
-        )
-        if not os.path.isdir(final):
-            os.makedirs(diskcache.cache_root(), exist_ok=True)
-            staging = f"{final}.tmp.{os.getpid()}"
+        def write(staging: str) -> None:
             assigned, centroids = ivf_index(df, id_col, vec_col, n_lists, seed)
-            assigned.write.mode("overwrite").parquet(
-                os.path.join(staging, "assigned")
-            )
+            assigned.write.parquet(os.path.join(staging, "assigned"))
             np.save(os.path.join(staging, "centroids.npy"), centroids)
-            diskcache.publish_atomic(staging, final)
+
+        final = diskcache.materialize(
+            f"ivf_{cache_key}_l{n_lists}_s{seed}_v2", write
+        )
         return (
             read_parquet(df.sparkSession, os.path.join(final, "assigned")),
             np.load(os.path.join(final, "centroids.npy")),
@@ -1175,30 +1171,28 @@ def lsh_index(
     2^bits/16, making the build write-bound (measured 8x slower)."""
     if cache_key is None:
         return pair_signatures(df, id_col, vec_col, bits, tables, dim=dim)
-    import os
-
     from raft_c_spark.functions import diskcache
 
     hi_div = max(1, (1 << bits) // 16)
-    final = diskcache.cache_path(# v2: md5-derived hyperplanes (the v1 affine-hash planes
-        # had 8x bucket skew) — old indexes must not be reused
-        f"lshidx_{cache_key}_b{bits}_t{tables}_v2")
-    if not os.path.isdir(final):
+
+    def write(staging: str) -> None:
         # the signature frame (and its dim probe job) is only built on
         # an index MISS — the warm probe path previously paid a
-        # vec_dim first() job for a frame it then discarded (r13)
+        # vec_dim first() job for a frame it then discarded
         sigs = pair_signatures(df, id_col, vec_col, bits, tables, dim=dim)
-        os.makedirs(diskcache.cache_root(), exist_ok=True)
-        staging = f"{final}.tmp.{os.getpid()}"
         (
             sigs.withColumn("sig_hi", F.expr(f"sig div {hi_div}"))
             .repartition("sig_hi")
             .sortWithinPartitions("sig", "table")
-            .write.mode("overwrite")
-            .partitionBy("sig_hi")
+            .write.partitionBy("sig_hi")
             .parquet(staging)
         )
-        diskcache.publish_atomic(staging, final)
+
+    # v2: md5-derived hyperplanes (the v1 affine-hash planes had 8x
+    # bucket skew) — old indexes must not be reused
+    final = diskcache.materialize(
+        f"lshidx_{cache_key}_b{bits}_t{tables}_v2", write
+    )
     return read_parquet(df.sparkSession, final)
 
 

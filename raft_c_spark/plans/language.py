@@ -10,9 +10,6 @@ bulk ingest/SELECT on its own warehouse.
 
 from __future__ import annotations
 
-import os
-import shutil
-
 from pyspark.sql import functions as F
 
 from raft_c_spark.engine import Engine
@@ -27,45 +24,21 @@ T0_NS = 1_704_412_800_000_000_000  # 2024-01-05 UTC
 T1_NS = 1_706_140_800_000_000_000  # 2024-01-25 UTC
 
 
-_BUILT_WAREHOUSES: set[str] = set()
-
-
-def _warehouse_path(sf_dir: str, prefix: str) -> str:
-    """Cache-root path for a query-language warehouse, keyed by
-    data-file identity (mtime+size) so a regenerated testdata file
-    means a fresh build. The ``2`` in the prefix versions the atomic-
-    build contract below: pre-r9 builds wrote in place, so a crashed
-    old process could leave a PARTIAL directory — those legacy names
-    are never trusted."""
+def _warehouse(sf_dir: str, prefix: str, build) -> str:
+    """Path of an IMMUTABLE query-language warehouse, built once per
+    data key (``data_cache_key``: a regenerated testdata file means a
+    fresh build) by ``build(staging_dir)`` under diskcache's
+    atomic-publish contract, so a concurrent builder either wins the
+    publish or discards its copy, and a removed or truncated
+    warehouse is rebuilt. The lang warehouses qualify as immutable:
+    every ingest happens inside ``build``, queries only read. The
+    ``2`` in the key versions the atomic-build contract: older builds
+    wrote in place, so a crashed process could leave a PARTIAL
+    directory under those names."""
     from raft_c_spark.functions import diskcache
 
-    os.makedirs(diskcache.cache_root(), exist_ok=True)
-    return os.path.join(
-        diskcache.cache_root(),
-        f"{prefix}2_{diskcache.data_cache_key(sf_dir, 'events')}",
-    )
-
-
-def _build_warehouse_atomic(wh: str, build) -> None:
-    """Build an IMMUTABLE warehouse once per key with the diskcache
-    atomic-publish contract: ``build(staging_dir)`` writes a complete
-    warehouse into a private staging path, which is then os.replace'd
-    into place — a concurrent process (r9: two pytest halves sharing
-    the repo cache root raced rmtree-rebuild against a reader and
-    lang_retention flaked) either wins the publish or discards its
-    staging copy; a directory at ``wh`` is therefore always complete.
-    The lang warehouses qualify as immutable: every ingest happens
-    inside ``build``, queries only read."""
-    from raft_c_spark.functions import diskcache
-
-    if wh in _BUILT_WAREHOUSES or os.path.isdir(wh):
-        _BUILT_WAREHOUSES.add(wh)
-        return
-    staging = f"{wh}.tmp.{os.getpid()}"
-    shutil.rmtree(staging, ignore_errors=True)
-    build(staging)
-    diskcache.publish_atomic(staging, wh)
-    _BUILT_WAREHOUSES.add(wh)
+    key = f"{prefix}2_{diskcache.data_cache_key(sf_dir, 'events')}"
+    return diskcache.materialize(key, build)
 
 
 def _engine_with_click_series(spark, sf_dir: str) -> Engine:
@@ -75,7 +48,6 @@ def _engine_with_click_series(spark, sf_dir: str) -> Engine:
     queries — they read the same immutable series, and re-ingesting
     per query would triple the ingest cost without testing anything
     new."""
-    wh = _warehouse_path(sf_dir, "lang_wh")
 
     def build(staging: str) -> None:
         eng = Engine(spark, warehouse=staging)
@@ -87,8 +59,7 @@ def _engine_with_click_series(spark, sf_dir: str) -> Engine:
         )
         eng.store.insert_df("metrics", pts)
 
-    _build_warehouse_atomic(wh, build)
-    eng = Engine(spark, warehouse=wh)
+    eng = Engine(spark, warehouse=_warehouse(sf_dir, "lang_wh", build))
     eng.execute("USE metrics")
     return eng
 
@@ -204,8 +175,6 @@ def q_language_retention(spark, sf_dir):
     events: a broken dup policy doubles rows or poisons values, a
     broken retention filter changes the row set — either flips the
     driver hash."""
-    wh = _warehouse_path(sf_dir, "lang_ret_wh")
-
     def build(staging: str) -> None:
         eng = Engine(spark, warehouse=staging)
         eng.execute("CREATEDB rmetrics")
@@ -236,8 +205,7 @@ def q_language_retention(spark, sf_dir):
             duplication="ignore",
         )
 
-    _build_warehouse_atomic(wh, build)
-    eng = Engine(spark, warehouse=wh)
+    eng = Engine(spark, warehouse=_warehouse(sf_dir, "lang_ret_wh", build))
     eng.execute("USE rmetrics")
     return eng.execute("SELECT value FROM clickr", now=RET_NOW_NS)
 

@@ -103,44 +103,23 @@ def q_mm_real_decode(spark, sf_dir):
 MM_EVERY_MS = 500  # frame-sampling stride for the real video query
 
 
-def _gt_cached(key: str) -> str | None:
-    """Early cache probe for the expensive ground-truth builders:
-    callers check this BEFORE computing their row lists (reviewer r8:
-    the IVF oracle re-ran its full pure-numpy k-means replay, and the
-    mm builders re-decoded every corpus item, on every oracle_sql()
-    call even with the parquet already on disk)."""
-    import os
-
-    from raft_c_spark.functions import diskcache
-
-    final = diskcache.cache_path(key)
-    return final if os.path.exists(final) else None
-
-
 def _ground_truth_parquet(key: str, rows, fields: list) -> str:
     """Materialize ground-truth rows as parquet (pure pyarrow, no
     Spark — the oracle side runs without a session) under the
     repo-local cache, atomically; return the absolute path for
-    read_parquet(). ``rows`` may be a CALLABLE returning the row
-    list — invoked only on a cache miss."""
-    import os
-
+    read_parquet(). ``rows()`` returns the row list; it is called only
+    on a cache miss, so a hit never recomputes an expensive replay."""
     import pyarrow as pa
     import pyarrow.parquet as pq
 
     from raft_c_spark.functions import diskcache
 
-    final = diskcache.cache_path(key)
-    if not os.path.exists(final):
-        if callable(rows):
-            rows = rows()
-        os.makedirs(diskcache.cache_root(), exist_ok=True)
-        staging = f"{final}.tmp.{os.getpid()}"
+    def write(staging: str) -> None:
         pq.write_table(
-            pa.Table.from_pylist(rows, schema=pa.schema(fields)), staging
+            pa.Table.from_pylist(rows(), schema=pa.schema(fields)), staging
         )
-        diskcache.publish_atomic(staging, final)
-    return final
+
+    return diskcache.materialize(key, write)
 
 
 def expected_parquet_path() -> str:
@@ -367,24 +346,16 @@ def _dedup_pixels(i: int) -> "object":
 
 def image_dedup_corpus_path() -> str:
     """Materialize the dup-planted image corpus (real PNG payloads) as
-    parquet — same atomic-publish pattern as synthetic_media_path."""
-    import os
-
+    parquet."""
     import pyarrow as pa
-    import pyarrow.parquet as pq
 
-    from raft_c_spark.functions import diskcache
     from raft_c_spark.functions.png import png_encode
 
-    final = diskcache.cache_path(
-        f"media_dedup_v{MM_DEDUP_VERSION}_n{MM_DEDUP_N}_s{MM_DEDUP_SEED}.parquet"
-    )
-    if not os.path.exists(final):
-        os.makedirs(diskcache.cache_root(), exist_ok=True)
-        rows = []
+    def rows():
+        out = []
         for i in range(MM_DEDUP_N):
             px = _dedup_pixels(i)
-            rows.append(
+            out.append(
                 {
                     "media_id": i,
                     "kind": "image",
@@ -394,25 +365,20 @@ def image_dedup_corpus_path() -> str:
                     "height": int(px.shape[0]),
                 }
             )
-        staging = f"{final}.tmp.{os.getpid()}"
-        pq.write_table(
-            pa.Table.from_pylist(
-                rows,
-                schema=pa.schema(
-                    [
-                        ("media_id", pa.int64()),
-                        ("kind", pa.string()),
-                        ("payload", pa.binary()),
-                        ("mime", pa.string()),
-                        ("width", pa.int32()),
-                        ("height", pa.int32()),
-                    ]
-                ),
-            ),
-            staging,
-        )
-        diskcache.publish_atomic(staging, final)
-    return final
+        return out
+
+    return _ground_truth_parquet(
+        f"media_dedup_v{MM_DEDUP_VERSION}_n{MM_DEDUP_N}_s{MM_DEDUP_SEED}.parquet",
+        rows,
+        [
+            ("media_id", pa.int64()),
+            ("kind", pa.string()),
+            ("payload", pa.binary()),
+            ("mime", pa.string()),
+            ("width", pa.int32()),
+            ("height", pa.int32()),
+        ],
+    )
 
 
 def image_hashes_expected_parquet_path() -> str:
@@ -421,33 +387,30 @@ def image_hashes_expected_parquet_path() -> str:
     a driver hash match therefore proves the real decode path
     reproduces the raw pixels bit-exactly AND the hash/pair logic
     agrees across engines."""
-    _k = (
-        f"expected_image_hashes_v{MM_DEDUP_VERSION}_n{MM_DEDUP_N}"
-        f"_s{MM_DEDUP_SEED}.parquet"
-    )
-    hit = _gt_cached(_k)
-    if hit is not None:
-        return hit
-    from raft_c_spark.operators.multimodal import (
-        ahash64_from_pixels,
-        ahash_chunks,
-    )
-
-    rows = []
-    for i in range(MM_DEDUP_N):
-        a = ahash64_from_pixels(_dedup_pixels(i))
-        c = ahash_chunks(a)
-        rows.append(
-            {
-                "media_id": i,
-                "ahash": a,
-                "c0": c[0], "c1": c[1], "c2": c[2], "c3": c[3], "c4": c[4],
-            }
-        )
     import pyarrow as pa
 
+    def rows():
+        from raft_c_spark.operators.multimodal import (
+            ahash64_from_pixels,
+            ahash_chunks,
+        )
+
+        out = []
+        for i in range(MM_DEDUP_N):
+            a = ahash64_from_pixels(_dedup_pixels(i))
+            c = ahash_chunks(a)
+            out.append(
+                {
+                    "media_id": i,
+                    "ahash": a,
+                    "c0": c[0], "c1": c[1], "c2": c[2], "c3": c[3], "c4": c[4],
+                }
+            )
+        return out
+
     return _ground_truth_parquet(
-        _k,
+        f"expected_image_hashes_v{MM_DEDUP_VERSION}_n{MM_DEDUP_N}"
+        f"_s{MM_DEDUP_SEED}.parquet",
         rows,
         [
             ("media_id", pa.int64()),
@@ -527,21 +490,12 @@ def audio_dedup_corpus_path() -> str:
     """Materialize the dup-planted audio corpus (real 16-bit WAV
     payloads) as parquet."""
     import io
-    import os
     import wave
 
     import pyarrow as pa
-    import pyarrow.parquet as pq
 
-    from raft_c_spark.functions import diskcache
-
-    final = diskcache.cache_path(
-        f"media_adedup_v{MM_ADEDUP_VERSION}_n{MM_ADEDUP_N}"
-        f"_s{MM_ADEDUP_SEED}.parquet"
-    )
-    if not os.path.exists(final):
-        os.makedirs(diskcache.cache_root(), exist_ok=True)
-        rows = []
+    def rows():
+        out = []
         for i in range(MM_ADEDUP_N):
             pcm = _dedup_pcm(i)
             buf = io.BytesIO()
@@ -550,7 +504,7 @@ def audio_dedup_corpus_path() -> str:
                 wf.setsampwidth(2)
                 wf.setframerate(8000)
                 wf.writeframes(pcm.tobytes())
-            rows.append(
+            out.append(
                 {
                     "media_id": i,
                     "kind": "audio",
@@ -559,63 +513,56 @@ def audio_dedup_corpus_path() -> str:
                     "duration_ms": int(len(pcm) * 1000 // 8000),
                 }
             )
-        staging = f"{final}.tmp.{os.getpid()}"
-        pq.write_table(
-            pa.Table.from_pylist(
-                rows,
-                schema=pa.schema(
-                    [
-                        ("media_id", pa.int64()),
-                        ("kind", pa.string()),
-                        ("payload", pa.binary()),
-                        ("mime", pa.string()),
-                        ("duration_ms", pa.int64()),
-                    ]
-                ),
-            ),
-            staging,
-        )
-        diskcache.publish_atomic(staging, final)
-    return final
+        return out
+
+    return _ground_truth_parquet(
+        f"media_adedup_v{MM_ADEDUP_VERSION}_n{MM_ADEDUP_N}"
+        f"_s{MM_ADEDUP_SEED}.parquet",
+        rows,
+        [
+            ("media_id", pa.int64()),
+            ("kind", pa.string()),
+            ("payload", pa.binary()),
+            ("mime", pa.string()),
+            ("duration_ms", pa.int64()),
+        ],
+    )
 
 
 def audio_hashes_expected_parquet_path() -> str:
     """Ground-truth energy hashes from the PRE-ENCODE PCM arrays (no
     wave codec on this side) — the audio decode-certification dual of
     image_hashes_expected_parquet_path."""
-    _k = (
-        f"expected_audio_hashes_v{MM_ADEDUP_VERSION}_n{MM_ADEDUP_N}"
-        f"_s{MM_ADEDUP_SEED}.parquet"
-    )
-    hit = _gt_cached(_k)
-    if hit is not None:
-        return hit
-    from raft_c_spark.operators.multimodal import (
-        ahash_chunks,
-        audio_ahash64_from_pcm,
-    )
-
-    rows = []
-    for i in range(MM_ADEDUP_N):
-        if len(_dedup_pcm(i)) < 64:
-            # kernel parity: audio_ahash EXCLUDES sub-64-sample clips
-            # (0-sentinel false-duplicate trap); dormant here — every
-            # corpus clip is ≥ 8000 samples — but the builders must
-            # mirror the kernel contract (reviewer r8)
-            continue
-        a = audio_ahash64_from_pcm(_dedup_pcm(i))
-        c = ahash_chunks(a)
-        rows.append(
-            {
-                "media_id": i,
-                "ahash": a,
-                "c0": c[0], "c1": c[1], "c2": c[2], "c3": c[3], "c4": c[4],
-            }
-        )
     import pyarrow as pa
 
+    def rows():
+        from raft_c_spark.operators.multimodal import (
+            ahash_chunks,
+            audio_ahash64_from_pcm,
+        )
+
+        out = []
+        for i in range(MM_ADEDUP_N):
+            if len(_dedup_pcm(i)) < 64:
+                # kernel parity: audio_ahash EXCLUDES sub-64-sample clips
+                # (0-sentinel false-duplicate trap); dormant here — every
+                # corpus clip is ≥ 8000 samples — but the builders must
+                # mirror the kernel contract (reviewer r8)
+                continue
+            a = audio_ahash64_from_pcm(_dedup_pcm(i))
+            c = ahash_chunks(a)
+            out.append(
+                {
+                    "media_id": i,
+                    "ahash": a,
+                    "c0": c[0], "c1": c[1], "c2": c[2], "c3": c[3], "c4": c[4],
+                }
+            )
+        return out
+
     return _ground_truth_parquet(
-        _k,
+        f"expected_audio_hashes_v{MM_ADEDUP_VERSION}_n{MM_ADEDUP_N}"
+        f"_s{MM_ADEDUP_SEED}.parquet",
         rows,
         [
             ("media_id", pa.int64()),
@@ -695,24 +642,15 @@ def _dedup_frames(i: int) -> "object":
 def video_dedup_corpus_path() -> str:
     """Materialize the dup-planted video corpus (real y4m payloads)
     as parquet."""
-    import os
-
     import pyarrow as pa
-    import pyarrow.parquet as pq
 
-    from raft_c_spark.functions import diskcache
     from raft_c_spark.functions.y4m import y4m_encode
 
-    final = diskcache.cache_path(
-        f"media_vdedup_v{MM_VDEDUP_VERSION}_n{MM_VDEDUP_N}"
-        f"_s{MM_VDEDUP_SEED}.parquet"
-    )
-    if not os.path.exists(final):
-        os.makedirs(diskcache.cache_root(), exist_ok=True)
-        rows = []
+    def rows():
+        out = []
         for i in range(MM_VDEDUP_N):
             frames = _dedup_frames(i)
-            rows.append(
+            out.append(
                 {
                     "media_id": i,
                     "kind": "video",
@@ -721,59 +659,52 @@ def video_dedup_corpus_path() -> str:
                     "duration_ms": int(frames.shape[0] * 1000 // 4),
                 }
             )
-        staging = f"{final}.tmp.{os.getpid()}"
-        pq.write_table(
-            pa.Table.from_pylist(
-                rows,
-                schema=pa.schema(
-                    [
-                        ("media_id", pa.int64()),
-                        ("kind", pa.string()),
-                        ("payload", pa.binary()),
-                        ("mime", pa.string()),
-                        ("duration_ms", pa.int64()),
-                    ]
-                ),
-            ),
-            staging,
-        )
-        diskcache.publish_atomic(staging, final)
-    return final
+        return out
+
+    return _ground_truth_parquet(
+        f"media_vdedup_v{MM_VDEDUP_VERSION}_n{MM_VDEDUP_N}"
+        f"_s{MM_VDEDUP_SEED}.parquet",
+        rows,
+        [
+            ("media_id", pa.int64()),
+            ("kind", pa.string()),
+            ("payload", pa.binary()),
+            ("mime", pa.string()),
+            ("duration_ms", pa.int64()),
+        ],
+    )
 
 
 def video_hashes_expected_parquet_path() -> str:
     """Ground-truth mean-frame hashes from the PRE-ENCODE frame
     arrays (no y4m codec on this side) — the video member of the
     decode-certification triple."""
-    _k = (
-        f"expected_video_hashes_v{MM_VDEDUP_VERSION}_n{MM_VDEDUP_N}"
-        f"_s{MM_VDEDUP_SEED}.parquet"
-    )
-    hit = _gt_cached(_k)
-    if hit is not None:
-        return hit
-    from raft_c_spark.operators.multimodal import (
-        ahash_chunks,
-        video_ahash64_from_frames,
-    )
-
-    rows = []
-    for i in range(MM_VDEDUP_N):
-        if _dedup_frames(i).shape[0] == 0:
-            continue  # kernel parity: zero-frame clips are excluded
-        a = video_ahash64_from_frames(_dedup_frames(i))
-        c = ahash_chunks(a)
-        rows.append(
-            {
-                "media_id": i,
-                "ahash": a,
-                "c0": c[0], "c1": c[1], "c2": c[2], "c3": c[3], "c4": c[4],
-            }
-        )
     import pyarrow as pa
 
+    def rows():
+        from raft_c_spark.operators.multimodal import (
+            ahash_chunks,
+            video_ahash64_from_frames,
+        )
+
+        out = []
+        for i in range(MM_VDEDUP_N):
+            if _dedup_frames(i).shape[0] == 0:
+                continue  # kernel parity: zero-frame clips are excluded
+            a = video_ahash64_from_frames(_dedup_frames(i))
+            c = ahash_chunks(a)
+            out.append(
+                {
+                    "media_id": i,
+                    "ahash": a,
+                    "c0": c[0], "c1": c[1], "c2": c[2], "c3": c[3], "c4": c[4],
+                }
+            )
+        return out
+
     return _ground_truth_parquet(
-        _k,
+        f"expected_video_hashes_v{MM_VDEDUP_VERSION}_n{MM_VDEDUP_N}"
+        f"_s{MM_VDEDUP_SEED}.parquet",
         rows,
         [
             ("media_id", pa.int64()),

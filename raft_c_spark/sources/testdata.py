@@ -129,9 +129,3 @@ def events_as_points(
         _ts_ns().alias("timestamp"),
         F.col("value").cast("double").alias("value"),
     )
-
-
-def register_views(spark: SparkSession, sf_dir: str) -> None:
-    """Register every table as a temp view (for the SQL surface)."""
-    for name, df in load_tables(spark, sf_dir).items():
-        df.createOrReplaceTempView(name)
