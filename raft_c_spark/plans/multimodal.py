@@ -547,7 +547,7 @@ def audio_hashes_expected_parquet_path() -> str:
                 # kernel parity: audio_ahash EXCLUDES sub-64-sample clips
                 # (0-sentinel false-duplicate trap); dormant here — every
                 # corpus clip is ≥ 8000 samples — but the builders must
-                # mirror the kernel contract (reviewer r8)
+                # mirror the kernel contract
                 continue
             a = audio_ahash64_from_pcm(_dedup_pcm(i))
             c = ahash_chunks(a)
