@@ -21,25 +21,31 @@ values: series ``007`` would read back as the int 7 (and match series
 ``7``), series ``2024-01-01`` as a date.
 
 Statement job budget: a single-series ``read`` lists only that
-series' directory and runs no Spark job before the query executes; an
-``insert_rows`` batch under the ``insert`` policy runs no Spark job at
-all — the driver already holds the points, so it writes one sorted
-Arrow parquet file per touched (series, day) and publishes it by
-rename (≙ the reference's local append, src/timeseries.c:621-682).
-The ``ignore``/``update`` policies and bulk ``insert_df`` frames take
-the anti-join / merge path as Spark jobs.
+series' directory and runs no Spark job before the query executes.
+When the files it will scan fit one file split (Spark's own
+``maxPartitionBytes``/``openCostInBytes`` accounting), it is read as
+one partition, so every SELECT kind over it runs as one job of one
+task (≙ the reference streaming one series from one partition in time
+order). An ``insert_rows`` batch under the ``insert`` policy runs no
+Spark job at all — the driver already holds the points, so it writes
+one sorted Arrow parquet file per touched (series, day) and publishes
+it by rename (≙ the reference's local append,
+src/timeseries.c:621-682). The ``ignore``/``update`` policies, bulk
+``insert_df`` frames and ``compact`` are Spark-committer writes; they
+hold the store's write lock, one at a time.
 
 Scale notes: appends are partitioned writes (no global shuffle unless
 requested); range reads prune by directory then row-group; a series is
-spread over its days, so one hot series parallelizes across time — the
-reference's 16-partition-per-series bound (TS_MAX_PARTITIONS,
-src/timeseries.h:14) has no analog here.
+spread over its days, so a scan larger than one file split
+parallelizes across time — the reference's 16-partition-per-series
+bound (TS_MAX_PARTITIONS, src/timeseries.h:14) has no analog here.
 """
 
 from __future__ import annotations
 
 import os
 import shutil
+import threading
 import uuid
 
 import pyarrow as pa
@@ -126,6 +132,11 @@ class TimeSeriesStore:
         self.spark = spark
         self.warehouse = warehouse
         self._series_parts: dict[str, str] = {}
+        # Spark-committer writes share ``points/_temporary`` (an append
+        # job's cleanup deletes a concurrent job's task output), and the
+        # ``ignore`` path's anti-join must see the files it writes
+        # against; one writer at a time
+        self._write_lock = threading.Lock()
 
     def _points_path(self, db: str) -> str:
         return os.path.join(self.warehouse, db, "points")
@@ -221,7 +232,11 @@ class TimeSeriesStore:
         src/timeseries.c:363-385); 'update' replaces existing values
         at duplicate timestamps, newest wins (DP_UPDATE — described in
         the reference's policy comment, src/timeseries.h:38-42, but
-        never implemented there)."""
+        never implemented there). Holds the store's write lock."""
+        with self._write_lock:
+            return self._insert_df(db, df, duplication)
+
+    def _insert_df(self, db: str, df: DataFrame, duplication: str) -> int:
         out = df.select(
             F.col("series").cast("string"),
             F.col("timestamp").cast("long"),
@@ -370,7 +385,13 @@ class TimeSeriesStore:
         bounds on ``day`` prune day directories — ``div`` is monotonic,
         so every point in range sits in a day between the bounds' days
         — and row-group stats prune the rest. Retention honored at
-        read time (the reference parses-but-ignores it — SURVEY §1.3)."""
+        read time (the reference parses-but-ignores it — SURVEY §1.3).
+
+        A series read whose pruned files fit one file split comes back
+        as one partition (``coalesce(1)``): its plan reports
+        ``SinglePartition``, so a global sort or groupless aggregate
+        above it adds no exchange and the statement runs as one job of
+        one task. Larger reads keep Spark's file splits."""
         out = self._read_raw(db, series)
         if out is None:
             return local_frame(self.spark, [], POINT_SCHEMA)
@@ -387,7 +408,40 @@ class TimeSeriesStore:
             out = out.filter(
                 (F.col("timestamp") <= F.lit(t1)) & (F.col("day") <= _day(f"{t1}L"))
             )
-        return out.select("series", "timestamp", "value")
+        out = out.select("series", "timestamp", "value")
+        if series is not None and self._fits_one_split(
+            os.path.join(self._points_path(db), self._series_part(series)), t0, t1
+        ):
+            out = out.coalesce(1)
+        return out
+
+    def _fits_one_split(self, series_dir: str, t0: int | None, t1: int | None) -> bool:
+        """Whether the data files in ``series_dir``'s ``day=``
+        directories between ``t0``'s and ``t1``'s days fit one file
+        split, counted as Spark's file packer counts them: each file's
+        size plus ``spark.sql.files.openCostInBytes``, against
+        ``spark.sql.files.maxPartitionBytes``. Names starting with '.'
+        or '_' are skipped, as Spark's file index skips them."""
+        conf = self.spark._jsparkSession.sessionState().conf()
+        budget = conf.filesMaxPartitionBytes()
+        open_cost = conf.filesOpenCostInBytes()
+        lo = None if t0 is None else _day_of(t0)
+        hi = None if t1 is None else _day_of(t1)
+        with os.scandir(series_dir) as days:
+            for day in days:
+                if not day.name.startswith("day="):
+                    continue
+                d = int(day.name[4:])
+                if (lo is not None and d < lo) or (hi is not None and d > hi):
+                    continue
+                with os.scandir(day.path) as files:
+                    for f in files:
+                        if f.name[0] in "._":
+                            continue
+                        budget -= f.stat().st_size + open_cost
+                        if budget < 0:
+                            return False
+        return True
 
     # -- maintenance -------------------------------------------------------
 
@@ -413,6 +467,10 @@ class TimeSeriesStore:
         partition; reads stay correct but open more files than
         necessary). ≙ the reference's chunk→partition flush compaction
         (src/partition.c:62-125), run out-of-band here."""
+        with self._write_lock:
+            self._compact(db)
+
+    def _compact(self, db: str) -> None:
         raw = self._read_raw(db)
         if raw is None:
             return

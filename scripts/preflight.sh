@@ -11,8 +11,13 @@ cd "$(dirname "$0")/.."
 
 SF_DIR="${1:-/root/testdata/sf0.01}"
 
-echo "== preflight: pytest =="
-python -m pytest tests/ -x -q
+echo "== preflight: pytest (Tier-1) =="
+export SPARK_GRAFT_CPUS="${SPARK_GRAFT_CPUS:-$(env -u OMP_NUM_THREADS nproc)}"
+export SPARK_LOCAL_DIRS="${SPARK_LOCAL_DIRS:-/tmp/spark-local}"
+timeout -k 10 2670 python -m pytest tests/ -q --continue-on-collection-errors -p no:cacheprovider
+
+echo "== preflight: benchmark smoke tests =="
+python3 -m pytest perfbench -q -p no:cacheprovider
 
 echo "== preflight: full-registry driver simulation (judge r9 ask #2) =="
 # every registered query vs its DuckDB oracle under the driver's exact

@@ -1,11 +1,30 @@
 """Local replica of the driver's duckdb-oracle comparison: run a Spark
 DataFrame and an oracle SQL on the same tables, sort columns by name,
-compare row multisets (float-tolerant)."""
+compare row multisets (float-tolerant). Also the Spark job counter the
+job-budget tests share."""
 
 from __future__ import annotations
 
+import itertools
 import math
 from typing import Any
+
+_groups = itertools.count()
+
+
+def jobs_in(spark, fn):
+    """(number of Spark jobs ``fn()`` started, its result), counted by
+    job group."""
+    sc = spark.sparkContext
+    gid = f"jobs-in-{next(_groups)}"
+    sc.setJobGroup(gid, "job count")
+    try:
+        out = fn()
+    finally:
+        sc.setJobGroup(None, None)
+    # the status tracker is fed by the asynchronous listener bus
+    sc._jsc.sc().listenerBus().waitUntilEmpty()
+    return len(sc.statusTracker().getJobIdsForGroup(gid)), out
 
 
 def _norm_cell(x: Any) -> Any:

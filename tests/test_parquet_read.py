@@ -10,7 +10,6 @@ parquet conf toggle.
 
 from __future__ import annotations
 
-import itertools
 import os
 import re
 import shutil
@@ -22,25 +21,9 @@ import pytest
 from raft_c_spark.functions.diskcache import data_cache_key
 from raft_c_spark.sources.parquet import fingerprint, read_parquet
 from raft_c_spark.sources.testdata import load_table
+from tests.harness import jobs_in
 
 PKG = os.path.join(os.path.dirname(os.path.dirname(__file__)), "raft_c_spark")
-
-_groups = itertools.count()
-
-
-def jobs_in(spark, fn):
-    """(number of Spark jobs ``fn()`` started, its result), counted by
-    job group."""
-    sc = spark.sparkContext
-    gid = f"parquet-read-jobs-{next(_groups)}"
-    sc.setJobGroup(gid, "schema memo")
-    try:
-        out = fn()
-    finally:
-        sc.setJobGroup(None, None)
-    # the status tracker is fed by the asynchronous listener bus
-    sc._jsc.sc().listenerBus().waitUntilEmpty()
-    return len(sc.statusTracker().getJobIdsForGroup(gid)), out
 
 
 def _same_plan(a, b) -> bool:

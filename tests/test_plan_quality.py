@@ -29,7 +29,9 @@ def test_store_range_scan_pushes_down(spark, tmp_path):
     scan (PushedFilters) AND prune day partitions (PartitionFilters on
     both ends of ``day``) — the sparse-index + partition-pruning parity
     of the reference (src/index.c:65-109, src/timeseries.c:882-891).
-    SAMPLE BY scans its normalized range the same way."""
+    SAMPLE BY scans its normalized range the same way. The series fits
+    one file split, so the scan is read as one partition, and a WHERE
+    predicate still reaches the scan below that ``Coalesce``."""
     eng = Engine(spark, warehouse=str(tmp_path / "wh"))
     eng.execute("CREATEDB d")
     eng.execute("USE d")
@@ -44,8 +46,12 @@ def test_store_range_scan_pushes_down(spark, tmp_path):
         f"SELECT value FROM s BETWEEN {base + day} AND {base + 2 * day}",
         f"SELECT avg(value) FROM s BETWEEN {base + day} AND {base + 2 * day}"
         " SAMPLE BY 1h",
+        f"SELECT value FROM s BETWEEN {base + day} AND {base + 2 * day}"
+        " WHERE value > 1.5",
     ):
         plan = plan_of(eng.execute(stmt))
+        tree = plan.split("\n\n")[0]
+        assert tree.index("Coalesce") < tree.index("Scan parquet"), plan
         assert "PushedFilters: [" in plan
         assert "GreaterThanOrEqual(timestamp" in plan, plan
         assert "LessThanOrEqual(timestamp" in plan, plan
@@ -55,6 +61,11 @@ def test_store_range_scan_pushes_down(spark, tmp_path):
         )
         assert re.search(r"\(day#\d+L >= ", partition_filters), plan
         assert re.search(r"\(day#\d+L <= ", partition_filters), plan
+        if "WHERE" in stmt:
+            pushed = "".join(
+                line for line in plan.splitlines() if "PushedFilters:" in line
+            )
+            assert "GreaterThan(value,1.5)" in pushed, plan
 
 
 def test_events_scan_prunes_columns(spark, sf_dir):

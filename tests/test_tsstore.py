@@ -4,7 +4,6 @@ driver-side point writer."""
 
 from __future__ import annotations
 
-import itertools
 import os
 import sys
 import threading
@@ -13,25 +12,9 @@ import pytest
 
 from raft_c_spark.engine import Engine
 from raft_c_spark.sources.tsstore import DAY_NS, POINT_SCHEMA, TimeSeriesStore
+from tests.harness import jobs_in
 
 BASE = 1_700_000_000 * 10**9  # pinned epoch ns
-
-_groups = itertools.count()
-
-
-def jobs_in(spark, fn):
-    """(number of Spark jobs ``fn()`` started, its result), counted by
-    job group."""
-    sc = spark.sparkContext
-    gid = f"tsstore-jobs-{next(_groups)}"
-    sc.setJobGroup(gid, "job budget")
-    try:
-        out = fn()
-    finally:
-        sc.setJobGroup(None, None)
-    # the status tracker is fed by the asynchronous listener bus
-    sc._jsc.sc().listenerBus().waitUntilEmpty()
-    return len(sc.statusTracker().getJobIdsForGroup(gid)), out
 
 
 def _points(df):
@@ -91,6 +74,163 @@ def test_statement_job_budget(spark, tmp_path):
     n, df = jobs_in(spark, lambda: e.store.read("d", "s"))
     assert n == 0
     assert df.count() == 24
+
+
+HOUR_NS = 3_600_000_000_000
+#: a point every 70 minutes from ``BASE``: 60 points over 4 day directories
+STEP_NS = 70 * 60 * 10**9
+
+
+def _small_series(spark, tmp_path):
+    """An Engine over series ``s`` of six 12-point INSERTs, the last
+    one repeating earlier timestamps with other values (duplicate-ns
+    points coexist under the ``insert`` policy), and the Python model
+    of its points sorted by (timestamp, value)."""
+    e = Engine(spark, warehouse=str(tmp_path / "wh"))
+    for ddl in ("CREATEDB d", "USE d", "CREATE s"):
+        e.execute(ddl)
+    model = []
+    for i in range(6):
+        batch = [
+            (BASE + ((i * 12 + j) % 60) * STEP_NS, float((i * 12 + j) * 37 % 23) + 0.5)
+            for j in range(12)
+        ]
+        e.execute("INSERT INTO s VALUES " + ",".join(f"({t}, {v})" for t, v in batch))
+        model += batch
+    return e, sorted(model)
+
+
+#: the exchange a multi-partition read puts under each statement kind
+_SORT = "Exchange rangepartitioning(timestamp"
+_AGG = "Exchange SinglePartition"
+
+
+def _select_cases(pts):
+    """(statement, expected rows as (timestamp, value) tuples, or the
+    multi-aggregate's one (min, max, avg) row, the exchange its plan
+    has over more than one partition) over the model ``pts``. A top-k
+    (LIMIT over the sort, ``earliest``) merges its partitions' heaps
+    inside its own operator, so it has no exchange to name."""
+    t0, t1 = BASE + 7 * STEP_NS, BASE + 50 * STEP_NS
+    rng = [(t, v) for t, v in pts if t0 <= t <= t1]
+    vals = [v for _, v in rng]
+    at = pts[20][0]
+    # SAMPLE BY: t0 rounds down to an hour, bucket (end - 1h, end)
+    # excludes both ends, label = end, buckets ending at or after t1
+    # are dropped
+    buckets: dict[int, list[float]] = {}
+    for t, v in pts:
+        if t0 - t0 % HOUR_NS <= t <= t1 and t % HOUR_NS:
+            end = t - t % HOUR_NS + HOUR_NS
+            if end < t1:
+                buckets.setdefault(end, []).append(v)
+    between = f"FROM s BETWEEN {t0} AND {t1}"
+    return [
+        (f"SELECT value {between}", rng, _SORT),
+        (f"SELECT value FROM s AT {at}", [(t, v) for t, v in pts if t == at], _SORT),
+        (
+            f"SELECT avg(value) {between} SAMPLE BY 1h",
+            [(e, sum(vs) / len(vs)) for e, vs in sorted(buckets.items())],
+            "Exchange hashpartitioning(bucket_ts",
+        ),
+        (
+            f"SELECT min(value), max(value), avg(value) {between}",
+            [(min(vals), max(vals), sum(vals) / len(vals))],
+            _AGG,
+        ),
+        (
+            f"SELECT value {between} WHERE value > 4 AND value < 15 LIMIT 7",
+            [(t, v) for t, v in rng if 4 < v < 15][:7],
+            None,
+        ),
+        (f"SELECT min(value) {between}", [min(rng, key=lambda p: (p[1], p[0]))], _AGG),
+        (f"SELECT max(value) {between}", [min(rng, key=lambda p: (-p[1], p[0]))], _AGG),
+        (f"SELECT avg(value) {between}", [(t1, sum(vals) / len(vals))], _AGG),
+        (f"SELECT latest(value) {between}", [max(rng)], _AGG),
+        (f"SELECT earliest(value, 3) {between}", rng[:3], None),
+    ]
+
+
+def _rows_match(got, want) -> bool:
+    """Equal rows, cell by cell, up to a relative 1e-9 on averages."""
+    return len(got) == len(want) and all(
+        len(g) == len(w)
+        and all(abs(a - b) <= 1e-9 * max(1.0, abs(b)) for a, b in zip(g, w))
+        for g, w in zip(got, want)
+    )
+
+
+def _plan(df) -> str:
+    return df._jdf.queryExecution().executedPlan().toString()
+
+
+def test_small_series_select_runs_one_job(spark, tmp_path):
+    """A SELECT over a series whose pruned files fit one file split
+    reads them as one partition: every statement kind collects in
+    exactly one Spark job, with no exchange in its plan, and returns the
+    model's rows in the model's order."""
+    e, pts = _small_series(spark, tmp_path)
+    for stmt, want, _ in _select_cases(pts):
+        df = e.execute(stmt)
+        assert "Exchange" not in _plan(df), stmt
+        n, rows = jobs_in(spark, df.collect)
+        assert n == 1, stmt
+        assert _rows_match([tuple(r) for r in rows], want), (stmt, rows, want)
+
+
+def test_large_scan_keeps_exchanges(spark, tmp_path):
+    """With ``spark.sql.files.maxPartitionBytes`` below the scan's size
+    the read keeps Spark's file splits: point results keep the global
+    sort's range exchange, aggregates their exchange, and every
+    statement returns the same rows as the one-partition plan."""
+    e, pts = _small_series(spark, tmp_path)
+    cases = _select_cases(pts)
+    small = [[tuple(r) for r in e.execute(stmt).collect()] for stmt, _, _ in cases]
+    key = "spark.sql.files.maxPartitionBytes"
+    old = spark.conf.get(key)
+    spark.conf.set(key, str(1 << 20))  # < one file's open cost (4 MiB)
+    try:
+        for (stmt, want, exchange), rows in zip(cases, small):
+            df = e.execute(stmt)
+            plan = _plan(df)
+            assert "Coalesce" not in plan, stmt
+            if exchange is not None:
+                assert exchange in plan, (stmt, plan)
+            assert [tuple(r) for r in df.collect()] == rows, stmt
+            assert _rows_match(rows, want), stmt
+    finally:
+        spark.conf.set(key, old)
+
+
+def test_concurrent_ignore_inserts_all_land(spark, tmp_path):
+    """``ignore``-policy INSERTs from two connections at once: each is a
+    Spark append job, and two of them shared ``points/_temporary`` — one
+    job's cleanup deleted the other's task output, and statements
+    failed. The store's write lock runs them one at a time, so every
+    statement succeeds and every point reads back."""
+    st = TimeSeriesStore(spark, str(tmp_path / "wh"))
+    calls, errors = 8, []
+    # both threads start each statement together
+    together = threading.Barrier(2, timeout=600)
+
+    def writer(series):
+        for k in range(calls):
+            batch = [(BASE + (k * 12 + i) * 10**9, float(i)) for i in range(12)]
+            together.wait()
+            try:
+                st.insert_rows("d", series, batch, duplication="ignore")
+            except Exception as exc:  # collected for the assertion below
+                errors.append(exc)
+
+    threads = [threading.Thread(target=writer, args=(s,)) for s in ("a", "b")]
+    for th in threads:
+        th.start()
+    for th in threads:
+        th.join(timeout=600)
+    assert not any(th.is_alive() for th in threads)
+    assert errors == []
+    for s in ("a", "b"):
+        assert st.read("d", s).count() == calls * 12
 
 
 def _point_dirs(st):
