@@ -22,23 +22,24 @@ values: series ``007`` would read back as the int 7 (and match series
 
 Statement job budget: a single-series ``read`` lists only that
 series' directory and runs no Spark job before the query executes.
-When the files it will scan fit one file split (Spark's own
-``maxPartitionBytes``/``openCostInBytes`` accounting), it is read as
-one partition, so every SELECT kind over it runs as one job of one
-task (≙ the reference streaming one series from one partition in time
-order). An ``insert_rows`` batch under the ``insert`` policy runs no
-Spark job at all — the driver already holds the points, so it writes
-one sorted Arrow parquet file per touched (series, day) and publishes
-it by rename (≙ the reference's local append,
-src/timeseries.c:621-682). The ``ignore``/``update`` policies, bulk
-``insert_df`` frames and ``compact`` are Spark-committer writes; they
-hold the store's write lock, one at a time.
+When the files it will scan are few and small (``ONE_TASK_MAX_FILES``,
+``ONE_TASK_MAX_BYTES``), it is read as one partition, so every SELECT
+kind over it runs as one job of one task (≙ the reference streaming
+one series from one partition in time order). An ``insert_rows``
+batch under the ``insert`` policy runs no Spark job at all — the
+driver already holds the points, so it writes one sorted Arrow parquet
+file per touched (series, day) and publishes it by rename (≙ the
+reference's local append, src/timeseries.c:621-682). The
+``ignore``/``update`` policies, bulk ``insert_df`` frames and
+``compact`` are Spark-committer writes; they hold the store's write
+lock, one at a time.
 
 Scale notes: appends are partitioned writes (no global shuffle unless
 requested); range reads prune by directory then row-group; a series is
-spread over its days, so a scan larger than one file split
-parallelizes across time — the reference's 16-partition-per-series
-bound (TS_MAX_PARTITIONS, src/timeseries.h:14) has no analog here.
+spread over its days, so a scan over more files or bytes than one
+task takes parallelizes across time — the reference's
+16-partition-per-series bound (TS_MAX_PARTITIONS, src/timeseries.h:14)
+has no analog here.
 """
 
 from __future__ import annotations
@@ -86,6 +87,15 @@ def _day_of(ns: int) -> int:
     """``_day`` on the driver: truncates toward zero like ``div``."""
     return -(-ns // DAY_NS) if ns < 0 else ns // DAY_NS
 
+
+#: the most data files, and bytes in all, that a series read takes in
+#: one partition. Measured with scripts/one_task_crossover.py on a
+#: 4-vCPU VM with two and with four task threads: over the five SELECT
+#: kinds, one task was no slower in summed wall time than Spark's file
+#: splits up to 16 files of 1.1 MiB, and used 20-35% less JVM CPU; at
+#: 2.2 MiB or 64 files it was 2-31% slower.
+ONE_TASK_MAX_FILES = 16
+ONE_TASK_MAX_BYTES = 1 << 20
 
 #: a point file's columns; ``series`` and ``day`` live in its path
 _FILE_SCHEMA = to_arrow_schema(Ty.StructType(POINT_SCHEMA.fields[1:]))
@@ -351,10 +361,9 @@ class TimeSeriesStore:
 
     # -- read --------------------------------------------------------------
 
-    def _read_raw(self, db: str, series: str | None = None) -> DataFrame | None:
-        """The store, or one series of it, in ``STORE_SCHEMA``; None when
-        there is no directory to read. With ``series`` only that
-        series' directory is listed."""
+    def _source(self, db: str, series: str | None = None) -> str | None:
+        """The directory a read lists: the store, or with ``series``
+        only that series' directory; None when there is none."""
         path = self._points_path(db)
         bak = path + ".pre_compact"
         if not os.path.exists(path) and os.path.exists(bak):
@@ -362,13 +371,21 @@ class TimeSeriesStore:
             # IS the store — restore it before reading
             os.rename(bak, path)
         src = path if series is None else self._series_dir(db, series)
-        if src is None or not os.path.exists(src):
-            return None
+        return src if src is not None and os.path.exists(src) else None
+
+    def _scan(self, db: str, src: str) -> DataFrame:
+        """``src`` (a ``_source`` directory) in ``STORE_SCHEMA``."""
         return (
             self.spark.read.schema(STORE_SCHEMA)
-            .option("basePath", path)
+            .option("basePath", self._points_path(db))
             .parquet(src)
         )
+
+    def _read_raw(self, db: str, series: str | None = None) -> DataFrame | None:
+        """The store, or one series of it, in ``STORE_SCHEMA``; None when
+        there is no directory to read."""
+        src = self._source(db, series)
+        return None if src is None else self._scan(db, src)
 
     def read(
         self,
@@ -387,14 +404,18 @@ class TimeSeriesStore:
         — and row-group stats prune the rest. Retention honored at
         read time (the reference parses-but-ignores it — SURVEY §1.3).
 
-        A series read whose pruned files fit one file split comes back
-        as one partition (``coalesce(1)``): its plan reports
+        A series read whose pruned files are at most
+        ``ONE_TASK_MAX_FILES`` files of at most ``ONE_TASK_MAX_BYTES``
+        comes back as one partition (``coalesce(1)``): its plan reports
         ``SinglePartition``, so a global sort or groupless aggregate
         above it adds no exchange and the statement runs as one job of
-        one task. Larger reads keep Spark's file splits."""
-        out = self._read_raw(db, series)
-        if out is None:
+        one task. Larger reads keep Spark's file splits: one task reads
+        its files one after another, which past those sizes was slower
+        than the splits' parallel tasks."""
+        src = self._source(db, series)
+        if src is None:
             return local_frame(self.spark, [], POINT_SCHEMA)
+        out = self._scan(db, src)
         if retention_ns is not None:
             import time as _time
 
@@ -409,22 +430,20 @@ class TimeSeriesStore:
                 (F.col("timestamp") <= F.lit(t1)) & (F.col("day") <= _day(f"{t1}L"))
             )
         out = out.select("series", "timestamp", "value")
-        if series is not None and self._fits_one_split(
-            os.path.join(self._points_path(db), self._series_part(series)), t0, t1
-        ):
+        if series is not None and self._one_task(src, t0, t1):
             out = out.coalesce(1)
         return out
 
-    def _fits_one_split(self, series_dir: str, t0: int | None, t1: int | None) -> bool:
+    def _one_task(self, series_dir: str, t0: int | None, t1: int | None) -> bool:
         """Whether the data files in ``series_dir``'s ``day=``
-        directories between ``t0``'s and ``t1``'s days fit one file
-        split, counted as Spark's file packer counts them: each file's
-        size plus ``spark.sql.files.openCostInBytes``, against
-        ``spark.sql.files.maxPartitionBytes``. Names starting with '.'
-        or '_' are skipped, as Spark's file index skips them."""
+        directories between ``t0``'s and ``t1``'s days are at most
+        ``ONE_TASK_MAX_FILES`` files of at most ``ONE_TASK_MAX_BYTES``
+        in all, and of no more than ``spark.sql.files.maxPartitionBytes``
+        (the most Spark reads in one split). Names starting with '.' or
+        '_' are skipped, as Spark's file index skips them."""
         conf = self.spark._jsparkSession.sessionState().conf()
-        budget = conf.filesMaxPartitionBytes()
-        open_cost = conf.filesOpenCostInBytes()
+        budget = min(ONE_TASK_MAX_BYTES, conf.filesMaxPartitionBytes())
+        files = ONE_TASK_MAX_FILES
         lo = None if t0 is None else _day_of(t0)
         hi = None if t1 is None else _day_of(t1)
         with os.scandir(series_dir) as days:
@@ -434,12 +453,13 @@ class TimeSeriesStore:
                 d = int(day.name[4:])
                 if (lo is not None and d < lo) or (hi is not None and d > hi):
                     continue
-                with os.scandir(day.path) as files:
-                    for f in files:
+                with os.scandir(day.path) as entries:
+                    for f in entries:
                         if f.name[0] in "._":
                             continue
-                        budget -= f.stat().st_size + open_cost
-                        if budget < 0:
+                        files -= 1
+                        budget -= f.stat().st_size
+                        if files < 0 or budget < 0:
                             return False
         return True
 

@@ -11,6 +11,7 @@ import threading
 import pytest
 
 from raft_c_spark.engine import Engine
+from raft_c_spark.sources import tsstore
 from raft_c_spark.sources.tsstore import DAY_NS, POINT_SCHEMA, TimeSeriesStore
 from tests.harness import jobs_in
 
@@ -165,8 +166,8 @@ def _plan(df) -> str:
 
 
 def test_small_series_select_runs_one_job(spark, tmp_path):
-    """A SELECT over a series whose pruned files fit one file split
-    reads them as one partition: every statement kind collects in
+    """A SELECT over a series whose pruned files are few and small reads
+    them as one partition: every statement kind collects in
     exactly one Spark job, with no exchange in its plan, and returns the
     model's rows in the model's order."""
     e, pts = _small_series(spark, tmp_path)
@@ -178,17 +179,24 @@ def test_small_series_select_runs_one_job(spark, tmp_path):
         assert _rows_match([tuple(r) for r in rows], want), (stmt, rows, want)
 
 
-def test_large_scan_keeps_exchanges(spark, tmp_path):
-    """With ``spark.sql.files.maxPartitionBytes`` below the scan's size
-    the read keeps Spark's file splits: point results keep the global
-    sort's range exchange, aggregates their exchange, and every
-    statement returns the same rows as the one-partition plan."""
+@pytest.mark.parametrize("cap", ["maxPartitionBytes", "files", "bytes"])
+def test_large_scan_keeps_exchanges(spark, tmp_path, monkeypatch, cap):
+    """A read over more files or bytes than one task takes — forced
+    here by lowering ``spark.sql.files.maxPartitionBytes`` to 1 KiB, or
+    ``ONE_TASK_MAX_FILES`` or ``ONE_TASK_MAX_BYTES`` to 1, below the
+    small series' 2–3 files of about 1 KiB each per day — keeps
+    Spark's file splits: point results keep the global sort's range
+    exchange, aggregates their exchange, and every statement returns
+    the same rows as the one-partition plan."""
     e, pts = _small_series(spark, tmp_path)
     cases = _select_cases(pts)
     small = [[tuple(r) for r in e.execute(stmt).collect()] for stmt, _, _ in cases]
     key = "spark.sql.files.maxPartitionBytes"
     old = spark.conf.get(key)
-    spark.conf.set(key, str(1 << 20))  # < one file's open cost (4 MiB)
+    if cap == "maxPartitionBytes":
+        spark.conf.set(key, "1k")
+    else:
+        monkeypatch.setattr(tsstore, f"ONE_TASK_MAX_{cap.upper()}", 1)
     try:
         for (stmt, want, exchange), rows in zip(cases, small):
             df = e.execute(stmt)
