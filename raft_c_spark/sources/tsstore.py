@@ -92,8 +92,8 @@ def _day_of(ns: int) -> int:
 #: one partition. Measured with scripts/one_task_crossover.py on a
 #: 4-vCPU VM with two and with four task threads: over the five SELECT
 #: kinds, one task was no slower in summed wall time than Spark's file
-#: splits up to 16 files of 1.1 MiB, and used 20-35% less JVM CPU; at
-#: 2.2 MiB or 64 files it was 2-31% slower.
+#: splits up to 16 files of 1.1 MiB, and used 21-35% less JVM CPU; at
+#: 2.2 MiB, or at 64 files and more, it was 2-31% slower.
 ONE_TASK_MAX_FILES = 16
 ONE_TASK_MAX_BYTES = 1 << 20
 
