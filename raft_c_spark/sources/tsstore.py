@@ -230,8 +230,11 @@ class TimeSeriesStore:
             t = int(t)
             by_day.setdefault(_day_of(t), []).append((t, float(v)))
         series_dir = os.path.join(self._points_path(db), self._series_part(series))
-        for day, points in by_day.items():
-            _write_points(os.path.join(series_dir, f"day={day}"), points)
+        # ``compact`` swaps the whole ``points`` directory: a file
+        # published while it runs would land in the tree it deletes
+        with self._write_lock:
+            for day, points in by_day.items():
+                _write_points(os.path.join(series_dir, f"day={day}"), points)
         return len(rows)
 
     def insert_df(self, db: str, df: DataFrame, duplication: str = "insert") -> int:

@@ -313,6 +313,49 @@ def test_concurrent_inserts_all_land(spark, tmp_path):
         assert st.read("d", s).count() == calls * 12
 
 
+@pytest.mark.parametrize("step", ["swap_out", "swap_in"])
+def test_insert_during_compact_keeps_every_point(spark, tmp_path, monkeypatch, step):
+    """An ``insert``-policy INSERT that arrives while ``compact`` swaps
+    the ``points`` directory. Written before the first rename, its file
+    moved into ``.pre_compact`` and was deleted with it; with its
+    directories made between the renames, the second rename failed and
+    reads saw only the new point. The INSERT waits for the store's
+    write lock instead: every acknowledged point reads back and no
+    backup is left."""
+    st = TimeSeriesStore(spark, str(tmp_path / "wh"))
+    st.insert_rows("d", "s", [(BASE, 1.0), (BASE + DAY_NS, 2.0)])
+    points = os.path.join(st.warehouse, "d", "points")
+    hook = {
+        "swap_out": (points, points + ".pre_compact"),
+        "swap_in": (points + ".compacting", points),
+    }[step]
+    acked = []
+    writer = threading.Thread(
+        target=lambda: acked.append(st.insert_rows("d", "s", [(BASE + 2 * DAY_NS, 3.0)]))
+    )
+    rename = os.rename
+
+    def racing_rename(src, dst):
+        if (src, dst) == hook and writer.ident is None:
+            writer.start()
+            # the INSERT runs to the end here unless it waits for compact
+            writer.join(timeout=2)
+        rename(src, dst)
+
+    monkeypatch.setattr(tsstore.os, "rename", racing_rename)
+    st.compact("d")
+    monkeypatch.undo()
+    writer.join(timeout=120)
+    assert not writer.is_alive()
+    assert acked == [1]
+    assert _points(st.read("d", "s")) == [
+        ("s", BASE, 1.0),
+        ("s", BASE + DAY_NS, 2.0),
+        ("s", BASE + 2 * DAY_NS, 3.0),
+    ]
+    assert not os.path.exists(points + ".pre_compact")
+
+
 def test_policy_switch_mixes_driver_and_spark_files(spark, tmp_path):
     """Driver-written files and Spark-written files share a partition:
     an ``update`` INSERT after ``insert``-policy INSERTs replaces the
