@@ -41,14 +41,7 @@ def _scan_wide(df: DataFrame) -> DataFrame:
     Round-robin repartition only changes row placement, never values:
     every consumer is a per-row projection or a key-grouped aggregate
     (the family's DECIMAL-quantization rule makes every sum
-    order-independent), so results are identical either way.
-
-    ``RAFT_C_SPARK_SCAN_WIDE=0`` disables the guard (A/B measurement
-    and clusters whose scans always split well)."""
-    import os as _os
-
-    if _os.environ.get("RAFT_C_SPARK_SCAN_WIDE", "1") == "0":
-        return df
+    order-independent), so results are identical either way."""
     from raft_c_spark.operators.dedup import _widen
 
     return _widen(df)

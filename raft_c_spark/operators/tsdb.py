@@ -485,13 +485,6 @@ def delta_rate(df: DataFrame, interval_ns: int) -> DataFrame:
     ).orderBy(*keys)
 
 
-def ts_limit(df: DataFrame, n: int) -> DataFrame:
-    """LIMIT n — parsed but never applied by the reference executor
-    (src/statement_parse.c:1116-1128, no QF_LIMT handling); implemented
-    per SURVEY §2.7. Deterministic: callers pass an ordered frame."""
-    return df.limit(n)
-
-
 def lttb_downsample(df: DataFrame, interval_ns: int) -> DataFrame:
     """Largest-Triangle-Three-Buckets downsampling (Steinarsson 2013,
     the standard TSDB visualization reducer) — one representative

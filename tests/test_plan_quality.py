@@ -6,6 +6,7 @@ A regression here is a performance bug even when results stay correct."""
 from __future__ import annotations
 
 import io
+import os
 import re
 from contextlib import redirect_stdout
 
@@ -14,7 +15,7 @@ from pyspark.sql import functions as F
 
 from raft_c_spark.engine import Engine
 from raft_c_spark.plans import tpch, tpch2, tpch3, tpch4
-from raft_c_spark.sources.testdata import load_table
+from raft_c_spark.sources.testdata import TABLES, load_table
 
 
 def plan_of(df) -> str:
@@ -22,6 +23,29 @@ def plan_of(df) -> str:
     with redirect_stdout(buf):
         df.explain("formatted")
     return buf.getvalue()
+
+
+@pytest.fixture(scope="module")
+def wide_sf_dir(spark, sf_dir, tmp_path_factory) -> str:
+    """``sf_dir`` with ``documents`` rewritten as at least 64 parquet
+    files (and at least one per task thread), the other tables linked.
+    Such a scan already runs at the session's parallelism, so
+    ``dedup._widen`` leaves it as it is and the plan is the one a
+    cluster-scale corpus gets."""
+    import pyarrow.parquet as pq
+
+    out = tmp_path_factory.mktemp("wide_sf")
+    for t in TABLES:
+        if t != "documents":
+            os.symlink(os.path.join(sf_dir, f"{t}.parquet"), out / f"{t}.parquet")
+    docs = pq.read_table(os.path.join(sf_dir, "documents.parquet"))
+    n = max(64, spark.sparkContext.defaultParallelism)
+    assert docs.num_rows >= n
+    (out / "documents.parquet").mkdir()
+    for i in range(n):
+        lo, hi = i * docs.num_rows // n, (i + 1) * docs.num_rows // n
+        pq.write_table(docs.slice(lo, hi - lo), out / "documents.parquet" / f"part-{i:05d}.parquet")
+    return str(out)
 
 
 def test_store_range_scan_pushes_down(spark, tmp_path):
@@ -160,16 +184,15 @@ def test_tpch_q6_filter_pushdown(spark, sf_dir):
     assert "l_shipdate" in pushed and "l_discount" in pushed, pushed
 
 
-def test_whole_stage_codegen_covers_text_analysis(spark, sf_dir, monkeypatch):
+def test_whole_stage_codegen_covers_text_analysis(spark, wide_sf_dir):
     """Text analysis must stay inside whole-stage codegen (no Python
-    UDF stages in the plan). Pinned with the _scan_wide parallelism
-    guard disabled — the guard's round-robin exchange (a local
-    single-file-scan no-op at scale) is pinned separately by
+    UDF stages in the plan). Pinned on a many-file corpus, where the
+    _scan_wide parallelism guard adds nothing; its round-robin exchange
+    on a single small file is pinned separately by
     test_scan_wide_exchange_is_round_robin_only."""
     from raft_c_spark.operators import text
 
-    monkeypatch.setenv("RAFT_C_SPARK_SCAN_WIDE", "0")
-    docs = load_table(spark, sf_dir, "documents")
+    docs = load_table(spark, wide_sf_dir, "documents")
     plan = plan_of(text.analyze(docs))
     # formatted mode marks codegen'd operators with a '*' prefix
     assert "* Project" in plan
@@ -321,20 +344,17 @@ def test_stream_query_restores_shuffle_conf(spark, sf_dir):
     assert spark.conf.get(key) == prev
 
 
-def test_decontaminate_broadcast_filter_no_train_preshuffle(
-    spark, sf_dir, monkeypatch
-):
+def test_decontaminate_broadcast_filter_no_train_preshuffle(spark, wide_sf_dir):
     """The training gram stream must reach the eval-gram join WITHOUT
     a shuffle of its own (the join is a broadcast map-side filter;
     only hit rows shuffle into the count). A distinct/exchange on the
     train side before the join would shuffle the whole corpus's grams
-    at scale. Guard disabled: the _scan_wide round-robin exchange is a
-    local scan-parallelism fix, not a gram shuffle (pinned
-    round-robin-only elsewhere)."""
+    at scale. On a many-file corpus: the _scan_wide round-robin
+    exchange a single small file gets is a local scan-parallelism fix,
+    not a gram shuffle (pinned round-robin-only elsewhere)."""
     from raft_c_spark.plans.sampling import q_ds_decontaminate
 
-    monkeypatch.setenv("RAFT_C_SPARK_SCAN_WIDE", "0")
-    plan = plan_of(q_ds_decontaminate(spark, sf_dir))
+    plan = plan_of(q_ds_decontaminate(spark, wide_sf_dir))
     assert "BroadcastHashJoin" in plan, plan
     # In the formatted tree, the join's stream side is the ":-" branch
     # printed between the BroadcastHashJoin line and its build-side
@@ -350,14 +370,14 @@ def test_decontaminate_broadcast_filter_no_train_preshuffle(
     assert not any("Exchange" in l for l in stream_branch), plan
 
 
-def test_repetition_metrics_shuffle_free(spark, sf_dir, monkeypatch):
+def test_repetition_metrics_shuffle_free(spark, wide_sf_dir):
     """Repetition fractions are pure per-row expressions: no Exchange
-    anywhere in the plan (guard disabled — its round-robin exchange is
-    pinned round-robin-only elsewhere)."""
+    anywhere in the plan (many-file corpus: the guard's round-robin
+    exchange on a single small file is pinned round-robin-only
+    elsewhere)."""
     from raft_c_spark.plans.text import q_text_repetition
 
-    monkeypatch.setenv("RAFT_C_SPARK_SCAN_WIDE", "0")
-    plan = plan_of(q_text_repetition(spark, sf_dir))
+    plan = plan_of(q_text_repetition(spark, wide_sf_dir))
     assert "Exchange" not in plan, plan
 
 
@@ -412,18 +432,15 @@ def test_minhash_incr_banded_join_broadcasts_small_side(spark, sf_dir):
     assert "CartesianProduct" not in plan, plan
 
 
-def test_bloom_decontaminate_no_join_no_train_preshuffle(
-    spark, sf_dir, monkeypatch
-):
+def test_bloom_decontaminate_no_join_no_train_preshuffle(spark, wide_sf_dir):
     """The bloom path must contain NO join at all (the filter is a
     broadcast variable probed in a kernel), and the only Exchange is
     the final per-doc aggregation of surviving hits — the training
-    gram stream itself never shuffles. Guard disabled (see
+    gram stream itself never shuffles. Many-file corpus (see
     test_scan_wide_exchange_is_round_robin_only)."""
     from raft_c_spark.plans.extras import q_ds_bloom_decontaminate
 
-    monkeypatch.setenv("RAFT_C_SPARK_SCAN_WIDE", "0")
-    plan = plan_of(q_ds_bloom_decontaminate(spark, sf_dir))
+    plan = plan_of(q_ds_bloom_decontaminate(spark, wide_sf_dir))
     assert "Join" not in plan, plan
     # the kernel (MapInPandas) runs at scan parallelism: no Exchange
     # may precede it; the only shuffles are the two-phase distinct
@@ -437,15 +454,14 @@ def test_bloom_decontaminate_no_join_no_train_preshuffle(
     assert len(exchange_idxs) <= 2, plan
 
 
-def test_quality_model_single_shuffle_no_python(spark, sf_dir, monkeypatch):
+def test_quality_model_single_shuffle_no_python(spark, wide_sf_dir):
     """The scorer is tokenize→explode→hash-weight→aggregate: one
     shuffle (the doc aggregation), partial aggregation before it, and
-    zero Python evaluation nodes. Guard disabled (see
+    zero Python evaluation nodes. Many-file corpus (see
     test_scan_wide_exchange_is_round_robin_only)."""
     from raft_c_spark.plans.extras import q_text_quality_model
 
-    monkeypatch.setenv("RAFT_C_SPARK_SCAN_WIDE", "0")
-    plan = plan_of(q_text_quality_model(spark, sf_dir))
+    plan = plan_of(q_text_quality_model(spark, wide_sf_dir))
     assert "ArrowEvalPython" not in plan and "BatchEvalPython" not in plan, plan
     assert "partial" in plan.lower(), plan
     import re
@@ -661,14 +677,13 @@ def test_segment_dedup_aggregate_no_hot_key_window(spark, sf_dir):
     assert len(join_nodes) == 1, (join_nodes, plan)
 
 
-def test_gopher_rules_map_only(spark, sf_dir, monkeypatch):
+def test_gopher_rules_map_only(spark, wide_sf_dir):
     """The Gopher gate is pure codegen column arithmetic: one scan,
-    zero Exchange, zero Python nodes. Guard disabled (see
+    zero Exchange, zero Python nodes. Many-file corpus (see
     test_scan_wide_exchange_is_round_robin_only)."""
     from raft_c_spark.operators.text import gopher_rules
 
-    monkeypatch.setenv("RAFT_C_SPARK_SCAN_WIDE", "0")
-    docs = load_table(spark, sf_dir, "documents")
+    docs = load_table(spark, wide_sf_dir, "documents")
     plan = plan_of(gopher_rules(docs, min_words=10))
     assert "Exchange" not in plan, plan
     assert "Python" not in plan, plan

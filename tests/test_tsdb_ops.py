@@ -182,7 +182,7 @@ def test_sample_by_oracle(points, duck):
 
 
 def test_limit(points):
-    assert tsdb.ts_limit(tsdb.ts_scan(points), 17).count() == 17
+    assert tsdb.ts_scan(points).limit(17).count() == 17
 
 
 def test_sample_by_sliding_hand_fixture(spark):
