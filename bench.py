@@ -51,46 +51,34 @@ def run_query(df) -> None:
     df.write.format("noop").mode("overwrite").save()
 
 
-def _tree_cpu_seconds() -> float:
-    """Total CPU seconds (utime+stime) consumed so far by this process
-    and every live descendant — the driver JVM and its Python workers
-    included (local mode: executors live inside the driver JVM).
+def run_traced(spark, fn) -> dict:
+    """Run one registry query: the call that builds its frame is the
+    *build* phase, the noop write the *execute* phase. Returns the
+    query's trace record; ``wall_s`` and ``cpu_s`` cover both phases."""
+    from raft_c_spark import trace
 
-    Per-query CPU deltas make epoch attribution mechanical (judge r12
-    ask #3): a wall-time mover whose CPU is flat was a stolen epoch,
-    not a plan change — previously each disputed mover cost a bespoke
-    fixed-thread A/B script to reach the same verdict. Caveat: CPU of
-    workers that EXIT between samples is lost (they leave the tree);
-    with spark.python.worker.reuse (default on) workers are stable
-    across queries, so deltas are tight in practice."""
-    clk = os.sysconf("SC_CLK_TCK")
-    procs: dict[int, tuple[int, int]] = {}
-    for pid in os.listdir("/proc"):
-        if not pid.isdigit():
-            continue
-        try:
-            with open(f"/proc/{pid}/stat", "rb") as fh:
-                s = fh.read().decode("ascii", "replace")
-        except OSError:
-            continue
-        try:
-            rest = s[s.rindex(")") + 2 :].split()
-            # post-comm fields: 0=state 1=ppid ... 11=utime 12=stime
-            procs[int(pid)] = (int(rest[1]), int(rest[11]) + int(rest[12]))
-        except (ValueError, IndexError):
-            continue
-    kids: dict[int, list[int]] = {}
-    for pid, (ppid, _) in procs.items():
-        kids.setdefault(ppid, []).append(pid)
-    total, stack, seen = 0, [os.getpid()], set()
-    while stack:
-        p = stack.pop()
-        if p in seen or p not in procs:
-            continue
-        seen.add(p)
-        total += procs[p][1]
-        stack.extend(kids.get(p, []))
-    return total / clk
+    with trace.phase(spark) as build:
+        df = fn(spark, SF_DIR)
+    with trace.phase(spark) as exe:
+        run_query(df)
+    cpu = {
+        k: round(getattr(build, k) + getattr(exe, k), 4)
+        for k in ("cpu_pydriver_s", "cpu_jvm_s", "cpu_pyworker_s")
+    }
+    return {
+        "wall_s": round(build.wall_s + exe.wall_s, 4),
+        "cpu_s": round(sum(cpu.values()), 4),
+        "build_s": round(build.wall_s, 4),
+        "exec_s": round(exe.wall_s, 4),
+        "build_jobs": build.jobs,
+        "exec_jobs": exe.jobs,
+        **cpu,
+        "gc_ms": build.gc_ms + exe.gc_ms,
+        # persisted RDDs left after the query: a column that grows
+        # across the registry means a query leaks cached blocks
+        "storage_rdds": exe.storage_rdds,
+        "storage_bytes": exe.storage_bytes,
+    }
 
 
 #: FROZEN headline subset (judge r9 ask #8): one representative per
@@ -198,11 +186,12 @@ def main() -> None:
     timings: dict[str, float] = {}
     cold: dict[str, float] = {}
     spreads: dict[str, float] = {}
-    # per-query process-tree CPU seconds, paired to the SAME run the
-    # wall columns report (cpu[q] rides the min-wall sample; cold_cpu
-    # the first) — the mechanical epoch-attribution column (judge r12
-    # ask #3): wall up + CPU flat = stolen epoch, both up = plan/work
-    cpu: dict[str, float] = {}
+    # per-query trace records (``run_traced``), paired to the SAME run
+    # the wall columns report (traces[q] rides the min-wall sample;
+    # cold_cpu the first) — the mechanical epoch-attribution column
+    # (judge r12 ask #3): wall up + CPU flat = stolen epoch, both up =
+    # plan/work
+    traces: dict[str, dict] = {}
     cold_cpu: dict[str, float] = {}
     # per-query disk-cache key observation (advisor r9): a query whose
     # plan consults a cache key that another query also consults has a
@@ -216,19 +205,16 @@ def main() -> None:
         for name, fn in sorted(all_queries().items()):
             seen = cache_keys.setdefault(name, set())
             _dc.set_key_observer(seen.add)
-            c0 = _tree_cpu_seconds()
-            t0 = time.perf_counter()
-            run_query(fn(spark, SF_DIR))
-            dt = round(time.perf_counter() - t0, 4)
-            dc = round(_tree_cpu_seconds() - c0, 4)
+            rec = run_traced(spark, fn)
             _dc.set_key_observer(None)
+            dt = rec["wall_s"]
             if name not in cold:
                 cold[name] = dt
-                cold_cpu[name] = dc
+                cold_cpu[name] = rec["cpu_s"]
             if name in timings:
                 spreads[name] = max(timings[name], dt) / max(min(timings[name], dt), 1e-9)
             if name not in timings or dt < timings[name]:
-                cpu[name] = dc
+                traces[name] = rec
             timings[name] = min(timings.get(name, dt), dt)
         calib_probe()
     # adaptive re-measure: a query whose passes disagree was hit by a
@@ -247,14 +233,11 @@ def main() -> None:
         for name in sorted(retry):
             fn = all_queries()[name]
             for _ in range(2):
-                c0 = _tree_cpu_seconds()
-                t0 = time.perf_counter()
-                run_query(fn(spark, SF_DIR))
-                dt = round(time.perf_counter() - t0, 4)
-                dc = round(_tree_cpu_seconds() - c0, 4)
+                rec = run_traced(spark, fn)
+                dt = rec["wall_s"]
                 prev = timings[name]
                 if dt < prev:
-                    cpu[name] = dc
+                    traces[name] = rec
                 timings[name] = min(prev, dt)
                 if max(prev, dt) / max(min(prev, dt), 1e-9) <= 1.15:
                     break
@@ -292,7 +275,11 @@ def main() -> None:
         # run (min-wall for warm, first for cold) — the epoch-
         # attribution column: cross-round wall deltas whose CPU is
         # flat are epoch/steal, not plan changes (judge r12 ask #3)
-        "queries_cpu": cpu,
+        "queries_cpu": {n: r["cpu_s"] for n, r in traces.items()},
+        # per query: build/execute seconds and jobs, the CPU split
+        # (Python driver, JVM, Python workers), JVM GC ms and the
+        # persisted RDDs left after it (``run_traced``)
+        "queries_trace": traces,
         "queries_cold_cpu": cold_cpu,
         "queries_cold": cold,
         "cold_wiped": cold_wiped,
@@ -389,7 +376,7 @@ def main() -> None:
                 "h12": round(
                     sum(timings[n] for n in HEADLINE_12 if n in timings), 2
                 ),
-                "full": "BENCH_FULL.json",
+                "full": full_name,
                 **extra,
                 "queries": qs,
             },

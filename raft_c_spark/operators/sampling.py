@@ -159,8 +159,9 @@ def pack_sequences(
     # the CacheManager, which never sees checkpoint blocks) and there
     # is no public API to unpersist a checkpoint eagerly. Measured:
     # the committed profile sweep's storage stays flat across the full
-    # registry (see scripts/profile_build_exec.py's rdd_storage
-    # column). Fault-tolerance caveat: localCheckpoint is
+    # registry (``PROFILE_BUILD_EXEC.json``'s rdd_storage column; a
+    # bench run's ``queries_trace`` storage columns now record the
+    # same). Fault-tolerance caveat: localCheckpoint is
     # lineage-truncating — on a real cluster, executor loss makes the
     # blocks unrecomputable; acceptable for this engine's local-mode
     # charter, and at cluster scale the deployer should swap in

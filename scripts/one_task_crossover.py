@@ -28,7 +28,6 @@ import os
 import shutil
 import statistics
 import sys
-import time
 
 import numpy as np
 import pyarrow as pa
@@ -36,7 +35,7 @@ import pyarrow.parquet as pq
 
 sys.path.insert(0, os.path.join(os.path.dirname(__file__), ".."))
 
-from raft_c_spark import get_spark  # noqa: E402
+from raft_c_spark import get_spark, trace  # noqa: E402
 from raft_c_spark.engine import Engine  # noqa: E402
 from raft_c_spark.sources import tsstore  # noqa: E402
 from raft_c_spark.sources.tsstore import DAY_NS  # noqa: E402
@@ -79,21 +78,16 @@ def statements(t0: int, t1: int) -> dict[str, str]:
     }
 
 
-def jvm_cpu(pid: int) -> float:
-    with open(f"/proc/{pid}/stat") as f:
-        fields = f.read().rsplit(")", 1)[1].split()
-    return (int(fields[11]) + int(fields[12])) / os.sysconf("SC_CLK_TCK")
-
-
-def run_once(e: Engine, kind: str, stmt: str, one: bool, pid: int) -> tuple[float, float]:
+def run_once(e: Engine, kind: str, stmt: str, one: bool) -> tuple[float, float]:
+    """Wall and JVM CPU seconds of one statement."""
     tsstore.TimeSeriesStore._one_task = lambda self, *a: one
-    c0, w0 = jvm_cpu(pid), time.perf_counter()
-    df = e.execute(stmt)
-    if kind == "between":
-        df.write.format("noop").mode("overwrite").save()
-    else:
-        df.collect()
-    return time.perf_counter() - w0, jvm_cpu(pid) - c0
+    with trace.phase(e.spark) as p:
+        df = e.execute(stmt)
+        if kind == "between":
+            df.write.format("noop").mode("overwrite").save()
+        else:
+            df.collect()
+    return p.wall_s, p.cpu_jvm_s
 
 
 def main() -> None:
@@ -104,7 +98,6 @@ def main() -> None:
     ap.add_argument("--reps", type=int, default=5)
     args = ap.parse_args()
     spark = get_spark("one-task-crossover")
-    pid = spark.sparkContext._jvm.java.lang.ProcessHandle.current().pid()
     e = Engine(spark, warehouse=os.path.join(args.work, "wh"))
     for ddl in ("CREATEDB d", "USE d", "CREATE s"):
         e.execute(ddl).collect()
@@ -120,11 +113,11 @@ def main() -> None:
         res: dict = {"files": int(files), "mib": round(on_disk / 2**20, 2)}
         for kind, stmt in stmts.items():
             for one in (True, False):  # warm both plans
-                run_once(e, kind, stmt, one, pid)
+                run_once(e, kind, stmt, one)
             times: dict[bool, list] = {True: [], False: []}
             for r in range(args.reps):
                 for one in ((True, False) if r % 2 == 0 else (False, True)):
-                    times[one].append(run_once(e, kind, stmt, one, pid))
+                    times[one].append(run_once(e, kind, stmt, one))
             for one, name in ((True, "one"), (False, "split")):
                 res[f"{kind}.{name}.wall"] = round(statistics.median(w for w, _ in times[one]), 3)
                 res[f"{kind}.{name}.cpu"] = round(statistics.median(c for _, c in times[one]), 3)

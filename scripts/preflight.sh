@@ -29,10 +29,17 @@ echo "== preflight: bench (${SF_DIR}) =="
 OUT=$(SPARK_GRAFT_SF_DIR="$SF_DIR" SPARK_GRAFT_BENCH_PASSES=1 python bench.py 2>/dev/null | tail -1)
 echo "$OUT" | python -c '
 import json, sys
+from raft_c_spark.plans.registry import all_queries
 d = json.loads(sys.stdin.read())
 assert d["unit"] == "sec" and d["queries"], d
-print("bench OK: %ss over %d queries at sf=%s"
-      % (d["value"], len(d["queries"]), d["sf"]))
+with open(d["full"]) as fh:
+    traces = json.load(fh)["queries_trace"]
+fields = {"build_s", "exec_s", "build_jobs", "exec_jobs", "cpu_pydriver_s",
+          "cpu_jvm_s", "cpu_pyworker_s", "gc_ms", "storage_rdds", "storage_bytes"}
+bad = sorted(n for n in all_queries() if not fields <= set(traces.get(n, ())))
+assert not bad, "no full trace record in %s for %s" % (d["full"], bad)
+print("bench OK: %ss over %d queries at sf=%s, %d traced in %s"
+      % (d["value"], len(d["queries"]), d["sf"], len(traces), d["full"]))
 '
 
 echo "== preflight: PASS =="

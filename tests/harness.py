@@ -5,26 +5,17 @@ job-budget tests share."""
 
 from __future__ import annotations
 
-import itertools
 import math
 from typing import Any
 
-_groups = itertools.count()
-
 
 def jobs_in(spark, fn):
-    """(number of Spark jobs ``fn()`` started, its result), counted by
-    job group."""
-    sc = spark.sparkContext
-    gid = f"jobs-in-{next(_groups)}"
-    sc.setJobGroup(gid, "job count")
-    try:
+    """(number of Spark jobs ``fn()`` started, its result)."""
+    from raft_c_spark import trace
+
+    with trace.phase(spark) as p:
         out = fn()
-    finally:
-        sc.setJobGroup(None, None)
-    # the status tracker is fed by the asynchronous listener bus
-    sc._jsc.sc().listenerBus().waitUntilEmpty()
-    return len(sc.statusTracker().getJobIdsForGroup(gid)), out
+    return p.jobs, out
 
 
 def _norm_cell(x: Any) -> Any:
