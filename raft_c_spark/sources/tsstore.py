@@ -23,8 +23,9 @@ values: series ``007`` would read back as the int 7 (and match series
 Statement job budget: a single-series ``read`` lists only that
 series' directory and runs no Spark job before the query executes.
 When the files it will scan are few and small (``ONE_TASK_MAX_FILES``,
-``ONE_TASK_MAX_BYTES``), it is read as one partition, so every SELECT
-kind over it runs as one job of one task (≙ the reference streaming
+``ONE_TASK_MAX_BYTES``), the driver reads them with pyarrow into one
+local partition, so every SELECT kind over it runs as one job of one
+task and skips the parquet scan's setup (≙ the reference streaming
 one series from one partition in time order). An ``insert_rows``
 batch under the ``insert`` policy runs no Spark job at all — the
 driver already holds the points, so it writes one sorted Arrow parquet
@@ -50,6 +51,7 @@ import threading
 import uuid
 
 import pyarrow as pa
+import pyarrow.compute as pc
 import pyarrow.parquet as pq
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -88,14 +90,14 @@ def _day_of(ns: int) -> int:
     return -(-ns // DAY_NS) if ns < 0 else ns // DAY_NS
 
 
-#: the most data files, and bytes in all, that a series read takes in
-#: one partition. Measured with scripts/one_task_crossover.py on a
-#: 4-vCPU VM with two and with four task threads: over the five SELECT
-#: kinds, one task was no slower in summed wall time than Spark's file
-#: splits up to 16 files of 1.1 MiB, and used 21-35% less JVM CPU; at
-#: 2.2 MiB, or at 64 files and more, it was 2-31% slower.
+#: the most data files, and bytes in all, that a series read takes on
+#: the driver. Measured with scripts/one_task_crossover.py on a 4-vCPU
+#: VM with two and with four task threads: over the five SELECT kinds,
+#: the driver-side read was 7-57% faster in summed wall time than
+#: Spark's file splits up to 16 files of 0.55 MiB (and at 64 files of
+#: 0.26 MiB), and 6-37% slower at 16 files of 0.82-1.1 MiB.
 ONE_TASK_MAX_FILES = 16
-ONE_TASK_MAX_BYTES = 1 << 20
+ONE_TASK_MAX_BYTES = 1 << 19
 
 #: a point file's columns; ``series`` and ``day`` live in its path
 _FILE_SCHEMA = to_arrow_schema(Ty.StructType(POINT_SCHEMA.fields[1:]))
@@ -123,18 +125,43 @@ def _with_day(df: DataFrame) -> DataFrame:
 
 
 def local_frame(
-    spark: SparkSession, rows: list[tuple], schema: Ty.StructType
+    spark: SparkSession, data: list[tuple] | pa.Table, schema: Ty.StructType
 ) -> DataFrame:
-    """Driver-side rows as a local relation. ``createDataFrame`` from an
-    Arrow table builds no RDD, so neither building nor collecting the
-    frame runs a Spark job; ``createDataFrame(list)`` parallelizes, and
-    its collect is a job."""
-    arrow = to_arrow_schema(schema)
-    columns = list(zip(*rows)) if rows else [()] * len(arrow)
-    table = pa.Table.from_arrays(
-        [pa.array(c, f.type) for c, f in zip(columns, arrow)], schema=arrow
+    """Driver-side rows, or an Arrow table with ``schema``'s columns, as
+    a local relation. ``createDataFrame`` from an Arrow table builds no
+    RDD, so neither building nor collecting the frame runs a Spark job;
+    ``createDataFrame(list)`` parallelizes, and its collect is a job."""
+    if not isinstance(data, pa.Table):
+        arrow = to_arrow_schema(schema)
+        columns = list(zip(*data)) if data else [()] * len(arrow)
+        data = pa.Table.from_arrays(
+            [pa.array(c, f.type) for c, f in zip(columns, arrow)], schema=arrow
+        )
+    return spark.createDataFrame(data, schema)
+
+
+def _read_points(
+    series: str, files: list[str], t0: int | None, t1: int | None
+) -> pa.Table:
+    """``files``' points with timestamp in ``[t0, t1]``, in
+    ``POINT_SCHEMA``'s columns. Driver- and Spark-written files differ
+    in field nullability and metadata, so their columns are joined
+    chunk by chunk rather than by ``concat_tables``. A missing file
+    raises: a read is every listed file or an error."""
+    chunks: list[list[pa.Array]] = [[], []]
+    for path in files:
+        with pq.ParquetFile(path) as f:
+            table = f.read(columns=["timestamp", "value"])
+        for out, column in zip(chunks, table.columns):
+            out += column.chunks
+    ts, vs = (pa.chunked_array(c, f.type) for c, f in zip(chunks, _FILE_SCHEMA))
+    lo = -(1 << 63) if t0 is None else t0
+    hi = (1 << 63) - 1 if t1 is None else t1
+    keep = pc.and_(pc.greater_equal(ts, lo), pc.less_equal(ts, hi))
+    ts, vs = ts.filter(keep), vs.filter(keep)
+    return pa.table(
+        [pa.repeat(pa.scalar(series), len(ts)), ts, vs], names=POINT_SCHEMA.names
     )
-    return spark.createDataFrame(table, schema)
 
 
 class TimeSeriesStore:
@@ -145,8 +172,9 @@ class TimeSeriesStore:
         # Spark-committer writes share ``points/_temporary`` (an append
         # job's cleanup deletes a concurrent job's task output), and the
         # ``ignore`` path's anti-join must see the files it writes
-        # against; one writer at a time
-        self._write_lock = threading.Lock()
+        # against; one writer at a time. Re-entrant: writers read the
+        # store through ``_source``, which takes it to restore a backup
+        self._write_lock = threading.RLock()
 
     def _points_path(self, db: str) -> str:
         return os.path.join(self.warehouse, db, "points")
@@ -185,15 +213,8 @@ class TimeSeriesStore:
         ]
         series_set = sorted({s for s, _ in touched})
         day_set = sorted({d for _, d in touched})
-        keys = self.spark.createDataFrame(
-            touched,
-            Ty.StructType(
-                [
-                    Ty.StructField("series", Ty.StringType(), False),
-                    Ty.StructField("day", Ty.LongType(), False),
-                ]
-            ),
-        )
+        key_schema = Ty.StructType([STORE_SCHEMA["series"], STORE_SCHEMA["day"]])
+        keys = local_frame(self.spark, touched, key_schema)
         return (
             existing.filter(
                 F.col("series").isin(series_set) & F.col("day").isin(day_set)
@@ -370,9 +391,12 @@ class TimeSeriesStore:
         path = self._points_path(db)
         bak = path + ".pre_compact"
         if not os.path.exists(path) and os.path.exists(bak):
-            # a compact() crashed between its two renames: the backup
-            # IS the store — restore it before reading
-            os.rename(bak, path)
+            # a compact() is between its two renames, or crashed there
+            # (then the backup IS the store): wait for the lock, and
+            # restore the backup only if the store is still missing
+            with self._write_lock:
+                if not os.path.exists(path) and os.path.exists(bak):
+                    os.rename(bak, path)
         src = path if series is None else self._series_dir(db, series)
         return src if src is not None and os.path.exists(src) else None
 
@@ -404,26 +428,33 @@ class TimeSeriesStore:
         timestamps in ``[t0, t1]`` (either may be None); the same
         bounds on ``day`` prune day directories — ``div`` is monotonic,
         so every point in range sits in a day between the bounds' days
-        — and row-group stats prune the rest. Retention honored at
-        read time (the reference parses-but-ignores it — SURVEY §1.3).
+        — and a Spark scan's row-group stats prune the rest. Retention
+        honored at read time (the reference parses-but-ignores it —
+        SURVEY §1.3).
 
         A series read whose pruned files are at most
         ``ONE_TASK_MAX_FILES`` files of at most ``ONE_TASK_MAX_BYTES``
-        comes back as one partition (``coalesce(1)``): its plan reports
-        ``SinglePartition``, so a global sort or groupless aggregate
-        above it adds no exchange and the statement runs as one job of
-        one task. Larger reads keep Spark's file splits: one task reads
-        its files one after another, which past those sizes was slower
-        than the splits' parallel tasks."""
+        is read on the driver (``_read_points``) into a local relation
+        of one partition (``coalesce(1)``): no parquet scan is planned,
+        its plan reports ``SinglePartition``, so a global sort or
+        groupless aggregate above it adds no exchange and the statement
+        runs as one job of one task. Larger reads are Spark parquet
+        scans with its file splits: past those sizes one task sorting
+        and aggregating every point was slower than the splits'
+        parallel tasks."""
         src = self._source(db, series)
         if src is None:
             return local_frame(self.spark, [], POINT_SCHEMA)
-        out = self._scan(db, src)
         if retention_ns is not None:
             import time as _time
 
             cutoff = (now if now is not None else _time.time_ns()) - retention_ns
             t0 = cutoff if t0 is None else max(t0, cutoff)
+        files = None if series is None else self._one_task(src, t0, t1)
+        if files is not None:
+            points = _read_points(series, files, t0, t1)
+            return local_frame(self.spark, points, POINT_SCHEMA).coalesce(1)
+        out = self._scan(db, src)
         if t0 is not None:
             out = out.filter(
                 (F.col("timestamp") >= F.lit(t0)) & (F.col("day") >= _day(f"{t0}L"))
@@ -432,21 +463,20 @@ class TimeSeriesStore:
             out = out.filter(
                 (F.col("timestamp") <= F.lit(t1)) & (F.col("day") <= _day(f"{t1}L"))
             )
-        out = out.select("series", "timestamp", "value")
-        if series is not None and self._one_task(src, t0, t1):
-            out = out.coalesce(1)
-        return out
+        return out.select("series", "timestamp", "value")
 
-    def _one_task(self, series_dir: str, t0: int | None, t1: int | None) -> bool:
-        """Whether the data files in ``series_dir``'s ``day=``
-        directories between ``t0``'s and ``t1``'s days are at most
+    def _one_task(
+        self, series_dir: str, t0: int | None, t1: int | None
+    ) -> list[str] | None:
+        """The data files in ``series_dir``'s ``day=`` directories
+        between ``t0``'s and ``t1``'s days when they are at most
         ``ONE_TASK_MAX_FILES`` files of at most ``ONE_TASK_MAX_BYTES``
         in all, and of no more than ``spark.sql.files.maxPartitionBytes``
-        (the most Spark reads in one split). Names starting with '.' or
-        '_' are skipped, as Spark's file index skips them."""
+        (the most Spark reads in one split); else None. Names starting
+        with '.' or '_' are skipped, as Spark's file index skips them."""
         conf = self.spark._jsparkSession.sessionState().conf()
         budget = min(ONE_TASK_MAX_BYTES, conf.filesMaxPartitionBytes())
-        files = ONE_TASK_MAX_FILES
+        files: list[str] = []
         lo = None if t0 is None else _day_of(t0)
         hi = None if t1 is None else _day_of(t1)
         with os.scandir(series_dir) as days:
@@ -460,11 +490,11 @@ class TimeSeriesStore:
                     for f in entries:
                         if f.name[0] in "._":
                             continue
-                        files -= 1
+                        files.append(f.path)
                         budget -= f.stat().st_size
-                        if files < 0 or budget < 0:
-                            return False
-        return True
+                        if len(files) > ONE_TASK_MAX_FILES or budget < 0:
+                            return None
+        return files
 
     # -- maintenance -------------------------------------------------------
 
@@ -517,7 +547,7 @@ class TimeSeriesStore:
         if os.path.exists(bak):
             # stale backup from a compact that crashed after BOTH
             # renames but before cleanup (the live path exists and is
-            # newer — _read_raw handles the between-renames case)
+            # newer — _source handles the between-renames case)
             shutil.rmtree(bak)
         os.rename(path, bak)
         os.rename(tmp, path)

@@ -1,14 +1,17 @@
-"""Where one task stops beating Spark's file splits for a series scan.
+"""Where the driver-side series read stops beating Spark's file splits.
 
 For each ``--size FILES:MIB``, builds one series of FILES parquet
 files (one row group each, as the store's writers leave them) holding
-MIB MiB in all over up to ``--days`` day directories, then runs the five SELECT kinds of the
-``tsdb_wire`` benchmark over the whole series twice per rep: once read
-as one partition (``coalesce(1)``) and once with Spark's file splits,
-alternating which goes first. BETWEEN's sorted points are written to
-Spark's ``noop`` sink rather than collected, so the comparison is the
-plan's, not the transfer's. Prints one JSON line per size: the median
-wall seconds and JVM CPU seconds of each kind under each plan.
+MIB MiB in all over up to ``--days`` day directories, then runs the
+five SELECT kinds of the ``tsdb_wire`` benchmark over the whole series
+twice per rep: once read on the driver into one local partition
+(``TimeSeriesStore.read``'s one-task branch) and once with Spark's
+file splits, alternating which goes first. BETWEEN's sorted points are
+written to Spark's ``noop`` sink rather than collected, so the
+comparison is the plan's, not the transfer's. Prints one JSON line
+per size: the median wall seconds and CPU seconds of each kind under
+each plan. The CPU is the Python driver's plus the JVM's, since the
+driver-side read runs in Python.
 
     SPARK_GRAFT_CPUS=2 SPARK_GRAFT_DRIVER_MEM=3g \\
         python scripts/one_task_crossover.py --work /tmp/xover \\
@@ -79,15 +82,18 @@ def statements(t0: int, t1: int) -> dict[str, str]:
 
 
 def run_once(e: Engine, kind: str, stmt: str, one: bool) -> tuple[float, float]:
-    """Wall and JVM CPU seconds of one statement."""
-    tsstore.TimeSeriesStore._one_task = lambda self, *a: one
+    """Wall and driver+JVM CPU seconds of one statement, its series read on
+    the driver (``one``: the gate's caps lifted past every size here)
+    or by Spark's file splits (a file cap of 0)."""
+    tsstore.ONE_TASK_MAX_FILES = 1 << 30 if one else 0
+    tsstore.ONE_TASK_MAX_BYTES = 1 << 30
     with trace.phase(e.spark) as p:
         df = e.execute(stmt)
         if kind == "between":
             df.write.format("noop").mode("overwrite").save()
         else:
             df.collect()
-    return p.wall_s, p.cpu_jvm_s
+    return p.wall_s, p.cpu_pydriver_s + p.cpu_jvm_s
 
 
 def main() -> None:

@@ -15,7 +15,9 @@ from pyspark.sql import functions as F
 
 from raft_c_spark.engine import Engine
 from raft_c_spark.plans import tpch, tpch2, tpch3, tpch4
+from raft_c_spark.sources import tsstore
 from raft_c_spark.sources.testdata import TABLES, load_table
+from tests.harness import jobs_in
 
 
 def plan_of(df) -> str:
@@ -48,14 +50,17 @@ def wide_sf_dir(spark, sf_dir, tmp_path_factory) -> str:
     return str(out)
 
 
-def test_store_range_scan_pushes_down(spark, tmp_path):
-    """Range predicates on the materialized store reach the parquet
-    scan (PushedFilters) AND prune day partitions (PartitionFilters on
-    both ends of ``day``) — the sparse-index + partition-pruning parity
-    of the reference (src/index.c:65-109, src/timeseries.c:882-891).
-    SAMPLE BY scans its normalized range the same way. The series fits
-    one file split, so the scan is read as one partition, and a WHERE
-    predicate still reaches the scan below that ``Coalesce``."""
+def test_store_range_scan_pushes_down(spark, tmp_path, monkeypatch):
+    """Within the one-task bounds a series read is a driver-side local
+    relation: each statement's plan has ``LocalTableScan`` under
+    ``Coalesce``, no parquet scan, and collects in one job. Past them
+    (``ONE_TASK_MAX_FILES`` forced to 1, below the range's 2 files),
+    range predicates on the materialized store reach the parquet scan
+    (PushedFilters) AND prune day partitions (PartitionFilters on both
+    ends of ``day``) — the sparse-index + partition-pruning parity of
+    the reference (src/index.c:65-109, src/timeseries.c:882-891).
+    SAMPLE BY scans its normalized range the same way, and a WHERE
+    predicate reaches the scan."""
     eng = Engine(spark, warehouse=str(tmp_path / "wh"))
     eng.execute("CREATEDB d")
     eng.execute("USE d")
@@ -66,16 +71,23 @@ def test_store_range_scan_pushes_down(spark, tmp_path):
         f"({base + i * day}, {float(i)})" for i in range(5)
     )
     eng.execute(f"INSERT INTO s VALUES {rows}")
-    for stmt in (
+    stmts = (
         f"SELECT value FROM s BETWEEN {base + day} AND {base + 2 * day}",
         f"SELECT avg(value) FROM s BETWEEN {base + day} AND {base + 2 * day}"
         " SAMPLE BY 1h",
         f"SELECT value FROM s BETWEEN {base + day} AND {base + 2 * day}"
         " WHERE value > 1.5",
-    ):
-        plan = plan_of(eng.execute(stmt))
+    )
+    for stmt in stmts:
+        df = eng.execute(stmt)
+        plan = plan_of(df)
         tree = plan.split("\n\n")[0]
-        assert tree.index("Coalesce") < tree.index("Scan parquet"), plan
+        assert "Scan parquet" not in plan, plan
+        assert tree.index("Coalesce") < tree.index("LocalTableScan"), plan
+        assert jobs_in(spark, df.collect)[0] == 1, stmt
+    monkeypatch.setattr(tsstore, "ONE_TASK_MAX_FILES", 1)
+    for stmt in stmts:
+        plan = plan_of(eng.execute(stmt))
         assert "PushedFilters: [" in plan
         assert "GreaterThanOrEqual(timestamp" in plan, plan
         assert "LessThanOrEqual(timestamp" in plan, plan

@@ -1,6 +1,7 @@
 """TimeSeriesStore: fixed store schema, series-scoped reads, the
-day-partition expression, the per-statement Spark job budget and the
-driver-side point writer."""
+day-partition expression, the per-statement Spark job budget, the
+driver-side point writer and reader, and reads and writes during
+``compact``."""
 
 from __future__ import annotations
 
@@ -153,10 +154,16 @@ def _select_cases(pts):
 
 
 def _rows_match(got, want) -> bool:
-    """Equal rows, cell by cell, up to a relative 1e-9 on averages."""
+    """Equal rows, cell by cell; floats (averages) up to a relative
+    1e-9."""
     return len(got) == len(want) and all(
         len(g) == len(w)
-        and all(abs(a - b) <= 1e-9 * max(1.0, abs(b)) for a, b in zip(g, w))
+        and all(
+            a == b
+            or (isinstance(a, float) and isinstance(b, float)
+                and abs(a - b) <= 1e-9 * max(1.0, abs(b)))
+            for a, b in zip(g, w)
+        )
         for g, w in zip(got, want)
     )
 
@@ -167,13 +174,16 @@ def _plan(df) -> str:
 
 def test_small_series_select_runs_one_job(spark, tmp_path):
     """A SELECT over a series whose pruned files are few and small reads
-    them as one partition: every statement kind collects in
+    them on the driver into one local partition, with no parquet scan:
+    every statement kind collects in
     exactly one Spark job, with no exchange in its plan, and returns the
     model's rows in the model's order."""
     e, pts = _small_series(spark, tmp_path)
     for stmt, want, _ in _select_cases(pts):
         df = e.execute(stmt)
-        assert "Exchange" not in _plan(df), stmt
+        plan = _plan(df)
+        assert "Exchange" not in plan, stmt
+        assert "LocalTableScan" in plan and "FileScan" not in plan, (stmt, plan)
         n, rows = jobs_in(spark, df.collect)
         assert n == 1, stmt
         assert _rows_match([tuple(r) for r in rows], want), (stmt, rows, want)
@@ -208,6 +218,141 @@ def test_large_scan_keeps_exchanges(spark, tmp_path, monkeypatch, cap):
             assert _rows_match(rows, want), stmt
     finally:
         spark.conf.set(key, old)
+
+
+def _ns(t: int) -> str:
+    """``t`` as a statement's time expression (there is no unary minus)."""
+    return f"0 - {-t}" if t < 0 else str(t)
+
+
+#: a point every 40 minutes: 36 a day, on every day edge
+EDGE_STEP_NS = 40 * 60 * 10**9
+
+
+def _mixed_series(spark, tmp_path):
+    """An Engine over series ``cpu:load`` (``series=cpu%3Aload`` on
+    disk) with a point every ``EDGE_STEP_NS`` from two days before the
+    epoch to two days after: day directories -2, -1, 0 (which holds
+    both sides of the epoch, as ``div`` truncates toward zero) and 1.
+    Every day holds files of more than one writer: driver files of
+    ``insert``-policy INSERTs beside Spark files of ``compact`` and of
+    an ``update``-policy INSERT, whose Arrow schemas differ in field
+    nullability and metadata. Some timestamps hold two points."""
+    e = Engine(spark, warehouse=str(tmp_path / "wh"))
+    for ddl in ("CREATEDB d", "USE d", "CREATE cpu:load"):
+        e.execute(ddl)
+
+    def insert(batch):
+        e.execute(
+            "INSERT INTO cpu:load VALUES "
+            + ",".join(f"({_ns(t)}, {v})" for t, v in batch)
+        )
+
+    grid = [-2 * DAY_NS + k * EDGE_STEP_NS for k in range(4 * 36 + 1)]
+    for i in range(3):
+        insert([(t, float(k * 37 % 23) + 0.5) for k, t in enumerate(grid) if k % 3 == i])
+    insert([(t, 7.25) for t in grid[::9]])
+    e.store.compact("d")
+    insert([(t, 3.0) for t in grid[::5]])
+    e.execute("CREATE cpu:load 'update'")
+    insert([(t, 11.5) for t in grid[30:50]])
+    e.execute("CREATE cpu:load 'insert'")
+    insert([(t, 1.5) for t in grid[::7]])
+    series_dir = os.path.join(e.warehouse, "d", "points", "series=cpu%3Aload")
+    for day in (-2, -1, 0, 1):
+        names = os.listdir(os.path.join(series_dir, f"day={day}"))
+        # Spark's writers name files part-<task>-<uuid>.c000…
+        assert {".c000." in n for n in names if not n.startswith(".")} == {True, False}
+    return e, grid
+
+
+@pytest.mark.parametrize("retention", [None, "1d"])
+def test_local_read_matches_file_splits(spark, tmp_path, monkeypatch, retention):
+    """The driver-side read and Spark's file splits return the same rows
+    for every SELECT kind, over files of every writer, a Hive-escaped
+    series name, pre-1970 points, bounds on day edges, empty ranges and
+    (with ``retention``) a retention cut inside the pre-1970 day 0.
+    The splits are forced by ``ONE_TASK_MAX_FILES`` and
+    ``ONE_TASK_MAX_BYTES`` of 1; a read that lists no file is local
+    either way."""
+    e, grid = _mixed_series(spark, tmp_path)
+    now = DAY_NS // 2  # a 1d retention keeps timestamps from -DAY_NS // 2
+    if retention is not None:
+        e.execute(f"CREATE cpu:load {retention}")
+    ranges = {
+        "all": "",
+        "wide": f" BETWEEN {_ns(-3 * DAY_NS)} AND {3 * DAY_NS}",
+        "day_edges": f" BETWEEN {_ns(-DAY_NS)} AND {DAY_NS - 1}",
+        "epoch": f" BETWEEN 0 AND {DAY_NS}",
+        "between_points": f" BETWEEN {_ns(grid[40] + 1)} AND {_ns(grid[41] - 1)}",
+        "no_file": f" BETWEEN {10 * DAY_NS} AND {11 * DAY_NS}",
+    }
+    kinds = [
+        "SELECT value FROM cpu:load{r}",
+        "SELECT avg(value) FROM cpu:load{r} SAMPLE BY 1h",
+        "SELECT max(value) FROM cpu:load{r} SAMPLE BY 3h",
+        "SELECT min(value), avg(value) FROM cpu:load{r} SAMPLE BY 3h",
+        "SELECT avg(value) FROM cpu:load{r} SAMPLE BY 3h FILL(prev)",
+        "SELECT avg(value) FROM cpu:load{r} SAMPLE BY 3h FILL(null)",
+        "SELECT min(value) FROM cpu:load{r}",
+        "SELECT max(value) FROM cpu:load{r}",
+        "SELECT avg(value) FROM cpu:load{r}",
+        "SELECT min(value), max(value), avg(value) FROM cpu:load{r}",
+        "SELECT value FROM cpu:load{r} WHERE value > 4 AND value < 15 LIMIT 7",
+        "SELECT latest(value) FROM cpu:load{r}",
+        "SELECT earliest(value, 3) FROM cpu:load{r}",
+    ]
+    cases = [(name, k.format(r=r)) for name, r in ranges.items() for k in kinds] + [
+        (f"at_{t}", f"SELECT value FROM cpu:load AT {_ns(t)}")
+        for t in (-DAY_NS, grid[9], 0, grid[40] + 1)
+    ]
+
+    gate, listed = TimeSeriesStore._one_task, []
+
+    def counting(self, *args):
+        files = gate(self, *args)
+        listed.append(files)
+        return files
+
+    monkeypatch.setattr(TimeSeriesStore, "_one_task", counting)
+
+    def run(stmt):
+        listed.clear()
+        df = e.execute(stmt, now=now)
+        return _plan(df), [tuple(r) for r in df.collect()]
+
+    local, has_files = {}, {}
+    for name, stmt in cases:
+        plan, local[stmt] = run(stmt)
+        assert "LocalTableScan" in plan and "FileScan" not in plan, (stmt, plan)
+        has_files[stmt] = bool(listed[0])
+        if name == "wide":
+            assert local[stmt], stmt
+    monkeypatch.setattr(tsstore, "ONE_TASK_MAX_FILES", 1)
+    monkeypatch.setattr(tsstore, "ONE_TASK_MAX_BYTES", 1)
+    for name, stmt in cases:
+        plan, rows = run(stmt)
+        assert ("FileScan" in plan) == has_files[stmt], (stmt, plan)
+        assert _rows_match(local[stmt], rows), (stmt, local[stmt], rows)
+    assert not has_files[kinds[0].format(r=ranges["no_file"])]
+
+
+def test_local_read_of_a_vanished_file_raises(spark, tmp_path, monkeypatch):
+    """A data file the one-task gate listed and that is gone when the
+    driver reads it (a concurrent ``update`` INSERT or ``compact``
+    replaced it) fails the statement; it never answers from the files
+    that remain."""
+    e, _ = _small_series(spark, tmp_path)
+    listed = TimeSeriesStore._one_task
+
+    def vanishing(self, *args):
+        files = listed(self, *args)
+        os.remove(files[0])
+        return files
+
+    monkeypatch.setattr(TimeSeriesStore, "_one_task", vanishing)
+    with pytest.raises(FileNotFoundError):
+        e.execute("SELECT value FROM s")
 
 
 def test_concurrent_ignore_inserts_all_land(spark, tmp_path):
@@ -354,6 +499,38 @@ def test_insert_during_compact_keeps_every_point(spark, tmp_path, monkeypatch, s
         ("s", BASE + 2 * DAY_NS, 3.0),
     ]
     assert not os.path.exists(points + ".pre_compact")
+
+
+def test_read_during_compact_waits_for_it(spark, tmp_path, monkeypatch):
+    """A read that arrives between ``compact``'s two renames, when
+    ``points`` is missing and ``.pre_compact`` holds the old store. It
+    took that state for a crashed compact and renamed the backup back,
+    so the second rename failed and left ``.compacting`` behind. It
+    waits for the store's write lock instead: compact succeeds, no
+    backup or staging tree is left, and the read returns every point."""
+    st = TimeSeriesStore(spark, str(tmp_path / "wh"))
+    st.insert_rows("d", "s", [(BASE, 1.0), (BASE + DAY_NS, 2.0)])
+    points = os.path.join(st.warehouse, "d", "points")
+    seen = []
+    # on another thread: compact holds the lock, which a reader waits for
+    reader = threading.Thread(target=lambda: seen.append(_points(st.read("d", "s"))))
+    rename = os.rename
+
+    def racing_rename(src, dst):
+        if (src, dst) == (points + ".compacting", points) and reader.ident is None:
+            reader.start()
+            # the read runs to the end here unless it waits for compact
+            reader.join(timeout=2)
+        rename(src, dst)
+
+    monkeypatch.setattr(tsstore.os, "rename", racing_rename)
+    st.compact("d")
+    monkeypatch.undo()
+    reader.join(timeout=120)
+    assert not reader.is_alive()
+    assert not os.path.exists(points + ".compacting")
+    assert not os.path.exists(points + ".pre_compact")
+    assert seen == [[("s", BASE, 1.0), ("s", BASE + DAY_NS, 2.0)]]
 
 
 def test_policy_switch_mixes_driver_and_spark_files(spark, tmp_path):
