@@ -50,9 +50,6 @@ class Engine:
         VALUE / '*' insert forms (passed into the parser)."""
         return self.execute_stmt(parse(query, now=now), now=now)
 
-    def sql(self, query: str, now: int | None = None) -> DataFrame:
-        return self.execute(query, now=now)
-
     def execute_stmt(self, stmt: ast.Statement, now: int | None = None) -> DataFrame:
         if isinstance(stmt, ast.CreateDb):
             self.catalog.create_db(stmt.db_name)
@@ -209,18 +206,13 @@ class Engine:
 
         if len(stmt.functions) > 1:
             # multi-aggregate select (grammar doc
-            # src/statement_parse.h:97): one row, one column per
-            # aggregate, order preserved
+            # src/statement_parse.h:97): one column per aggregate,
+            # order preserved; the parser admits min/max/avg only
+            fns = tuple(fn.value for fn in stmt.functions)
             if stmt.sampling is not None:
                 # extension: bucketed multi-aggregate (the reference's
                 # sampler is avg-only, src/timeseries.c:1265-1308) —
                 # still a single partial+final hash aggregate
-                fns = tuple(fn.value for fn in stmt.functions)
-                bad = [f for f in fns if f not in tsdb._SAMPLE_AGGS]
-                if bad:
-                    raise ExecutionError(
-                        f"SAMPLE BY does not support aggregate(s): {bad}"
-                    )
                 if stmt.fill is not None:
                     raise ExecutionError(
                         "FILL supports single-aggregate sampling only"
@@ -232,27 +224,12 @@ class Engine:
                     F.col("bucket_ts").alias("timestamp"),
                     *[f"{f}_value" for f in fns],
                 )
-                if stmt.limit is not None:
-                    out = out.limit(stmt.limit)
-                return out
-            from raft_c_spark.functions.exact import exact_avg
-
-            agg_map = {
-                ast.Fn.MIN: F.min("value"),
-                ast.Fn.MAX: F.max("value"),
-                ast.Fn.AVG: exact_avg("value"),
-            }
-            cols = [
-                agg_map[fn].alias(f"{fn.value}_value") for fn in stmt.functions
-            ]
-            out = points.agg(*cols).where(
-                F.col(f"{stmt.functions[0].value}_value").isNotNull()
-            )
-            if stmt.limit is not None:
-                out = out.limit(stmt.limit)
-            return out
-
-        if stmt.sampling is not None:
+            else:
+                # one row, none on empty input
+                out = points.agg(
+                    *[tsdb._SAMPLE_AGGS[f]().alias(f"{f}_value") for f in fns]
+                ).where(F.col(f"{fns[0]}_value").isNotNull())
+        elif stmt.sampling is not None:
             # honor the requested aggregate when the sampler supports
             # it (extension — the reference always computes avg in
             # sampling mode, whatever function was written); latest/
@@ -274,34 +251,25 @@ class Engine:
                     F.col("avg_value").alias("value"),
                     "filled",
                 )
-                if stmt.limit is not None:
-                    out = out.limit(stmt.limit)
-                return out
-            out = tsdb.sample_by(
-                points, interval, t0=t0, t1=t1,
-                group_by_series=False, fns=(fn,),
-            ).select(
-                F.col("bucket_ts").alias("timestamp"),
-                F.col(f"{fn}_value").alias("value"),
-            )
+            else:
+                out = tsdb.sample_by(
+                    points, interval, t0=t0, t1=t1,
+                    group_by_series=False, fns=(fn,),
+                ).select(
+                    F.col("bucket_ts").alias("timestamp"),
+                    F.col(f"{fn}_value").alias("value"),
+                )
         elif stmt.function is ast.Fn.MIN:
             out = tsdb.ts_min(points, group_by_series=False)
         elif stmt.function is ast.Fn.MAX:
             out = tsdb.ts_max(points, group_by_series=False)
         elif stmt.function is ast.Fn.AVG:
-            from raft_c_spark.functions.exact import exact_avg
-
             # avg is executor-TODO in the reference
             # (src/statement_execute.c:235-238); we label the result
-            # with the range end (or 0 for full scans) and return an
-            # empty frame on empty input, like every other aggregate
-            out = (
-                points.agg(exact_avg("value").alias("value"))
-                .where(F.col("value").isNotNull())
-                .withColumn(
-                    "timestamp", F.lit(t1 if t1 is not None else 0).cast("long")
-                )
-                .select("timestamp", "value")
+            # with the range end (or 0 for full scans)
+            out = tsdb.ts_avg(points, group_by_series=False).select(
+                F.lit(t1 if t1 is not None else 0).cast("long").alias("timestamp"),
+                F.col("avg_value").alias("value"),
             )
         elif stmt.function is ast.Fn.LATEST:
             out = tsdb.ts_latest(points, group_by_series=False)
@@ -320,6 +288,3 @@ class Engine:
         if stmt.limit is not None:
             out = out.limit(stmt.limit)
         return out
-
-    def close(self) -> None:
-        pass

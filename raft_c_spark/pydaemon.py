@@ -26,9 +26,9 @@ size) changed — so an archive replaced mid-session still invalidates,
 and on 3.12+ the patch is a harmless double guard.
 
 Wired in by ``session.get_spark`` via ``spark.python.daemon.module``
-(the pyspark conf that names the daemon module;
-``RAFT_C_SPARK_PYDAEMON=0`` disables). The daemon process applies the
-patch at import, before forking workers, so every worker inherits it.
+(the pyspark conf that names the daemon module). The daemon process
+applies the patch at import, before forking workers, so every worker
+inherits it.
 """
 
 from __future__ import annotations

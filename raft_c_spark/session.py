@@ -87,13 +87,9 @@ def get_spark(
     # package root must be on the daemon's PYTHONPATH (the env
     # propagates driver → JVM → daemon in local and client modes).
     pkg_parent = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
-    use_pydaemon = os.environ.get("RAFT_C_SPARK_PYDAEMON", "1") == "1"
-    if use_pydaemon:
-        pp = os.environ.get("PYTHONPATH", "")
-        if pkg_parent not in pp.split(os.pathsep):
-            os.environ["PYTHONPATH"] = (
-                pkg_parent + (os.pathsep + pp if pp else "")
-            )
+    pp = os.environ.get("PYTHONPATH", "")
+    if pkg_parent not in pp.split(os.pathsep):
+        os.environ["PYTHONPATH"] = pkg_parent + (os.pathsep + pp if pp else "")
 
     builder = (
         SparkSession.builder.master(master)
@@ -104,11 +100,8 @@ def get_spark(
         .config("spark.driver.maxResultSize", "8g")
         .config("spark.ui.enabled", "false")
         .config("spark.sql.autoBroadcastJoinThreshold", str(64 * 1024 * 1024))
+        .config("spark.python.daemon.module", "raft_c_spark.pydaemon")
     )
-    if use_pydaemon:
-        builder = builder.config(
-            "spark.python.daemon.module", "raft_c_spark.pydaemon"
-        )
     for k, v in RUNTIME_CONFS.items():
         builder = builder.config(k, v)
     spark = builder.getOrCreate()

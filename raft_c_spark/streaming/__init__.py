@@ -8,7 +8,4 @@ from raft_c_spark.streaming.ingest import (  # noqa: F401
     stream_series_state,
     stream_tumbling_avg,
 )
-from raft_c_spark.streaming.results import (  # noqa: F401
-    stream_results,
-    stream_results_pumped,
-)
+from raft_c_spark.streaming.results import stream_results  # noqa: F401

@@ -5,7 +5,8 @@ The reference streams full-table SELECTs to the client in
 src/timeseries.c:1031-1137; batch size src/tcc.c:22). Spark-side, the
 same contract is ``toLocalIterator`` — partitions are materialized
 one at a time, so the driver never holds the full result — re-chunked
-to the reference's batch size.
+to the reference's batch size. The caller's thread drives the
+iterator; the wire server's handler threads call it directly.
 """
 
 from __future__ import annotations
@@ -32,70 +33,3 @@ def stream_results(
             batch = []
     if batch:
         yield batch
-
-
-def stream_results_pumped(
-    df: DataFrame,
-    batch_size: int = STREAM_BATCH_SIZE,
-    prefetch: int = 4,
-) -> Iterator[list[Row]]:
-    """``stream_results`` driven by a dedicated pump thread, handing
-    batches across a BOUNDED queue.
-
-    Two properties the wire server needs (ts_stream contract,
-    src/timeseries.c:1031-1137: interleave storage reads with socket
-    writes, never materialize the full result):
-
-    - safe from py4j-pinned caller threads: repeated
-      ``toLocalIterator`` calls deadlock inside a socketserver handler
-      thread (pinned per-thread channels); the pump thread is a plain
-      background thread with its own gateway connection.
-    - bounded driver memory: at most ``prefetch`` + 1 batches exist
-      driver-side at once (the queue backpressures the pump), so the
-      first chunk reaches the socket while later partitions are still
-      being fetched. A global ORDER BY still sorts fully executor-side
-      first — the driver-memory bound holds regardless.
-
-    Abandoning the iterator early cancels the pump (no thread leaked
-    blocking on a full queue)."""
-    import queue
-    import threading
-
-    # Python's Queue treats maxsize=0 as UNBOUNDED — exactly the
-    # opposite of a caller asking for strict lockstep (reviewer r8);
-    # clamp to 1, the tightest bound a Queue can express, keeping the
-    # "at most prefetch + 1 batches driver-side" promise (= 2 at the
-    # clamp)
-    q: "queue.Queue" = queue.Queue(maxsize=max(1, prefetch))
-    cancel = threading.Event()
-
-    def _put(item) -> bool:
-        while not cancel.is_set():
-            try:
-                q.put(item, timeout=0.1)
-                return True
-            except queue.Full:
-                continue
-        return False
-
-    def pump() -> None:
-        try:
-            for batch in stream_results(df, batch_size):
-                if not _put(("batch", batch)):
-                    return
-            _put(("done", None))
-        except BaseException as e:  # noqa: BLE001 - relayed to consumer
-            _put(("err", e))
-
-    threading.Thread(target=pump, daemon=True, name="result-pump").start()
-    try:
-        while True:
-            kind, payload = q.get()
-            if kind == "batch":
-                yield payload
-            elif kind == "done":
-                return
-            else:
-                raise payload
-    finally:
-        cancel.set()

@@ -16,7 +16,10 @@ limitation, not a semantic, so not replicated).
 
 A small threaded TCP server (``serve``) exposes an Engine over this
 protocol; ``WireClient`` is the matching client. Both are driver-side
-plumbing — query execution stays entirely in Spark.
+plumbing — query execution stays entirely in Spark. Each connection's
+handler thread runs its statements and streams point results to the
+socket itself (``streaming.results.stream_results``); no other thread
+or queue sits between Spark and the client.
 
 Session semantics match the reference: the active database is
 *server-global* (its dbcontext is one global hashtable with one active
@@ -232,8 +235,6 @@ def decode_response(data: bytes) -> tuple[Response, int]:
 # server / client
 # ---------------------------------------------------------------------------
 
-STREAM_THRESHOLD = 1000  # results larger than this stream in chunks
-
 
 class _Handler(socketserver.StreamRequestHandler):
     def handle(self):
@@ -280,35 +281,31 @@ class _Handler(socketserver.StreamRequestHandler):
             df = engine.execute(req.query)
             cols = df.columns
             if cols == ["timestamp", "value"]:
-                # point results: ≤1000-record chunks with a final
-                # terminator (ts_stream framing), interleaved with the
-                # partition fetches — the driver holds a bounded number
-                # of chunks, never the full result. toLocalIterator
-                # deadlocks on py4j's pinned per-thread channels inside
-                # a socketserver handler thread, so a dedicated pump
-                # thread drives it (stream_results_pumped).
-                from raft_c_spark.streaming.results import stream_results_pumped
+                # point results: ≤1000-record chunks (ts_stream
+                # framing) written as the partitions are fetched, so
+                # the driver holds one partition and one chunk, never
+                # the full result. The ~0 terminator rides
+                # on the LAST data chunk (src/encoding.c:221-226): a
+                # separate empty final chunk would emit a stray
+                # \r\n~0\r\n that poisons the client's buffer, so one
+                # batch of lookahead tells which chunk is last.
+                from raft_c_spark.streaming.results import (
+                    STREAM_BATCH_SIZE,
+                    stream_results,
+                )
 
-                # the ~0 terminator rides on the LAST data chunk
-                # (reference framing, src/encoding.c:221-226) — a
-                # separate empty "final chunk" would emit a stray
-                # \r\n~0\r\n that poisons the client's buffer; one
-                # batch of lookahead tells us which chunk is last
-                prev: tuple | None = None
-                seen = False
-                for batch in stream_results_pumped(df, STREAM_THRESHOLD):
-                    if prev is not None:
-                        self.wfile.write(
-                            encode_response(StreamChunk(prev, is_final=False))
-                        )
-                    prev = tuple((r["timestamp"], r["value"]) for r in batch)
-                    seen = True
-                if not seen:
+                batches = (
+                    tuple((r["timestamp"], r["value"]) for r in batch)
+                    for batch in stream_results(df, STREAM_BATCH_SIZE)
+                )
+                prev = next(batches, None)
+                if prev is None:
                     self.wfile.write(encode_response(ArrayResponse(())))
-                else:
-                    self.wfile.write(
-                        encode_response(StreamChunk(prev, is_final=True))
-                    )
+                    return
+                for batch in batches:
+                    self.wfile.write(encode_response(StreamChunk(prev)))
+                    prev = batch
+                self.wfile.write(encode_response(StreamChunk(prev, is_final=True)))
             else:
                 rows = df.collect()
                 msg = "; ".join(

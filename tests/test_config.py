@@ -4,7 +4,13 @@ accessor semantics — plus the serve-from-config wire startup path."""
 
 from __future__ import annotations
 
+import ast
+import os
+import re
+
 from raft_c_spark.config import DEFAULTS, Config, NodeType, load
+
+PKG = os.path.join(os.path.dirname(os.path.dirname(__file__)), "raft_c_spark")
 
 REFERENCE_STYLE = """\
 # Cluster config
@@ -76,3 +82,37 @@ def test_serve_from_config_binds_configured_host(spark, tmp_path):
         client.close()
     finally:
         server.shutdown()
+
+
+#: the package's only environment knobs; an A/B switch does not belong here
+_ALLOWED_ENV = {
+    "RAFT_C_SPARK_CACHE_DIR",
+    "RAFT_C_SPARK_SIG_BROADCAST_ROWS",
+    "RAFT_C_SPARK_VERIFY_BROADCAST_MB",
+}
+_ENV_NAME = re.compile(r"RAFT_C_SPARK_\w*")
+
+
+def test_no_env_switch_outside_allowlist():
+    """Every ``RAFT_C_SPARK_*`` name the package code spells out (the
+    string literal handed to an ``os.environ`` read, or built into
+    one) is on ``_ALLOWED_ENV``. Docstrings may mention other names;
+    code may not."""
+    found = {}
+    for root, _dirs, files in os.walk(PKG):
+        for name in files:
+            if not name.endswith(".py"):
+                continue
+            f = os.path.join(root, name)
+            with open(f, encoding="utf-8") as fh:
+                tree = ast.parse(fh.read(), f)
+            for node in ast.walk(tree):
+                if (
+                    isinstance(node, ast.Constant)
+                    and isinstance(node.value, str)
+                    and _ENV_NAME.fullmatch(node.value)
+                ):
+                    rel = os.path.relpath(f, PKG)
+                    found.setdefault(node.value, []).append(f"{rel}:{node.lineno}")
+    assert "RAFT_C_SPARK_CACHE_DIR" in found  # the scan sees a known read
+    assert {k: v for k, v in found.items() if k not in _ALLOWED_ENV} == {}

@@ -281,6 +281,30 @@ def test_multi_aggregate_rejects_latest(engine):
         engine.execute("SELECT min(value), latest(value) FROM s")
 
 
+@pytest.mark.parametrize(
+    "query, message",
+    [
+        (
+            "SELECT min(value), max(value) FROM s SAMPLE BY 1h FILL(prev)",
+            "FILL supports single-aggregate sampling only",
+        ),
+        (
+            "SELECT max(value) FROM s SAMPLE BY 1h FILL(null)",
+            "FILL supports avg sampling only",
+        ),
+    ],
+)
+def test_fill_rejects_unsupported_sampling(engine, query, message):
+    """FILL fills one avg series: a multi-aggregate or a non-avg
+    sampler with FILL is refused, not silently answered as avg."""
+    engine.execute("CREATEDB d")
+    engine.execute("USE d")
+    engine.execute("CREATE s")
+    engine.execute("INSERT INTO s VALUES (1, 1.0)")
+    with pytest.raises(ExecutionError, match=message):
+        engine.execute(query)
+
+
 def test_cold_start_reload(spark, tmp_path):
     """New Engine over an existing warehouse sees catalog + data —
     the reference's dbcontext_init/ts_init recovery (SURVEY §3.3),

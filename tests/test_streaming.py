@@ -375,15 +375,14 @@ def test_stream_results_empty(spark):
     assert list(stream_results(df)) == []
 
 
-def test_stream_results_pumped_interleaves(spark, tmp_path):
+def test_stream_results_interleaves(spark, tmp_path):
     """ts_stream contract: the first chunk must reach the consumer
     BEFORE the whole result materializes. Partition 1's kernel drops a
     marker file when it runs; with toLocalIterator's one-partition-at-
     a-time pulls the first batch (from partition 0) must arrive while
-    the marker does not yet exist."""
-    import pandas as pd
-
-    from raft_c_spark.streaming.results import stream_results_pumped
+    the marker does not yet exist. Driven from a non-main thread, as
+    the wire server's handler threads drive it."""
+    import threading
 
     marker = str(tmp_path / "p1_ran")
 
@@ -399,24 +398,31 @@ def test_stream_results_pumped_interleaves(spark, tmp_path):
         .repartitionByRange(2, "timestamp")
         .mapInPandas(kernel, "timestamp long, value double")
     )
-    it = stream_results_pumped(df, batch_size=1000, prefetch=1)
-    first = next(it)
-    assert len(first) == 1000
-    assert [r["timestamp"] for r in first] == list(range(1000))
-    assert not os.path.exists(marker), "partition 1 ran before first chunk"
-    rest = list(it)
-    assert sum(len(b) for b in [first] + rest) == 10_000
+    out: dict = {}
+
+    def worker():
+        it = stream_results(df, batch_size=1000)
+        first = next(it)
+        out["first"] = [r["timestamp"] for r in first]
+        out["marker_before_rest"] = os.path.exists(marker)
+        out["total"] = sum(len(b) for b in [first] + list(it))
+
+    t = threading.Thread(target=worker, daemon=True)
+    t.start()
+    t.join(timeout=120)
+    assert not t.is_alive(), "streaming deadlocked"
+    assert len(out["first"]) == 1000
+    assert out["first"] == list(range(1000))
+    assert not out["marker_before_rest"], "partition 1 ran before first chunk"
+    assert out["total"] == 10_000
     assert os.path.exists(marker)
 
 
-def test_stream_results_pumped_in_handler_thread(spark):
+def test_stream_results_in_handler_thread(spark):
     """The wire-server regression case: repeated streamed queries from
-    a socketserver-like worker thread (py4j pinned channels) must not
-    deadlock. Run two pumped streams back-to-back on a worker thread
-    with a hard timeout."""
+    a socketserver-like worker thread must not deadlock. Run two
+    streams back-to-back on a worker thread with a hard timeout."""
     import threading
-
-    from raft_c_spark.streaming.results import stream_results_pumped
 
     out: dict = {}
 
@@ -425,12 +431,12 @@ def test_stream_results_pumped_in_handler_thread(spark):
             df = spark.range(2500).select(
                 F.col("id").alias("timestamp"), (F.col("id") * 1.0).alias("value")
             )
-            out[i] = sum(len(b) for b in stream_results_pumped(df, 1000))
+            out[i] = sum(len(b) for b in stream_results(df, 1000))
 
     t = threading.Thread(target=worker, daemon=True)
     t.start()
     t.join(timeout=120)
-    assert not t.is_alive(), "pumped streaming deadlocked"
+    assert not t.is_alive(), "streaming deadlocked"
     assert out == {0: 2500, 1: 2500}
 
 

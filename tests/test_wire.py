@@ -408,7 +408,7 @@ def test_eight_concurrent_clients_streaming_byte_identical(spark, tmp_path):
     from raft_c_spark.engine import Engine
 
     N_CLIENTS = 8
-    N_ROWS = 1500  # > STREAM_THRESHOLD -> two chunks per SELECT
+    N_ROWS = 1500  # > STREAM_BATCH_SIZE -> two chunks per SELECT
     ROUNDS = 2
     base = 1_700_000_000_000_000_000
 
