@@ -3,31 +3,34 @@
 ``Engine.execute(query)`` is the Spark-first analog of the reference's
 request path (stmt_parse → stmt_execute, src/statement_parse.c:1156-1197
 → src/statement_execute.c:476-513): parse to the dataclass AST,
-constant-fold time expressions to ns literals, then build a DataFrame
-plan (Catalyst = analyzer/optimizer/physical planner — the reference
-interprets its AST directly against the storage API, SURVEY §3.1).
+constant-fold time expressions to ns literals, then answer it.
 
 Every statement returns a DataFrame (DDL returns a one-row status
 frame) so a REPL can treat results uniformly, like the reference's
 wire protocol does with string vs array responses (src/encoding.c).
-Status and meta replies are local relations, so building and
-collecting them runs no Spark job.
+Status and meta replies, and SELECTs over a series the store reads on
+the driver, are ``tsstore.Answer``s: the answer is computed on the
+driver (the ``operators/tsdb`` driver twins) and held as an Arrow
+table, and only a caller that uses it as a DataFrame builds one — the
+reference's executor likewise interprets its AST directly against the
+storage API (SURVEY §3.1). A SELECT over a larger read is a Catalyst
+plan over the store's parquet scan.
 """
 
 from __future__ import annotations
 
 import tempfile
 
+import pyarrow as pa
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
-from pyspark.sql import types as Ty
 
 from raft_c_spark.catalog import Catalog, CatalogError
 from raft_c_spark.frontend import ast
 from raft_c_spark.frontend.eval import eval_timeunit
 from raft_c_spark.frontend.parser import parse
 from raft_c_spark.operators import tsdb
-from raft_c_spark.sources.tsstore import TimeSeriesStore, local_frame
+from raft_c_spark.sources.tsstore import Answer, TimeSeriesStore
 
 
 class ExecutionError(RuntimeError):
@@ -75,14 +78,11 @@ class Engine:
 
     # -- helpers -----------------------------------------------------------
 
-    def _text_frame(self, column: str, values: list[str]) -> DataFrame:
-        """One string column as a local relation: building and
-        collecting a reply runs no Spark job."""
-        schema = Ty.StructType([Ty.StructField(column, Ty.StringType())])
-        return local_frame(self.spark, [(v,) for v in values], schema)
+    def _text(self, column: str, values: list[str]) -> Answer:
+        return Answer(self.spark, pa.table({column: pa.array(values, pa.string())}))
 
-    def _status(self, msg: str) -> DataFrame:
-        return self._text_frame("status", [msg])
+    def _status(self, msg: str) -> Answer:
+        return self._text("status", [msg])
 
     def _db(self) -> str:
         if self.current_db is None:
@@ -135,8 +135,8 @@ class Engine:
         """.databases / .timeseries — executor-stubbed in the reference
         (src/statement_execute.c:467-471); implemented fully."""
         if stmt.command == "databases":
-            return self._text_frame("database", self.catalog.databases())
-        return self._text_frame("series", sorted(self.catalog.series(self._db())))
+            return self._text("database", self.catalog.databases())
+        return self._text("series", sorted(self.catalog.series(self._db())))
 
     # -- DML ---------------------------------------------------------------
 
@@ -198,6 +198,10 @@ class Engine:
             t0=lo,
             t1=hi,
         )
+        if isinstance(points, Answer):
+            # the store read on the driver: every operator below takes
+            # its numpy twin over the table
+            points = points.table
 
         if stmt.where:
             points = tsdb.where_chain(
@@ -217,18 +221,16 @@ class Engine:
                     raise ExecutionError(
                         "FILL supports single-aggregate sampling only"
                     )
-                out = tsdb.sample_by(
-                    points, interval, t0=t0, t1=t1,
-                    group_by_series=False, fns=fns,
-                ).select(
-                    F.col("bucket_ts").alias("timestamp"),
-                    *[f"{f}_value" for f in fns],
+                out = _project(
+                    tsdb.sample_by(
+                        points, interval, t0=t0, t1=t1,
+                        group_by_series=False, fns=fns,
+                    ),
+                    {"bucket_ts": "timestamp"} | {f"{f}_value": f"{f}_value" for f in fns},
                 )
             else:
                 # one row, none on empty input
-                out = points.agg(
-                    *[tsdb._SAMPLE_AGGS[f]().alias(f"{f}_value") for f in fns]
-                ).where(F.col(f"{fns[0]}_value").isNotNull())
+                out = tsdb.ts_aggs(points, fns)
         elif stmt.sampling is not None:
             # honor the requested aggregate when the sampler supports
             # it (extension — the reference always computes avg in
@@ -244,20 +246,19 @@ class Engine:
                     raise ExecutionError(
                         "FILL supports avg sampling only"
                     )
-                out = tsdb.sample_by_fill(
-                    points, interval, fill=stmt.fill, t0=t0, t1=t1
-                ).select(
-                    F.col("bucket_ts").alias("timestamp"),
-                    F.col("avg_value").alias("value"),
-                    "filled",
+                out = _project(
+                    tsdb.sample_by_fill(
+                        points, interval, fill=stmt.fill, t0=t0, t1=t1
+                    ),
+                    {"bucket_ts": "timestamp", "avg_value": "value", "filled": "filled"},
                 )
             else:
-                out = tsdb.sample_by(
-                    points, interval, t0=t0, t1=t1,
-                    group_by_series=False, fns=(fn,),
-                ).select(
-                    F.col("bucket_ts").alias("timestamp"),
-                    F.col(f"{fn}_value").alias("value"),
+                out = _project(
+                    tsdb.sample_by(
+                        points, interval, t0=t0, t1=t1,
+                        group_by_series=False, fns=(fn,),
+                    ),
+                    {"bucket_ts": "timestamp", f"{fn}_value": "value"},
                 )
         elif stmt.function is ast.Fn.MIN:
             out = tsdb.ts_min(points, group_by_series=False)
@@ -267,24 +268,49 @@ class Engine:
             # avg is executor-TODO in the reference
             # (src/statement_execute.c:235-238); we label the result
             # with the range end (or 0 for full scans)
-            out = tsdb.ts_avg(points, group_by_series=False).select(
-                F.lit(t1 if t1 is not None else 0).cast("long").alias("timestamp"),
-                F.col("avg_value").alias("value"),
+            out = _labelled(
+                tsdb.ts_avg(points, group_by_series=False),
+                t1 if t1 is not None else 0,
             )
         elif stmt.function is ast.Fn.LATEST:
             out = tsdb.ts_latest(points, group_by_series=False)
-        elif stmt.function is ast.Fn.EARLIEST:
-            k = stmt.fn_arg or 1
-            out = (
-                points.orderBy("timestamp", "value")
-                .limit(k)
-                .select("timestamp", "value")
-            )
         else:
-            # value tie-break keeps duplicate-ns output order stable
-            # across partitionings (mirrors tsdb.ts_scan)
-            out = points.select("timestamp", "value").orderBy("timestamp", "value")
+            # the value tie-break keeps duplicate-ns output order
+            # stable across partitionings (tsdb.ts_scan)
+            out = tsdb.ts_scan(points)
+            if stmt.function is ast.Fn.EARLIEST:
+                out = _limit(out, stmt.fn_arg or 1)
+            out = _project(out, {"timestamp": "timestamp", "value": "value"})
 
         if stmt.limit is not None:
-            out = out.limit(stmt.limit)
-        return out
+            out = _limit(out, stmt.limit)
+        return Answer(self.spark, out) if isinstance(out, pa.Table) else out
+
+
+# -- result shaping, over a DataFrame or a driver-side table ---------------
+
+
+def _project(out, columns: dict[str, str]):
+    """``out``'s columns ``columns`` keys, renamed to its values."""
+    if isinstance(out, pa.Table):
+        return out.select(list(columns)).rename_columns(list(columns.values()))
+    return out.select(*[F.col(c).alias(name) for c, name in columns.items()])
+
+
+def _limit(out, n: int):
+    return out.slice(0, n) if isinstance(out, pa.Table) else out.limit(n)
+
+
+def _labelled(avg, label: int):
+    """The one-row average as a (timestamp=label, value) record."""
+    if isinstance(avg, pa.Table):
+        return pa.table(
+            {
+                "timestamp": pa.array([label] * avg.num_rows, pa.int64()),
+                "value": avg["avg_value"],
+            }
+        )
+    return avg.select(
+        F.lit(label).cast("long").alias("timestamp"),
+        F.col("avg_value").alias("value"),
+    )

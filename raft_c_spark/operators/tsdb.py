@@ -17,10 +17,25 @@ Scale notes (100 TB design):
   (map-side combine), no global sort;
 - sample_by is one hash-aggregate shuffle keyed (series, bucket) —
   parallel in both dimensions, no window function needed.
+
+Driver twins: the SELECT operators also take a ``pa.Table`` of one
+series' points (a driver-side store read, ``tsstore.Answer``) and then
+compute the same answer with numpy on the driver, returning a table in
+their Spark result's columns without ``series`` — no plan, no job. The
+twins match the Spark operators row for row and bit for bit: Spark's
+order of doubles (NaN equal to NaN and above every other value),
+Java's truncating ``%`` on pre-1970 timestamps, the record
+tie-breaks, and ``exact_avg``'s DECIMAL(38,10) leaf cast and sum,
+including the errors it raises.
 """
 
 from __future__ import annotations
 
+from decimal import ROUND_HALF_UP, Context, Decimal
+
+import numpy as np
+import pyarrow as pa
+import pyarrow.compute as pc
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
@@ -38,6 +53,41 @@ def _series_filter(df: DataFrame, series: str | None) -> DataFrame:
     return df.filter(F.col("series") == series) if series is not None else df
 
 
+def _on_driver(df, group_by_series: bool = False) -> bool:
+    """True when ``df`` is a driver-side ``pa.Table`` of one series'
+    points, which the operators' numpy twins answer."""
+    if not isinstance(df, pa.Table):
+        return False
+    if group_by_series:
+        raise ValueError("a driver-side table holds one series: group_by_series=False")
+    return True
+
+
+def _arrays(table: pa.Table) -> tuple[np.ndarray, np.ndarray]:
+    return table["timestamp"].to_numpy(), table["value"].to_numpy()
+
+
+def _lex_keys(order: list[np.ndarray]) -> list[np.ndarray]:
+    """``np.lexsort`` keys (least significant first) for the
+    lexicographic order over ``order`` (most significant first) that
+    Spark sorts and compares in: a double's NaN equals NaN and sorts
+    above every other value, -0.0 equals 0.0."""
+    keys: list[np.ndarray] = []
+    for a in reversed(order):
+        if a.dtype.kind == "f":
+            nan = np.isnan(a)
+            keys += [np.where(nan, 0.0, a), nan]
+        else:
+            keys.append(a)
+    return keys
+
+
+def _points_table(ts: np.ndarray, vs) -> pa.Table:
+    return pa.table(
+        {"timestamp": pa.array(ts, pa.int64()), "value": pa.array(vs, pa.float64())}
+    )
+
+
 def ts_scan(df: DataFrame, series: str | None = None) -> DataFrame:
     """Full scan, timestamp-ascending.
 
@@ -48,6 +98,10 @@ def ts_scan(df: DataFrame, series: str | None = None) -> DataFrame:
     src/timeseries.c:363-385) get a value tie-break so output order is
     partitioning-independent.
     """
+    if _on_driver(df):
+        if series is not None:
+            df = df.filter(pc.equal(df["series"], series))
+        return df.take(np.lexsort(_lex_keys(list(_arrays(df)))))
     return (
         _series_filter(df, series)
         .select(*POINT_COLUMNS)
@@ -103,6 +157,22 @@ _OPS = {
 }
 
 
+def _np_eq(c, v):
+    return (c == v) | (np.isnan(c) & np.isnan(v))
+
+
+#: ``_OPS`` over numpy arrays, in Spark's order of doubles (a NaN
+#: equals NaN and is above every other value)
+_NP_OPS = {
+    "=": _np_eq,
+    "!=": lambda c, v: ~_np_eq(c, v),
+    ">": lambda c, v: (c > v) | (np.isnan(c) & ~np.isnan(v)),
+    ">=": lambda c, v: (c >= v) | np.isnan(c),
+    "<": lambda c, v: (c < v) | (~np.isnan(c) & np.isnan(v)),
+    "<=": lambda c, v: (c <= v) | np.isnan(v),
+}
+
+
 def where_chain(df: DataFrame, conditions: list[tuple[str, str, float]]) -> DataFrame:
     """AND-chained comparison predicates on ``value`` or ``timestamp``.
 
@@ -115,6 +185,14 @@ def where_chain(df: DataFrame, conditions: list[tuple[str, str, float]]) -> Data
     (identifiers are free-form and ignored in the reference, SURVEY
     §1.3).
     """
+    if _on_driver(df):
+        ts, vs = _arrays(df)
+        keep = np.ones(len(ts), bool)
+        for key, op, operand in conditions:
+            if op not in _NP_OPS:
+                raise ValueError(f"unknown comparator {op!r}")
+            keep &= _NP_OPS[op](ts if key == "timestamp" else vs, operand)
+        return df.filter(pa.array(keep))
     out = df
     for key, op, operand in conditions:
         col = F.col("timestamp") if key == "timestamp" else F.col("value")
@@ -165,6 +243,15 @@ def _agg_record(
     )
 
 
+def _agg_record_on_driver(table: pa.Table, order: list[np.ndarray]) -> pa.Table:
+    """``_agg_record`` over a driver-side table: the first point in
+    ``order`` then (timestamp, value) order — ``np.lexsort`` is stable,
+    so a full tie keeps the first point read, as Spark's ``min`` does."""
+    ts, vs = _arrays(table)
+    pick = np.lexsort(_lex_keys(order + [ts, vs]))[:1]
+    return _points_table(ts[pick], vs[pick])
+
+
 def ts_min(df: DataFrame, group_by_series: bool = True) -> DataFrame:
     """Record (timestamp, value) holding the minimum value.
 
@@ -173,12 +260,18 @@ def ts_min(df: DataFrame, group_by_series: bool = True) -> DataFrame:
     earliest timestamp — replicated with a (value, timestamp) struct
     min.
     """
+    if _on_driver(df, group_by_series):
+        ts, vs = _arrays(df)
+        return _agg_record_on_driver(df, [vs, ts])
     return _agg_record(df, [F.col("value"), F.col("timestamp")], group_by_series)
 
 
 def ts_max(df: DataFrame, group_by_series: bool = True) -> DataFrame:
     """Symmetric to ts_min (reference ts_max src/timeseries.c:1241-1263);
     ties → earliest timestamp (first encountered)."""
+    if _on_driver(df, group_by_series):
+        ts, vs = _arrays(df)
+        return _agg_record_on_driver(df, [-vs, ts])
     return _agg_record(df, [-F.col("value"), F.col("timestamp")], group_by_series)
 
 
@@ -188,6 +281,9 @@ def ts_avg(df: DataFrame, group_by_series: bool = True) -> DataFrame:
 
     Decimal-exact sum (functions/exact.py): results are identical under
     any partitioning/AQE plan — double summation is order-dependent."""
+    if _on_driver(df, group_by_series):
+        [avg] = _exact_avgs(df["value"].to_numpy(), np.zeros(1, np.int64))
+        return pa.table({"avg_value": pa.array([] if avg is None else [avg], pa.float64())})
     if group_by_series:
         return (
             df.groupBy("series")
@@ -208,6 +304,9 @@ def ts_latest(df: DataFrame, group_by_series: bool = True) -> DataFrame:
     — a bug-shaped shortcut; we are range-respecting (apply ts_range
     first), documented divergence per SURVEY §7.3. Tie at identical ns
     → max value (deterministic)."""
+    if _on_driver(df, group_by_series):
+        ts, vs = _arrays(df)
+        return _agg_record_on_driver(df, [-ts, -vs])
     return _agg_record(
         df, [-F.col("timestamp"), -F.col("value")], group_by_series
     )
@@ -217,6 +316,9 @@ def ts_earliest(df: DataFrame, group_by_series: bool = True) -> DataFrame:
     """Oldest record (reference ts_first src/timeseries.c:1139-1178;
     ``earliest`` is grammar-doc-only, src/statement_parse.h:103).
     Tie → min value."""
+    if _on_driver(df, group_by_series):
+        ts, vs = _arrays(df)
+        return _agg_record_on_driver(df, [ts, vs])
     return _agg_record(df, [F.col("timestamp"), F.col("value")], group_by_series)
 
 
@@ -232,6 +334,99 @@ _SAMPLE_AGGS = {
     "avg": lambda: exact_avg("value"),
     "count": lambda: F.count(F.lit(1)),
 }
+
+#: HALF_UP rounding to ``exact_avg``'s DECIMAL(38,10) leaf
+_DEC_CONTEXT = Context(prec=60, rounding=ROUND_HALF_UP)
+_DEC_UNIT = Decimal(1).scaleb(-10)
+#: |sum| in units of 1e-10 that DECIMAL(38,10) cannot hold
+_DEC_LIMIT = 10**38
+
+
+def _java_strings(values: np.ndarray) -> list[str]:
+    """``java.lang.Double.toString`` of each value, in one JVM call."""
+    from pyspark import SparkContext
+
+    gateway = SparkContext._gateway
+    jvm = gateway.jvm
+    out = gateway.new_array(jvm.double, len(values))
+    big_endian = bytearray(values.astype(">f8").tobytes())
+    jvm.java.nio.ByteBuffer.wrap(big_endian).asDoubleBuffer().get(out)
+    return jvm.java.util.Arrays.toString(out)[1:-1].split(", ")
+
+
+def _leaf_units(values: np.ndarray) -> tuple[np.ndarray, np.ndarray]:
+    """``CAST(value AS DECIMAL(38,10))`` of each value, in units of
+    1e-10 (Python ints), and whether it is non-NULL.
+
+    Spark casts from the decimal ``Double.toString`` prints, rounded
+    HALF_UP; NaN and ±inf cast to NULL, and a value of 29 or more
+    integer digits raises. That string reads back as the value, so it
+    lies within half an ulp of it, and times 1e10 within ``slack`` of
+    ``y = value * 1e10`` (which adds its own half ulp): when ``y`` is
+    farther than that from the midpoint between two integers, the
+    string rounds to ``y``'s nearest integer, whatever its digits. That
+    holds for nearly every value below 2^17 and none from about 2^19 up;
+    the rest take Java's strings."""
+    finite = np.isfinite(values)
+    v = np.where(finite & (np.abs(values) < 2.0**20), values, 0.0)
+    y = v * 1e10
+    units = np.rint(y)
+    slack = (np.abs(np.spacing(y)) + np.abs(np.spacing(v)) * 1e10) / 2
+    sure = (v == values) & (0.5 - np.abs(y - units) > 2 * slack)
+    units = units.astype(np.int64).astype(object)
+    slow = np.flatnonzero(finite & ~sure)
+    for i, text in zip(slow.tolist(), _java_strings(values[slow]) if len(slow) else []):
+        leaf = Decimal(text).quantize(_DEC_UNIT, context=_DEC_CONTEXT)
+        units[i] = int(leaf.scaleb(10, context=_DEC_CONTEXT))
+        if abs(units[i]) >= _DEC_LIMIT:
+            raise ArithmeticError(f"{text} cannot be represented as Decimal(38, 10)")
+    return units, finite
+
+
+def _exact_avgs(values: np.ndarray, starts: np.ndarray) -> list[float | None]:
+    """``exact_avg`` of each run of ``values`` beginning at ``starts``:
+    the DECIMAL(38,10) leaves summed exactly (a sum past 38 digits
+    raises, as Spark's does), cast to double — Python's int division
+    rounds correctly, like ``Decimal.toDouble`` — and divided by the
+    count of non-NULL leaves; None where there are none."""
+    if not len(values):
+        return [None] * len(starts)
+    units, valid = _leaf_units(values)
+    sums = np.add.reduceat(np.where(valid, units, 0), starts).tolist()
+    counts = np.add.reduceat(valid.astype(np.int64), starts).tolist()
+    out: list[float | None] = []
+    for total, n in zip(sums, counts):
+        if abs(total) >= _DEC_LIMIT:
+            raise ArithmeticError("Overflow in sum of decimals")
+        out.append(total / 10**10 / n if n else None)
+    return out
+
+
+def _driver_agg(fn: str, values: np.ndarray, starts: np.ndarray) -> pa.Array:
+    """``_SAMPLE_AGGS[fn]`` of each run of ``values`` beginning at
+    ``starts``. Spark's ``min`` passes over NaN unless a run is all NaN
+    (``fmin``); its ``max`` is NaN when any value is."""
+    if fn == "avg":
+        return pa.array(_exact_avgs(values, starts), pa.float64())
+    if fn == "count":
+        return pa.array(np.diff(np.append(starts, len(values))), pa.int64())
+    if not len(values):
+        return pa.nulls(len(starts), pa.float64())
+    ufunc = np.fmin if fn == "min" else np.maximum
+    return pa.array(ufunc.reduceat(values, starts), pa.float64())
+
+
+def ts_aggs(df: DataFrame, fns: tuple[str, ...]) -> DataFrame:
+    """One row of ``<fn>_value`` columns over every point (``fns`` from
+    the SAMPLE BY vocabulary) — the multi-aggregate SELECT; no row on
+    empty input, like the record aggregates."""
+    if _on_driver(df):
+        values, first = df["value"].to_numpy(), np.zeros(1, np.int64)
+        row = pa.table({f"{f}_value": _driver_agg(f, values, first) for f in fns})
+        return row.filter(row[f"{fns[0]}_value"].is_valid())
+    return df.agg(
+        *[_SAMPLE_AGGS[f]().alias(f"{f}_value") for f in fns]
+    ).where(F.col(f"{fns[0]}_value").isNotNull())
 
 
 def sample_by(
@@ -267,11 +462,30 @@ def sample_by(
     unknown = [f for f in fns if f not in _SAMPLE_AGGS]
     if unknown or not fns:
         raise ValueError(f"unsupported SAMPLE BY aggregate(s): {unknown}")
-    out = df
     if t0 is not None:
         t0n = t0 - t0 % interval_ns  # normalize (src/timeseries.c:1273)
         if t1 is not None and t0n > t1:
             raise InvalidRangeError(f"invalid range: {t0} > {t1}")
+    if _on_driver(df, group_by_series):
+        ts, vs = _arrays(df)
+        # np.fmod truncates like Java's %: a pre-1970 point's bucket end
+        # is the multiple above it, as Spark labels it
+        rem = np.fmod(ts, interval_ns)
+        bucket = ts - rem + interval_ns
+        keep = rem != 0
+        if t0 is not None:
+            keep &= ts >= t0n
+        if t1 is not None:
+            keep &= (ts <= t1) & (bucket < t1)
+        order = np.argsort(bucket[keep], kind="stable")
+        bucket, vs = bucket[keep][order], vs[keep][order]
+        starts = np.flatnonzero(np.diff(bucket, prepend=bucket[:1] - 1))
+        return pa.table(
+            {"bucket_ts": pa.array(bucket[starts], pa.int64())}
+            | {f"{f}_value": _driver_agg(f, vs, starts) for f in fns}
+        )
+    out = df
+    if t0 is not None:
         out = out.filter(F.col("timestamp") >= F.lit(t0n))
     if t1 is not None:
         out = out.filter(F.col("timestamp") <= F.lit(t1))
@@ -325,6 +539,10 @@ def sample_by_sliding(
     )
 
 
+#: the most grid buckets ``sample_by_fill`` builds for one series
+_FILL_MAX_BUCKETS = 10_000_000
+
+
 def sample_by_fill(
     df: DataFrame,
     interval_ns: int,
@@ -354,6 +572,8 @@ def sample_by_fill(
     magnitude smaller than the input scan that feeds it."""
     from pyspark.sql import Window
 
+    if _on_driver(df):
+        return _sample_by_fill_on_driver(df, interval_ns, fill, t0, t1)
     agg = sample_by(df, interval_ns, t0, t1)
     bounds = agg.groupBy("series").agg(
         F.min("bucket_ts").alias("lo"), F.max("bucket_ts").alias("hi")
@@ -363,7 +583,7 @@ def sample_by_fill(
     # fail loudly with the series name instead of OOMing an executor.
     # The check lives INSIDE the sequence bound so column pruning can
     # never drop it.
-    max_buckets = 10_000_000
+    max_buckets = _FILL_MAX_BUCKETS
     # integer div — the float form re-introduced the exact >2^53
     # imprecision this module's ns rule exists to prevent (a 1-year
     # span is ~3.15e16 ns; near the threshold the guard could flip)
@@ -412,6 +632,44 @@ def sample_by_fill(
             missing.alias("filled"),
         )
         .orderBy("series", "bucket_ts")
+    )
+
+
+def _sample_by_fill_on_driver(
+    table: pa.Table, interval_ns: int, fill, t0: int | None, t1: int | None
+) -> pa.Table:
+    """``sample_by_fill`` over a driver-side table: the grid between the
+    first and last emitted bucket, a bucket without an average (none
+    emitted, or every value NaN or ±inf) marked ``filled``."""
+    agg = sample_by(table, interval_ns, t0, t1, group_by_series=False)
+    if fill not in ("prev", "null") and (
+        not isinstance(fill, (int, float)) or isinstance(fill, bool)
+    ):
+        raise ValueError(f"unsupported fill {fill!r}")
+    emitted = agg["bucket_ts"].to_numpy()
+    n = int((emitted[-1] - emitted[0]) // interval_ns + 1) if len(emitted) else 0
+    if n > _FILL_MAX_BUCKETS:
+        raise ValueError(
+            f"sample_by_fill: grid exceeds {_FILL_MAX_BUCKETS} buckets for series "
+            f"{table['series'][0].as_py()} - use a coarser interval"
+        )
+    grid = emitted[:1] + interval_ns * np.arange(n, dtype=np.int64)
+    value = np.full(n, np.nan)
+    # NULL averages read as NaN, which an average never is (NaN leaves
+    # are NULL)
+    value[np.searchsorted(grid, emitted)] = agg["avg_value"].to_numpy()
+    filled = np.isnan(value)
+    if fill == "prev":
+        last = np.maximum.accumulate(np.where(filled, -1, np.arange(n)))
+        value = np.where(last < 0, np.nan, value[last])
+    elif fill != "null":
+        value = np.where(filled, float(fill), value)
+    return pa.table(
+        {
+            "bucket_ts": pa.array(grid, pa.int64()),
+            "avg_value": pa.array(value, pa.float64(), mask=np.isnan(value)),
+            "filled": pa.array(filled),
+        }
     )
 
 

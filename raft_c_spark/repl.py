@@ -41,7 +41,6 @@ def main(argv: list[str] | None = None) -> int:
 
     from raft_c_spark.engine import Engine
     from raft_c_spark.session import get_spark
-    from raft_c_spark.streaming.results import stream_results
 
     spark = get_spark("raft_c_spark_repl")
     engine = Engine(spark, warehouse=args.warehouse)
@@ -51,9 +50,7 @@ def main(argv: list[str] | None = None) -> int:
         if not stmt:
             return 0
         try:
-            df = engine.execute(stmt)
-            rows = [r for batch in stream_results(df) for r in batch]
-            print(format_rows(rows))
+            print(format_rows(engine.execute(stmt).collect()))
             return 0
         except Exception as e:  # noqa: BLE001 - REPL surface
             print(f"error: {e}", file=sys.stderr)

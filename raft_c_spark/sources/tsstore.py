@@ -21,19 +21,20 @@ values: series ``007`` would read back as the int 7 (and match series
 ``7``), series ``2024-01-01`` as a date.
 
 Statement job budget: a single-series ``read`` lists only that
-series' directory and runs no Spark job before the query executes.
-When the files it will scan are few and small (``ONE_TASK_MAX_FILES``,
-``ONE_TASK_MAX_BYTES``), the driver reads them with pyarrow into one
-local partition, so every SELECT kind over it runs as one job of one
-task and skips the parquet scan's setup (≙ the reference streaming
-one series from one partition in time order). An ``insert_rows``
-batch under the ``insert`` policy runs no Spark job at all — the
-driver already holds the points, so it writes one sorted Arrow parquet
-file per touched (series, day) and publishes it by rename (≙ the
-reference's local append, src/timeseries.c:621-682). The
-``ignore``/``update`` policies, bulk ``insert_df`` frames and
-``compact`` are Spark-committer writes; they hold the store's write
-lock, one at a time.
+series' directory and runs no Spark job. When the files it will scan
+are few and small (``ONE_TASK_MAX_FILES``, ``ONE_TASK_MAX_BYTES``),
+the driver reads them with pyarrow and returns them as an ``Answer``,
+which the engine answers every SELECT kind over with the driver twins
+of ``operators/tsdb``: no Spark plan and no job between the points and
+the reply (≙ the reference's executor reading its AST straight against
+storage, one series from one partition in time order). An
+``insert_rows`` batch under the ``insert`` policy runs no Spark job at
+all — the driver already holds the points, so it writes one sorted
+Arrow parquet file per touched (series, day) and publishes it by
+rename (≙ the reference's local append, src/timeseries.c:621-682).
+The ``ignore``/``update`` policies, bulk ``insert_df`` frames and
+``compact`` are Spark-committer writes; they, ``drop_series``,
+``drop_db`` and ``vacuum`` hold the store's write lock, one at a time.
 
 Scale notes: appends are partitioned writes (no global shuffle unless
 requested); range reads prune by directory then row-group; a series is
@@ -53,10 +54,11 @@ import uuid
 import pyarrow as pa
 import pyarrow.compute as pc
 import pyarrow.parquet as pq
-from pyspark.sql import Column, DataFrame, SparkSession
+from pyspark.sql import Column, DataFrame, Row, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as Ty
-from pyspark.sql.pandas.types import to_arrow_schema
+from pyspark.sql.classic.dataframe import DataFrame as ClassicDataFrame
+from pyspark.sql.pandas.types import from_arrow_schema, to_arrow_schema
 
 from raft_c_spark.functions.diskcache import publish_atomic
 
@@ -92,15 +94,16 @@ def _day_of(ns: int) -> int:
 
 #: the most data files, and bytes in all, that a series read takes on
 #: the driver. Measured with scripts/one_task_crossover.py on a 4-vCPU
-#: VM with two and with four task threads: over the five SELECT kinds,
-#: the driver-side read was 7-57% faster in summed wall time than
-#: Spark's file splits up to 16 files of 0.55 MiB (and at 64 files of
-#: 0.26 MiB), and 6-37% slower at 16 files of 0.82-1.1 MiB.
-ONE_TASK_MAX_FILES = 16
-ONE_TASK_MAX_BYTES = 1 << 19
+#: VM with two and with four task threads: each of the five SELECT
+#: kinds answered on the driver beat the Spark plan over the file
+#: splits in wall time at every size up to the largest measured, 128
+#: files of 8.44 MiB (there 3.3-3.4x in the five kinds' sum).
+ONE_TASK_MAX_FILES = 128
+ONE_TASK_MAX_BYTES = 8 << 20
 
 #: a point file's columns; ``series`` and ``day`` live in its path
 _FILE_SCHEMA = to_arrow_schema(Ty.StructType(POINT_SCHEMA.fields[1:]))
+_POINT_ARROW = to_arrow_schema(POINT_SCHEMA)
 
 
 def _write_points(day_dir: str, points: list[tuple[int, float]]) -> None:
@@ -140,6 +143,50 @@ def local_frame(
     return spark.createDataFrame(data, schema)
 
 
+class Answer(ClassicDataFrame):
+    """A result the driver already holds: an Arrow ``table``.
+
+    ``columns``, ``schema``, ``count`` and ``collect`` read the table;
+    any other use as a DataFrame builds ``local_frame`` over it once
+    (its ``_jdf`` and the rest of a DataFrame's state are adopted on
+    first access), so callers that plan over a result keep working
+    while the wire and the REPL, which use only the table, never start
+    a JVM call."""
+
+    def __new__(cls, *args, **kwargs):
+        return object.__new__(cls)
+
+    def __init__(self, spark: SparkSession, table: pa.Table):
+        self.table = table
+        self._answer_spark = spark
+
+    def __getattr__(self, name: str):
+        # reached only for what the instance lacks: until the first use
+        # as a DataFrame that is its JVM-side state
+        if name.startswith("__") or "_answer_spark" not in self.__dict__:
+            raise AttributeError(name)
+        if "_jdf" not in self.__dict__ and (name.startswith("_") or name == "is_cached"):
+            frame = local_frame(self._answer_spark, self.table, self.schema)
+            self.__dict__.update(frame.__dict__)
+            return getattr(self, name)
+        return super().__getattr__(name)
+
+    @property
+    def columns(self) -> list[str]:
+        return self.table.column_names
+
+    @property
+    def schema(self) -> Ty.StructType:
+        return from_arrow_schema(self.table.schema)
+
+    def count(self) -> int:
+        return self.table.num_rows
+
+    def collect(self) -> list[Row]:
+        make = Row(*self.table.column_names)
+        return [make(*r) for r in zip(*(c.to_pylist() for c in self.table.columns))]
+
+
 def _read_points(
     series: str, files: list[str], t0: int | None, t1: int | None
 ) -> pa.Table:
@@ -160,7 +207,7 @@ def _read_points(
     keep = pc.and_(pc.greater_equal(ts, lo), pc.less_equal(ts, hi))
     ts, vs = ts.filter(keep), vs.filter(keep)
     return pa.table(
-        [pa.repeat(pa.scalar(series), len(ts)), ts, vs], names=POINT_SCHEMA.names
+        [pa.repeat(pa.scalar(series), len(ts)), ts, vs], schema=_POINT_ARROW
     )
 
 
@@ -423,7 +470,7 @@ class TimeSeriesStore:
         t0: int | None = None,
         t1: int | None = None,
     ) -> DataFrame:
-        """Canonical points frame; ``series`` lists only that series'
+        """Canonical points; ``series`` lists only that series'
         directory (a series with none reads empty). ``t0``/``t1`` keep
         timestamps in ``[t0, t1]`` (either may be None); the same
         bounds on ``day`` prune day directories — ``div`` is monotonic,
@@ -434,17 +481,14 @@ class TimeSeriesStore:
 
         A series read whose pruned files are at most
         ``ONE_TASK_MAX_FILES`` files of at most ``ONE_TASK_MAX_BYTES``
-        is read on the driver (``_read_points``) into a local relation
-        of one partition (``coalesce(1)``): no parquet scan is planned,
-        its plan reports ``SinglePartition``, so a global sort or
-        groupless aggregate above it adds no exchange and the statement
-        runs as one job of one task. Larger reads are Spark parquet
-        scans with its file splits: past those sizes one task sorting
-        and aggregating every point was slower than the splits'
-        parallel tasks."""
+        is read on the driver (``_read_points``) and returned as an
+        ``Answer`` holding the points, which the engine answers on the
+        driver. Larger reads are Spark parquet scans with its file
+        splits: past those sizes the splits' parallel tasks beat one
+        driver thread."""
         src = self._source(db, series)
         if src is None:
-            return local_frame(self.spark, [], POINT_SCHEMA)
+            return Answer(self.spark, _POINT_ARROW.empty_table())
         if retention_ns is not None:
             import time as _time
 
@@ -452,8 +496,7 @@ class TimeSeriesStore:
             t0 = cutoff if t0 is None else max(t0, cutoff)
         files = None if series is None else self._one_task(src, t0, t1)
         if files is not None:
-            points = _read_points(series, files, t0, t1)
-            return local_frame(self.spark, points, POINT_SCHEMA).coalesce(1)
+            return Answer(self.spark, _read_points(series, files, t0, t1))
         out = self._scan(db, src)
         if t0 is not None:
             out = out.filter(
@@ -503,15 +546,22 @@ class TimeSeriesStore:
         path = os.path.join(self._points_path(db), self._series_part(series))
         return path if os.path.isdir(path) else None
 
+    # ``compact`` swaps the whole ``points`` directory: a drop or vacuum
+    # run between its copy and its renames would land in the tree it
+    # replaces (and come back), or find ``points`` missing (and delete
+    # nothing), so each takes the write lock
+
     def drop_series(self, db: str, series: str) -> None:
-        path = self._series_dir(db, series)
-        if path is not None:
-            shutil.rmtree(path)
+        with self._write_lock:
+            path = self._series_dir(db, series)
+            if path is not None:
+                shutil.rmtree(path)
 
     def drop_db(self, db: str) -> None:
         path = os.path.join(self.warehouse, db)
-        if os.path.exists(path):
-            shutil.rmtree(path)
+        with self._write_lock:
+            if os.path.exists(path):
+                shutil.rmtree(path)
 
     def compact(self, db: str) -> None:
         """Rewrite the store with one sorted file set per (series, day)
@@ -558,9 +608,10 @@ class TimeSeriesStore:
         O(directories), no data rewrite (day granularity; read-time
         filtering handles the partial boundary day)."""
         cutoff_day = (now - retention_ns) // DAY_NS
-        base = self._series_dir(db, series)
-        if base is None:
-            return
-        for d in os.listdir(base):
-            if d.startswith("day=") and int(d.split("=", 1)[1]) < cutoff_day:
-                shutil.rmtree(os.path.join(base, d))
+        with self._write_lock:
+            base = self._series_dir(db, series)
+            if base is None:
+                return
+            for d in os.listdir(base):
+                if d.startswith("day=") and int(d.split("=", 1)[1]) < cutoff_day:
+                    shutil.rmtree(os.path.join(base, d))

@@ -15,11 +15,13 @@ fixed 512-byte response buffer silently fails on large results — a
 limitation, not a semantic, so not replicated).
 
 A small threaded TCP server (``serve``) exposes an Engine over this
-protocol; ``WireClient`` is the matching client. Both are driver-side
-plumbing — query execution stays entirely in Spark. Each connection's
+protocol; ``WireClient`` is the matching client. Each connection's
 handler thread runs its statements and streams point results to the
 socket itself (``streaming.results.stream_results``); no other thread
-or queue sits between Spark and the client.
+or queue sits between the engine and the client. A result the engine
+answered on the driver (``tsstore.Answer``: status and meta replies,
+SELECTs over a small series) is encoded straight from its Arrow table;
+a Spark result streams partition by partition.
 
 Session semantics match the reference: the active database is
 *server-global* (its dbcontext is one global hashtable with one active
@@ -123,21 +125,17 @@ def encode_response(r: Response) -> bytes:
         marker = b"$" if r.rc == 0 else b"!"
         return marker + str(len(m)).encode() + CRLF + m + CRLF
     if isinstance(r, ArrayResponse):
-        out = b"#" + str(len(r.records)).encode() + CRLF
-        for ts, v in r.records:
-            out += b":" + str(int(ts)).encode() + CRLF
-            out += b";" + _fmt_value(v) + CRLF
-        return out
+        return b"#" + str(len(r.records)).encode() + CRLF + _records(r.records)
     if isinstance(r, StreamChunk):
-        out = b"~" + str(len(r.records)).encode() + CRLF
-        for ts, v in r.records:
-            out += b":" + str(int(ts)).encode() + CRLF
-            out += b";" + _fmt_value(v) + CRLF
-        out += CRLF
-        if r.is_final:
-            out += b"~0" + CRLF
-        return out
+        out = b"~" + str(len(r.records)).encode() + CRLF + _records(r.records) + CRLF
+        return out + b"~0" + CRLF if r.is_final else out
     raise WireError(f"unknown response {r!r}")
+
+
+def _records(records) -> bytes:
+    return b"".join(
+        b":%d\r\n;%s\r\n" % (int(ts), _fmt_value(v)) for ts, v in records
+    )
 
 
 def _read_int_line(data: bytes, pos: int) -> tuple[int, int]:
@@ -282,9 +280,9 @@ class _Handler(socketserver.StreamRequestHandler):
             cols = df.columns
             if cols == ["timestamp", "value"]:
                 # point results: ≤1000-record chunks (ts_stream
-                # framing) written as the partitions are fetched, so
-                # the driver holds one partition and one chunk, never
-                # the full result. The ~0 terminator rides
+                # framing); a Spark result is written as its partitions
+                # are fetched, so the driver holds one partition and one
+                # chunk, never the full result. The ~0 terminator rides
                 # on the LAST data chunk (src/encoding.c:221-226): a
                 # separate empty final chunk would emit a stray
                 # \r\n~0\r\n that poisons the client's buffer, so one
@@ -294,10 +292,7 @@ class _Handler(socketserver.StreamRequestHandler):
                     stream_results,
                 )
 
-                batches = (
-                    tuple((r["timestamp"], r["value"]) for r in batch)
-                    for batch in stream_results(df, STREAM_BATCH_SIZE)
-                )
+                batches = stream_results(df, STREAM_BATCH_SIZE)
                 prev = next(batches, None)
                 if prev is None:
                     self.wfile.write(encode_response(ArrayResponse(())))

@@ -1,21 +1,22 @@
-"""Where the driver-side series read stops beating Spark's file splits.
+"""Where answering a series on the driver stops beating Spark's file splits.
 
 For each ``--size FILES:MIB``, builds one series of FILES parquet
 files (one row group each, as the store's writers leave them) holding
 MIB MiB in all over up to ``--days`` day directories, then runs the
 five SELECT kinds of the ``tsdb_wire`` benchmark over the whole series
-twice per rep: once read on the driver into one local partition
-(``TimeSeriesStore.read``'s one-task branch) and once with Spark's
-file splits, alternating which goes first. BETWEEN's sorted points are
-written to Spark's ``noop`` sink rather than collected, so the
-comparison is the plan's, not the transfer's. Prints one JSON line
-per size: the median wall seconds and CPU seconds of each kind under
-each plan. The CPU is the Python driver's plus the JVM's, since the
-driver-side read runs in Python.
+twice per rep: once answered on the driver (``TimeSeriesStore.read``'s
+one-task branch and the numpy twins of ``operators/tsdb``) and once
+planned by Spark over its file splits, alternating which goes first.
+Each result is consumed as the wire consumes it: a point result
+through ``stream_results`` (the answer's table, or Spark's partitions),
+any other result by ``collect``. Prints one JSON line per size: the
+median wall seconds and CPU seconds of each kind under each plan. The
+CPU is the Python driver's plus the JVM's, since the driver-side
+answer runs in Python.
 
     SPARK_GRAFT_CPUS=2 SPARK_GRAFT_DRIVER_MEM=3g \\
         python scripts/one_task_crossover.py --work /tmp/xover \\
-        --size 4:0.05 --size 8:1 --size 16:1 --size 8:2 --size 64:0.2
+        --size 4:0.05 --size 16:0.5 --size 16:1 --size 32:2 --size 64:4 --size 128:8
 
 The first size also warms the JVM,
 so its numbers run high. ``ONE_TASK_MAX_FILES`` and
@@ -42,6 +43,7 @@ from raft_c_spark import get_spark, trace  # noqa: E402
 from raft_c_spark.engine import Engine  # noqa: E402
 from raft_c_spark.sources import tsstore  # noqa: E402
 from raft_c_spark.sources.tsstore import DAY_NS  # noqa: E402
+from raft_c_spark.streaming.results import stream_results  # noqa: E402
 
 BASE_DAY = 19_700  # a day number in 2023
 #: snappy parquet of random sorted int64 timestamps and random doubles
@@ -81,18 +83,19 @@ def statements(t0: int, t1: int) -> dict[str, str]:
     }
 
 
-def run_once(e: Engine, kind: str, stmt: str, one: bool) -> tuple[float, float]:
-    """Wall and driver+JVM CPU seconds of one statement, its series read on
-    the driver (``one``: the gate's caps lifted past every size here)
-    or by Spark's file splits (a file cap of 0)."""
+def run_once(e: Engine, stmt: str, one: bool) -> tuple[float, float]:
+    """Wall and driver+JVM CPU seconds of one statement, answered on the
+    driver (``one``: the gate's caps lifted past every size here) or
+    planned over Spark's file splits (a file cap of 0)."""
     tsstore.ONE_TASK_MAX_FILES = 1 << 30 if one else 0
     tsstore.ONE_TASK_MAX_BYTES = 1 << 30
     with trace.phase(e.spark) as p:
-        df = e.execute(stmt)
-        if kind == "between":
-            df.write.format("noop").mode("overwrite").save()
+        out = e.execute(stmt)
+        if out.columns == ["timestamp", "value"]:
+            for _ in stream_results(out):
+                pass
         else:
-            df.collect()
+            out.collect()
     return p.wall_s, p.cpu_pydriver_s + p.cpu_jvm_s
 
 
@@ -119,11 +122,11 @@ def main() -> None:
         res: dict = {"files": int(files), "mib": round(on_disk / 2**20, 2)}
         for kind, stmt in stmts.items():
             for one in (True, False):  # warm both plans
-                run_once(e, kind, stmt, one)
+                run_once(e, stmt, one)
             times: dict[bool, list] = {True: [], False: []}
             for r in range(args.reps):
                 for one in ((True, False) if r % 2 == 0 else (False, True)):
-                    times[one].append(run_once(e, kind, stmt, one))
+                    times[one].append(run_once(e, stmt, one))
             for one, name in ((True, "one"), (False, "split")):
                 res[f"{kind}.{name}.wall"] = round(statistics.median(w for w, _ in times[one]), 3)
                 res[f"{kind}.{name}.cpu"] = round(statistics.median(c for _, c in times[one]), 3)

@@ -1,12 +1,28 @@
 """Local replica of the driver's duckdb-oracle comparison: run a Spark
 DataFrame and an oracle SQL on the same tables, sort columns by name,
 compare row multisets (float-tolerant). Also the Spark job counter the
-job-budget tests share."""
+job-budget tests share, and the bit-for-bit row compare of the tests
+that hold the driver's answers to Spark's."""
 
 from __future__ import annotations
 
 import math
+import struct
 from typing import Any
+
+
+def same_bits(got, want) -> bool:
+    """Equal rows, floats bit for bit (a NaN equal to a NaN)."""
+
+    def cell(a, b) -> bool:
+        if isinstance(a, float) and isinstance(b, float):
+            return (math.isnan(a) and math.isnan(b)) or struct.pack("<d", a) == struct.pack("<d", b)
+        return a == b
+
+    return len(got) == len(want) and all(
+        len(g) == len(w) and all(cell(a, b) for a, b in zip(g, w))
+        for g, w in zip(got, want)
+    )
 
 
 def jobs_in(spark, fn):

@@ -8,7 +8,7 @@ import pytest
 
 from raft_c_spark.operators import tsdb
 from raft_c_spark.sources.testdata import events_as_points
-from tests.harness import assert_matches_oracle, df_rows
+from tests.harness import assert_matches_oracle, df_rows, same_bits
 
 NS = "(epoch_ns(ts) - epoch_ns(ts) % 1000)"  # µs-truncated ns, oracle side
 POINTS = (
@@ -314,3 +314,95 @@ def test_sample_by_fill_grid_guard(spark):
     )
     with pytest.raises(Exception, match="grid exceeds"):
         sample_by_fill(df, 10, fill="prev").collect()
+
+
+def _twins(spark, rows):
+    """``rows`` as a driver-side point table and as a Spark frame."""
+    import pyarrow as pa
+
+    from raft_c_spark.sources.tsstore import POINT_SCHEMA, _POINT_ARROW
+
+    table = pa.Table.from_pydict(
+        dict(zip(POINT_SCHEMA.names, map(list, zip(*rows)))), schema=_POINT_ARROW
+    )
+    return table, spark.createDataFrame(rows, POINT_SCHEMA)
+
+
+def test_driver_twins_match_spark_bit_for_bit(spark):
+    """Each operator's numpy twin gives its Spark answer bit for bit
+    over values that stress ``exact_avg``'s DECIMAL(38,10) leaf —
+    two-decimal readings, long fractions, ties at the tenth decimal,
+    magnitudes up to 1e25 whose ``Double.toString`` has 17 digits,
+    tiny and NaN/±inf values — on timestamps either side of 1970."""
+    import math
+    import random
+
+    from pyspark.sql import functions as F
+
+    rng = random.Random(5)
+    draws = [
+        lambda: round(rng.uniform(-1e3, 1e3), 2),
+        lambda: rng.uniform(-1, 1) * 10 ** rng.randint(-12, 6),
+        lambda: rng.uniform(-1, 1) * 10 ** rng.randint(5, 25),
+        lambda: rng.getrandbits(52) / 2 ** rng.randint(0, 60),
+        lambda: rng.choice([math.nan, math.inf, -math.inf, 0.5]),
+        lambda: round(rng.uniform(1e5, 2e5), 3),
+        # a tie at the tenth decimal, which HALF_UP rounds away from 0
+        lambda: float(f"{rng.randint(-999, 999)}.{rng.randrange(10**10):010d}5"),
+    ]
+    # each kind of value in buckets of its own, where no larger value
+    # hides its last bits
+    rows = [
+        ("s", -10**12 + k * 10**10 + j * 7_777_777, draw())
+        for k, draw in enumerate(draws)
+        for j in range(430)
+    ]
+    table, df = _twins(spark, rows)
+    second = 10**9
+    cases = [
+        lambda p: tsdb.ts_scan(p),
+        lambda p: tsdb.where_chain(p, [("value", ">", 0.25), ("timestamp", "!=", 5)]),
+        lambda p: tsdb.ts_min(p, group_by_series=False),
+        lambda p: tsdb.ts_max(p, group_by_series=False),
+        lambda p: tsdb.ts_latest(p, group_by_series=False),
+        lambda p: tsdb.ts_earliest(p, group_by_series=False),
+        lambda p: tsdb.ts_avg(p, group_by_series=False),
+        lambda p: tsdb.ts_aggs(p, ("avg", "min", "max", "count")),
+        lambda p: tsdb.sample_by(
+            p, second, t0=-10**12 + 3, t1=2 * 10**13,
+            group_by_series=False, fns=("min", "max", "avg", "count"),
+        ),
+        lambda p: tsdb.sample_by_fill(
+            tsdb.where_chain(p, [("value", ">", 1e4)]), second // 4, fill="prev"
+        ),
+    ]
+    # the DECIMAL(38,10) leaf itself, before a sum can hide a digit
+    units, valid = tsdb._leaf_units(table["value"].to_numpy())
+    leaves = df.select(F.col("value").cast("decimal(38,10)")).collect()
+    assert [u if ok else None for u, ok in zip(units, valid)] == [
+        None if d is None else int(d.scaleb(10)) for (d,) in leaves
+    ]
+    for i, case in enumerate(cases):
+        out = case(table)
+        got = [tuple(r.values()) for r in out.to_pylist()]
+        # the Spark results of a grouped operator keep ``series``
+        want = [tuple(r) for r in case(df).select(*out.column_names).collect()]
+        assert want and same_bits(got, want), (i, got[:5], want[:5])
+
+
+@pytest.mark.parametrize("values", [[1e28], [9e27, 9e27], [-6e27, -5e27, 0.5]])
+def test_driver_exact_avg_overflow_raises_like_spark(spark, values):
+    """A leaf past DECIMAL(38,10)'s 28 integer digits, or a sum past
+    its 38, fails the average on both paths."""
+    table, df = _twins(spark, [("s", i, v) for i, v in enumerate(values)])
+    with pytest.raises(ArithmeticError):
+        tsdb.ts_avg(table, group_by_series=False)
+    with pytest.raises(Exception, match="ARITHMETIC_OVERFLOW|NUMERIC_VALUE_OUT_OF_RANGE"):
+        tsdb.ts_avg(df, group_by_series=False).collect()
+
+
+def test_sample_by_fill_grid_guard_on_driver(spark):
+    """The driver twin refuses the same pathological grid."""
+    table, _ = _twins(spark, [("s", 5, 1.0), ("s", 40_000_000_005, 7.0)])
+    with pytest.raises(ValueError, match="grid exceeds 10000000 buckets for series s"):
+        tsdb.sample_by_fill(table, 10, fill="prev")

@@ -5,6 +5,7 @@ driver-side point writer and reader, and reads and writes during
 
 from __future__ import annotations
 
+import math
 import os
 import sys
 import threading
@@ -13,8 +14,8 @@ import pytest
 
 from raft_c_spark.engine import Engine
 from raft_c_spark.sources import tsstore
-from raft_c_spark.sources.tsstore import DAY_NS, POINT_SCHEMA, TimeSeriesStore
-from tests.harness import jobs_in
+from raft_c_spark.sources.tsstore import DAY_NS, POINT_SCHEMA, TimeSeriesStore, local_frame
+from tests.harness import jobs_in, same_bits
 
 BASE = 1_700_000_000 * 10**9  # pinned epoch ns
 
@@ -47,23 +48,45 @@ def test_series_names_are_not_retyped(spark, tmp_path):
             )
 
 
-def test_statement_job_budget(spark, tmp_path):
-    """Only the jobs that compute an answer run: a store read starts
-    none before execute, a 12-point INSERT under the ``insert`` policy
-    starts none (the driver writes and renames its file, leaving no
-    committer or staging entry behind), and CREATE/USE replies collect
-    without a job."""
-    e = Engine(spark, warehouse=str(tmp_path / "wh"))
-    for ddl in ("CREATEDB d", "USE d", "CREATE s"):
-        assert jobs_in(spark, lambda: e.execute(ddl).collect())[0] == 0, ddl
+def test_statement_job_budget(spark, tmp_path, monkeypatch):
+    """Over a small series no statement runs a Spark job: CREATE/USE
+    and meta replies, 12-point INSERTs under the ``insert`` policy (the
+    driver writes and renames its file, leaving no committer or staging
+    entry behind), a store read, and a SELECT of every kind, answered
+    on the driver. Served over the wire, none of them builds its
+    answer's DataFrame."""
+    from raft_c_spark import wire
 
-    vals = ",".join(f"({BASE + k * 10**9}, {k}.5)" for k in range(12))
-    for _ in range(2):  # the first INSERT creates the directories
-        n, reply = jobs_in(
-            spark, lambda: e.execute(f"INSERT INTO s VALUES {vals}").collect()
-        )
-        assert reply[0]["status"] == "12 records inserted into s"
-        assert n == 0
+    built = []
+    monkeypatch.setattr(
+        tsstore, "local_frame", lambda *a: built.append(a) or local_frame(*a)
+    )
+    e = Engine(spark, warehouse=str(tmp_path / "wh"))
+    server = wire.serve(e)
+    client = wire.WireClient(*server.server_address)
+    try:
+        for ddl in ("CREATEDB d", "USE d", "CREATE s", ".databases", ".timeseries"):
+            n, reply = jobs_in(spark, lambda: client.execute(ddl))
+            assert (n, reply.rc) == (0, 0), (ddl, reply)
+        model = []
+        for batch in _small_batches():  # the first INSERT creates the directories
+            vals = ",".join(f"({t}, {v})" for t, v in batch)
+            n, reply = jobs_in(spark, lambda: client.execute(f"INSERT INTO s VALUES {vals}"))
+            assert reply.message == "12 records inserted into s"
+            assert n == 0
+            model += batch
+        for stmt, want, _ in _select_cases(sorted(model)):
+            n, reply = jobs_in(spark, lambda: client.execute(stmt))
+            assert n == 0, stmt
+            if stmt.startswith("SELECT min(value), max(value)"):
+                assert reply.rc == 0 and len(reply.message.split(",")) == 3, reply
+            else:
+                assert [t for t, _ in reply] == [w[0] for w in want], (stmt, reply)
+    finally:
+        client.close()
+        server.shutdown()
+        server.server_close()
+    assert built == []
     points = os.path.join(e.warehouse, "d", "points")
     leftovers = [
         os.path.join(d, name)
@@ -75,7 +98,7 @@ def test_statement_job_budget(spark, tmp_path):
 
     n, df = jobs_in(spark, lambda: e.store.read("d", "s"))
     assert n == 0
-    assert df.count() == 24
+    assert df.count() == 72
 
 
 HOUR_NS = 3_600_000_000_000
@@ -92,14 +115,21 @@ def _small_series(spark, tmp_path):
     for ddl in ("CREATEDB d", "USE d", "CREATE s"):
         e.execute(ddl)
     model = []
-    for i in range(6):
-        batch = [
-            (BASE + ((i * 12 + j) % 60) * STEP_NS, float((i * 12 + j) * 37 % 23) + 0.5)
-            for j in range(12)
-        ]
+    for batch in _small_batches():
         e.execute("INSERT INTO s VALUES " + ",".join(f"({t}, {v})" for t, v in batch))
         model += batch
     return e, sorted(model)
+
+
+def _small_batches() -> list[list[tuple[int, float]]]:
+    """``_small_series``' six INSERT batches of 12 points."""
+    return [
+        [
+            (BASE + ((i * 12 + j) % 60) * STEP_NS, float((i * 12 + j) * 37 % 23) + 0.5)
+            for j in range(12)
+        ]
+        for i in range(6)
+    ]
 
 
 #: the exchange a multi-partition read puts under each statement kind
@@ -172,21 +202,21 @@ def _plan(df) -> str:
     return df._jdf.queryExecution().executedPlan().toString()
 
 
-def test_small_series_select_runs_one_job(spark, tmp_path):
+def test_small_series_select_runs_no_job(spark, tmp_path):
     """A SELECT over a series whose pruned files are few and small reads
-    them on the driver into one local partition, with no parquet scan:
-    every statement kind collects in
-    exactly one Spark job, with no exchange in its plan, and returns the
-    model's rows in the model's order."""
+    them on the driver and answers there: every statement kind collects
+    without a Spark job and returns the model's rows in the model's
+    order, and used as a DataFrame the answer is a local relation, with
+    no parquet scan and no exchange in its plan."""
     e, pts = _small_series(spark, tmp_path)
     for stmt, want, _ in _select_cases(pts):
         df = e.execute(stmt)
+        n, rows = jobs_in(spark, df.collect)
+        assert n == 0, stmt
+        assert _rows_match([tuple(r) for r in rows], want), (stmt, rows, want)
         plan = _plan(df)
         assert "Exchange" not in plan, stmt
         assert "LocalTableScan" in plan and "FileScan" not in plan, (stmt, plan)
-        n, rows = jobs_in(spark, df.collect)
-        assert n == 1, stmt
-        assert _rows_match([tuple(r) for r in rows], want), (stmt, rows, want)
 
 
 @pytest.mark.parametrize("cap", ["maxPartitionBytes", "files", "bytes"])
@@ -266,19 +296,30 @@ def _mixed_series(spark, tmp_path):
     return e, grid
 
 
-@pytest.mark.parametrize("retention", [None, "1d"])
-def test_local_read_matches_file_splits(spark, tmp_path, monkeypatch, retention):
-    """The driver-side read and Spark's file splits return the same rows
-    for every SELECT kind, over files of every writer, a Hive-escaped
-    series name, pre-1970 points, bounds on day edges, empty ranges and
-    (with ``retention``) a retention cut inside the pre-1970 day 0.
-    The splits are forced by ``ONE_TASK_MAX_FILES`` and
-    ``ONE_TASK_MAX_BYTES`` of 1; a read that lists no file is local
+@pytest.mark.parametrize(
+    "retention, special",
+    [(None, None), ("1d", None)]
+    + [(None, v) for v in (math.nan, math.inf, -math.inf, 1e28, -3.5e30)],
+    ids=["None", "1d", "nan", "inf", "-inf", "1e28", "-3.5e30"],
+)
+def test_local_read_matches_file_splits(spark, tmp_path, monkeypatch, retention, special):
+    """The driver's answer and the Spark plan over Spark's file splits
+    agree for every SELECT kind, floats bit for bit, over files of
+    every writer, a Hive-escaped series name, pre-1970 points, bounds
+    on day edges, empty ranges and (with ``retention``) a retention cut
+    inside the pre-1970 day 0. With ``special``, bulk-inserted points of
+    that value (NaN, ±inf, or past DECIMAL(38,10)'s 28 integer digits)
+    sit beside the others on days -1 and 0: the two paths give the same
+    rows or both raise. The splits are forced by ``ONE_TASK_MAX_FILES``
+    and ``ONE_TASK_MAX_BYTES`` of 1; a read that lists no file is local
     either way."""
     e, grid = _mixed_series(spark, tmp_path)
     now = DAY_NS // 2  # a 1d retention keeps timestamps from -DAY_NS // 2
     if retention is not None:
         e.execute(f"CREATE cpu:load {retention}")
+    if special is not None:
+        rows = [("cpu:load", t, special) for t in (grid[60], grid[61], grid[100] + 1)]
+        e.store.insert_df("d", spark.createDataFrame(rows, POINT_SCHEMA))
     ranges = {
         "all": "",
         "wide": f" BETWEEN {_ns(-3 * DAY_NS)} AND {3 * DAY_NS}",
@@ -294,17 +335,19 @@ def test_local_read_matches_file_splits(spark, tmp_path, monkeypatch, retention)
         "SELECT min(value), avg(value) FROM cpu:load{r} SAMPLE BY 3h",
         "SELECT avg(value) FROM cpu:load{r} SAMPLE BY 3h FILL(prev)",
         "SELECT avg(value) FROM cpu:load{r} SAMPLE BY 3h FILL(null)",
+        "SELECT avg(value) FROM cpu:load{r} SAMPLE BY 3h FILL(2.5)",
         "SELECT min(value) FROM cpu:load{r}",
         "SELECT max(value) FROM cpu:load{r}",
         "SELECT avg(value) FROM cpu:load{r}",
         "SELECT min(value), max(value), avg(value) FROM cpu:load{r}",
         "SELECT value FROM cpu:load{r} WHERE value > 4 AND value < 15 LIMIT 7",
+        "SELECT value FROM cpu:load{r} WHERE value >= 11.5 AND timestamp != 0",
         "SELECT latest(value) FROM cpu:load{r}",
         "SELECT earliest(value, 3) FROM cpu:load{r}",
     ]
     cases = [(name, k.format(r=r)) for name, r in ranges.items() for k in kinds] + [
         (f"at_{t}", f"SELECT value FROM cpu:load AT {_ns(t)}")
-        for t in (-DAY_NS, grid[9], 0, grid[40] + 1)
+        for t in (-DAY_NS, grid[9], 0, grid[40] + 1, grid[60])
     ]
 
     gate, listed = TimeSeriesStore._one_task, []
@@ -317,24 +360,40 @@ def test_local_read_matches_file_splits(spark, tmp_path, monkeypatch, retention)
     monkeypatch.setattr(TimeSeriesStore, "_one_task", counting)
 
     def run(stmt):
+        """(plan, rows), or (None, the error) when the statement raises."""
         listed.clear()
-        df = e.execute(stmt, now=now)
-        return _plan(df), [tuple(r) for r in df.collect()]
+        try:
+            df = e.execute(stmt, now=now)
+            plan = _plan(df)
+            return plan, [tuple(r) for r in df.collect()]
+        except Exception as exc:  # the other path must raise too
+            return None, exc
 
     local, has_files = {}, {}
     for name, stmt in cases:
         plan, local[stmt] = run(stmt)
-        assert "LocalTableScan" in plan and "FileScan" not in plan, (stmt, plan)
         has_files[stmt] = bool(listed[0])
+        if plan is None:
+            assert special is not None, (stmt, local[stmt])
+            continue
+        assert "LocalTableScan" in plan and "FileScan" not in plan, (stmt, plan)
         if name == "wide":
             assert local[stmt], stmt
     monkeypatch.setattr(tsstore, "ONE_TASK_MAX_FILES", 1)
     monkeypatch.setattr(tsstore, "ONE_TASK_MAX_BYTES", 1)
+    raised = 0
     for name, stmt in cases:
         plan, rows = run(stmt)
+        if isinstance(local[stmt], Exception) or plan is None:
+            assert isinstance(local[stmt], Exception) and plan is None, (stmt, local[stmt], rows)
+            raised += 1
+            continue
         assert ("FileScan" in plan) == has_files[stmt], (stmt, plan)
-        assert _rows_match(local[stmt], rows), (stmt, local[stmt], rows)
+        assert same_bits(local[stmt], rows), (stmt, local[stmt], rows)
     assert not has_files[kinds[0].format(r=ranges["no_file"])]
+    # a finite value past DECIMAL(38,10) fails the averages over it;
+    # NaN and ±inf cast to NULL, which averages pass over
+    assert (raised > 0) == (special is not None and 1e28 <= abs(special) < math.inf)
 
 
 def test_local_read_of_a_vanished_file_raises(spark, tmp_path, monkeypatch):
@@ -499,6 +558,55 @@ def test_insert_during_compact_keeps_every_point(spark, tmp_path, monkeypatch, s
         ("s", BASE + 2 * DAY_NS, 3.0),
     ]
     assert not os.path.exists(points + ".pre_compact")
+
+
+@pytest.mark.parametrize("step", ["swap_out", "swap_in"])
+@pytest.mark.parametrize("op", ["drop_series", "drop_db", "vacuum"])
+def test_maintenance_during_compact_holds(spark, tmp_path, monkeypatch, op, step):
+    """DROP SERIES, DROP DB and VACUUM arriving while ``compact`` swaps
+    the ``points`` directory. At the first rename a drop or vacuum
+    deleted from the store compact was replacing, and compact's copy
+    brought the points back; at the second, ``points`` was missing and
+    there was nothing to delete — an acknowledged DROP undone (a DROP
+    DB deleted compact's trees and failed its rename instead). Each
+    waits for the store's write lock: compact succeeds and the drop or
+    vacuum holds after it."""
+    st = TimeSeriesStore(spark, str(tmp_path / "wh"))
+    st.insert_rows("d", "s", [(BASE, 1.0), (BASE + 3 * DAY_NS, 2.0)])
+    st.insert_rows("d", "t", [(BASE, 5.0)])
+    points = os.path.join(st.warehouse, "d", "points")
+    hook = {
+        "swap_out": (points, points + ".pre_compact"),
+        "swap_in": (points + ".compacting", points),
+    }[step]
+    run, want = {
+        "drop_series": (lambda: st.drop_series("d", "s"), [("t", BASE, 5.0)]),
+        "drop_db": (lambda: st.drop_db("d"), []),
+        "vacuum": (
+            lambda: st.vacuum("d", "s", 2 * DAY_NS, BASE + 3 * DAY_NS),
+            [("s", BASE + 3 * DAY_NS, 2.0), ("t", BASE, 5.0)],
+        ),
+    }[op]
+    done = []
+    worker = threading.Thread(target=lambda: done.append(run()))
+    rename = os.rename
+
+    def racing_rename(src, dst):
+        if (src, dst) == hook and worker.ident is None:
+            worker.start()
+            # the drop runs to the end here unless it waits for compact
+            worker.join(timeout=2)
+        rename(src, dst)
+
+    monkeypatch.setattr(tsstore.os, "rename", racing_rename)
+    st.compact("d")
+    monkeypatch.undo()
+    worker.join(timeout=120)
+    assert not worker.is_alive()
+    assert done == [None]
+    assert _points(st.read("d", "s")) + _points(st.read("d", "t")) == want
+    assert not os.path.exists(points + ".pre_compact")
+    assert not os.path.exists(points + ".compacting")
 
 
 def test_read_during_compact_waits_for_it(spark, tmp_path, monkeypatch):

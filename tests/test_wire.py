@@ -492,3 +492,111 @@ def test_eight_concurrent_clients_streaming_byte_identical(spark, tmp_path):
         assert not any(t.is_alive() for t in threads), "client hung"
     finally:
         server.shutdown()
+
+
+def _raw_reply(sock, query: str) -> bytes:
+    """One statement's whole reply as the server wrote it: a string or
+    array frame, or stream chunks up to the final one."""
+    sock.sendall(encode_request(Request(query)))
+    buf, pos = b"", 0
+    while True:
+        try:
+            resp, used = decode_response(buf[pos:])
+        except WireError:
+            chunk = sock.recv(65536)
+            assert chunk, f"server closed during {query!r}"
+            buf += chunk
+            continue
+        pos += used
+        if not isinstance(resp, StreamChunk) or resp.is_final:
+            assert pos == len(buf), query
+            return buf
+
+
+def test_golden_replies_match_the_spark_plan(spark, tmp_path, monkeypatch):
+    """Every statement kind's reply bytes, answered on the driver (the
+    default one-task caps), equal those of the Spark plan over the
+    store's file splits (caps forced to 0): point streams of one and
+    three chunks, empty results, aggregates, SAMPLE BY with FILL,
+    multi-aggregates, WHERE and LIMIT, error replies, INSERT, DDL and
+    meta replies."""
+    import socket
+
+    from raft_c_spark import trace
+    from raft_c_spark.engine import Engine
+    from raft_c_spark.sources import tsstore
+
+    base = 1_700_000_000_000_000_000
+    minute = 60 * 10**9
+    # 2500 points a minute apart over two days, values with a sign and
+    # several decimals, and a second point at one timestamp
+    bulk = [(base + i * minute, (i * 7919 % 1000) / 8 - 60.125) for i in range(2500)]
+    bulk.append((base + 40 * minute, 17.0625))
+    t_mid, t_end = base + 300 * minute, base + 1500 * minute
+    rng = f"BETWEEN {t_mid} AND {t_end}"
+    script = [
+        "CREATEDB g", "USE g", "CREATE s", "CREATE e", ".databases", ".timeseries",
+        f"INSERT INTO s VALUES ({base - 5}, 1.5), ({base - 3}, -2.25)",
+        "SELECT value FROM s",
+        f"SELECT value FROM s {rng}",
+        f"SELECT value FROM s AT {base + 40 * minute}",
+        f"SELECT value FROM s AT {base + 1}",
+        "SELECT value FROM e",
+        f"SELECT value FROM s {rng} WHERE value > -10 AND value <= 30.5",
+        f"SELECT value FROM s {rng} WHERE value > 0 LIMIT 9",
+        "SELECT value FROM s WHERE timestamp < 5 LIMIT 3",
+        "SELECT value FROM s LIMIT 1200",
+        f"SELECT min(value) FROM s {rng}",
+        f"SELECT max(value) FROM s {rng}",
+        f"SELECT avg(value) FROM s {rng}",
+        "SELECT avg(value) FROM s",
+        "SELECT avg(value) FROM e",
+        f"SELECT latest(value) FROM s {rng}",
+        "SELECT earliest(value) FROM s",
+        f"SELECT earliest(value, 4) FROM s {rng}",
+        f"SELECT avg(value) FROM s {rng} SAMPLE BY 1h",
+        "SELECT max(value) FROM s SAMPLE BY 7m",
+        f"SELECT min(value), max(value), avg(value) FROM s {rng} SAMPLE BY 2h",
+        f"SELECT avg(value) FROM s {rng} WHERE value > 50 SAMPLE BY 10m FILL(prev)",
+        f"SELECT avg(value) FROM s {rng} WHERE value > 50 SAMPLE BY 10m FILL(null)",
+        f"SELECT avg(value) FROM s {rng} WHERE value > 50 SAMPLE BY 10m FILL(7)",
+        f"SELECT min(value), max(value), avg(value) FROM s {rng}",
+        "SELECT min(value), avg(value) FROM e",
+        f"SELECT value FROM s BETWEEN {t_end} AND {t_mid}",
+        "SELECT min(value), max(value) FROM s SAMPLE BY 1h FILL(prev)",
+        "SELECT max(value) FROM s SAMPLE BY 1h FILL(null)",
+        "SELECT value FROM ghost",
+        "FLY me TO the-moon",
+        "DELETE e",
+        ".timeseries",
+    ]
+
+    def replies(tag: str) -> tuple[list[bytes], int]:
+        engine = Engine(spark, warehouse=str(tmp_path / tag))
+        server = wire.serve(engine)
+        sock = socket.create_connection(server.server_address, timeout=120)
+        out, select_jobs = [], 0
+        try:
+            for query in script:
+                if query == "SELECT value FROM s":
+                    engine.store.insert_rows("g", "s", bulk)
+                with trace.phase(spark) as p:
+                    out.append(_raw_reply(sock, query))
+                select_jobs += p.jobs if query.startswith("SELECT") else 0
+        finally:
+            sock.close()
+            server.shutdown()
+            server.server_close()
+        return out, select_jobs
+
+    driver, driver_jobs = replies("driver")
+    monkeypatch.setattr(tsstore, "ONE_TASK_MAX_FILES", 0)
+    monkeypatch.setattr(tsstore, "ONE_TASK_MAX_BYTES", 0)
+    planned, planned_jobs = replies("planned")
+    assert driver_jobs == 0 and planned_jobs > 0
+    for query, a, b in zip(script, driver, planned):
+        assert a == b, (query, a[:300], b[:300])
+    streams = {q: r.count(b"~") for q, r in zip(script, driver) if r.startswith(b"~")}
+    assert streams["SELECT value FROM s"] == 4  # 1000, 1000, 503, ~0
+    assert sum(r.startswith(b"!") for r in driver) == 5
+    assert sum(r == b"#0\r\n" for r in driver) == 4
