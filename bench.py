@@ -138,7 +138,7 @@ def main() -> None:
     # whose cost is independent of the registry. The artifact carries
     # both the raw total and value_per_calib = total / calib_sec, so
     # round-over-round comparisons can divide out box-speed variance
-    # (this host has measured 25-30% slower epochs; see ROUND4.md).
+    # (this host has measured 25-30% slower epochs; see BASELINE.md).
     # The r6 A/B measured a 1.8x swing between two min-of-2 probes on
     # the SAME box minutes apart (0.168 vs 0.302 s) — larger than any
     # effect the divisor was meant to normalize — so the probe is now

@@ -149,7 +149,7 @@ def pack_sequences(
     # cheap lineage cut). Output is identical either way: the blocks
     # hold exactly df's rows, and the prefix-sum result is
     # partitioning-independent.
-    # Block lifetime (judge r13 #9): both localCheckpoints' blocks are
+    # Block lifetime: both localCheckpoints' blocks are
     # freed by the ContextCleaner, not an explicit unpersist —
     # localCheckpoint registers its RDD for reference-tracked cleanup,
     # and once the caller drops the returned frame (bench: after the
@@ -158,10 +158,10 @@ def pack_sequences(
     # dropped. Dataset.unpersist() would be a no-op here (it consults
     # the CacheManager, which never sees checkpoint blocks) and there
     # is no public API to unpersist a checkpoint eagerly. Measured:
-    # the committed profile sweep's storage stays flat across the full
-    # registry (``PROFILE_BUILD_EXEC.json``'s rdd_storage column; a
-    # bench run's ``queries_trace`` storage columns now record the
-    # same). Fault-tolerance caveat: localCheckpoint is
+    # a whole-registry profile sweep's storage stayed flat (the
+    # rdd_storage column of ``PROFILE_BUILD_EXEC.json``, in git at
+    # commit 6b4c93f); a bench run's ``queries_trace`` storage columns
+    # record the same now. Fault-tolerance caveat: localCheckpoint is
     # lineage-truncating — on a real cluster, executor loss makes the
     # blocks unrecomputable; acceptable for this engine's local-mode
     # charter, and at cluster scale the deployer should swap in
@@ -823,115 +823,4 @@ def token_budget_mix(
             "rate",
             "selected",
         )
-    )
-
-
-def psi_drift(
-    df_a: DataFrame,
-    df_b: DataFrame,
-    value_col: str,
-    bin_width: int,
-    n_bins: int = 20,
-    min_p: float = 1e-6,
-) -> DataFrame:
-    """Population Stability Index between two corpus snapshots over an
-    integer feature — the standard production drift monitor for a
-    continuously-refreshed training corpus (Siddiqi 2006's
-    credit-scoring PSI, the metric ML data pipelines alarm on:
-    PSI < 0.1 stable, 0.1–0.25 drifting, > 0.25 shifted). The
-    reference has nothing in this family (its surface is the
-    timeseries grammar, src/statement_parse.c); this is a
-    driver-north-star extension like snapshot_diff, which detects
-    WHICH rows changed — PSI detects whether the DISTRIBUTION moved
-    even when ids are disjoint (a new crawl snapshot).
-
-    Deterministic contract: bins are exact integer arithmetic —
-    ``least(greatest(value, 0) div bin_width, n_bins − 1)`` — so both
-    engines bucket identically; per-bin counts are exact; proportions
-    are one correctly-rounded IEEE division each, floored at
-    ``min_p`` (PSI's standard empty-bin guard, a literal); each bin's
-    ``(p_a − p_b) · ln(p_a / p_b)`` term computes in a fixed op order,
-    rounds to 8 decimals and casts to DECIMAL(18,8) BEFORE the total
-    (the quantized-log rule), so the psi_total column is an exact,
-    order-independent decimal sum.
-
-    Scale shape: two map-side-combined count aggregates (each
-    collapsing to ≤ n_bins rows per partition before the exchange),
-    one ≤ n_bins-row full-outer join, and a ≤ n_bins-row total
-    broadcast back — corpus rows never shuffle, Python never runs.
-    At 100 TB this is two scans and constant-size state, the cheapest
-    possible monitoring query class. The joined bin frame PERSISTS
-    before its three consumers (totals, terms, psi_total): without
-    the persist Spark re-executes the full two-scan lineage once per
-    consumer — the lineage-reuse trap the collocations dissection
-    measured — turning two corpus scans into six.
-    """
-    if bin_width < 1:
-        raise ValueError("bin_width must be >= 1")
-    if n_bins < 2:
-        raise ValueError("n_bins must be >= 2")
-
-    def bins(df: DataFrame, out: str) -> DataFrame:
-        # integer division: `div` keeps the arithmetic exact
-        b = F.least(
-            F.expr(
-                f"greatest(cast({value_col} as bigint), 0L) div "
-                f"{int(bin_width)}"
-            ),
-            F.lit(int(n_bins - 1)),
-        )
-        return df.select(b.alias("bin")).groupBy("bin").agg(
-            F.count(F.lit(1)).alias(out)
-        )
-
-    from pyspark.storagelevel import StorageLevel
-
-    a, b = bins(df_a, "n_a"), bins(df_b, "n_b")
-    joined = (
-        a.join(b, "bin", "full_outer")
-        .select(
-            "bin",
-            F.coalesce("n_a", F.lit(0)).alias("n_a"),
-            F.coalesce("n_b", F.lit(0)).alias("n_b"),
-        )
-        .persist(StorageLevel.MEMORY_AND_DISK)
-    )
-    totals = joined.agg(
-        F.sum("n_a").alias("tot_a"), F.sum("n_b").alias("tot_b")
-    )
-    p_a = F.greatest(
-        F.col("n_a").cast("double") / F.col("tot_a"), F.lit(float(min_p))
-    )
-    p_b = F.greatest(
-        F.col("n_b").cast("double") / F.col("tot_b"), F.lit(float(min_p))
-    )
-    term = (
-        F.round((p_a - p_b) * F.log(p_a / p_b), 8).cast("decimal(18,8)")
-    )
-    withp = (
-        joined.crossJoin(F.broadcast(totals))
-        .select(
-            "bin",
-            "n_a",
-            "n_b",
-            F.round(p_a, 8).alias("p_a"),
-            F.round(p_b, 8).alias("p_b"),
-            term.alias("psi_term"),
-        )
-    )
-    total = withp.agg(
-        F.sum("psi_term").cast("double").alias("psi_total")
-    )
-    return (
-        withp.crossJoin(F.broadcast(total))
-        .select(
-            "bin",
-            "n_a",
-            "n_b",
-            "p_a",
-            "p_b",
-            F.col("psi_term").cast("double").alias("psi_term"),
-            F.round(F.col("psi_total"), 8).alias("psi_total"),
-        )
-        .orderBy("bin")
     )

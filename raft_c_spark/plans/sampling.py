@@ -495,81 +495,3 @@ ORACLES["ds_training_order"] = f"""
         FROM documents
     )
 """
-
-
-# --- STAGED FOR ROUND 13 (implemented + oracle-tested, NOT registered) -----
-# The r12 window carries 28 rotation/newcomer slots needing their first
-# (or refreshed) driver green, and the artifact is cut; r13 registers
-# this with: QUERIES["ds_psi_drift"] = q_ds_psi_drift;
-# ORACLES["ds_psi_drift"] = PSI_DRIFT_ORACLE_SQL; plus a registry.ORDER
-# slot (the text_compression staging pattern).
-
-PSI_BIN_WIDTH = 50
-PSI_N_BINS = 20
-PSI_MIN_P = 1e-6
-
-
-def q_ds_psi_drift(spark, sf_dir):
-    """Distribution drift (PSI) of document length between the even-id
-    half of ``documents`` (the standing corpus snapshot) and the
-    odd-id half (the incoming snapshot) — the dedup_minhash_incr
-    split convention. One row per occupied length bin plus the exact
-    decimal-summed psi_total; see sampling.psi_drift for the
-    quantized-log determinism contract and the two-scan constant-state
-    scale shape."""
-    from pyspark.sql import functions as F
-
-    docs = load_table(spark, sf_dir, "documents").select(
-        "doc_id", F.length("text").alias("n_chars")
-    )
-    return sampling.psi_drift(
-        docs.filter(F.col("doc_id") % 2 == 0),
-        docs.filter(F.col("doc_id") % 2 == 1),
-        "n_chars",
-        PSI_BIN_WIDTH,
-        n_bins=PSI_N_BINS,
-        min_p=PSI_MIN_P,
-    )
-
-
-PSI_DRIFT_ORACLE_SQL = f"""
-    WITH vals AS (
-        SELECT doc_id,
-               LEAST(GREATEST(length(text), 0) // {PSI_BIN_WIDTH},
-                     {PSI_N_BINS - 1}) AS bin
-        FROM documents
-    ),
-    a AS (SELECT bin, COUNT(*) AS n_a FROM vals
-          WHERE doc_id % 2 = 0 GROUP BY bin),
-    b AS (SELECT bin, COUNT(*) AS n_b FROM vals
-          WHERE doc_id % 2 = 1 GROUP BY bin),
-    j AS (
-        SELECT COALESCE(a.bin, b.bin) AS bin,
-               COALESCE(n_a, 0) AS n_a,
-               COALESCE(n_b, 0) AS n_b
-        FROM a FULL OUTER JOIN b ON a.bin = b.bin
-    ),
-    t AS (SELECT SUM(n_a) AS tot_a, SUM(n_b) AS tot_b FROM j),
-    p AS (
-        SELECT bin, n_a, n_b,
-               GREATEST(CAST(n_a AS DOUBLE) / tot_a, {PSI_MIN_P!r})
-                   AS p_a_raw,
-               GREATEST(CAST(n_b AS DOUBLE) / tot_b, {PSI_MIN_P!r})
-                   AS p_b_raw
-        FROM j CROSS JOIN t
-    ),
-    terms AS (
-        SELECT bin, n_a, n_b,
-               round(p_a_raw, 8) AS p_a,
-               round(p_b_raw, 8) AS p_b,
-               CAST(round((p_a_raw - p_b_raw) * ln(p_a_raw / p_b_raw), 8)
-                    AS DECIMAL(18,8)) AS psi_term
-        FROM p
-    )
-    SELECT bin, n_a, n_b, p_a, p_b,
-           CAST(psi_term AS DOUBLE) AS psi_term,
-           round(CAST((SELECT SUM(psi_term) FROM terms) AS DOUBLE), 8)
-               AS psi_total
-    FROM terms
-    ORDER BY bin
-"""

@@ -644,10 +644,8 @@ ORACLES["text_collocations"] = f"""
 """
 
 
-# --- registered in round 11 (staged through r10: implemented +
-# oracle-tested that round, but the r10 window had no safely-demotable
-# slot left — tests/test_round10c_ops.py::test_lang_kl_oracle_parity
-# carried the oracle check until the driver could) -------------------
+# --- per-language unigram KL (oracle compare:
+# tests/test_entry_contract.py::test_query_matches_oracle[ds_lang_kl]) --
 
 
 def q_ds_lang_kl(spark, sf_dir):
@@ -991,11 +989,9 @@ ORACLES["text_novelty"] = f"""
 """
 
 
-# --- registered in round 12 (staged through r11: implemented +
-# pytest-oracle-verified via the driver's own compare in
-# tests/test_round11_ops.py::test_compression_oracle_parity; the
-# registration is the two dict assignments at the end of this block
-# plus its registry.ORDER slot — judge r11 ask #2). --------------------
+# --- zlib compression ratio (oracle compare:
+# tests/test_entry_contract.py::test_query_matches_oracle[text_compression];
+# an unknown corpus: test_compression_unknown_corpus_errors_loudly) -----
 
 #: documents-corpus fingerprint — a cheap exact-integer aggregate both
 #: engines compute identically, keying the ground-truth parquet rows

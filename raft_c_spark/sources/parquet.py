@@ -23,7 +23,7 @@ served only while both still match:
 
 A path that cannot be stat'ed (a non-local URI) gets the plain
 inferred read and is never memoised. Readers that already pass a fixed
-schema (``sources/io.py``, ``sources/tsstore.py``) do not need this.
+schema (``sources/tsstore.py``) do not need this.
 """
 
 from __future__ import annotations

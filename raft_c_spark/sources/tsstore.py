@@ -514,11 +514,9 @@ class TimeSeriesStore:
         """The data files in ``series_dir``'s ``day=`` directories
         between ``t0``'s and ``t1``'s days when they are at most
         ``ONE_TASK_MAX_FILES`` files of at most ``ONE_TASK_MAX_BYTES``
-        in all, and of no more than ``spark.sql.files.maxPartitionBytes``
-        (the most Spark reads in one split); else None. Names starting
-        with '.' or '_' are skipped, as Spark's file index skips them."""
-        conf = self.spark._jsparkSession.sessionState().conf()
-        budget = min(ONE_TASK_MAX_BYTES, conf.filesMaxPartitionBytes())
+        in all; else None. Names starting with '.' or '_' are skipped,
+        as Spark's file index skips them."""
+        budget = ONE_TASK_MAX_BYTES
         files: list[str] = []
         lo = None if t0 is None else _day_of(t0)
         hi = None if t1 is None else _day_of(t1)

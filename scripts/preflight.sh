@@ -19,7 +19,7 @@ timeout -k 10 2670 python -m pytest tests/ -q --continue-on-collection-errors -p
 echo "== preflight: benchmark smoke tests =="
 python3 -m pytest perfbench -q -p no:cacheprovider
 
-echo "== preflight: full-registry driver simulation (judge r9 ask #2) =="
+echo "== preflight: full-registry driver simulation =="
 # every registered query vs its DuckDB oracle under the driver's exact
 # conditions, recorded as DRIVER_SIM_r{N}.json — the window order is
 # pre-validated by a committed artifact, not a round-notes sentence

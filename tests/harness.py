@@ -25,6 +25,19 @@ def same_bits(got, want) -> bool:
     )
 
 
+def spark_property(max_examples: int = 8):
+    """Hypothesis settings for a property whose every example runs Spark
+    jobs: few examples, no deadline, and the session ``spark`` fixture
+    allowed in a test function."""
+    from hypothesis import HealthCheck, settings
+
+    return settings(
+        max_examples=max_examples,
+        deadline=None,
+        suppress_health_check=[HealthCheck.function_scoped_fixture],
+    )
+
+
 def jobs_in(spark, fn):
     """(number of Spark jobs ``fn()`` started, its result)."""
     from raft_c_spark import trace

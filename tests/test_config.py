@@ -116,3 +116,18 @@ def test_no_env_switch_outside_allowlist():
                     found.setdefault(node.value, []).append(f"{rel}:{node.lineno}")
     assert "RAFT_C_SPARK_CACHE_DIR" in found  # the scan sees a known read
     assert {k: v for k, v in found.items() if k not in _ALLOWED_ENV} == {}
+
+
+_ROUND_TAG = re.compile(r"round\d|_r\d")
+
+
+def test_no_test_module_named_for_a_round():
+    """Tests live in the file of the operator family (or subsystem)
+    they check, never in a file named for the round that added them."""
+    tests = os.path.dirname(os.path.abspath(__file__))
+    tagged = sorted(
+        name
+        for name in os.listdir(tests)
+        if name.startswith("test_") and name.endswith(".py") and _ROUND_TAG.search(name[:-3])
+    )
+    assert tagged == []

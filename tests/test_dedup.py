@@ -1,14 +1,21 @@
 """Dedup operator quality tests: the hash-based scale paths (MinHash
 LSH, SimHash) are verified against the exact n-gram Jaccard baseline;
-exact dedup is verified on planted duplicates."""
+exact dedup on planted duplicates; substring spans, segment dedup and
+containment against pure-python replays."""
 
 from __future__ import annotations
 
+from collections import Counter
+
 import pytest
+from hypothesis import given
+from hypothesis import strategies as st
+from pyspark.sql import Row
 from pyspark.sql import functions as F
 
 from raft_c_spark.operators import dedup
 from raft_c_spark.sources.testdata import load_table
+from tests.harness import spark_property
 
 
 @pytest.fixture(scope="module")
@@ -353,6 +360,70 @@ def test_repeated_substring_spans_semantics(spark):
     assert len(spans[4]) >= 1
 
 
+def _brute_spans(texts: dict[int, str], L: int) -> dict[int, list]:
+    """Reference implementation of ExactSubstr spans: corpus-wide
+    L-gram counts over the normalized text, maximal merged intervals
+    of positions whose gram occurs >= 2 times anywhere."""
+    import re
+
+    norm = {
+        d: re.sub(r"\s+", " ", t).strip().lower() for d, t in texts.items()
+    }
+    counts: Counter = Counter()
+    for t in norm.values():
+        for i in range(len(t) - L + 1):
+            counts[t[i : i + L]] += 1
+    out: dict[int, list] = {}
+    for d, t in norm.items():
+        hits = [
+            i + 1
+            for i in range(len(t) - L + 1)
+            if counts[t[i : i + L]] >= 2
+        ]
+        spans = []
+        for p in hits:
+            if spans and p <= spans[-1][1]:
+                spans[-1][1] = max(spans[-1][1], p + L)
+                spans[-1][2] += 1
+            else:
+                spans.append([p, p + L, 1])
+        if spans:
+            out[d] = [tuple(s) for s in spans]
+    return out
+
+
+@spark_property()
+@given(
+    st.lists(
+        st.text(alphabet="abcxy ", min_size=0, max_size=120),
+        min_size=2,
+        max_size=8,
+    ),
+    st.integers(min_value=0, max_value=6),
+)
+def test_repeated_spans_match_bruteforce(spark, texts, clone_at):
+    """Random small-alphabet corpora (collision-rich) with one planted
+    clone: Spark spans == the pure-python replay exactly."""
+    if clone_at < len(texts) and len(texts) >= 2:
+        texts = list(texts)
+        texts[clone_at] = texts[0]
+    rows = [(i, t) for i, t in enumerate(texts)]
+    df = spark.createDataFrame(rows, "doc_id long, text string")
+    got: dict[int, list] = {}
+    for r in dedup.repeated_substring_spans(
+        df, "doc_id", "text", min_len=12
+    ).collect():
+        got.setdefault(r["doc_id"], []).append(
+            (r["span_start"], r["span_end"], r["n_grams"])
+        )
+    got = {d: sorted(v) for d, v in got.items()}
+    want = {
+        d: sorted(v)
+        for d, v in _brute_spans(dict(rows), 12).items()
+    }
+    assert got == want
+
+
 def test_minhash_above_cap_matches_broadcast(spark, sf_dir, monkeypatch):
     """Forcing the signature-broadcast cap to 0 must route the
     est-jaccard verify through the joined Arrow kernel and return the
@@ -525,6 +596,45 @@ class TestSegmentDedup:
 
         with pytest.raises(ValueError):
             segment_dedup(self._input(spark), "doc_id", "text", 0)
+
+
+def _brute_segment_dedup(texts: list[str], k: int):
+    """Reference replay: first corpus-wide occurrence per distinct
+    k-word segment, ordered by (doc, pos)."""
+    seen: set[str] = set()
+    out = {}
+    for doc, t in enumerate(texts):
+        toks = t.split()
+        segs = [
+            " ".join(toks[i : i + k]) for i in range(0, len(toks), k)
+        ]
+        kept = []
+        for s in segs:
+            if s not in seen:
+                seen.add(s)
+                kept.append(s)
+        out[doc] = (len(segs), len(kept), " ".join(kept))
+    return out
+
+
+@given(
+    texts=st.lists(
+        st.lists(st.sampled_from(["a", "bb", "ccc", "dd", "e"]), max_size=12).map(" ".join),
+        min_size=1,
+        max_size=8,
+    ),
+    k=st.integers(1, 4),
+)
+@spark_property()
+def test_segment_dedup_matches_brute_force(spark, texts, k):
+    df = spark.createDataFrame(
+        list(enumerate(texts)), "doc_id long, text string"
+    )
+    got = {
+        r["doc_id"]: (r["n_segments"], r["n_kept"], r["clean_text"])
+        for r in dedup.segment_dedup(df, "doc_id", "text", k).collect()
+    }
+    assert got == _brute_segment_dedup(texts, k)
 
 
 class TestCutRepeatedSpans:
@@ -721,3 +831,67 @@ class TestClusterImpact:
             F.count(F.lit(1)).alias("d"), F.sum("n_chars").alias("w")
         ).collect()[0]
         assert (tot["d"], tot["w"]) == (got["d"], got["w"])
+
+
+def test_containment_detects_quote_jaccard_misses(spark):
+    """A 6-word doc embedded verbatim in a 60-word doc: containment
+    (a→b) = 1.0 while Jaccard is far below any dedup threshold."""
+    short = "the quick brown fox jumps high"
+    long = (
+        "filler one two three four five six seven eight nine ten "
+        + short
+        + " more filler words follow here in a long tail that keeps going "
+        "with additional unique content padding the container document out"
+    )
+    df = spark.createDataFrame(
+        [Row(doc_id=1, text=short), Row(doc_id=2, text=long)]
+    )
+    pairs = dedup.ngram_containment_pairs(
+        df, "doc_id", "text", n=3, threshold=0.9, unit="word"
+    ).collect()
+    assert [(p["a"], p["b"]) for p in pairs] == [(1, 2)]
+    assert pairs[0]["containment"] == 1.0
+    jac = dedup.ngram_jaccard_pairs(
+        df, "doc_id", "text", n=3, threshold=0.5, strategy="prefix", unit="word"
+    )
+    assert jac.count() == 0
+
+
+def test_containment_exact_dup_is_bidirectional(spark):
+    t = "alpha beta gamma delta epsilon zeta eta theta"
+    df = spark.createDataFrame(
+        [Row(doc_id=1, text=t), Row(doc_id=2, text=t), Row(doc_id=3, text="totally different words here entirely unrelated")]
+    )
+    got = sorted(
+        (p["a"], p["b"])
+        for p in dedup.ngram_containment_pairs(
+            df, "doc_id", "text", n=3, threshold=0.9, unit="word"
+        ).collect()
+    )
+    assert got == [(1, 2), (2, 1)]
+
+
+def test_containment_matches_naive_python(spark, docs):
+    """Exactness: the prefix-probe candidate generation must equal the
+    all-pairs fold on a real corpus slice."""
+    sub = docs.filter(F.col("doc_id") < 120).select("doc_id", "text")
+    got = sorted(
+        (p["a"], p["b"], p["common"])
+        for p in dedup.ngram_containment_pairs(
+            sub, "doc_id", "text", n=5, threshold=0.8, unit="word"
+        ).collect()
+    )
+    rows = sub.collect()
+
+    def grams(t, n=5):
+        toks = " ".join(t.lower().split()).split(" ")
+        return {" ".join(toks[i : i + n]) for i in range(len(toks) - n + 1)}
+
+    sets = {r["doc_id"]: grams(r["text"]) for r in rows}
+    exp = sorted(
+        (a, b, len(sa & sets[b]))
+        for a, sa in sets.items()
+        for b in sets
+        if a != b and sa and len(sa & sets[b]) / len(sa) >= 0.8
+    )
+    assert got == exp

@@ -425,25 +425,6 @@ def test_insert_star_auto_timestamp(engine):
     assert all(t > 1_600_000_000 * 10**9 for t, _ in rows)
 
 
-def test_point_io_roundtrip(spark, tmp_path):
-    from raft_c_spark.sources.io import read_points, write_points
-
-    df = spark.createDataFrame(
-        [("s", 1_700_000_000_123_456_789, 1.5), ("t", 1_700_000_001_000_000_001, -2.25)],
-        "series string, timestamp long, value double",
-    )
-    for fmt in ("parquet", "orc", "csv", "json"):
-        path = str(tmp_path / f"pts_{fmt}")
-        write_points(df, path, fmt)
-        back = read_points(spark, path, fmt)
-        got = sorted((r["series"], r["timestamp"], r["value"]) for r in back.collect())
-        # exact ns round-trip in every format (no float corruption)
-        assert got == [
-            ("s", 1_700_000_000_123_456_789, 1.5),
-            ("t", 1_700_000_001_000_000_001, -2.25),
-        ], fmt
-
-
 def test_empty_insert_then_read(engine):
     """An empty batch must not poison the store directory. A ``points/``
     directory that holds only a ``_SUCCESS`` marker, and a series with

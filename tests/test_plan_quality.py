@@ -900,3 +900,106 @@ def test_lang_kl_single_consumer_aggregates(spark, sf_dir):
     assert "CartesianProduct" not in plan, plan
     assert "Python" not in plan, plan
     assert "partial_count" in plan, plan
+
+
+def test_vec_dim_memo_and_invalidation(spark, tmp_path):
+    from raft_c_spark.operators import similarity as S
+
+    p = str(tmp_path / "emb.parquet")
+    spark.createDataFrame(
+        [(1, [1.0, 2.0, 3.0]), (2, [4.0, 5.0, 6.0])],
+        "vec_id long, embedding array<double>",
+    ).coalesce(1).write.mode("overwrite").parquet(p)
+    df = spark.read.parquet(p)
+    assert S.vec_dim(df, "embedding") == 3
+    # memo hit returns the same value for a fresh frame over the files
+    assert S.vec_dim(spark.read.parquet(p), "embedding") == 3
+    # rewrite the path with a different dim: the (size, mtime) in the
+    # memo key must invalidate the entry
+    spark.createDataFrame(
+        [(1, [1.0, 2.0, 3.0, 4.0, 5.0])],
+        "vec_id long, embedding array<double>",
+    ).coalesce(1).write.mode("overwrite").parquet(p)
+    assert S.vec_dim(spark.read.parquet(p), "embedding") == 5
+    # frames with no input files (local relations) still probe
+    loc = spark.createDataFrame(
+        [(1, [1.0, 2.0])], "vec_id long, embedding array<double>"
+    )
+    assert S.vec_dim(loc, "embedding") == 2
+
+
+def test_vec_dim_plan_fingerprint_separates_derivations(spark, tmp_path):
+    from raft_c_spark.operators import similarity as S
+
+    p = str(tmp_path / "emb_fp.parquet")
+    spark.createDataFrame(
+        [(1, [1.0, 2.0, 3.0]), (2, [4.0, 5.0, 6.0])],
+        "vec_id long, embedding array<double>",
+    ).coalesce(1).write.mode("overwrite").parquet(p)
+    df = spark.read.parquet(p)
+    assert S.vec_dim(df, "embedding") == 3
+    # same files, same column NAME, different derivation → must probe,
+    # not hit the raw scan's memo entry
+    sliced = df.withColumn("embedding", F.slice("embedding", 1, 2))
+    assert S.vec_dim(sliced, "embedding") == 2
+    # and the raw scan's entry is not poisoned by the sliced probe
+    assert S.vec_dim(spark.read.parquet(p), "embedding") == 3
+
+
+def test_plan_gates_ignore_column_named_joinsample(spark, tmp_path):
+    from raft_c_spark.functions.metabound import rows_upper_bound
+    from raft_c_spark.operators.sampling import _expensive_lineage
+
+    p = str(tmp_path / "joinsample.parquet")
+    spark.createDataFrame(
+        [(1, 10), (2, 20)], "`JoinSample` long, `myJoinKey` long"
+    ).coalesce(1).write.mode("overwrite").parquet(p)
+    df = spark.read.parquet(p).where(F.col("JoinSample") > 0).select(
+        "JoinSample", F.col("myJoinKey").alias("GenerateUnionWindow")
+    )
+    # bare scan+filter+projection: not expensive, bound derivable
+    assert not _expensive_lineage(df)
+    assert rows_upper_bound(df) == 2
+    # a REAL join over the same columns still trips both gates
+    other = spark.read.parquet(p).select(F.col("JoinSample").alias("j2"))
+    joined = df.join(other, df.GenerateUnionWindow == other.j2, "inner")
+    assert _expensive_lineage(joined)
+    assert rows_upper_bound(joined) is None
+
+
+def test_plan_has_node_matches_node_families():
+    from raft_c_spark.functions.planshape import plan_has_node
+
+    plan = (
+        "Project [myJoinKey#3L, JoinSample#4]\n"
+        "+- Filter (JoinSample#4 > 0)\n"
+        "   +- Relation [myJoinKey#3L] parquet\n"
+    )
+    assert not plan_has_node(plan, ("Join", "Sample", "Generate"))
+    plan2 = (
+        "Join Inner, (k#1L = k#7L)\n"
+        ":- RepartitionByExpression [k#1L]\n"
+        ":  +- FlatMapGroupsInPandas [k#1L], f()\n"
+        "+- Sample 0.0, 0.5, false, 42\n"
+    )
+    assert plan_has_node(plan2, ("Join",))
+    assert plan_has_node(plan2, ("Repartition",))
+    assert plan_has_node(plan2, ("FlatMap",))
+    assert plan_has_node(plan2, ("Sample",))
+    assert not plan_has_node(plan2, ("Window",))
+
+
+def test_effective_splits_ignores_column_named_sortjoin(spark, tmp_path):
+    """A bare scan whose columns are named after plan nodes must still
+    take the footer row-group path (return a small split count), not
+    short-circuit to 'wide enough'."""
+    from raft_c_spark.operators.dedup import _effective_splits
+
+    p = str(tmp_path / "sortjoin.parquet")
+    spark.createDataFrame(
+        [(i, i * 2) for i in range(100)],
+        "`SortKey` long, `JoinRange` long",
+    ).coalesce(1).write.mode("overwrite").parquet(p)
+    df = spark.read.parquet(p)
+    # single file, single row group → 1 effective split, NOT 1<<30
+    assert _effective_splits(df) == 1

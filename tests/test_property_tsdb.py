@@ -17,10 +17,11 @@ invariants:
 from __future__ import annotations
 
 import pytest
-from hypothesis import HealthCheck, given, settings
+from hypothesis import given
 from hypothesis import strategies as st
 
 from raft_c_spark.operators import tsdb
+from tests.harness import spark_property
 
 BASE = 1_700_000_000 * 10**9
 
@@ -35,12 +36,6 @@ point_lists = st.lists(
     max_size=40,
 )
 
-prop_settings = settings(
-    max_examples=12,
-    deadline=None,
-    suppress_health_check=[HealthCheck.function_scoped_fixture],
-)
-
 
 def _df(spark, pts):
     return spark.createDataFrame(
@@ -50,7 +45,7 @@ def _df(spark, pts):
 
 
 @given(pts=point_lists)
-@prop_settings
+@spark_property(12)
 def test_scan_is_sorted_and_complete(spark, pts):
     rows = tsdb.ts_scan(_df(spark, pts)).collect()
     got = [(r["timestamp"], r["value"]) for r in rows]
@@ -59,7 +54,7 @@ def test_scan_is_sorted_and_complete(spark, pts):
 
 
 @given(pts=point_lists, data=st.data())
-@prop_settings
+@spark_property(12)
 def test_range_inclusive_multiset(spark, pts, data):
     ts_values = sorted(BASE + o for o, _ in pts)
     t0 = data.draw(st.sampled_from(ts_values))
@@ -73,7 +68,7 @@ def test_range_inclusive_multiset(spark, pts, data):
 
 
 @given(pts=point_lists, seed=st.integers(0, 2**16))
-@prop_settings
+@spark_property(12)
 def test_insertion_order_irrelevant(spark, pts, seed):
     """Shuffled (OOO) arrival produces identical scan results — the
     store-side analog of timeseries_test.c:310-400."""
@@ -92,7 +87,7 @@ def test_insertion_order_irrelevant(spark, pts, seed):
     pts=point_lists,
     interval=st.sampled_from([10**3, 10**6, 10**9, 3600 * 10**9]),
 )
-@prop_settings
+@spark_property(12)
 def test_sample_by_matches_reference_fold(spark, pts, interval):
     rows = tsdb.sample_by(_df(spark, pts), interval).collect()
     got = {r["bucket_ts"]: r["avg_value"] for r in rows}
@@ -110,7 +105,7 @@ def test_sample_by_matches_reference_fold(spark, pts, interval):
 
 
 @given(pts=point_lists)
-@prop_settings
+@spark_property(12)
 def test_min_max_are_true_extremes(spark, pts):
     df = _df(spark, pts)
     lo = tsdb.ts_min(df, group_by_series=False).collect()[0]
@@ -124,7 +119,7 @@ def test_min_max_are_true_extremes(spark, pts):
 
 
 @given(pts=point_lists)
-@prop_settings
+@spark_property(12)
 def test_sample_by_fill_consistent_with_sample_by(spark, pts):
     """Fill properties for any input: non-filled rows equal sample_by
     exactly; filled rows carry the most recent earlier bucket's value;

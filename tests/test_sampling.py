@@ -1,20 +1,29 @@
 """Deterministic sampling + dedup clustering (training-pipeline ops):
-hash-Bernoulli mixtures, per-stratum top-k, sequence packing,
-connected components — including hypothesis properties (nesting over
-arbitrary rate pairs, packing vs the sequential fold over arbitrary
-length lists)."""
+hash-Bernoulli and temperature mixtures, epoch upsampling, per-stratum
+top-k, sequence packing, importance weights, training order, connected
+components — including hypothesis properties (nesting over arbitrary
+rate pairs, packing vs the sequential fold over arbitrary length lists,
+pure-python replays on random small inputs)."""
 
 from __future__ import annotations
 
+import hashlib
+import math
+from collections import Counter
+
 import pytest
-from hypothesis import HealthCheck, given, settings
+from hypothesis import given
 from hypothesis import strategies as st
+from pyspark.sql import Row
 from pyspark.sql import functions as F
 
 from raft_c_spark.operators import dedup, sampling
 from raft_c_spark.sources.testdata import load_table
+from tests.harness import spark_property
 
 SF_DIR = "/root/testdata/sf0.001"
+
+WORDS = ["alpha", "beta", "gamma", "delta", "omega", "zz9"]
 
 
 @pytest.fixture(scope="module")
@@ -99,11 +108,7 @@ def test_pack_sequences_bins_are_contiguous(docs):
     assert bins[-1] <= total // 4096
 
 
-@settings(
-    max_examples=8,
-    deadline=None,
-    suppress_health_check=[HealthCheck.function_scoped_fixture],
-)
+@spark_property()
 @given(
     f1=st.floats(min_value=0.0, max_value=1.0),
     f2=st.floats(min_value=0.0, max_value=1.0),
@@ -117,11 +122,7 @@ def test_hash_sample_nested_property(spark, docs, f1, f2):
     assert a <= b
 
 
-@settings(
-    max_examples=10,
-    deadline=None,
-    suppress_health_check=[HealthCheck.function_scoped_fixture],
-)
+@spark_property(10)
 @given(
     lens=st.lists(st.integers(min_value=1, max_value=500), min_size=1, max_size=60),
     budget=st.integers(min_value=1, max_value=700),
@@ -140,6 +141,51 @@ def test_pack_sequences_property(spark, lens, budget):
         for r in sampling.pack_sequences(df, "doc", "toks", budget).collect()
     }
     assert got == expect
+
+
+def test_pack_sequences_expensive_lineage_identical(spark):
+    """pack_sequences must produce the identical assignment whether
+    its input is a bare local frame (no pre-checkpoint) or an
+    aggregate (expensive lineage → pre-materialized once): the pack
+    result is a pure function of (id, length)."""
+    from raft_c_spark.operators.sampling import (
+        _expensive_lineage,
+        pack_sequences,
+    )
+
+    rows = [(i, 100 + (i * 37) % 400) for i in range(200)]
+    base = spark.createDataFrame(rows, "doc_id long, n_chars long")
+    # an aggregate wrapper that is a row-for-row identity
+    agg = base.groupBy("doc_id").agg(F.max("n_chars").alias("n_chars"))
+    assert not _expensive_lineage(base)
+    assert _expensive_lineage(agg)
+
+    def packed(frame):
+        return sorted(
+            (r["doc_id"], r["seq_start"], r["bin"], r["bin_offset"])
+            for r in pack_sequences(frame, "doc_id", "n_chars", 512).collect()
+        )
+
+    got_plain, got_agg = packed(base), packed(agg)
+    assert got_plain == got_agg
+    # ground truth: windowed cumsum in id order
+    acc, want = 0, []
+    for i, n in rows:
+        want.append((i, acc, acc // 512, acc % 512))
+        acc += n
+    assert got_plain == want
+
+
+@pytest.mark.parametrize("shape", ["join", "mapInPandas"])
+def test_expensive_lineage_detects_kernels(spark, shape):
+    from raft_c_spark.operators.sampling import _expensive_lineage
+
+    a = spark.createDataFrame([(1, 2)], "k long, v long")
+    if shape == "join":
+        frame = a.join(a.withColumnRenamed("v", "w"), "k")
+    else:
+        frame = a.mapInPandas(lambda it: it, "k long, v long")
+    assert _expensive_lineage(frame)
 
 
 def test_connected_components_vs_union_find(spark):
@@ -434,3 +480,300 @@ def test_dsir_importance_scores_tokenless_docs_neutral(spark):
            for r in s.importance_weights(df, "doc_id", "text", "t").collect()}
     assert set(got) == {1, 2, 3, 4}
     assert got[3] == (0, 0.0) and got[4] == (0, 0.0)
+
+
+def _brute_dsir(rows, B=4096):
+    occ = []
+    for doc, text, tgt in rows:
+        toks = []
+        w = ""
+        for ch in text.lower():
+            if ch.isalnum() and ord(ch) < 128:
+                w += ch
+            else:
+                if w:
+                    toks.append(w)
+                w = ""
+        if w:
+            toks.append(w)
+        grams = toks + [
+            f"{a} {b}" for a, b in zip(toks, toks[1:])
+        ]
+        for g in grams:
+            h = int(hashlib.md5(g.encode()).hexdigest()[:8], 16) % B
+            occ.append((doc, tgt, h))
+    c_raw: Counter = Counter(b for _, _, b in occ)
+    c_tgt: Counter = Counter(b for _, t, b in occ if t)
+    n_raw, n_tgt = sum(c_raw.values()), sum(c_tgt.values())
+    lr = {
+        b: round(
+            math.log((c_tgt.get(b, 0) + 1) / (n_tgt + B))
+            - math.log((c_raw[b] + 1) / (n_raw + B)),
+            8,
+        )
+        for b in c_raw
+    }
+    out = {}
+    for doc, _, b in occ:
+        n, s = out.get(doc, (0, 0.0))
+        out[doc] = (n + 1, round(s + lr[b], 10))
+    for doc, text, _ in rows:
+        if doc not in out:
+            out[doc] = (0, 0.0)
+    return out
+
+
+@spark_property()
+@given(
+    st.lists(
+        st.tuples(
+            st.lists(st.sampled_from(WORDS), min_size=0, max_size=6),
+            st.booleans(),
+        ),
+        min_size=2,
+        max_size=10,
+    )
+)
+def test_dsir_weights_match_bruteforce(spark, docs):
+    """importance_weights == a pure-python replay (md5 buckets,
+    add-one smoothing, 8-decimal rounding) on random tiny corpora —
+    including docs with zero tokens (neutral weight)."""
+    rows = [(i, " ".join(ws), t) for i, (ws, t) in enumerate(docs)]
+    df = spark.createDataFrame(rows, "doc_id long, text string, t boolean")
+    got = {
+        r["doc_id"]: (r["n_feats"], round(r["log_weight"], 6))
+        for r in sampling.importance_weights(df, "doc_id", "text", "t").collect()
+    }
+    want = {
+        d: (n, round(v, 6)) for d, (n, v) in _brute_dsir(rows).items()
+    }
+    assert got == want
+
+
+@spark_property()
+@given(
+    st.lists(
+        st.floats(min_value=-5, max_value=5, allow_nan=False),
+        min_size=5,
+        max_size=30,
+    ),
+    st.floats(min_value=-100, max_value=100, allow_nan=False),
+)
+def test_gumbel_topk_shift_invariant(spark, weights, shift):
+    """Softmax is shift-invariant, so adding any constant to every
+    weight must select the SAME rows (keys all move by the constant;
+    order and ties preserved up to the 1e-8 rounding grid)."""
+    rows = [(i, float(w)) for i, w in enumerate(weights)]
+    df = spark.createDataFrame(rows, "doc_id long, w double")
+    k = max(1, len(rows) // 3)
+    a = [r["doc_id"] for r in sampling.gumbel_topk(df, "doc_id", "w", k).collect()]
+    b = [
+        r["doc_id"]
+        for r in sampling.gumbel_topk(
+            df.withColumn("w", F.col("w") + float(shift)), "doc_id", "w", k
+        ).collect()
+    ]
+    assert a == b
+
+
+@given(
+    ids=st.lists(
+        st.integers(min_value=0, max_value=10_000),
+        min_size=1,
+        max_size=40,
+        unique=True,
+    ),
+    rows=st.integers(1, 7),
+)
+@spark_property()
+def test_training_order_matches_brute_force(spark, ids, rows):
+    """The md5 permutation + shard cut must equal the pure-python
+    replay: sort ids by md5(str(id)), shard = rank // rows_per_shard —
+    and be independent of input partitioning."""
+    df = spark.createDataFrame([(i,) for i in ids], "doc_id long")
+    got = {
+        r["doc_id"]: (r["shuffle_key"], r["shard"])
+        for r in sampling.training_order(df.repartition(5), "doc_id", rows).collect()
+    }
+    order = sorted(ids, key=lambda i: hashlib.md5(str(i).encode()).hexdigest())
+    want = {
+        i: (hashlib.md5(str(i).encode()).hexdigest(), rank // rows)
+        for rank, i in enumerate(order)
+    }
+    assert got == want
+
+
+def test_temperature_partition_stable_and_deterministic(spark, docs):
+    a = {
+        r["doc_id"]
+        for r in sampling.temperature_sample(docs, "doc_id", "source").collect()
+    }
+    b = {
+        r["doc_id"]
+        for r in sampling.temperature_sample(
+            docs.repartition(7), "doc_id", "source"
+        ).collect()
+    }
+    assert a == b and a
+
+
+def test_temperature_alpha1_is_flat_budget(spark, docs):
+    """α=1 ⇒ every stratum keeps the same rate = budget_frac: the
+    per-stratum thresholds must all equal floor(budget_frac·4096)."""
+    out = sampling.temperature_sample(
+        docs, "doc_id", "source", alpha=1.0, budget_frac=0.5
+    )
+    thrs = {r["thr"] for r in out.select("thr").distinct().collect()}
+    assert thrs == {2048}
+
+
+def test_temperature_upweights_tail(spark):
+    """α=0.5 keep-rates must be monotone DECREASING in stratum size
+    (that is the point of temperature sampling); a 10-row stratum next
+    to a 1000-row one should keep rate 1 vs ~budgeted."""
+    rows = [Row(id=i, s="big") for i in range(1000)] + [
+        Row(id=1000 + i, s="small") for i in range(10)
+    ]
+    df = spark.createDataFrame(rows)
+    out = sampling.temperature_sample(
+        df, "id", "s", alpha=0.5, budget_frac=0.5
+    )
+    thr = {
+        r["s"]: r["thr"]
+        for r in out.select("s", "thr").distinct().collect()
+    }
+    # expected: w_big=sqrt(1000), w_small=sqrt(10); budget=505
+    w_big, w_small = math.sqrt(1000.0), math.sqrt(10.0)
+    tot = w_big + w_small
+    f_big = min(1.0, 505.0 * w_big / (tot * 1000.0))
+    f_small = min(1.0, 505.0 * w_small / (tot * 10.0))
+    assert f_small == 1.0 and thr["small"] == 4096
+    assert thr["big"] == math.floor(f_big * 4096)
+
+
+def test_temperature_budget_roughly_met(spark, docs):
+    n = docs.count()
+    k = sampling.temperature_sample(
+        docs, "doc_id", "source", budget_frac=0.5
+    ).count()
+    assert abs(k / n - 0.5) < 0.15
+
+
+def test_temperature_nested_in_budget(spark, docs):
+    """Raising the budget keeps previously selected rows (hash-
+    Bernoulli nesting — reproducible mixture scale-ups)."""
+    lo = {
+        r["doc_id"]
+        for r in sampling.temperature_sample(
+            docs, "doc_id", "source", budget_frac=0.3
+        ).collect()
+    }
+    hi = {
+        r["doc_id"]
+        for r in sampling.temperature_sample(
+            docs, "doc_id", "source", budget_frac=0.7
+        ).collect()
+    }
+    assert lo <= hi
+
+
+def test_temperature_tiny_rate_clamps_not_drops(spark):
+    """A stratum whose keep-rate floors below the 1/4096
+    grid must NOT silently contribute zero rows when its exact
+    expected draw count n_s >= 1 — the threshold clamps to the
+    minimum grid cell instead (thr = 1 > 0)."""
+    # 20k-row stratum, tiny budget: rate ≈ 0.0001 < 1/4096 but
+    # n_s = rate·20000 ≈ 2 ≥ 1
+    rows = [Row(id=i, s="big") for i in range(20_000)]
+    out = sampling.temperature_sample(
+        spark.createDataFrame(rows), "id", "s",
+        alpha=1.0, budget_frac=0.0001,
+    )
+    thr = out.select("thr").distinct().collect()
+    # clamped to 1, and the selection is non-empty with high
+    # probability (expected ≈ 20000/4096 ≈ 5 rows at thr=1)
+    assert [r["thr"] for r in thr] == [1]
+    assert out.count() > 0
+
+
+def test_epoch_repeats_sub_epoch_stratum_not_dropped(spark):
+    """Same clamp on epoch_repeats' fractional part: a base=0 stratum
+    whose fraction floors to 0 keeps frac_thr = 1 when it still owes
+    n_s >= 1 expected draws."""
+    rows = [Row(id=i, s="big") for i in range(20_000)] + [
+        Row(id=100_000 + i, s="tiny") for i in range(4)
+    ]
+    rep = sampling.epoch_repeats(
+        spark.createDataFrame(rows), "id", "s",
+        alpha=0.0, budget_epochs=0.0001,
+    )
+    big = rep.filter("s = 'big'").select("base_epochs", "frac_thr").distinct().collect()
+    assert [(r["base_epochs"], r["frac_thr"]) for r in big] == [(0, 1)]
+
+
+def test_epoch_upsample_matches_temperature_when_sub_epoch(spark, docs):
+    """budget_epochs < 1 degenerates to temperature_sample exactly:
+    base 0 everywhere, and the +1 fraction is the SAME md5 selection
+    (same key, same grid) as the keep set."""
+    kept = {
+        r["doc_id"]
+        for r in sampling.temperature_sample(
+            docs, "doc_id", "source", budget_frac=0.5
+        ).collect()
+    }
+    rep = sampling.epoch_repeats(
+        docs, "doc_id", "source", budget_epochs=0.5
+    ).collect()
+    assert all(r["base_epochs"] == 0 for r in rep)
+    assert {r["doc_id"] for r in rep if r["n_repeats"] == 1} == kept
+
+
+def test_epoch_upsample_total_near_budget(spark, docs):
+    n = docs.count()
+    rep = sampling.epoch_repeats(
+        docs, "doc_id", "source", budget_epochs=1.5
+    )
+    total = rep.agg(F.sum("n_repeats")).first()[0]
+    assert abs(total / (1.5 * n) - 1.0) < 0.1
+
+
+def test_epoch_upsample_tail_gets_more_epochs(spark):
+    """α=0.5: the small stratum's epoch target must exceed the big
+    stratum's (that is the upsampling direction)."""
+    rows = [Row(id=i, s="big") for i in range(1000)] + [
+        Row(id=1000 + i, s="small") for i in range(10)
+    ]
+    df = spark.createDataFrame(rows)
+    out = sampling.epoch_repeats(df, "id", "s", alpha=0.5, budget_epochs=1.0)
+    eff = {
+        r["s"]: r["base_epochs"] + r["frac_thr"] / 4096.0
+        for r in out.select("s", "base_epochs", "frac_thr")
+        .distinct()
+        .collect()
+    }
+    assert eff["small"] > 1.0 > eff["big"]
+
+
+@spark_property(10)
+@given(
+    b1=st.floats(min_value=0.05, max_value=3.0),
+    b2=st.floats(min_value=0.05, max_value=3.0),
+)
+def test_epoch_repeats_monotone_in_budget(spark, docs, b1, b2):
+    """For ANY budget pair, every row's n_repeats is monotone
+    non-decreasing in the budget (floor + nested hash carry are both
+    monotone) — raising a mixture's epoch budget never drops data."""
+    lo, hi = sorted([b1, b2])
+    a = {
+        r["doc_id"]: r["n_repeats"]
+        for r in sampling.epoch_repeats(
+            docs, "doc_id", "source", budget_epochs=lo
+        ).collect()
+    }
+    b = {
+        r["doc_id"]: r["n_repeats"]
+        for r in sampling.epoch_repeats(
+            docs, "doc_id", "source", budget_epochs=hi
+        ).collect()
+    }
+    assert all(b[k] >= v for k, v in a.items())

@@ -1,14 +1,17 @@
 """Core TSDB operator tests — semantics mirrored from the reference's
 storage suite (tests/timeseries_test.c, SURVEY §5) plus DuckDB oracle
-cross-checks on the driver's events table."""
+cross-checks on the driver's events table; delta/rate and LTTB
+downsampling against pure-python replays."""
 
 from __future__ import annotations
 
 import pytest
+from hypothesis import given
+from hypothesis import strategies as st
 
 from raft_c_spark.operators import tsdb
 from raft_c_spark.sources.testdata import events_as_points
-from tests.harness import assert_matches_oracle, df_rows, same_bits
+from tests.harness import assert_matches_oracle, df_rows, same_bits, spark_property
 
 NS = "(epoch_ns(ts) - epoch_ns(ts) % 1000)"  # µs-truncated ns, oracle side
 POINTS = (
@@ -406,3 +409,204 @@ def test_sample_by_fill_grid_guard_on_driver(spark):
     table, _ = _twins(spark, [("s", 5, 1.0), ("s", 40_000_000_005, 7.0)])
     with pytest.raises(ValueError, match="grid exceeds 10000000 buckets for series s"):
         tsdb.sample_by_fill(table, 10, fill="prev")
+
+
+_points_strategy = st.lists(
+    st.tuples(
+        st.sampled_from(["s1", "s2"]),
+        # negative timestamps included: the bucket expression must
+        # floor (pmod), not truncate toward zero (%)
+        st.integers(-10_000, 10_000),
+        st.floats(-100, 100, allow_nan=False, width=32),
+    ),
+    min_size=1,
+    max_size=40,
+)
+
+
+def _brute_delta_rate(rows, interval):
+    # Python % IS floor-mod — the reference semantics the operator's
+    # pmod must match on negative timestamps
+    buckets: dict[tuple[str, int], list[tuple[int, float]]] = {}
+    for s, t, v in rows:
+        buckets.setdefault((s, t - t % interval), []).append((t, v))
+    out = {}
+    for key, pts in buckets.items():
+        first = min(pts)
+        last = max(pts)
+        delta = last[1] - first[1]
+        span = last[0] - first[0]
+        rate = (
+            round(delta * 1_000_000_000.0 / span, 8) if span > 0 else None
+        )
+        out[key] = (len(pts), round(delta, 8), rate)
+    return out
+
+
+@given(rows=_points_strategy, interval=st.sampled_from([7, 100, 1000]))
+@spark_property()
+def test_delta_rate_matches_brute(spark, rows, interval):
+    df = spark.createDataFrame(
+        [(s, t, float(v)) for s, t, v in rows],
+        "series string, timestamp long, value double",
+    )
+    got = {
+        (r["series"], r["bucket_ts"]): (
+            r["n_points"],
+            r["delta"],
+            r["rate_per_s"],
+        )
+        for r in tsdb.delta_rate(df, interval).collect()
+    }
+    want = _brute_delta_rate(rows, interval)
+    assert set(got) == set(want)
+    for k in want:
+        assert got[k][0] == want[k][0]
+        assert got[k][1] == pytest.approx(want[k][1], abs=1e-6)
+        if want[k][2] is None:
+            assert got[k][2] is None
+        else:
+            assert got[k][2] == pytest.approx(want[k][2], rel=1e-6)
+
+
+def test_delta_rate_single_point_bucket_null_rate(spark):
+    df = spark.createDataFrame(
+        [("s", 5, 1.5), ("s", 105, 2.0), ("s", 110, 3.5)],
+        "series string, timestamp long, value double",
+    )
+    rows = {
+        r["bucket_ts"]: r for r in tsdb.delta_rate(df, 100).collect()
+    }
+    assert rows[0]["n_points"] == 1
+    assert rows[0]["delta"] == 0.0
+    assert rows[0]["rate_per_s"] is None
+    assert rows[100]["n_points"] == 2
+    assert rows[100]["delta"] == pytest.approx(1.5)
+    assert rows[100]["rate_per_s"] == pytest.approx(1.5 * 1e9 / 5)
+
+
+def test_delta_rate_duplicate_ns_tiebreak_by_value(spark):
+    # identical-ns points (DP_INSERT model): struct(ts, value) min/max
+    # resolves by value — first=(10, 1.0), last=(10, 9.0), span 0
+    df = spark.createDataFrame(
+        [("s", 10, 9.0), ("s", 10, 1.0)],
+        "series string, timestamp long, value double",
+    )
+    r = tsdb.delta_rate(df, 100).collect()[0]
+    assert r["delta"] == pytest.approx(8.0)
+    assert r["rate_per_s"] is None
+
+
+def test_delta_rate_negative_ts_floor_bucket(spark):
+    # -50 and 50 lie in DIFFERENT buckets under the floor contract
+    # (a truncating % would merge both into bucket 0)
+    df = spark.createDataFrame(
+        [("s", -50, 0.0), ("s", 50, 10.0)],
+        "series string, timestamp long, value double",
+    )
+    rows = {r["bucket_ts"]: r for r in tsdb.delta_rate(df, 100).collect()}
+    assert set(rows) == {-100, 0}
+    assert rows[-100]["n_points"] == 1 and rows[0]["n_points"] == 1
+
+
+def test_delta_rate_validates_interval(spark):
+    df = spark.createDataFrame(
+        [("s", 1, 1.0)], "series string, timestamp long, value double"
+    )
+    with pytest.raises(ValueError):
+        tsdb.delta_rate(df, 0)
+
+
+def _lttb(spark, rows, interval):
+    df = spark.createDataFrame(
+        rows, "series string, timestamp long, value double"
+    )
+    return {
+        (r["series"], r["bucket_ts"]): (r["timestamp"], r["value"])
+        for r in tsdb.lttb_downsample(df, interval).collect()
+    }
+
+
+def test_lttb_keeps_endpoints_and_max_area(spark):
+    # series s: buckets [0,10), [10,20), [20,30); the middle bucket
+    # holds a spike at ts=15 that plain averaging would erase
+    rows = [
+        ("s", 1, 1.0), ("s", 5, 1.0),          # first bucket
+        ("s", 11, 1.0), ("s", 15, 9.0), ("s", 18, 1.0),  # spike
+        ("s", 22, 1.0), ("s", 29, 2.0),        # last bucket
+    ]
+    got = _lttb(spark, rows, 10)
+    assert got[("s", 0)] == (1, 1.0)     # first bucket -> first point
+    assert got[("s", 20)] == (29, 2.0)   # last bucket -> last point
+    assert got[("s", 10)] == (15, 9.0)   # interior -> the spike
+
+
+def test_lttb_flat_series_tiebreak_earliest(spark):
+    # all-equal values: every interior area is 0 -> earliest ts wins
+    rows = [("s", t, 5.0) for t in (1, 3, 11, 14, 17, 21, 25)]
+    got = _lttb(spark, rows, 10)
+    assert got[("s", 10)] == (11, 5.0)
+
+
+def test_lttb_sparse_buckets_use_nonempty_neighbors(spark):
+    # bucket 20 is empty; bucket 30's prev anchor must be bucket
+    # 10's LAST point (not a phantom bucket-20 anchor), and bucket 10
+    # is interior between 0 and 30
+    rows = [
+        ("s", 1, 0.0), ("s", 12, 4.0), ("s", 15, 0.0),
+        ("s", 31, 0.0), ("s", 35, 7.0), ("s", 41, 0.0),
+    ]
+    got = _lttb(spark, rows, 10)
+    assert set(got) == {("s", 0), ("s", 10), ("s", 30), ("s", 40)}
+    assert got[("s", 10)] == (12, 4.0)   # the bump survives
+    assert got[("s", 40)] == (41, 0.0)   # last bucket -> last point
+
+
+def test_lttb_single_bucket_series(spark):
+    rows = [("a", 3, 1.0), ("a", 7, 2.0)]
+    got = _lttb(spark, rows, 10)
+    assert got == {("a", 0): (3, 1.0)}  # boundary rule: first point
+
+
+def test_lttb_plan_quality(spark, sf_dir):
+    """The point stream must never be windowed — the only Window runs
+    over the bucket-sized boundary frame, the anchor join-back is
+    measured-cap BROADCAST here (sf anchors are tiny, far under
+    ``_BROADCAST_MAX_BANDED_ROWS``), and selection is a hash
+    aggregate. The over-cap tier is pinned separately by
+    ``test_lttb_fallback_plan_and_bit_identity`` — the broadcast is a
+    counted decision, never a Catalyst size guess."""
+    from raft_c_spark.plans.parity import q_ts_lttb
+
+    plan = q_ts_lttb(
+        spark, sf_dir
+    )._jdf.queryExecution().executedPlan().toString()
+    assert "BroadcastHashJoin" in plan, plan
+    assert "ShuffledHashJoin" not in plan, plan
+    assert "CartesianProduct" not in plan, plan
+    assert "Python" not in plan, plan
+    # the one Window must consume the bucket aggregate, not raw points:
+    # its child plan segment carries the partial-aggregated bounds
+    wins = plan.count("Window")
+    assert wins >= 1, plan
+
+
+def test_lttb_fallback_plan_and_bit_identity(spark, sf_dir, monkeypatch):
+    """Forcing the anchor count over the broadcast cap must (a) switch
+    the join-back to the shuffle_hash-hinted equi-join — no broadcast
+    of the output-sized anchor frame, no sort-merge — and (b) produce
+    bit-identical rows to the broadcast tier (the dedup_exact
+    fallback-identity template)."""
+    from raft_c_spark.operators import dedup
+    from raft_c_spark.plans.parity import q_ts_lttb
+
+    base = q_ts_lttb(spark, sf_dir)
+    expect = [tuple(r) for r in base.collect()]
+
+    monkeypatch.setattr(dedup, "_BROADCAST_MAX_BANDED_ROWS", 0)
+    forced = q_ts_lttb(spark, sf_dir)
+    plan = forced._jdf.queryExecution().executedPlan().toString()
+    assert "ShuffledHashJoin" in plan, plan
+    assert "BroadcastHashJoin" not in plan, plan
+    assert "SortMergeJoin" not in plan, plan
+    assert [tuple(r) for r in forced.collect()] == expect

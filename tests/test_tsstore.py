@@ -202,13 +202,11 @@ def _plan(df) -> str:
     return df._jdf.queryExecution().executedPlan().toString()
 
 
-def test_small_series_select_runs_no_job(spark, tmp_path):
-    """A SELECT over a series whose pruned files are few and small reads
-    them on the driver and answers there: every statement kind collects
-    without a Spark job and returns the model's rows in the model's
-    order, and used as a DataFrame the answer is a local relation, with
-    no parquet scan and no exchange in its plan."""
-    e, pts = _small_series(spark, tmp_path)
+def _assert_driver_answers(spark, e, pts):
+    """Every ``_select_cases`` statement collects without a Spark job
+    and returns the model's rows in the model's order, and used as a
+    DataFrame the answer is a local relation, with no parquet scan and
+    no exchange in its plan."""
     for stmt, want, _ in _select_cases(pts):
         df = e.execute(stmt)
         n, rows = jobs_in(spark, df.collect)
@@ -219,35 +217,46 @@ def test_small_series_select_runs_no_job(spark, tmp_path):
         assert "LocalTableScan" in plan and "FileScan" not in plan, (stmt, plan)
 
 
-@pytest.mark.parametrize("cap", ["maxPartitionBytes", "files", "bytes"])
+def test_small_series_select_runs_no_job(spark, tmp_path):
+    """A SELECT over a series whose pruned files are few and small reads
+    them on the driver and answers there, whatever its kind."""
+    _assert_driver_answers(spark, *_small_series(spark, tmp_path))
+
+
+def test_split_size_conf_keeps_driver_answer(spark, tmp_path):
+    """``spark.sql.files.maxPartitionBytes`` sizes Spark's file splits;
+    a driver-side read has none, so at 1 KiB, below the small series'
+    files, every statement is still answered on the driver."""
+    e, pts = _small_series(spark, tmp_path)
+    key = "spark.sql.files.maxPartitionBytes"
+    old = spark.conf.get(key)
+    spark.conf.set(key, "1k")
+    try:
+        _assert_driver_answers(spark, e, pts)
+    finally:
+        spark.conf.set(key, old)
+
+
+@pytest.mark.parametrize("cap", ["files", "bytes"])
 def test_large_scan_keeps_exchanges(spark, tmp_path, monkeypatch, cap):
     """A read over more files or bytes than one task takes — forced
-    here by lowering ``spark.sql.files.maxPartitionBytes`` to 1 KiB, or
-    ``ONE_TASK_MAX_FILES`` or ``ONE_TASK_MAX_BYTES`` to 1, below the
-    small series' 2–3 files of about 1 KiB each per day — keeps
-    Spark's file splits: point results keep the global sort's range
-    exchange, aggregates their exchange, and every statement returns
-    the same rows as the one-partition plan."""
+    here by lowering ``ONE_TASK_MAX_FILES`` or ``ONE_TASK_MAX_BYTES``
+    to 1, below the small series' 2–3 files of about 1 KiB each per
+    day — keeps Spark's file splits: point results keep the global
+    sort's range exchange, aggregates their exchange, and every
+    statement returns the same rows as the one-partition plan."""
     e, pts = _small_series(spark, tmp_path)
     cases = _select_cases(pts)
     small = [[tuple(r) for r in e.execute(stmt).collect()] for stmt, _, _ in cases]
-    key = "spark.sql.files.maxPartitionBytes"
-    old = spark.conf.get(key)
-    if cap == "maxPartitionBytes":
-        spark.conf.set(key, "1k")
-    else:
-        monkeypatch.setattr(tsstore, f"ONE_TASK_MAX_{cap.upper()}", 1)
-    try:
-        for (stmt, want, exchange), rows in zip(cases, small):
-            df = e.execute(stmt)
-            plan = _plan(df)
-            assert "Coalesce" not in plan, stmt
-            if exchange is not None:
-                assert exchange in plan, (stmt, plan)
-            assert [tuple(r) for r in df.collect()] == rows, stmt
-            assert _rows_match(rows, want), stmt
-    finally:
-        spark.conf.set(key, old)
+    monkeypatch.setattr(tsstore, f"ONE_TASK_MAX_{cap.upper()}", 1)
+    for (stmt, want, exchange), rows in zip(cases, small):
+        df = e.execute(stmt)
+        plan = _plan(df)
+        assert "Coalesce" not in plan, stmt
+        if exchange is not None:
+            assert exchange in plan, (stmt, plan)
+        assert [tuple(r) for r in df.collect()] == rows, stmt
+        assert _rows_match(rows, want), stmt
 
 
 def _ns(t: int) -> str:
