@@ -112,6 +112,18 @@ def test_registered_bucketed_query_plan_is_exchange_free(spark, sf_dir):
     assert "Bucketed: true" in plan, plan
 
 
+def test_registered_bucketed_query_oracle_parity(spark, duck, sf_dir):
+    from raft_c_spark.plans.tpch4 import ORACLES, q_tpch_bucketed_order_revenue
+    from tests.harness import assert_matches_oracle
+
+    assert_matches_oracle(
+        q_tpch_bucketed_order_revenue(spark, sf_dir),
+        duck,
+        ORACLES["tpch_bucketed_order_revenue"],
+        "tpch_bucketed_order_revenue",
+    )
+
+
 def test_write_bucketed_rejects_path_traversal_names(spark, sf_dir):
     # advisor r11: the name reaches DROP TABLE SQL and an rmtree path
     import pytest as _pytest

@@ -1,7 +1,7 @@
 """Dedup operator quality tests: the hash-based scale paths (MinHash
 LSH, SimHash) are verified against the exact n-gram Jaccard baseline;
-exact dedup on planted duplicates; substring spans, segment dedup and
-containment against pure-python replays."""
+exact dedup on planted duplicates; substring spans and segment dedup
+against pure-python replays."""
 
 from __future__ import annotations
 
@@ -10,7 +10,6 @@ from collections import Counter
 import pytest
 from hypothesis import given
 from hypothesis import strategies as st
-from pyspark.sql import Row
 from pyspark.sql import functions as F
 
 from raft_c_spark.operators import dedup
@@ -831,67 +830,3 @@ class TestClusterImpact:
             F.count(F.lit(1)).alias("d"), F.sum("n_chars").alias("w")
         ).collect()[0]
         assert (tot["d"], tot["w"]) == (got["d"], got["w"])
-
-
-def test_containment_detects_quote_jaccard_misses(spark):
-    """A 6-word doc embedded verbatim in a 60-word doc: containment
-    (a→b) = 1.0 while Jaccard is far below any dedup threshold."""
-    short = "the quick brown fox jumps high"
-    long = (
-        "filler one two three four five six seven eight nine ten "
-        + short
-        + " more filler words follow here in a long tail that keeps going "
-        "with additional unique content padding the container document out"
-    )
-    df = spark.createDataFrame(
-        [Row(doc_id=1, text=short), Row(doc_id=2, text=long)]
-    )
-    pairs = dedup.ngram_containment_pairs(
-        df, "doc_id", "text", n=3, threshold=0.9, unit="word"
-    ).collect()
-    assert [(p["a"], p["b"]) for p in pairs] == [(1, 2)]
-    assert pairs[0]["containment"] == 1.0
-    jac = dedup.ngram_jaccard_pairs(
-        df, "doc_id", "text", n=3, threshold=0.5, strategy="prefix", unit="word"
-    )
-    assert jac.count() == 0
-
-
-def test_containment_exact_dup_is_bidirectional(spark):
-    t = "alpha beta gamma delta epsilon zeta eta theta"
-    df = spark.createDataFrame(
-        [Row(doc_id=1, text=t), Row(doc_id=2, text=t), Row(doc_id=3, text="totally different words here entirely unrelated")]
-    )
-    got = sorted(
-        (p["a"], p["b"])
-        for p in dedup.ngram_containment_pairs(
-            df, "doc_id", "text", n=3, threshold=0.9, unit="word"
-        ).collect()
-    )
-    assert got == [(1, 2), (2, 1)]
-
-
-def test_containment_matches_naive_python(spark, docs):
-    """Exactness: the prefix-probe candidate generation must equal the
-    all-pairs fold on a real corpus slice."""
-    sub = docs.filter(F.col("doc_id") < 120).select("doc_id", "text")
-    got = sorted(
-        (p["a"], p["b"], p["common"])
-        for p in dedup.ngram_containment_pairs(
-            sub, "doc_id", "text", n=5, threshold=0.8, unit="word"
-        ).collect()
-    )
-    rows = sub.collect()
-
-    def grams(t, n=5):
-        toks = " ".join(t.lower().split()).split(" ")
-        return {" ".join(toks[i : i + n]) for i in range(len(toks) - n + 1)}
-
-    sets = {r["doc_id"]: grams(r["text"]) for r in rows}
-    exp = sorted(
-        (a, b, len(sa & sets[b]))
-        for a, sa in sets.items()
-        for b in sets
-        if a != b and sa and len(sa & sets[b]) / len(sa) >= 0.8
-    )
-    assert got == exp

@@ -8,12 +8,10 @@ after the DuckDB oracle."""
 from __future__ import annotations
 
 import math
-from collections import Counter
 
 import pytest
 from hypothesis import given
 from hypothesis import strategies as st
-from pyspark.sql import Row
 from pyspark.sql import functions as F
 
 from raft_c_spark.operators import text
@@ -921,98 +919,6 @@ def test_lang_kl_zero_token_language_surfaces(spark):
     assert rows["zh"]["kl_nats"] is None
     assert rows["en"]["n_tokens"] == 3
     assert rows["en"]["kl_nats"] == pytest.approx(0.0, abs=1e-8)
-
-
-def test_lm_score_hand_fixture(spark):
-    """Corpus: 'a b a b', 'a b c'. Contexts: doc1 a→b, b→a, a→b;
-    doc2 a→b, b→c. c1(a)=3, c1(b)=2; c12(a,b)=3, c12(b,a)=1,
-    c12(b,c)=1; V = |{a,b,c}| = 3."""
-    df = spark.createDataFrame(
-        [Row(doc_id=1, text="a b a b"), Row(doc_id=2, text="a b c")]
-    )
-    out = {r["doc_id"]: r for r in text.ngram_lm_score(df).collect()}
-    p_ab = (3 + 1) / (3 + 3)
-    p_ba = (1 + 1) / (2 + 3)
-    p_bc = (1 + 1) / (2 + 3)
-
-    def bits(p):
-        return round(-math.log2(p), 8)
-
-    exp1 = (bits(p_ab) + bits(p_ba) + bits(p_ab)) / 3
-    exp2 = (bits(p_ab) + bits(p_bc)) / 2
-    assert out[1]["n_bigrams"] == 3 and out[2]["n_bigrams"] == 2
-    assert abs(out[1]["xent"] - exp1) < 1e-9
-    assert abs(out[2]["xent"] - exp2) < 1e-9
-
-
-def test_lm_score_short_docs_excluded(spark):
-    df = spark.createDataFrame(
-        [Row(doc_id=1, text="single"), Row(doc_id=2, text=""), Row(doc_id=3, text="two words")]
-    )
-    out = text.ngram_lm_score(df)
-    assert [r["doc_id"] for r in out.collect()] == [3]
-
-
-def test_lm_score_predictable_scores_lower(spark, docs):
-    """The filter's discriminating direction: a document made of one
-    endlessly repeated transition (maximally predictable under its
-    own statistics) must score far below the corpus median, and below
-    a same-length all-novel-transitions document. (The synthetic
-    corpus is near-uniform random text, so the classic 'gibberish >
-    median' direction is not testable here — predictability is.)"""
-    extra = docs.sparkSession.createDataFrame(
-        [
-            Row(doc_id=10**9, text=" ".join(["loop"] * 30)),
-            Row(doc_id=10**9 + 1, text="zq xv qj vk wz kx jq vx zk qw"),
-        ]
-    )
-    corpus = docs.select("doc_id", "text").unionByName(extra)
-    out = text.ngram_lm_score(corpus).cache()
-    med = out.filter(F.col("doc_id") < 10**9).agg(
-        F.expr("percentile_approx(xent, 0.5)")
-    ).first()[0]
-    loop = out.filter(F.col("doc_id") == 10**9).first()["xent"]
-    novel = out.filter(F.col("doc_id") == 10**9 + 1).first()["xent"]
-    assert loop < med and loop < novel
-
-
-_LM_WORDS = st.lists(
-    st.sampled_from(["a", "b", "c", "dd", "e9"]), min_size=0, max_size=12
-)
-
-
-@spark_property(12)
-@given(texts=st.lists(_LM_WORDS, min_size=1, max_size=8))
-def test_lm_score_matches_python_fold(spark, texts):
-    """For ANY tiny corpus, the distributed score equals a sequential
-    pure-python replay of the same add-one bigram LM (counts, V, and
-    the round-to-8 decimal quantization)."""
-    df = spark.createDataFrame(
-        [Row(doc_id=i, text=" ".join(t)) for i, t in enumerate(texts)]
-    )
-    got = {
-        r["doc_id"]: (r["n_bigrams"], r["xent"])
-        for r in text.ngram_lm_score(df).collect()
-    }
-    occ = {
-        i: list(zip(t, t[1:])) for i, t in enumerate(texts) if len(t) >= 2
-    }
-    c12 = Counter(bg for bgs in occ.values() for bg in bgs)
-    c1 = Counter(bg[0] for bgs in occ.values() for bg in bgs)
-    vocab = len({bg[1] for bgs in occ.values() for bg in bgs})
-    exp = {}
-    for i, bgs in occ.items():
-        if not bgs:
-            continue
-        bits = [
-            round(-math.log2((c12[bg] + 1) / (c1[bg[0]] + vocab)), 8)
-            for bg in bgs
-        ]
-        exp[i] = (len(bgs), sum(bits) / len(bgs))
-    assert set(got) == set(exp)
-    for i in exp:
-        assert got[i][0] == exp[i][0]
-        assert abs(got[i][1] - exp[i][1]) < 1e-9
 
 
 def test_vocab_growth_brute(spark):

@@ -523,75 +523,6 @@ def test_knn_recall_bounds_and_planted_neardup(spark, sf_dir):
     assert exact == {0} and approx == {0}
 
 
-def test_cluster_assign_total_and_k(spark, emb):
-    out = similarity.cluster_assign(emb, k=8).cache()
-    assert out.count() == emb.count()
-    clusters = {r["cluster"] for r in out.select("cluster").distinct().collect()}
-    assert 1 <= len(clusters) <= 8
-
-
-def test_cluster_assign_seed_maps_to_itself(spark, emb):
-    """Every chosen center has cosine 1.0 with itself — it must be
-    assigned to its own cluster (no other center can beat 1.0; a tie
-    falls to the lower rank only among exact duplicates)."""
-    out = similarity.cluster_assign(emb, k=8)
-    seeds = {r["cluster"] for r in out.select("cluster").distinct().collect()}
-    own = out.filter(F.col("vec_id").isin(*seeds) & (F.col("cosine") < 1.0 - 1e-12))
-    assert own.count() == 0
-
-
-def test_cluster_assign_partition_stable(spark, emb):
-    a = sorted(
-        (r["vec_id"], r["cluster"]) for r in similarity.cluster_assign(emb, k=8).collect()
-    )
-    b = sorted(
-        (r["vec_id"], r["cluster"])
-        for r in similarity.cluster_assign(emb.repartition(7), k=8).collect()
-    )
-    assert a == b
-
-
-def test_cluster_assign_matches_numpy_argmax(spark, emb):
-    import hashlib
-
-    import numpy as np
-
-    rows = emb.collect()
-    ids = np.array([r["vec_id"] for r in rows])
-    mat = np.array([r["embedding"] for r in rows], dtype=np.float64)
-    order = sorted(range(len(ids)), key=lambda i: (hashlib.md5(str(ids[i]).encode()).hexdigest(), ids[i]))
-    seed_idx = order[:8]
-    norms = np.linalg.norm(mat, axis=1)
-    sims = (mat @ mat[seed_idx].T) / np.outer(norms, norms[seed_idx])
-    best = sims.argmax(axis=1)  # ties: first (lowest rank) — same rule
-    expected = {int(ids[i]): int(ids[seed_idx[best[i]]]) for i in range(len(ids))}
-    got = {r["vec_id"]: r["cluster"] for r in similarity.cluster_assign(emb, k=8).collect()}
-    assert got == expected
-
-
-def test_semantic_dedup_subset_of_global_pairs(spark, emb):
-    """Every within-cluster pair must appear in the global exact pair
-    set at the same threshold (SemDeDup only *misses* pairs — across
-    cluster boundaries — it never invents them), and both members must
-    share the reported cluster."""
-    got = similarity.semantic_dedup_pairs(emb, k=8, threshold=0.3).collect()
-    assert got, "expected some within-cluster pairs"
-    global_pairs = {
-        (r["a"], r["b"])
-        for r in dedup.embedding_neardup_pairs(
-            emb, "vec_id", "embedding", threshold=0.3
-        ).collect()
-    }
-    assign = {
-        r["vec_id"]: r["cluster"]
-        for r in similarity.cluster_assign(emb, k=8).collect()
-    }
-    for r in got:
-        assert (r["a"], r["b"]) in global_pairs
-        assert assign[r["a"]] == assign[r["b"]] == r["cluster"]
-        assert r["cosine"] >= 0.3
-
-
 def test_vec_norm_exprs_matches_with_norm(spark):
     """The factored-out (vec, norm) expressions must produce doubles
     bit-identical to with_norm's projection — the rerank paths apply

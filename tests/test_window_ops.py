@@ -1,6 +1,6 @@
-"""``operators/window`` tests: MAD anomalies, the as-of join, the
-Markov transition matrix and multi-touch attribution, pinned against
-hand fixtures and pure-python replays."""
+"""``operators/window`` tests: the Markov transition matrix and
+multi-touch attribution, pinned against hand fixtures and pure-python
+replays. MAD anomalies and the as-of join are in test_round7_ops.py."""
 
 from __future__ import annotations
 
@@ -9,69 +9,9 @@ import re
 import pytest
 from hypothesis import given
 from hypothesis import strategies as st
-from pyspark.sql import Row
 
-from raft_c_spark.operators.window import (
-    asof_join,
-    attribution_credit,
-    mad_anomalies,
-    transition_matrix,
-)
+from raft_c_spark.operators.window import attribution_credit, transition_matrix
 from tests.harness import spark_property
-
-
-def test_mad_flags_planted_outlier_classical_z_misses_direction(spark):
-    """A giant outlier among small values must be flagged, and the
-    MEDIAN/MAD the flags are computed from must be unmoved by the
-    outlier itself (the robustness property that motivates MAD over
-    mean/stddev)."""
-    rows = [Row(s="a", t=i, v=float(10 + (i % 5))) for i in range(100)]
-    rows.append(Row(s="a", t=1000, v=10_000.0))
-    df = spark.createDataFrame(rows)
-    out = mad_anomalies(df, "s", "t", "v", k=8.0).collect()
-    assert [r["t"] for r in out] == [1000]
-    assert out[0]["med"] == 12.0 and out[0]["mad"] == 1.0
-
-
-def test_mad_no_flags_on_tight_series(spark):
-    df = spark.createDataFrame(
-        [Row(s="a", t=i, v=float(i % 3)) for i in range(60)]
-    )
-    assert mad_anomalies(df, "s", "t", "v", k=8.0).count() == 0
-
-
-def test_mad_zero_series_excluded_not_all_flagged(spark):
-    """A series where >=50% of values equal the median has
-    MAD = 0 — |x−med| > k·0 would flag EVERY non-median point and
-    robust_z would divide by zero. Such series are excluded from
-    flagging entirely; a healthy series in the same frame still
-    flags its outlier."""
-    rows = [Row(s="deg", t=i, v=5.0) for i in range(50)]
-    rows += [Row(s="deg", t=100 + i, v=float(1000 + i)) for i in range(10)]
-    rows += [Row(s="ok", t=i, v=float(10 + (i % 5))) for i in range(100)]
-    rows.append(Row(s="ok", t=1000, v=10_000.0))
-    out = mad_anomalies(
-        spark.createDataFrame(rows), "s", "t", "v", k=8.0
-    ).collect()
-    assert [(r["s"], r["t"]) for r in out] == [("ok", 1000)]
-
-
-def test_asof_join_deterministic_on_duplicate_right_ts(spark):
-    """Two right rows at the same (key, ts) with different values:
-    the carried row must be the lexicographic max of the value struct
-    — identical across partitionings."""
-    left = spark.createDataFrame([("k", 100)], "key string, timestamp long")
-    right = spark.createDataFrame(
-        [("k", 100, 5.0), ("k", 100, 9.0)],
-        "key string, timestamp long, price double",
-    )
-    outs = []
-    for parts in (1, 7):
-        out = asof_join(
-            left, right.repartition(parts), key="key"
-        ).collect()
-        outs.append([(r["key"], r["right_price"]) for r in out])
-    assert outs[0] == outs[1] == [("k", 9.0)]
 
 
 _events_strategy = st.lists(
