@@ -39,8 +39,7 @@ _FOOTER_ROWS_CACHE: dict[tuple[str, tuple], int] = {}
 #: the scanned files' rows. Matched as line-leading node-name prefixes
 #: against the analyzed plan (``planshape.plan_has_node`` — a bare
 #: substring match false-positived on column names containing a node
-#: token, judge r13 #5); a false positive merely falls back to the
-#: exact count.
+#: token); a false positive merely falls back to the exact count.
 _ROW_MULTIPLYING = (
     "Join",
     "Generate",

@@ -36,9 +36,6 @@ TABLES = [
     "embeddings",
 ]
 
-DEFAULT_SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-
-
 def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     """``<sf_dir>/<name>.parquet`` through ``sources.parquet.read_parquet``:
     the first read of a file version infers its schema (one Spark job),

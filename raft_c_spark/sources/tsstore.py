@@ -32,8 +32,12 @@ storage, one series from one partition in time order). An
 all — the driver already holds the points, so it writes one sorted
 Arrow parquet file per touched (series, day) and publishes it by
 rename (≙ the reference's local append, src/timeseries.c:621-682).
-The ``ignore``/``update`` policies, bulk ``insert_df`` frames and
-``compact`` are Spark-committer writes; they, ``drop_series``,
+An ``insert``-policy ``insert_df`` frame whose parquet footers bound
+it to at most ``BULK_MAX_ROWS`` rows is collected in one Spark job and
+goes through the same driver writer (≙ the reference writing its
+chunks into per-series partitions in-process, src/partition.c:62-125).
+The ``ignore``/``update`` policies, larger or unbounded bulk frames and
+``compact`` are Spark-committer writes. Every write, ``drop_series``,
 ``drop_db`` and ``vacuum`` hold the store's write lock, one at a time.
 
 Scale notes: appends are partitioned writes (no global shuffle unless
@@ -51,6 +55,7 @@ import shutil
 import threading
 import uuid
 
+import numpy as np
 import pyarrow as pa
 import pyarrow.compute as pc
 import pyarrow.parquet as pq
@@ -61,6 +66,7 @@ from pyspark.sql.classic.dataframe import DataFrame as ClassicDataFrame
 from pyspark.sql.pandas.types import from_arrow_schema, to_arrow_schema
 
 from raft_c_spark.functions.diskcache import publish_atomic
+from raft_c_spark.functions.metabound import rows_upper_bound
 
 DAY_NS = 86_400_000_000_000
 
@@ -101,25 +107,30 @@ def _day_of(ns: int) -> int:
 ONE_TASK_MAX_FILES = 128
 ONE_TASK_MAX_BYTES = 8 << 20
 
+#: the most rows, by the parquet footers' bound, of an ``insert``-policy
+#: ``insert_df`` frame that is collected and written on the driver
+#: (``_write_on_driver``); larger frames, and frames with no bound, are
+#: Spark-committer writes. Measured with scripts/one_task_crossover.py
+#: --bulk on a 4-vCPU VM, 15 series over 10 days: the driver write beat
+#: the committer's in wall time up to 1M points with two and with four
+#: task threads (0.82 s against 1.38 s and 1.05 s), was even at 2M with
+#: four (1.60 s against 1.58 s) and lost at 4M with both.
+BULK_MAX_ROWS = 1_000_000
+
 #: a point file's columns; ``series`` and ``day`` live in its path
 _FILE_SCHEMA = to_arrow_schema(Ty.StructType(POINT_SCHEMA.fields[1:]))
 _POINT_ARROW = to_arrow_schema(POINT_SCHEMA)
 
 
-def _write_points(day_dir: str, points: list[tuple[int, float]]) -> None:
-    """One sorted parquet file of ``(timestamp, value)`` points in a
-    ``day=`` directory, written under a dot name (Spark's file index
-    skips names starting with '.' or '_', so readers never list a
+def _write_points(day_dir: str, points: pa.Table) -> None:
+    """``points`` (``_FILE_SCHEMA``, sorted by timestamp) as one parquet
+    file in a ``day=`` directory, written under a dot name (Spark's file
+    index skips names starting with '.' or '_', so readers never list a
     half-written file) and published by rename."""
-    points.sort(key=lambda p: p[0])
-    ts, vs = zip(*points)
-    table = pa.Table.from_arrays(
-        [pa.array(ts, pa.int64()), pa.array(vs, pa.float64())], schema=_FILE_SCHEMA
-    )
     os.makedirs(day_dir, exist_ok=True)
     name = f"part-{uuid.uuid4()}.snappy.parquet"
     staging = os.path.join(day_dir, f".{name}.tmp")
-    pq.write_table(table, staging, compression="snappy")
+    pq.write_table(points, staging, compression="snappy")
     publish_atomic(staging, os.path.join(day_dir, name))
 
 
@@ -247,9 +258,9 @@ class TimeSeriesStore:
         - coarse ``isin`` on each partition column — a single InSet
           predicate per column, so it statically prunes partition
           directories without the per-pair OR-chain whose Catalyst
-          tree grew linearly with touched-partition count (flagged by
-          the r5 judge: a batch touching thousands of partitions built
-          a thousands-deep boolean tree);
+          tree grew linearly with touched-partition count (a batch
+          touching thousands of partitions built a thousands-deep
+          boolean tree);
         - a broadcast left-semi join against the exact touched-pair
           frame, which removes the isin cross-product excess (series
           A day 1 + series B day 2 must not drag in A/2, B/1).
@@ -293,17 +304,42 @@ class TimeSeriesStore:
                 self.spark, [(series, int(t), float(v)) for t, v in rows], POINT_SCHEMA
             )
             return self.insert_df(db, df, duplication)
-        by_day: dict[int, list[tuple[int, float]]] = {}
-        for t, v in rows:
-            t = int(t)
-            by_day.setdefault(_day_of(t), []).append((t, float(v)))
-        series_dir = os.path.join(self._points_path(db), self._series_part(series))
-        # ``compact`` swaps the whole ``points`` directory: a file
-        # published while it runs would land in the tree it deletes
+        ts = np.array([int(t) for t, _ in rows], np.int64)
+        vs = np.array([float(v) for _, v in rows], np.float64)
         with self._write_lock:
-            for day, points in by_day.items():
-                _write_points(os.path.join(series_dir, f"day={day}"), points)
-        return len(rows)
+            return self._write_on_driver(db, [series], np.zeros(len(rows), np.intp), ts, vs)
+
+    def _write_on_driver(
+        self, db: str, series: list[str], code: np.ndarray, ts: np.ndarray, vs: np.ndarray
+    ) -> int:
+        """Write the points ``(series[code[i]], ts[i], vs[i])`` as one
+        timestamp-sorted parquet file per (series, day) they touch,
+        through ``_write_points``; no Spark job. The caller holds the
+        write lock: ``compact`` swaps the whole ``points`` directory, and
+        a file published while it runs would land in the tree it
+        deletes. The day truncates toward zero like ``_day``'s ``div``
+        and the series directory is ``_series_part``'s, so this writer
+        and Spark's pick the same directories. Sorted and cut with numpy
+        arrays, not Arrow calls: an INSERT of a dozen points pays for
+        each call."""
+        if not len(ts):
+            return 0
+        # floor, then one up for a negative non-multiple: truncation
+        # toward zero, like ``div`` (negating first overflows at int64 min)
+        day = ts // DAY_NS + ((ts % DAY_NS != 0) & (ts < 0))
+        order = np.lexsort((ts, day, code))  # stable: duplicate-ns keep their order
+        ts, vs, day, code = ts[order], vs[order], day[order], code[order]
+        # a (series, day) run starts at row 0 and wherever either changes
+        cuts = (np.flatnonzero((code[1:] != code[:-1]) | (day[1:] != day[:-1])) + 1).tolist()
+        base = self._points_path(db)
+        for lo, hi in zip([0, *cuts], [*cuts, len(ts)]):
+            day_dir = os.path.join(
+                base, self._series_part(series[code[lo]]), f"day={day[lo]}"
+            )
+            _write_points(
+                day_dir, pa.Table.from_arrays([ts[lo:hi], vs[lo:hi]], schema=_FILE_SCHEMA)
+            )
+        return len(ts)
 
     def insert_df(self, db: str, df: DataFrame, duplication: str = "insert") -> int:
         """Append canonical-schema points. ``duplication='ignore'``
@@ -313,7 +349,11 @@ class TimeSeriesStore:
         src/timeseries.c:363-385); 'update' replaces existing values
         at duplicate timestamps, newest wins (DP_UPDATE — described in
         the reference's policy comment, src/timeseries.h:38-42, but
-        never implemented there). Holds the store's write lock."""
+        never implemented there). Under 'insert', a frame whose parquet
+        footers bound it to ``BULK_MAX_ROWS`` rows is collected in one
+        Spark job and written by the driver writer ``insert_rows``
+        uses; any other write is a Spark-committer job. Holds the
+        store's write lock."""
         with self._write_lock:
             return self._insert_df(db, df, duplication)
 
@@ -325,15 +365,33 @@ class TimeSeriesStore:
         )
         if duplication == "update":
             return self._upsert(db, out)
+        if duplication == "insert":
+            bound = rows_upper_bound(out)
+            if bound is not None and bound <= BULK_MAX_ROWS:
+                # a frame the parquet footers prove small: one collect
+                # and the driver writer, in place of a checkpoint, a
+                # count and a shuffled committer write. A null has no
+                # directory or file column to go to on the driver
+                # writer, so a frame with one keeps the committer path
+                points = out.toArrow()
+                if not any(c.null_count for c in points.columns):
+                    names = points["series"].combine_chunks().dictionary_encode()
+                    return self._write_on_driver(
+                        db,
+                        names.dictionary.to_pylist(),
+                        names.indices.to_numpy(),
+                        points["timestamp"].to_numpy(),
+                        points["value"].to_numpy(),
+                    )
         if duplication == "ignore":
-            # deterministic in-batch survivor (reviewer r8):
-            # dropDuplicates keeps whichever row partition order
-            # surfaces first — repeated runs of the same bulk ingest
-            # could persist different values. A bulk frame has no
-            # meaningful arrival order, so the canonical survivor is
-            # MIN(value) per (series, timestamp); the engine INSERT
-            # path pre-dedups statement-order first-arrival above
-            # (reference DP_IGNORE semantics) before reaching this.
+            # deterministic in-batch survivor: dropDuplicates keeps
+            # whichever row partition order surfaces first, so repeated
+            # runs of the same bulk ingest could persist different
+            # values. A bulk frame has no meaningful arrival order, so
+            # the canonical survivor is MIN(value) per (series,
+            # timestamp); the engine INSERT path pre-dedups
+            # statement-order first-arrival above (reference DP_IGNORE
+            # semantics) before reaching this.
             out = (
                 out.groupBy("series", "timestamp")
                 .agg(F.min("value").alias("value"))
@@ -358,10 +416,10 @@ class TimeSeriesStore:
                     "left_anti",
                 )
         out = _with_day(out)
-        # one materialization for the count AND the write (reviewer
-        # r8): without it the dedup/anti-join pipeline re-executed for
-        # each — up to 3x the batch cost on the ignore path (the
-        # touched-partition collect, the count, the write)
+        # one materialization for the count AND the write: without it
+        # the dedup/anti-join pipeline re-executed for each — up to 3x
+        # the batch cost on the ignore path (the touched-partition
+        # collect, the count, the write)
         out = out.localCheckpoint(eager=True)
         n = out.count()
         if n == 0:
@@ -584,10 +642,10 @@ class TimeSeriesStore:
             .partitionBy("series", "day")
             .parquet(tmp)
         )
-        # two renames instead of rmtree-then-rename (reviewer r8): a
-        # crash between the old rmtree and the rename left NO points
-        # directory — every read returned empty, silent total loss
-        # from the reader's perspective. With rename→rename the store
+        # two renames instead of rmtree-then-rename: a crash between
+        # the rmtree and the rename would leave NO points directory —
+        # every read empty, silent total loss from the reader's
+        # perspective. With rename→rename the store
         # is only ever the old data or the new data; a crash between
         # the renames leaves the old store recoverable at .pre_compact
         # (restored automatically by the next compact call).

@@ -149,7 +149,7 @@ def _read_int_line(data: bytes, pos: int) -> tuple[int, int]:
             # non-digit makes the frame permanently unparseable, so
             # BadFrame: without it a b'$1a\r\n' frame fell through to
             # the handler's need-more-bytes path and stalled the
-            # connection accumulating up to 4x QUERYSIZE (advisor r9)
+            # connection accumulating up to 4x QUERYSIZE
             if c == ord("\r") and pos == len(data) - 1:
                 raise WireError("truncated length line")
             raise BadFrame("bad digit in length")
@@ -160,9 +160,9 @@ def _read_int_line(data: bytes, pos: int) -> tuple[int, int]:
         raise WireError("truncated length line")
     if ndigits == 0:
         # the CRLF is fully present with NO digits before it (b"$\r\n")
-        # — a complete frame no future recv can repair (reviewer r10:
-        # the non-digit case above got BadFrame but this one stalled
-        # the handler's need-more-bytes path exactly the same way)
+        # — a complete frame no future recv can repair (like the
+        # non-digit case above, it would otherwise stall the handler's
+        # need-more-bytes path)
         raise BadFrame("empty length line")
     return n, pos + 2
 
@@ -260,7 +260,6 @@ class _Handler(socketserver.StreamRequestHandler):
                         # further bytes can repair this frame, so
                         # answer and close instead of blocking both
                         # ends until 2 KB of garbage accumulates
-                        # (reviewer r8)
                         self.wfile.write(
                             encode_response(StringResponse("bad request", rc=1))
                         )
@@ -321,6 +320,17 @@ class WireServer(socketserver.ThreadingTCPServer):
         super().__init__((host, port), _Handler)
         self.engine = engine
 
+    def shutdown(self) -> None:
+        """Stop ``serve_forever`` at once, not at its next 0.5 s poll:
+        shutting the listening socket's read side wakes its ``select``
+        (and fails its ``accept``), so the loop sees the stop request
+        now. Where a platform refuses that, the poll still stops it."""
+        try:
+            self.socket.shutdown(socket.SHUT_RD)
+        except OSError:
+            pass
+        super().shutdown()
+
 
 def serve(engine, host: str = "127.0.0.1", port: int = 0) -> WireServer:
     """Start the protocol server in a daemon thread; returns the server
@@ -362,10 +372,10 @@ class WireClient:
     def execute(self, query: str):
         """Send one query; returns a StringResponse (status / error) or
         a list of (ts, value) records for point results — the SAME
-        shape whether the result is empty or streamed (reviewer r8:
-        empty point results used to come back as a bare ArrayResponse
-        while non-empty ones were a list, so ``len(...)`` worked
-        exactly until the result was empty)."""
+        shape whether the result is empty or streamed (an empty point
+        result arrives as an ArrayResponse, a non-empty one as stream
+        chunks; both come back as a list, so ``len(...)`` works on
+        either)."""
         self.sock.sendall(encode_request(Request(query)))
         first = self._recv_one()
         if isinstance(first, ArrayResponse):
@@ -378,8 +388,8 @@ class WireClient:
             if not isinstance(nxt, StreamChunk):
                 # server failure mid-stream (the handler's except wrote
                 # an error response between chunks): surface the actual
-                # message instead of AttributeError on .records
-                # (reviewer r8), and drop the now-desynchronized buffer
+                # message instead of AttributeError on .records, and
+                # drop the now-desynchronized buffer
                 self._buf = b""
                 msg = getattr(nxt, "message", repr(nxt))
                 raise WireError(f"server error mid-stream: {msg}")

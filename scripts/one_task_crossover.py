@@ -1,4 +1,5 @@
-"""Where answering a series on the driver stops beating Spark's file splits.
+"""Where answering a series, or writing a bulk frame, on the driver
+stops beating Spark.
 
 For each ``--size FILES:MIB``, builds one series of FILES parquet
 files (one row group each, as the store's writers leave them) holding
@@ -22,6 +23,20 @@ The first size also warms the JVM,
 so its numbers run high. ``ONE_TASK_MAX_FILES`` and
 ``ONE_TASK_MAX_BYTES`` in ``raft_c_spark/sources/tsstore.py`` were set
 from this script's output.
+
+Bulk-write mode: for each ``--bulk POINTS``, builds a parquet-backed
+frame of POINTS points over ``--series`` series and ``--days`` days
+(four files, so the footers bound its rows), then inserts it with
+``TimeSeriesStore.insert_df`` into an empty store twice per rep: once
+collected and written on the driver (``BULK_MAX_ROWS`` past every size
+here) and once by the Spark committer (a cap of 0), alternating which
+goes first. Prints one JSON line per size: the median wall and CPU
+seconds and the Spark jobs of each write. ``BULK_MAX_ROWS`` was set
+from this output.
+
+    SPARK_GRAFT_CPUS=2 SPARK_GRAFT_DRIVER_MEM=3g \\
+        python scripts/one_task_crossover.py --work /tmp/xover \\
+        --bulk 10000 --bulk 100000 --bulk 1000000 --bulk 4000000
 """
 
 from __future__ import annotations
@@ -42,7 +57,7 @@ sys.path.insert(0, os.path.join(os.path.dirname(__file__), ".."))
 from raft_c_spark import get_spark, trace  # noqa: E402
 from raft_c_spark.engine import Engine  # noqa: E402
 from raft_c_spark.sources import tsstore  # noqa: E402
-from raft_c_spark.sources.tsstore import DAY_NS  # noqa: E402
+from raft_c_spark.sources.tsstore import DAY_NS, TimeSeriesStore  # noqa: E402
 from raft_c_spark.streaming.results import stream_results  # noqa: E402
 
 BASE_DAY = 19_700  # a day number in 2023
@@ -99,14 +114,57 @@ def run_once(e: Engine, stmt: str, one: bool) -> tuple[float, float]:
     return p.wall_s, p.cpu_pydriver_s + p.cpu_jvm_s
 
 
-def main() -> None:
-    ap = argparse.ArgumentParser()
-    ap.add_argument("--work", required=True)
-    ap.add_argument("--size", action="append", required=True, help="FILES:MIB")
-    ap.add_argument("--days", type=int, default=8)
-    ap.add_argument("--reps", type=int, default=5)
-    args = ap.parse_args()
-    spark = get_spark("one-task-crossover")
+def bulk_frame(spark, work: str, points: int, series: int, days: int):
+    """A parquet-backed frame of ``points`` random points over
+    ``series`` series and ``days`` days, in four files."""
+    src = os.path.join(work, f"bulk-{points}")
+    shutil.rmtree(src, ignore_errors=True)
+    os.makedirs(src)
+    rng = np.random.default_rng(points)
+    names = np.array([f"s{i}" for i in range(series)])
+    table = pa.table(
+        {
+            "series": names[rng.integers(series, size=points)],
+            "timestamp": BASE_DAY * DAY_NS + rng.integers(days * DAY_NS, size=points),
+            "value": rng.normal(50.0, 20.0, points),
+        }
+    )
+    step = -(-points // 4)
+    for k in range(4):
+        pq.write_table(table.slice(k * step, step), os.path.join(src, f"part-{k}.parquet"))
+    return spark.read.parquet(src)
+
+
+def bulk_once(store: TimeSeriesStore, frame, driver: bool) -> tuple[float, float, int]:
+    """Wall seconds, driver+JVM CPU seconds and Spark jobs of inserting
+    ``frame`` into an empty store, on the driver or by the committer."""
+    shutil.rmtree(store._points_path("b"), ignore_errors=True)
+    tsstore.BULK_MAX_ROWS = 1 << 62 if driver else 0
+    with trace.phase(store.spark) as p:
+        store.insert_df("b", frame)
+    return p.wall_s, p.cpu_pydriver_s + p.cpu_jvm_s, p.jobs
+
+
+def bulk(spark, args) -> None:
+    store = TimeSeriesStore(spark, os.path.join(args.work, "bulk-wh"))
+    for points in args.bulk:
+        frame = bulk_frame(spark, args.work, points, args.series, args.days)
+        for driver in (True, False):  # warm both paths
+            bulk_once(store, frame, driver)
+        times: dict[bool, list] = {True: [], False: []}
+        for r in range(args.reps):
+            for driver in ((True, False) if r % 2 == 0 else (False, True)):
+                times[driver].append(bulk_once(store, frame, driver))
+        res: dict = {"points": points, "series": args.series, "days": args.days}
+        for driver, name in ((True, "driver"), (False, "committer")):
+            wall, cpu, jobs = zip(*times[driver])
+            res[f"{name}.wall"] = round(statistics.median(wall), 3)
+            res[f"{name}.cpu"] = round(statistics.median(cpu), 3)
+            res[f"{name}.jobs"] = max(jobs)
+        print(json.dumps(res), flush=True)
+
+
+def splits(spark, args) -> None:
     e = Engine(spark, warehouse=os.path.join(args.work, "wh"))
     for ddl in ("CREATEDB d", "USE d", "CREATE s"):
         e.execute(ddl).collect()
@@ -131,6 +189,24 @@ def main() -> None:
                 res[f"{kind}.{name}.wall"] = round(statistics.median(w for w, _ in times[one]), 3)
                 res[f"{kind}.{name}.cpu"] = round(statistics.median(c for _, c in times[one]), 3)
         print(json.dumps(res), flush=True)
+
+
+def main() -> None:
+    ap = argparse.ArgumentParser()
+    ap.add_argument("--work", required=True)
+    ap.add_argument("--size", action="append", default=[], help="FILES:MIB")
+    ap.add_argument("--bulk", action="append", default=[], type=int, help="POINTS")
+    ap.add_argument("--days", type=int, default=8)
+    ap.add_argument("--series", type=int, default=15)
+    ap.add_argument("--reps", type=int, default=5)
+    args = ap.parse_args()
+    if not args.size and not args.bulk:
+        ap.error("give --size FILES:MIB or --bulk POINTS")
+    spark = get_spark("one-task-crossover")
+    if args.bulk:
+        bulk(spark, args)
+    if args.size:
+        splits(spark, args)
     spark.stop()
 
 

@@ -10,7 +10,6 @@ if REPO not in sys.path:
     sys.path.insert(0, REPO)
 
 SF_SMOKE = "/root/testdata/sf0.001"
-SF_ORACLE = "/root/testdata/sf0.01"
 
 
 @pytest.fixture(scope="session")

@@ -4,9 +4,6 @@ equality the ground-truth oracle relies on, and the plan shape."""
 
 from __future__ import annotations
 
-import pytest
-from pyspark.sql import functions as F
-
 from raft_c_spark.operators import bpe
 
 

@@ -10,6 +10,8 @@ import os
 import sys
 import threading
 
+import pyarrow as pa
+import pyarrow.parquet as pq
 import pytest
 
 from raft_c_spark.engine import Engine
@@ -454,6 +456,21 @@ def test_concurrent_ignore_inserts_all_land(spark, tmp_path):
         assert st.read("d", s).count() == calls * 12
 
 
+def _parquet_frame(spark, tmp_path, rows, name="frame"):
+    """``rows`` of ``POINT_SCHEMA`` read back from a parquet file: a
+    frame whose row count the parquet footer bounds."""
+    path = str(tmp_path / f"{name}.parquet")
+    series, ts, vs = zip(*rows)
+    pq.write_table(
+        pa.table(
+            [pa.array(series), pa.array(ts, pa.int64()), pa.array(vs, pa.float64())],
+            names=POINT_SCHEMA.names,
+        ),
+        path,
+    )
+    return spark.read.parquet(path)
+
+
 def _point_dirs(st):
     """``series=…/day=…`` directories holding a points file."""
     base = os.path.join(st.warehouse, "d", "points")
@@ -476,15 +493,21 @@ def _point_dirs(st):
     ],
 )
 def test_pre_1970_day_partition_matches_bulk_path(spark, tmp_path, t, day, series):
-    """``insert_rows`` and ``insert_df`` put a point in the same
-    ``series=``/``day=`` directory: both use Spark's partition-path
+    """``insert_rows``, ``insert_df`` of a local frame (the Spark
+    committer) and ``insert_df`` of a parquet-backed frame (collected
+    and written on the driver) put a point in the same
+    ``series=``/``day=`` directory: all use Spark's partition-path
     escaping for the series name, and truncate the day toward zero like
     Spark's ``div``, never with Python's flooring ``//``."""
     rows_store = TimeSeriesStore(spark, str(tmp_path / "rows"))
     rows_store.insert_rows("d", series, [(t, 1.0)])
     df_store = TimeSeriesStore(spark, str(tmp_path / "df"))
     df_store.insert_df("d", spark.createDataFrame([(series, t, 1.0)], POINT_SCHEMA))
-    assert _point_dirs(rows_store) == _point_dirs(df_store)
+    bulk_store = TimeSeriesStore(spark, str(tmp_path / "bulk"))
+    frame = _parquet_frame(spark, tmp_path, [(series, t, 1.0)])
+    n, _ = jobs_in(spark, lambda: bulk_store.insert_df("d", frame))
+    assert n == 1  # the driver path: one collect
+    assert _point_dirs(rows_store) == _point_dirs(df_store) == _point_dirs(bulk_store)
     [path] = _point_dirs(rows_store)
     assert path.split(os.sep)[-1] == f"day={day}"
     assert _points(rows_store.read("d", series)) == [(series, t, 1.0)]
@@ -492,6 +515,69 @@ def test_pre_1970_day_partition_matches_bulk_path(spark, tmp_path, t, day, serie
     assert _points(rows_store.read("d", series, t0=t, t1=t)) == [(series, t, 1.0)]
     assert _points(rows_store.read("d", series, t0=t + 1)) == []
     assert _points(rows_store.read("d", series, t1=t - 1)) == []
+
+
+def test_bulk_insert_runs_one_job(spark, tmp_path, monkeypatch):
+    """An ``insert``-policy frame the parquet footers prove small is
+    collected once and written on the driver: 1 Spark job (a
+    checkpoint, a count and a shuffled committer write before), one
+    timestamp-sorted file per (series, day), and no committer or
+    staging entry left behind. Past the cap the same frame takes the
+    committer path, and both stores read back the frame's points: NaN,
+    ±inf, int64-extreme and duplicate-ns points included. An empty
+    frame writes nothing; a frame holding a null keeps the committer
+    path."""
+    inf = float("inf")
+    rows = [
+        (f"s{i % 3}", BASE + (i * 7919 % 40) * HOUR_NS - 2 * DAY_NS * (i % 2), float(i))
+        for i in range(120)
+    ]
+    rows += [
+        ("s0", BASE, float("nan")),
+        ("s0", BASE, inf),
+        ("s1", BASE + HOUR_NS, -inf),
+        ("s1", BASE + HOUR_NS, 2.5),
+        ("s2", -DAY_NS - 1, -0.0),
+        ("s2", -(1 << 63), 1.0),
+        ("s2", (1 << 63) - 1, 2.0),
+    ]
+    frame = _parquet_frame(spark, tmp_path, rows)
+
+    def canon(pts):
+        return sorted(pts, key=lambda r: (r[0], r[1], repr(r[2])))
+
+    bulk = TimeSeriesStore(spark, str(tmp_path / "bulk"))
+    n, inserted = jobs_in(spark, lambda: bulk.insert_df("d", frame))
+    assert (n, inserted) == (1, len(rows))
+    assert jobs_in(spark, lambda: bulk.insert_df("d", frame.where("false"))) == (1, 0)
+    base = os.path.join(bulk.warehouse, "d", "points")
+    leftovers = [
+        name
+        for _, dirs, files in os.walk(base)
+        for name in dirs + files
+        if name == "_temporary" or name[0] in "._"
+    ]
+    assert leftovers == []
+    for d in _point_dirs(bulk):
+        [f] = os.listdir(os.path.join(base, d))
+        ts = pq.read_table(os.path.join(base, d, f))["timestamp"].to_pylist()
+        assert ts == sorted(ts), d
+    # a null value has no place in a driver-written file: the committer
+    # writes that frame
+    nulls = _parquet_frame(spark, tmp_path, [("s0", BASE, None)], name="nulls")
+    null_store = TimeSeriesStore(spark, str(tmp_path / "with_null"))
+    n, inserted = jobs_in(spark, lambda: null_store.insert_df("d", nulls))
+    assert n > 1 and inserted == 1
+
+    monkeypatch.setattr(tsstore, "BULK_MAX_ROWS", 0)
+    spark_written = TimeSeriesStore(spark, str(tmp_path / "committer"))
+    n, inserted = jobs_in(spark, lambda: spark_written.insert_df("d", frame))
+    assert n > 1 and inserted == len(rows)
+    assert _point_dirs(spark_written) == _point_dirs(bulk)
+    want = canon(rows)
+    for st in (bulk, spark_written):
+        got = canon([tuple(r) for r in st.read("d").collect()])
+        assert same_bits(got, want)
 
 
 def test_concurrent_inserts_all_land(spark, tmp_path):

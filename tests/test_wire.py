@@ -5,6 +5,8 @@ values, overflow) plus an end-to-end client/server session."""
 
 from __future__ import annotations
 
+import time
+
 import pytest
 
 from raft_c_spark import wire
@@ -126,6 +128,19 @@ def test_server_end_to_end(spark, tmp_path):
     finally:
         client.close()
         server.shutdown()
+
+
+def test_server_shutdown_is_prompt():
+    """``shutdown`` stops a serving loop at once. ``serve_forever``
+    checks for a stop request only between polls of 0.5 s, and its
+    caller waited for the next one."""
+    server = wire.serve(engine=None)
+    time.sleep(0.05)  # let the loop reach its poll
+    t0 = time.perf_counter()
+    server.shutdown()
+    elapsed = time.perf_counter() - t0
+    server.server_close()
+    assert elapsed < 0.1, elapsed
 
 
 def test_server_streams_large_results_in_batches(spark, tmp_path):
