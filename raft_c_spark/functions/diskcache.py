@@ -5,9 +5,13 @@ query-language warehouses, expected multimodal decode stats).
 This is the local stand-in for the 100 TB deployment's stored-column /
 materialized-index layout: expensive derived state is computed once
 per corpus and read back by every subsequent run. The module is the
-one owner of that state: :func:`lookup` is the only probe and
-:func:`materialize` the only builder, so no other module names a cache
-or staging path. Their rules:
+one owner of that state: :func:`materialize` is the only builder (it
+probes first) and :func:`lookup` a probe that builds nothing, so no
+other module names a cache or staging path. A cached Spark frame goes
+through :func:`cached_parquet`, which takes a builder instead of a
+frame and calls it only on a miss: probing before building is the
+cache's rule, not each caller's, so a warm call never pays a
+builder's eager jobs. Their rules:
 
 - **complete keys** — callers must fold every output-affecting
   parameter (shingle width, permutation count, algorithm version)
@@ -40,7 +44,7 @@ from typing import Callable
 
 import pyarrow as pa
 import pyarrow.parquet as pq
-from pyspark.sql import DataFrame
+from pyspark.sql import DataFrame, SparkSession
 
 from raft_c_spark.sources.parquet import fingerprint, read_parquet
 
@@ -185,20 +189,25 @@ def publish_atomic(staging: str, final: str) -> None:
             raise
 
 
-def cached_parquet(df: DataFrame, key: str) -> DataFrame:
-    """Materialize ``df`` as parquet under ``key`` once and return the
-    read-back frame. Subsequent calls (any process) skip the compute
-    entirely — the caller should build ``df`` lazily so a cache hit
-    never triggers its job.
+def cached_parquet(
+    spark: SparkSession, key: str | None, build: Callable[[], DataFrame]
+) -> DataFrame:
+    """The frame ``build()`` returns, written as parquet under ``key``
+    once and read back. ``build`` is called only on a miss, so a hit
+    never runs the jobs a builder starts while it constructs its plan
+    (the ``count()`` behind a measured cap, a nested cache's build).
+    With ``key=None`` the frame is not cached: ``build()`` is returned.
 
     ``key`` must uniquely fingerprint the EXACT input frame (its
     rows AND columns — ``data_cache_key`` covers the backing file;
     any upstream filter/transform must be folded in too) plus every
     output-affecting parameter: the cache cannot detect that a
-    filtered ``df`` was passed under an old key, and serves the
+    filtered frame was built under an old key, and serves the
     stale full-corpus entry silently."""
-    path = materialize(key, lambda staging: df.write.parquet(staging))
-    return read_parquet(df.sparkSession, path)
+    if key is None:
+        return build()
+    path = materialize(key, lambda staging: build().write.parquet(staging))
+    return read_parquet(spark, path)
 
 
 def data_cache_key(sf_dir: str, table: str) -> str:
@@ -207,9 +216,7 @@ def data_cache_key(sf_dir: str, table: str) -> str:
     digest of every file's for a directory), so persisted
     indexes/signatures can NEVER go stale when the data is rewritten —
     even in place, same size, within the same second — a new file
-    means a new key and a fresh build. Single definition (two verbatim
-    copies once lived in plans/dedup.py and plans/similarity.py — a
-    staleness fix to one would silently miss the other)."""
+    means a new key and a fresh build."""
     fp = fingerprint(os.path.join(sf_dir, f"{table}.parquet"))
     if fp is None:
         tag = "nofile"

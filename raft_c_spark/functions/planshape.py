@@ -1,6 +1,6 @@
 """Anchored node-name matching over logical-plan strings.
 
-Three gates (`metabound._ROW_MULTIPLYING`, `dedup._NON_SCAN_NODES`,
+Three gates (`metabound._ROW_MULTIPLYING`, `metabound._NON_SCAN_NODES`,
 `sampling._EXPENSIVE_NODES`) classify a frame by whether its analyzed
 logical plan CONTAINS certain node kinds. Bare substring matching
 (``"Join" in plan``) false-positives on column names, aliases and
@@ -8,7 +8,7 @@ string literals that merely contain a node token (a column named
 ``myJoinKey`` or ``JoinSample``) — harmless for the two gates that
 fail safe into an exact count / skipped widen, but a real cost for
 ``_expensive_lineage`` (an unnecessary full localCheckpoint
-materialization). Judge r13 "what's wrong" #5 / next-round #8.
+materialization).
 
 The analyzed plan renders ONE node per line with the node name as the
 first identifier after the tree-drawing prefix (``+- ``, ``:- ``,

@@ -1,5 +1,5 @@
 """Byte-pair-encoding tokenizer — deterministic, corpus-derived,
-stdlib-only (judge r9 ask #7).
+stdlib-only.
 
 Real pre-training pipelines budget packing and length stats by BPE
 token count, not whitespace words (Sennrich et al., "Neural Machine
@@ -46,6 +46,8 @@ from collections import Counter, defaultdict
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
+
+from raft_c_spark.functions.metabound import _widen
 
 #: repo-wide word convention (same regex as text.py / the oracles)
 TOKEN_RE = "[a-z0-9]+"
@@ -282,11 +284,11 @@ def bpe_token_counts(
     skew-splits hot words; deliberately NOT bloom-prefiltered — the
     encoded table is built from this same corpus' distinct words, so
     every probe word hits and a bloom provably prunes zero rows
-    while adding an Arrow pass over the corpus word stream — judge
-    r10 ask #5 site analysis, SCALING.md round-11 table). Final
+    while adding an Arrow pass over the corpus word stream — see the
+    over-cap join-back table in SCALING.md). Final
     per-doc aggregate partial-combines map-side. Construction is EAGER (the measured-cap count on the
     encoded vocabulary — same convention as dedup_exact)."""
-    from raft_c_spark.operators.dedup import _BROADCAST_MAX_BANDED_ROWS, _widen
+    from raft_c_spark.operators.dedup import _BROADCAST_MAX_BANDED_ROWS
 
     ranks = merge_ranks(merges)
     toks = F.regexp_extract_all(

@@ -17,12 +17,11 @@ Scale design (100 TB corpora):
 
 from __future__ import annotations
 
-import os
-
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
-from raft_c_spark.sources.parquet import fingerprint, local_path, read_parquet
+from raft_c_spark.functions.diskcache import cached_parquet
+from raft_c_spark.functions.metabound import _widen
 
 # Mersenne prime 2^31-1: universal-hash modulus for MinHash
 # permutations (h_i(x) = (a_i*x + b_i) mod p). 31-bit domain keeps
@@ -40,20 +39,18 @@ _MERSENNE_P = (1 << 31) - 1
 _BROADCAST_MAX_BANDED_ROWS = 4_000_000  # (doc, band, bucket) ≈ 20 B/row
 
 #: byte cap on the bitmap mask frame for the above-numpy-cap theta
-#: join's broadcast hint (reviewer r8); beyond it ngram_jaccard_pairs
+#: join's broadcast hint; beyond it ngram_jaccard_pairs
 #: falls back to the prefix strategy
 _BITMAP_BROADCAST_BYTES = 400 << 20
-# Verify-path crossover, re-measured r6 on row-grouped corpora (the
-# r5 measurement that pushed this to 800k was taken on single-row-
-# group parquet where the equi-join fallback silently ran in ONE task
-# — see _widen): the broadcast pack pays an O(n_docs) driver-side
+# Verify-path crossover, measured on row-grouped corpora (an earlier
+# measurement that pushed this to 800k was taken on single-row-group
+# parquet where the equi-join fallback silently ran in ONE task — see
+# metabound._widen): the broadcast pack pays an O(n_docs) driver-side
 # toPandas + matrix rebuild regardless of candidate volume, while the
 # equi-join verify costs ~O(candidates) distributed. Measured min-of-2
 # at 68k candidates: 5k docs 1.6s bcast / 1.9s join; 150k 5.6 / 4.8;
-# 500k 20.9 / 9.9 — crossover ≈ 50k docs. Env-overridable.
-_BROADCAST_MAX_SIG_ROWS = int(
-    os.environ.get("RAFT_C_SPARK_SIG_BROADCAST_ROWS", "50000")
-)
+# 500k 20.9 / 9.9 — crossover ≈ 50k docs.
+_BROADCAST_MAX_SIG_ROWS = 50_000
 
 
 def char_shingles(df: DataFrame, id_col: str, text_col: str, n: int = 3) -> DataFrame:
@@ -115,7 +112,7 @@ def dedup_exact(df: DataFrame, id_col: str, text_col: str) -> DataFrame:
     """Return the deduplicated frame: one survivor (min id) per exact
     normalized content.
 
-    Scale shape (r9 — this was the package's last
+    Scale shape (this was once the package's last
     ``Window.partitionBy`` over an unbounded-cardinality key, and the
     worst kind: the partition key was the FULL normalized text, so a
     boilerplate document duplicated millions of times at 100 TB both
@@ -123,12 +120,12 @@ def dedup_exact(df: DataFrame, id_col: str, text_col: str) -> DataFrame:
     window partition). Now: survivor ids via one map-side-combined
     ``min(id)`` aggregate on a 128-bit content hash — a hot content
     collapses to one row per map task before the shuffle and only
-    16 B keys travel. The join-back (r11, judge r10 ask #5) is
+    16 B keys travel. The join-back is
     tiered: under the measured row cap the DUP GROUPS ONLY (count
     > 1) broadcast into a LEFT join — unique contents are their own
     survivors and never consult the join, so the cap applies to
     duplicated contents, not distinct ones (one to two decades more
-    headroom than the r10 all-survivors broadcast). Above even that,
+    headroom than an all-survivors broadcast). Above even that,
     a composite (content-key, id) bloom prefilters the full-row
     probe stream map-side before the exact shuffle equi-join (where
     AQE skew-splits) — the keep-test is sparse on the composite even
@@ -137,7 +134,7 @@ def dedup_exact(df: DataFrame, id_col: str, text_col: str) -> DataFrame:
     bloom tier wins (network exchanges) and loses (local[*]). Same
     2^-128 collision convention as every hashed dedup path.
 
-    Lifecycle note (advisor r9): construction is EAGER — the
+    Lifecycle note: construction is EAGER — the
     measured-cap ``count()`` runs a Spark job when the result frame
     is *built* (the A/B'd lazy alternatives, AQE-only broadcast and
     recompute-on-join, measured 1.8x/5-6x slower) — and the groups
@@ -160,11 +157,11 @@ def dedup_exact(df: DataFrame, id_col: str, text_col: str) -> DataFrame:
         )
         .persist(StorageLevel.MEMORY_AND_DISK)
     )
-    # r11 (judge r10 ask #5): the broadcast side is now the DUP
-    # GROUPS ONLY (count > 1), not every distinct content. A unique
-    # content is its own survivor by construction, so rows that miss
-    # the dup set pass with NO join output columns consulted — a
-    # broadcast LEFT join + null-or-keep filter, all codegen. That
+    # the broadcast side is the DUP GROUPS ONLY (count > 1), not every
+    # distinct content. A unique content is its own survivor by
+    # construction, so rows that miss the dup set pass with NO join
+    # output columns consulted — a broadcast LEFT join + null-or-keep
+    # filter, all codegen. That
     # both shrinks the broadcast (dup groups ≪ distinct contents in
     # any real corpus) and moves the over-cap cliff from "> 4M
     # distinct contents" (any billion-doc corpus) to "> 4M distinct
@@ -191,7 +188,7 @@ def dedup_exact(df: DataFrame, id_col: str, text_col: str) -> DataFrame:
     # shuffle join; FPs and composite-hash collisions die in the
     # id == keep filter, so the result is bit-identical to the
     # broadcast path (pinned by test_dedup_exact_bloom_fallback_exact).
-    # Regime note (measured r11, see SCALING.md): on
+    # Regime note (measured, see SCALING.md): on
     # local[32] this tier LOSES to the bare equi-join (~30x at 450k
     # rows) because a local shuffle is ~a memcpy while the probe
     # kernel pays the full text stream through Arrow both ways — the
@@ -285,6 +282,7 @@ def ngram_jaccard_pairs(
     unit skips the bitmap probe (its universe never fits)."""
     if unit not in ("char", "word"):
         raise ValueError(f"unit must be 'char' or 'word', got {unit!r}")
+    spark = df.sparkSession
     pair_key = None
     if cache_key is not None:
         # pair-level cache, the same stored-derived-column pattern as
@@ -294,111 +292,108 @@ def ngram_jaccard_pairs(
         # folds every dispatch-affecting parameter; the requested
         # strategy (pre-auto-resolution) is deterministic per corpus,
         # so it is a valid key component.
-        from raft_c_spark.functions.diskcache import lookup
-
         thr = str(threshold).replace(".", "p")
         pair_key = (
             f"ngrampairs_{cache_key}_{id_col}_{text_col}_n{n}_t{thr}"
             f"_{strategy}_{unit}_df{max_shingle_df}_mb{max_bitmap_shingles}"
             f"_v1"
         )
-        if (hit := lookup(pair_key)) is not None:
-            return read_parquet(df.sparkSession, hit)
-    if unit == "word" and strategy == "auto":
-        strategy = "prefix"
-    if unit == "word" and strategy == "bitmap":
-        raise ValueError("bitmap strategy requires unit='char'")
-    if strategy in ("auto", "bitmap") and max_shingle_df is not None:
-        # the bitmap executor computes exact Jaccard over ALL
-        # shingles — it cannot honor a stop-shingle df-cap (reviewer
-        # r8: auto used to silently ignore the caller's cap when the
-        # vocabulary was small, returning a different pair set than
-        # prefix/join with identical arguments)
-        if strategy == "bitmap":
-            raise ValueError(
-                "bitmap strategy cannot honor max_shingle_df; "
-                "use strategy='prefix' or 'join'"
-            )
-        strategy = "prefix"
-    if strategy in ("auto", "bitmap") and df.schema[
-        id_col
-    ].dataType.simpleString() not in ("bigint", "int"):
-        # the bitmap kernels pack ids as int64 (reviewer r8: string
-        # ids died with an opaque Arrow error executor-side); the
-        # SQL strategies handle any id type
-        if strategy == "bitmap":
-            raise TypeError(
-                f"bitmap strategy requires integral ids; {id_col!r} "
-                f"is {df.schema[id_col].dataType.simpleString()}"
-            )
-        strategy = "prefix"
-    if strategy in ("auto", "bitmap"):
-        # one text-parse pass: per-doc shingle-code arrays, cached —
-        # the vocab probe and the mask build both read from it. With
-        # cache_key the code arrays persist per corpus (the
-        # stored-column layout: shingle codes computed at ingest,
-        # reused by every dedup run — same pattern as the minhash
-        # signature store)
-        codes = _doc_codes(df, id_col, text_col, n)
-        if cache_key is not None:
-            from raft_c_spark.functions.diskcache import cached_parquet
 
+    def build():
+        nonlocal strategy
+        if unit == "word" and strategy == "auto":
+            strategy = "prefix"
+        if unit == "word" and strategy == "bitmap":
+            raise ValueError("bitmap strategy requires unit='char'")
+        if strategy in ("auto", "bitmap") and max_shingle_df is not None:
+            # the bitmap executor computes exact Jaccard over ALL
+            # shingles — it cannot honor a stop-shingle df-cap (auto
+            # used to silently ignore the caller's cap when the
+            # vocabulary was small, returning a different pair set
+            # than prefix/join with identical arguments)
+            if strategy == "bitmap":
+                raise ValueError(
+                    "bitmap strategy cannot honor max_shingle_df; "
+                    "use strategy='prefix' or 'join'"
+                )
+            strategy = "prefix"
+        if strategy in ("auto", "bitmap") and df.schema[
+            id_col
+        ].dataType.simpleString() not in ("bigint", "int"):
+            # the bitmap kernels pack ids as int64 (string ids used to
+            # die with an opaque Arrow error executor-side); the SQL
+            # strategies handle any id type
+            if strategy == "bitmap":
+                raise TypeError(
+                    f"bitmap strategy requires integral ids; {id_col!r} "
+                    f"is {df.schema[id_col].dataType.simpleString()}"
+                )
+            strategy = "prefix"
+        if strategy in ("auto", "bitmap"):
+            # one text-parse pass: per-doc shingle-code arrays, cached —
+            # the vocab probe and the mask build both read from it. With
+            # cache_key the code arrays persist per corpus (the
+            # stored-column layout: shingle codes computed at ingest,
+            # reused by every dedup run — same pattern as the minhash
+            # signature store)
             codes = cached_parquet(
-                codes, f"ngramcodes_{cache_key}_{id_col}_{text_col}_n{n}_v1"
+                spark,
+                None if cache_key is None
+                else f"ngramcodes_{cache_key}_{id_col}_{text_col}_n{n}_v1",
+                lambda: _doc_codes(df, id_col, text_col, n),
+            ).cache()
+            codes.count()
+            vocab = _collect_vocab_codes(codes, max_bitmap_shingles)
+            pairs = (
+                _jaccard_bitmap(codes, vocab, threshold)
+                if vocab is not None
+                else None
             )
-        codes = codes.cache()
-        codes.count()
-        vocab = _collect_vocab_codes(codes, max_bitmap_shingles)
-        pairs = (
-            _jaccard_bitmap(codes, vocab, threshold)
-            if vocab is not None
-            else None
-        )
-        if pairs is not None:
-            if pair_key is not None:
-                from raft_c_spark.functions.diskcache import cached_parquet
-
-                pairs = cached_parquet(pairs, pair_key)
-            return pairs
-        codes.unpersist()
-        if strategy == "bitmap":
-            raise ValueError(
-                f"bitmap strategy needs ≤{max_bitmap_shingles} distinct "
-                "shingles and a mask frame under the broadcast byte cap"
-            )
-        strategy = "prefix"
-    shingle_fn = word_shingles if unit == "word" else char_shingles
-    sh = shingle_fn(df, id_col, text_col, n)
-    if cache_key is not None:
-        # persist the (doc, shingle) relation per corpus — the same
-        # stored-column layout as the code arrays above: the text
-        # parse + distinct is paid once, every later run starts at
+            if pairs is not None:
+                return pairs
+            codes.unpersist()
+            if strategy == "bitmap":
+                raise ValueError(
+                    f"bitmap strategy needs ≤{max_bitmap_shingles} distinct "
+                    "shingles and a mask frame under the broadcast byte cap"
+                )
+            strategy = "prefix"
+        # with cache_key the (doc, shingle) relation persists per corpus
+        # — the same stored-column layout as the code arrays above: the
+        # text parse + distinct is paid once, every later run starts at
         # the ranking joins
-        from raft_c_spark.functions.diskcache import cached_parquet
-
-        sh = cached_parquet(
-            sh, f"{unit}shingles_{cache_key}_{id_col}_{text_col}_n{n}_v1"
-        )
-    if max_shingle_df is not None:
-        sh = sh.cache()
-        rare = (
-            sh.groupBy("shingle")
-            .agg(F.count(F.lit(1)).alias("df"))
-            .filter(F.col("df") <= max_shingle_df)
-            .select("shingle")
-        )
-        sh = sh.join(rare, "shingle")
-    if strategy == "prefix":
-        pairs = _jaccard_prefix(sh, threshold)
-    elif strategy == "join":
-        pairs = _jaccard_join(sh, threshold)
-    else:
+        sh = _shingles(df, id_col, text_col, n, unit, cache_key)
+        if max_shingle_df is not None:
+            sh = sh.cache()
+            rare = (
+                sh.groupBy("shingle")
+                .agg(F.count(F.lit(1)).alias("df"))
+                .filter(F.col("df") <= max_shingle_df)
+                .select("shingle")
+            )
+            sh = sh.join(rare, "shingle")
+        if strategy == "prefix":
+            return _jaccard_prefix(sh, threshold)
+        if strategy == "join":
+            return _jaccard_join(sh, threshold)
         raise ValueError(f"unknown strategy {strategy!r}")
-    if pair_key is not None:
-        from raft_c_spark.functions.diskcache import cached_parquet
 
-        pairs = cached_parquet(pairs, pair_key)
-    return pairs
+    return cached_parquet(spark, pair_key, build)
+
+
+def _shingles(
+    df: DataFrame, id_col: str, text_col: str, n: int, unit: str,
+    cache_key: str | None,
+) -> DataFrame:
+    """The (doc, shingle) relation of ``unit`` n-grams, persisted per
+    corpus under ``cache_key``."""
+    shingle_fn = word_shingles if unit == "word" else char_shingles
+    return cached_parquet(
+        df.sparkSession,
+        None if cache_key is None
+        else f"{unit}shingles_{cache_key}_{id_col}_{text_col}_n{n}_v1",
+        lambda: shingle_fn(df, id_col, text_col, n),
+    )
 
 
 def ngram_containment_pairs(
@@ -435,25 +430,23 @@ def ngram_containment_pairs(
         raise ValueError(f"unit must be 'char' or 'word', got {unit!r}")
     pair_key = None
     if cache_key is not None:
-        from raft_c_spark.functions.diskcache import lookup
-
         thr = str(threshold).replace(".", "p")
         pair_key = (
             f"containpairs_{cache_key}_{id_col}_{text_col}_n{n}_t{thr}"
             f"_{unit}_v1"
         )
-        if (hit := lookup(pair_key)) is not None:
-            return read_parquet(df.sparkSession, hit)
-    shingle_fn = word_shingles if unit == "word" else char_shingles
-    sh = shingle_fn(df, id_col, text_col, n)
-    if cache_key is not None:
-        from raft_c_spark.functions.diskcache import cached_parquet
+    return cached_parquet(
+        df.sparkSession,
+        pair_key,
+        lambda: _containment_pairs(
+            _shingles(df, id_col, text_col, n, unit, cache_key), threshold
+        ),
+    )
 
-        sh = cached_parquet(
-            sh, f"{unit}shingles_{cache_key}_{id_col}_{text_col}_n{n}_v1"
-        )
+
+def _containment_pairs(sh: DataFrame, t: float) -> DataFrame:
+    """Verified containment pairs over a (doc, shingle) relation."""
     sh = sh.cache()
-    t = threshold
     dfreq = sh.groupBy("shingle").agg(F.count(F.lit(1)).alias("_df"))
     w_rank = Window.partitionBy("doc").orderBy("_df", "shingle")
     ranked = (
@@ -487,7 +480,7 @@ def ngram_containment_pairs(
     )
     db = docsets.select(F.col("doc").alias("b"), F.col("shset").alias("sb"))
     common = F.size(F.array_intersect("sa", "sb"))
-    pairs = (
+    return (
         cand.join(da, "a")
         .join(db, "b")
         .withColumn("common", common.cast("long"))
@@ -499,114 +492,6 @@ def ngram_containment_pairs(
         .select("a", "b", "common", F.col("sz_a").cast("long").alias("sz_a"),
                 "containment")
     )
-    if pair_key is not None:
-        from raft_c_spark.functions.diskcache import cached_parquet
-
-        pairs = cached_parquet(pairs, pair_key)
-    return pairs
-
-
-def _widen(df: DataFrame) -> DataFrame:
-    """Repartition up to the session's parallelism when the input
-    cannot actually scan in parallel, serializing any Arrow kernel
-    into one task. Two ways that happens: too few SPLITS (a single
-    small file), and — subtler — splits that collapse at read time
-    because a parquet ROW GROUP is the indivisible read unit: an
-    88 MB single-row-group file gets 88 byte-range splits of which
-    87 are empty, so ``getNumPartitions()`` alone is fooled (the r6
-    500k soak measured a perfectly linear winnow kernel running 41x
-    super-linear — one task did all the work). For small local file
-    sets the footer row-group counts give the true achievable
-    parallelism. At scale inputs are many well-formed files and this
-    whole check is a no-op."""
-    p = df.sparkSession.sparkContext.defaultParallelism
-    return df.repartition(p) if _effective_splits(df) < p else df
-
-
-#: (path, fingerprint) -> num_row_groups — footer probes are
-#: driver-side file reads; memoizing them keeps repeated _widen calls
-#: over the same corpus (every dedup op re-parses the same parquet
-#: lineage) from re-reading footers on each call (advisor r6)
-_ROW_GROUP_CACHE: dict[tuple[str, tuple], int] = {}
-
-#: Logical-plan nodes that mean the frame is NOT a bare projection /
-#: filter over a file scan. Downstream of any of these the frame's
-#: parallelism is already set by an exchange / generator / local data
-#: (widening would be a no-op at best), and — the real hazard —
-#: touching ``df.rdd`` on such a frame under AQE FINALIZES the plan,
-#: executing every upstream shuffle stage as real jobs at
-#: plan-construction time (the r13 profile caught ds_pipeline_e2e
-#: paying 5 extra build jobs for exactly this probe). Matched as
-#: line-leading node-name prefixes (``planshape.plan_has_node`` —
-#: judge r13 #5: bare substring matching false-positived on column
-#: names); a false positive merely skips a widen that post-exchange
-#: parallelism already provides.
-_NON_SCAN_NODES = (
-    "Join",
-    "Aggregate",
-    "Window",
-    "Sort",
-    "Repartition",
-    "Generate",
-    "Union",
-    "Expand",
-    "Deduplicate",
-    "GlobalLimit",
-    "Sample",
-    "CoGroup",
-    "FlatMap",
-    "MapInPandas",
-    "MapInArrow",
-    "Range",
-    "LocalRelation",
-    "OneRowRelation",
-    "LogicalRDD",
-)
-
-
-def _effective_splits(df: DataFrame) -> int:
-    """Achievable no-shuffle scan parallelism: min(splits, total row
-    groups) when the input is a small set of local parquet files;
-    plain split count otherwise (footer reads over thousands of
-    files, or non-file sources, are not worth it — many files imply
-    enough parallelism anyway). Footer row-group counts are memoized
-    per (path, fingerprint). Non-scan-shaped frames short-circuit to
-    "wide enough" WITHOUT the ``df.rdd`` partition probe — see
-    ``_NON_SCAN_NODES``."""
-    try:
-        from raft_c_spark.functions.planshape import plan_has_node
-
-        plan = df._jdf.queryExecution().analyzed().toString()
-        if plan_has_node(plan, _NON_SCAN_NODES):
-            return 1 << 30
-    except Exception:
-        pass
-    parts = df.rdd.getNumPartitions()
-    try:
-        files = df.inputFiles()
-    except Exception:
-        return parts
-    if not files or len(files) >= 64:
-        return parts
-    total = 0
-    try:
-        import pyarrow.parquet as pq
-
-        for f in files:
-            f = local_path(f)
-            if f is None or not f.endswith(".parquet") or not os.path.isfile(f):
-                return parts
-            key = (f, fingerprint(f))
-            n = _ROW_GROUP_CACHE.get(key)
-            if n is None:
-                n = pq.ParquetFile(f).num_row_groups
-                if len(_ROW_GROUP_CACHE) > 4096:
-                    _ROW_GROUP_CACHE.clear()
-                _ROW_GROUP_CACHE[key] = n
-            total += n
-    except Exception:
-        return parts
-    return min(parts, total)
 
 
 def _doc_codes(df: DataFrame, id_col: str, text_col: str, n: int) -> DataFrame:
@@ -685,7 +570,7 @@ def _jaccard_bitmap(codes: DataFrame, vocab_codes, threshold: float) -> DataFram
         return _bitmap_pairs_numpy(masks, n_words, threshold)
     # the pair scan below is a theta join (size prefilter + a < b):
     # its only distributed form broadcasts the mask frame. Gate the
-    # hint by the frame's actual bytes (reviewer r8: the hint was
+    # hint by the frame's actual bytes (the hint was once
     # unconditional in the ABOVE-cap branch — at 500k docs × 1041
     # mask words that forced a ~4 GB driver materialization, the
     # exact failure the module header says every hint must be gated
@@ -916,7 +801,7 @@ def _shingle_codes(text: str, n: int) -> "np.ndarray":
 
     # ASCII-whitespace normalization — must match the SQL
     # lower(trim(regexp_replace(text, '\\s+', ' '))) exactly
-    # (functions/norm.py; reviewer r8)
+    # (functions/norm.py)
     norm = norm_ascii_ws(text)
     if len(norm) < n:
         return np.empty(0, dtype=np.int64)
@@ -1001,20 +886,22 @@ def minhash_signatures(
     )
 
 
-def _persisted_signatures(
-    sig: DataFrame, cache_key: str, id_col: str, text_col: str, n: int, num_perm: int
+def _signatures(
+    df: DataFrame, cache_key: str | None, id_col: str, text_col: str, n: int,
+    num_perm: int,
 ) -> DataFrame:
-    """Persist the (doc, signature) frame once per (cache_key, params)
-    and read it back — the stored-column layout the 100 TB path uses
-    (signatures computed at ingest, reused by every dedup run), same
-    pattern as similarity.lsh_index / ivf lists. The key folds in
-    every signature-affecting parameter (shingle width ``n``,
-    permutation count, algorithm version) so a caller reusing a
+    """:func:`minhash_signatures`, persisted once per (cache_key,
+    params) when ``cache_key`` is given — the stored-column layout the
+    100 TB path uses (signatures computed at ingest, reused by every
+    dedup run), same pattern as similarity.lsh_index / ivf lists. The
+    key folds in every signature-affecting parameter (shingle width
+    ``n``, permutation count, algorithm version) so a caller reusing a
     corpus key with different params can never read stale state."""
-    from raft_c_spark.functions.diskcache import cached_parquet
-
     return cached_parquet(
-        sig, f"minhash_{cache_key}_{id_col}_{text_col}_n{n}_p{num_perm}_v1"
+        df.sparkSession,
+        None if cache_key is None
+        else f"minhash_{cache_key}_{id_col}_{text_col}_n{n}_p{num_perm}_v1",
+        lambda: minhash_signatures(df, id_col, text_col, n, num_perm),
     )
 
 
@@ -1048,7 +935,7 @@ def _est_jaccard_joined(
     signatures onto the candidates (linear shuffles keyed by doc id),
     then count equal components in an Arrow-batched numpy kernel.
     Replaced a 64-term when/element_at column chain that dropped out
-    of whole-stage codegen and ran interpreted — the r5 500k-doc soak
+    of whole-stage codegen and ran interpreted — a 500k-doc soak
     measured that chain turning the above-cap step into a 7× cliff.
     ``sig_a``/``sig_b`` must be (a|b, sig_a|sig_b) frames."""
     import numpy as np
@@ -1099,7 +986,6 @@ def minhash_lsh_pairs(
     shuffle keyed by bucket, never all-pairs); candidates are then
     *verified* with estimated jaccard = fraction of equal signature
     components, filtered at ``threshold``."""
-    rows_per_band = num_perm // bands
     # pair-level cache: the *verified* pair frame is persisted per
     # (corpus, params) alongside the signatures, so pipelines that
     # compose pair generation (dedup_minhash_lsh, dedup_best_survivor)
@@ -1118,82 +1004,12 @@ def minhash_lsh_pairs(
             f"minhashpairs_{cache_key}_{id_col}_{text_col}"
             f"_n{n}_p{num_perm}_b{bands}_t{thr}_v1"
         )
-        from raft_c_spark.functions.diskcache import cached_parquet, lookup
 
-        if (hit := lookup(pair_key)) is not None:
-            return read_parquet(df.sparkSession, hit)
-    sig = minhash_signatures(df, id_col, text_col, n, num_perm)
-    if cache_key is not None:
-        sig = _persisted_signatures(sig, cache_key, id_col, text_col, n, num_perm)
-    sig = sig.cache()
-    # eager materialization: sig feeds three plan branches (banding ×2
-    # via the self-join, est-verify ×2); without forcing the cache
-    # first, AQE races the branches and computes the full signature
-    # pipeline repeatedly. The count also prices the broadcast hints.
-    n_docs = sig.count()
-    banded = _band_frame(sig, bands, rows_per_band)
-    # size-conditional broadcast of the (docs × bands)-row banded
-    # frame: below the cap the hint pins a broadcast hash join (AQE
-    # sometimes flaps to a 3-4x-slower sort-merge plan); above it the
-    # self-join shuffles on (band, bucket) — the scale shape
-    y_side = banded.alias("y")
-    if n_docs * bands <= _BROADCAST_MAX_BANDED_ROWS:
-        y_side = F.broadcast(y_side)
-    cand = (
-        banded.alias("x")
-        .join(
-            y_side,
-            (F.col("x.band") == F.col("y.band"))
-            & (F.col("x.bucket") == F.col("y.bucket"))
-            & (F.col("x.doc") < F.col("y.doc")),
-        )
-        .select(F.col("x.doc").alias("a"), F.col("y.doc").alias("b"))
-        .distinct()
-    )
-    if n_docs <= _BROADCAST_MAX_SIG_ROWS:
-        # verify in one vectorized numpy pass with the signature matrix
-        # as a broadcast variable (n_docs × num_perm longs — 100 MB at
-        # the cap): integer equality counts, no float-order concerns.
-        # The per-row column-expression alternative (a 64-term
-        # when-chain over element_at pairs) drops out of whole-stage
-        # codegen and runs ~15 µs/row interpreted.
-        import numpy as np
-        import pandas as pd
+    def build():
+        sig = _signatures(df, cache_key, id_col, text_col, n, num_perm)
+        return _lsh_pairs(sig, sig, True, num_perm, bands, threshold)
 
-        spdf = sig.toPandas()
-        ids = spdf["doc"].to_numpy(dtype=np.int64)
-        sm = np.array([np.asarray(s, dtype=np.int64) for s in spdf["signature"]])
-        order = np.argsort(ids)
-        bc = df.sparkSession.sparkContext.broadcast((ids[order], sm[order]))
-
-        def kernel(batches):
-            sids, ssm = bc.value
-            for pdf in batches:
-                if not len(pdf):
-                    continue
-                a = pdf["a"].to_numpy(dtype=np.int64)
-                b = pdf["b"].to_numpy(dtype=np.int64)
-                est = (
-                    ssm[np.searchsorted(sids, a)] == ssm[np.searchsorted(sids, b)]
-                ).sum(axis=1) / float(num_perm)
-                keep = est >= threshold
-                yield pd.DataFrame(
-                    {"a": a[keep], "b": b[keep], "est_jaccard": est[keep]}
-                )
-
-        pairs = cand.mapInPandas(kernel, "a long, b long, est_jaccard double")
-        if pair_key is not None:
-            pairs = cached_parquet(pairs, pair_key)
-        return pairs
-
-    # corpus-scale fallback: equi-joins on doc id (linear shuffles) +
-    # Arrow-kernel equal-component count
-    siga = sig.select(F.col("doc").alias("a"), F.col("signature").alias("sig_a"))
-    sigb = sig.select(F.col("doc").alias("b"), F.col("signature").alias("sig_b"))
-    pairs = _est_jaccard_joined(cand, siga, sigb, num_perm, threshold)
-    if pair_key is not None:
-        pairs = cached_parquet(pairs, pair_key)
-    return pairs
+    return cached_parquet(df.sparkSession, pair_key, build)
 
 
 def minhash_lsh_pairs_between(
@@ -1211,17 +1027,17 @@ def minhash_lsh_pairs_between(
     """Incremental near-dup dedup: (new doc, corpus doc) pairs with
     estimated Jaccard ≥ threshold — the production shape where each
     incoming crawl batch is deduplicated AGAINST the standing corpus
-    rather than within itself. Same banded-LSH mechanics as
-    :func:`minhash_lsh_pairs`, but candidates come from a band-bucket
-    equi-join BETWEEN the two signature frames, so cost tracks the
-    batch size and the collision density, never the corpus pair
-    count.
+    rather than within itself. It runs the same banding, candidate
+    join and verify as :func:`minhash_lsh_pairs` (one shared body),
+    but candidates come from a band-bucket equi-join BETWEEN the two
+    signature frames, so cost tracks the batch size and the collision
+    density, never the corpus pair count.
 
     100 TB shape: the corpus signatures are a stored column
     (``corpus_cache_key`` persists them; at ingest they'd be written
     alongside the text), each batch computes only its own signatures,
-    and the join broadcasts whichever banded side is small — the
-    typical case being the incoming batch. Returns (a=new id,
+    and the join broadcasts the corpus's banded frame when it is under
+    the row cap, else the batch's when that one is. Returns (a=new id,
     b=corpus id, est_jaccard); ids may overlap between frames (they
     are different tables), so no cross-frame id ordering is assumed.
 
@@ -1230,42 +1046,75 @@ def minhash_lsh_pairs_between(
     caller's key must identify BOTH input frames (e.g. encode the
     batch/corpus split), since the function cannot fingerprint them.
     """
-    rows_per_band = num_perm // bands
     pair_key = None
     if pair_cache_key is not None:
-        from raft_c_spark.functions.diskcache import cached_parquet, lookup
-
         thr = str(threshold).replace(".", "p")
         pair_key = (
             f"minhashpairsbtw_{pair_cache_key}_{id_col}_{text_col}"
             f"_n{n}_p{num_perm}_b{bands}_t{thr}_v1"
         )
-        if (hit := lookup(pair_key)) is not None:
-            return read_parquet(new_df.sparkSession, hit)
-    sig_new = minhash_signatures(new_df, id_col, text_col, n, num_perm).cache()
-    sig_corp = minhash_signatures(corpus_df, id_col, text_col, n, num_perm)
-    if corpus_cache_key is not None:
-        sig_corp = _persisted_signatures(
-            sig_corp, corpus_cache_key, id_col, text_col, n, num_perm
-        )
-    sig_corp = sig_corp.cache()
-    n_new, n_corp = sig_new.count(), sig_corp.count()
-    x = _band_frame(sig_new, bands, rows_per_band).alias("x")
-    y = _band_frame(sig_corp, bands, rows_per_band).alias("y")
-    if n_corp * bands <= _BROADCAST_MAX_BANDED_ROWS:
+    return cached_parquet(
+        new_df.sparkSession,
+        pair_key,
+        lambda: _lsh_pairs(
+            minhash_signatures(new_df, id_col, text_col, n, num_perm),
+            _signatures(
+                corpus_df, corpus_cache_key, id_col, text_col, n, num_perm
+            ),
+            False, num_perm, bands, threshold,
+        ),
+    )
+
+
+def _lsh_pairs(
+    sig_x: DataFrame,
+    sig_y: DataFrame,
+    self_join: bool,
+    num_perm: int,
+    bands: int,
+    threshold: float,
+) -> DataFrame:
+    """(a, b, est_jaccard): the docs of two (doc, signature) frames
+    that share a band bucket, verified at ``threshold``. A self-join
+    (``self_join``, with ``sig_y`` the same frame as ``sig_x``) keeps
+    a < b and caches, counts and packs its one frame once."""
+    sig_x = sig_x.cache()
+    sig_y = sig_x if self_join else sig_y.cache()
+    # eager materialization: each signature frame feeds banding and
+    # the verify; without forcing the cache first, AQE races the
+    # branches and computes the full signature pipeline repeatedly.
+    # The counts also price the broadcast hints.
+    n_x = sig_x.count()
+    n_y = n_x if self_join else sig_y.count()
+    rows_per_band = num_perm // bands
+    banded_x = _band_frame(sig_x, bands, rows_per_band)
+    banded_y = banded_x if self_join else _band_frame(sig_y, bands, rows_per_band)
+    x, y = banded_x.alias("x"), banded_y.alias("y")
+    # size-conditional broadcast of a (docs × bands)-row banded frame:
+    # below the cap the hint pins a broadcast hash join (AQE sometimes
+    # flaps to a 3-4x-slower sort-merge plan); above it on both sides
+    # the join shuffles on (band, bucket) — the scale shape
+    if n_y * bands <= _BROADCAST_MAX_BANDED_ROWS:
         y = F.broadcast(y)
-    elif n_new * bands <= _BROADCAST_MAX_BANDED_ROWS:
+    elif n_x * bands <= _BROADCAST_MAX_BANDED_ROWS:
         x = F.broadcast(x)
+    on = (F.col("x.band") == F.col("y.band")) & (
+        F.col("x.bucket") == F.col("y.bucket")
+    )
+    if self_join:
+        on = on & (F.col("x.doc") < F.col("y.doc"))
     cand = (
-        x.join(
-            y,
-            (F.col("x.band") == F.col("y.band"))
-            & (F.col("x.bucket") == F.col("y.bucket")),
-        )
+        x.join(y, on)
         .select(F.col("x.doc").alias("a"), F.col("y.doc").alias("b"))
         .distinct()
     )
-    if n_new + n_corp <= _BROADCAST_MAX_SIG_ROWS:
+    if (n_x if self_join else n_x + n_y) <= _BROADCAST_MAX_SIG_ROWS:
+        # verify in one vectorized numpy pass with the signature
+        # matrices as a broadcast variable (n_docs × num_perm longs —
+        # 100 MB at the cap): integer equality counts, no float-order
+        # concerns. The per-row column-expression alternative (a
+        # 64-term when-chain over element_at pairs) drops out of
+        # whole-stage codegen and runs ~15 µs/row interpreted.
         import numpy as np
         import pandas as pd
 
@@ -1278,8 +1127,9 @@ def minhash_lsh_pairs_between(
             order = np.argsort(ids)
             return ids[order], sm[order]
 
-        bc = new_df.sparkSession.sparkContext.broadcast(
-            (pack(sig_new), pack(sig_corp))
+        packed_x = pack(sig_x)
+        bc = sig_x.sparkSession.sparkContext.broadcast(
+            (packed_x, packed_x if self_join else pack(sig_y))
         )
 
         def kernel(batches):
@@ -1298,17 +1148,13 @@ def minhash_lsh_pairs_between(
                     {"a": a[keep], "b": b[keep], "est_jaccard": est[keep]}
                 )
 
-        pairs = cand.mapInPandas(kernel, "a long, b long, est_jaccard double")
-        if pair_key is not None:
-            pairs = cached_parquet(pairs, pair_key)
-        return pairs
+        return cand.mapInPandas(kernel, "a long, b long, est_jaccard double")
 
-    siga = sig_new.select(F.col("doc").alias("a"), F.col("signature").alias("sig_a"))
-    sigb = sig_corp.select(F.col("doc").alias("b"), F.col("signature").alias("sig_b"))
-    pairs = _est_jaccard_joined(cand, siga, sigb, num_perm, threshold)
-    if pair_key is not None:
-        pairs = cached_parquet(pairs, pair_key)
-    return pairs
+    # corpus-scale fallback: equi-joins on doc id (linear shuffles) +
+    # Arrow-kernel equal-component count
+    siga = sig_x.select(F.col("doc").alias("a"), F.col("signature").alias("sig_a"))
+    sigb = sig_y.select(F.col("doc").alias("b"), F.col("signature").alias("sig_b"))
+    return _est_jaccard_joined(cand, siga, sigb, num_perm, threshold)
 
 
 #: SimHash width. 60 bits = 15 hex digits of md5 — md5 is the one
@@ -1428,7 +1274,7 @@ def simhash_pairs(
     n_chunks: int = 4,
 ) -> DataFrame:
     """Near-dup pairs by SimHash hamming distance, with pigeonhole
-    chunk blocking. CONTRACT (explicit per reviewer r8 — this is a
+    chunk blocking. CONTRACT (explicit — this is a
     blocked candidate set, not an exhaustive scan): the 60-bit hash
     splits into ``n_chunks`` equal chunks and candidates are pairs
     sharing ≥ 1 exact chunk, so the output is COMPLETE for
@@ -1448,80 +1294,73 @@ def simhash_pairs(
     if SIMHASH_BITS % n_chunks:
         raise ValueError(f"n_chunks must divide {SIMHASH_BITS}")
     chunk_bits = SIMHASH_BITS // n_chunks
+    spark = df.sparkSession
     pair_key = None
     if cache_key is not None:
         # pair-level cache (same pattern as minhash_lsh_pairs): repeat
         # runs skip the chunk self-join entirely
-        from raft_c_spark.functions.diskcache import lookup
-
         pair_key = (
             f"simhashpairs{SIMHASH_BITS}_{cache_key}_{id_col}_{text_col}"
             f"_h{max_hamming}_c{n_chunks}"
             f"_w{SIMHASH_WEIGHT_CAP}_v3"  # v3: tf×capped-idf votes
         )
-        if (hit := lookup(pair_key)) is not None:
-            return read_parquet(df.sparkSession, hit)
-    sig = simhash60(df, id_col, text_col)
-    if cache_key is not None:
-        from raft_c_spark.functions.diskcache import cached_parquet
 
+    def build():
         sig = cached_parquet(
-            sig,
-            f"simhash{SIMHASH_BITS}_{cache_key}_{id_col}_{text_col}"
+            spark,
+            None if cache_key is None
+            else f"simhash{SIMHASH_BITS}_{cache_key}_{id_col}_{text_col}"
             f"_w{SIMHASH_WEIGHT_CAP}_v3",
-        )
-    sig = sig.cache()
-    chunks = sig.select(
-        "doc",
-        "simhash",
-        F.explode(
-            F.array(
-                *[
-                    F.struct(
-                        F.lit(c).alias("chunk"),
-                        F.shiftrightunsigned("simhash", chunk_bits * c)
-                        .bitwiseAND(F.lit((1 << chunk_bits) - 1))
-                        .alias("key"),
-                    )
-                    for c in range(n_chunks)
-                ]
+            lambda: simhash60(df, id_col, text_col),
+        ).cache()
+        chunks = sig.select(
+            "doc",
+            "simhash",
+            F.explode(
+                F.array(
+                    *[
+                        F.struct(
+                            F.lit(c).alias("chunk"),
+                            F.shiftrightunsigned("simhash", chunk_bits * c)
+                            .bitwiseAND(F.lit((1 << chunk_bits) - 1))
+                            .alias("key"),
+                        )
+                        for c in range(n_chunks)
+                    ]
+                )
+            ).alias("cc"),
+        ).select("doc", "simhash", "cc.chunk", "cc.key")
+        cand = (
+            chunks.alias("x")
+            .join(
+                chunks.alias("y"),
+                (F.col("x.chunk") == F.col("y.chunk"))
+                & (F.col("x.key") == F.col("y.key"))
+                & (F.col("x.doc") < F.col("y.doc")),
             )
-        ).alias("cc"),
-    ).select("doc", "simhash", "cc.chunk", "cc.key")
-    cand = (
-        chunks.alias("x")
-        .join(
-            chunks.alias("y"),
-            (F.col("x.chunk") == F.col("y.chunk"))
-            & (F.col("x.key") == F.col("y.key"))
-            & (F.col("x.doc") < F.col("y.doc")),
+            .select(
+                F.col("x.doc").alias("a"),
+                F.col("y.doc").alias("b"),
+                F.col("x.simhash").alias("ha"),
+                F.col("y.simhash").alias("hb"),
+            )
         )
-        .select(
-            F.col("x.doc").alias("a"),
-            F.col("y.doc").alias("b"),
-            F.col("x.simhash").alias("ha"),
-            F.col("y.simhash").alias("hb"),
+        # hamming filter BEFORE the dedup-distinct: a pair sharing k
+        # chunks appears k times in the join output, and on corpora whose
+        # simhashes cluster the raw candidate stream is enormous (a
+        # 500k-doc soak counted 4.1e9 candidate rows) — filtering inside the
+        # join's output stage keeps all of that in codegen and lets only
+        # true near-dup pairs (×multiplicity ≤ n_chunks) reach the distinct's
+        # shuffle, instead of shuffling every candidate first
+        hamming = F.bit_count(F.col("ha").bitwiseXOR(F.col("hb")))
+        return (
+            cand.withColumn("hamming", hamming)
+            .filter(F.col("hamming") <= max_hamming)
+            .select("a", "b", "hamming")
+            .distinct()
         )
-    )
-    # hamming filter BEFORE the dedup-distinct: a pair sharing k
-    # chunks appears k times in the join output, and on corpora whose
-    # simhashes cluster the raw candidate stream is enormous (the r6
-    # 500k soak counted 4.1e9 candidate rows) — filtering inside the
-    # join's output stage keeps all of that in codegen and lets only
-    # true near-dup pairs (×multiplicity ≤ n_chunks) reach the distinct's
-    # shuffle, instead of shuffling every candidate first
-    hamming = F.bit_count(F.col("ha").bitwiseXOR(F.col("hb")))
-    pairs = (
-        cand.withColumn("hamming", hamming)
-        .filter(F.col("hamming") <= max_hamming)
-        .select("a", "b", "hamming")
-        .distinct()
-    )
-    if pair_key is not None:
-        from raft_c_spark.functions.diskcache import cached_parquet
 
-        pairs = cached_parquet(pairs, pair_key)
-    return pairs
+    return cached_parquet(spark, pair_key, build)
 
 
 def connected_components(
@@ -1878,7 +1717,7 @@ def _bloom_prefilter(
     the map-side prefilter for a measured-cap join-back whose key set
     outgrew the broadcast cap (false positives pass through to the
     exact equi-join that follows; false negatives are impossible, so
-    results are exact). The column pairs are parameters (r11) because
+    results are exact). The column pairs are parameters because
     the sparse test is not always the join key itself: dedup_exact's
     keep-test is sparse on the COMPOSITE (content-key, id) even
     though its equi-join key alone is dense, so its bloom columns are
@@ -1972,7 +1811,7 @@ def repeated_substring_spans(
     under a measured row cap so the probe stream never shuffles,
     shuffle equi-join above) → per-doc gaps-and-islands merge
     (two window passes over positions, partitioned by doc). Nothing
-    quadratic. The aggregate is the default (judge r7 ask #3) because
+    quadratic. The aggregate is the default because
     it is skew-immune: the former ``Window.partitionBy(gram)`` put
     every occurrence of a hot boilerplate gram into ONE partition —
     a scale-killer on Zipfian 100 TB text — whereas partial
@@ -1990,134 +1829,127 @@ def repeated_substring_spans(
     over many corpora should ``spark.catalog.clearCache()`` (or
     unpersist) between corpora themselves.
 
-    ``cache_key`` contract (advisor r9): the key must uniquely
+    ``cache_key`` contract: the key must uniquely
     fingerprint the EXACT input frame — rows and columns, e.g.
     ``data_cache_key`` over the backing file — not merely name the
     corpus. The disk cache keys only on (cache_key, params); a caller
     reusing a corpus-level key with a filtered/transformed ``df``
     silently reads back the full-corpus spans.
     """
-    from pyspark.sql import Window
-
     # ``cache_key`` persists the span frame per corpus (the lm-score/
     # DSIR pattern): the spans are consumed by BOTH the span-report
     # query and cut_repeated_spans — sharing one materialization
     # halves the pipeline's bench cost and at 100 TB spans are a
     # stored column computed once per corpus version anyway.
+    key = None
     if cache_key is not None:
-        from raft_c_spark.functions.diskcache import lookup
-
         key = (
             f"spans_{cache_key}_{id_col}_{text_col}"
             f"_L{min_len}_c{min_count}_v1"
         )
-        if (hit := lookup(key)) is not None:
-            return read_parquet(df.sparkSession, hit)
 
-    L = min_len
-    norm = F.lower(F.trim(F.regexp_replace(F.col(text_col), r"\s+", " ")))
-    base = (
-        _widen(df.select(F.col(id_col).alias("doc"), norm.alias("t")))
-        .filter(F.length("t") >= L)
-    )
-    grams = base.select(
-        "doc",
-        F.explode(
-            F.expr(
-                f"transform(sequence(1, length(t) - {L - 1}),"
-                f" i -> struct(i as pos, substring(t, i, {L}) as gram))"
+    def build():
+        L = min_len
+        norm = F.lower(F.trim(F.regexp_replace(F.col(text_col), r"\s+", " ")))
+        base = (
+            _widen(df.select(F.col(id_col).alias("doc"), norm.alias("t")))
+            .filter(F.length("t") >= L)
+        )
+        grams = base.select(
+            "doc",
+            F.explode(
+                F.expr(
+                    f"transform(sequence(1, length(t) - {L - 1}),"
+                    f" i -> struct(i as pos, substring(t, i, {L}) as gram))"
+                )
+            ).alias("pg"),
+        ).select("doc", F.col("pg.pos").cast("long").alias("pos"), "pg.gram")
+        # 128-bit gram key: two independent xxhash64 values; the heavy gram
+        # string never leaves the map side.
+        hashed = grams.select(
+            "doc",
+            "pos",
+            F.xxhash64("gram").alias("h1"),
+            F.xxhash64("gram", F.lit(1)).alias("h2"),
+        )
+        from pyspark.storagelevel import StorageLevel
+
+        # the repeated-key set (16 B/row) is PERSISTED so the measured-cap
+        # count does not recompute the aggregate for the join build side,
+        # then broadcast under the cap — which keeps the 13M-row-per-50k-
+        # docs probe stream from ever shuffling. The three shapes were
+        # measured at the 50k soak corpus: eager-count without persist
+        # 7.6 s (aggregate runs twice), AQE-decided join 21-27 s (AQE
+        # converts to broadcast but only after the SMJ-planned probe
+        # exchange has already written all 13M rows), persist+count+
+        # broadcast 4.1-4.5 s. Above the cap the persisted set feeds the
+        # shuffle equi-join (never a window) — the scale fallback;
+        # MEMORY_AND_DISK so a genuinely huge set spills instead of
+        # evicting. The probe side recomputes the explode rather than
+        # caching it — CPU-cheap codegen vs pinning a corpus-sized gram
+        # frame in storage memory.
+        rep = (
+            hashed.groupBy("h1", "h2")
+            .agg(F.count(F.lit(1)).alias("c"))
+            .filter(F.col("c") >= min_count)
+            .select("h1", "h2")
+            .persist(StorageLevel.MEMORY_AND_DISK)
+        )
+        n_rep = rep.count()
+        if n_rep <= _BROADCAST_MAX_BANDED_ROWS:
+            hits = hashed.join(F.broadcast(rep), ["h1", "h2"]).select(
+                "doc", "pos"
             )
-        ).alias("pg"),
-    ).select("doc", F.col("pg.pos").cast("long").alias("pos"), "pg.gram")
-    # 128-bit gram key: two independent xxhash64 values; the heavy gram
-    # string never leaves the map side.
-    hashed = grams.select(
-        "doc",
-        "pos",
-        F.xxhash64("gram").alias("h1"),
-        F.xxhash64("gram", F.lit(1)).alias("h2"),
-    )
-    from pyspark.storagelevel import StorageLevel
+        else:
+            # caught by the 500k→1.5M-doc soak: at 1.5M docs the repeated
+            # key set crossed the broadcast cap (7.1M keys vs 4M) and the
+            # bare equi-join fallback shuffled the ENTIRE ~450M-row probe
+            # stream — 9.7x raw at 3x data. Hits are sparse (most grams are
+            # unique), so a broadcast bloom over the repeated keys filters
+            # the probe MAP-SIDE down to ~hits + ~1% false positives
+            # before the exact equi-join; the bloom's bitmap is built
+            # distributed (one partial bitmap per partition, OR'd on the
+            # driver — never the keys themselves) and costs m/8 bytes
+            # regardless of key count. FPs only add join input, never
+            # results — the equi-join stays exact.
+            pre = _bloom_prefilter(hashed, rep, n_rep)
+            hits = pre.join(rep, ["h1", "h2"]).select("doc", "pos")
+        w_prev = (
+            Window.partitionBy("doc")
+            .orderBy("pos")
+            .rowsBetween(Window.unboundedPreceding, -1)
+        )
+        w_run = (
+            Window.partitionBy("doc")
+            .orderBy("pos")
+            .rowsBetween(Window.unboundedPreceding, 0)
+        )
+        flagged = hits.withColumn(
+            "prev_end", F.max(F.col("pos") + L).over(w_prev)
+        ).withColumn(
+            "new_island",
+            F.when(
+                F.col("prev_end").isNull() | (F.col("pos") > F.col("prev_end")),
+                F.lit(1),
+            ).otherwise(F.lit(0)),
+        )
+        islands = flagged.withColumn("island", F.sum("new_island").over(w_run))
+        return (
+            islands.groupBy("doc", "island")
+            .agg(
+                F.min("pos").alias("span_start"),
+                (F.max("pos") + F.lit(L)).alias("span_end"),
+                F.count(F.lit(1)).alias("n_grams"),
+            )
+            .select(
+                F.col("doc").alias(id_col),
+                F.col("span_start").cast("long").alias("span_start"),
+                F.col("span_end").cast("long").alias("span_end"),
+                F.col("n_grams").cast("long").alias("n_grams"),
+            )
+        )
 
-    # the repeated-key set (16 B/row) is PERSISTED so the measured-cap
-    # count does not recompute the aggregate for the join build side,
-    # then broadcast under the cap — which keeps the 13M-row-per-50k-
-    # docs probe stream from ever shuffling. The three shapes were
-    # measured at the 50k soak corpus: eager-count without persist
-    # 7.6 s (aggregate runs twice), AQE-decided join 21-27 s (AQE
-    # converts to broadcast but only after the SMJ-planned probe
-    # exchange has already written all 13M rows), persist+count+
-    # broadcast 4.1-4.5 s. Above the cap the persisted set feeds the
-    # shuffle equi-join (never a window) — the scale fallback;
-    # MEMORY_AND_DISK so a genuinely huge set spills instead of
-    # evicting. The probe side recomputes the explode rather than
-    # caching it — CPU-cheap codegen vs pinning a corpus-sized gram
-    # frame in storage memory.
-    rep = (
-        hashed.groupBy("h1", "h2")
-        .agg(F.count(F.lit(1)).alias("c"))
-        .filter(F.col("c") >= min_count)
-        .select("h1", "h2")
-        .persist(StorageLevel.MEMORY_AND_DISK)
-    )
-    n_rep = rep.count()
-    if n_rep <= _BROADCAST_MAX_BANDED_ROWS:
-        hits = hashed.join(F.broadcast(rep), ["h1", "h2"]).select(
-            "doc", "pos"
-        )
-    else:
-        # r10 fourth-decade soak catch (#7): at 1.5M docs the repeated
-        # key set crossed the broadcast cap (7.1M keys vs 4M) and the
-        # bare equi-join fallback shuffled the ENTIRE ~450M-row probe
-        # stream — 9.7x raw at 3x data. Hits are sparse (most grams are
-        # unique), so a broadcast bloom over the repeated keys filters
-        # the probe MAP-SIDE down to ~hits + ~1% false positives
-        # before the exact equi-join; the bloom's bitmap is built
-        # distributed (one partial bitmap per partition, OR'd on the
-        # driver — never the keys themselves) and costs m/8 bytes
-        # regardless of key count. FPs only add join input, never
-        # results — the equi-join stays exact.
-        pre = _bloom_prefilter(hashed, rep, n_rep)
-        hits = pre.join(rep, ["h1", "h2"]).select("doc", "pos")
-    w_prev = (
-        Window.partitionBy("doc")
-        .orderBy("pos")
-        .rowsBetween(Window.unboundedPreceding, -1)
-    )
-    w_run = (
-        Window.partitionBy("doc")
-        .orderBy("pos")
-        .rowsBetween(Window.unboundedPreceding, 0)
-    )
-    flagged = hits.withColumn(
-        "prev_end", F.max(F.col("pos") + L).over(w_prev)
-    ).withColumn(
-        "new_island",
-        F.when(
-            F.col("prev_end").isNull() | (F.col("pos") > F.col("prev_end")),
-            F.lit(1),
-        ).otherwise(F.lit(0)),
-    )
-    islands = flagged.withColumn("island", F.sum("new_island").over(w_run))
-    out = (
-        islands.groupBy("doc", "island")
-        .agg(
-            F.min("pos").alias("span_start"),
-            (F.max("pos") + F.lit(L)).alias("span_end"),
-            F.count(F.lit(1)).alias("n_grams"),
-        )
-        .select(
-            F.col("doc").alias(id_col),
-            F.col("span_start").cast("long").alias("span_start"),
-            F.col("span_end").cast("long").alias("span_end"),
-            F.col("n_grams").cast("long").alias("n_grams"),
-        )
-    )
-    if cache_key is not None:
-        from raft_c_spark.functions.diskcache import cached_parquet
-
-        out = cached_parquet(out, key)
-    return out
+    return cached_parquet(df.sparkSession, key, build)
 
 
 def segment_dedup(
@@ -2150,7 +1982,7 @@ def segment_dedup(
     text is rebuilt from the ORIGINAL token arrays in one unique-key
     equi-join back onto the corpus — the text payload crosses exactly
     one shuffle and no measured-cap/broadcast machinery is needed at
-    all. (The r9 500k soak caught the join version super-linear:
+    all. (A 500k-doc soak caught the join version super-linear:
     8.4 M seg strings through an SMJ; this shape re-measured linear.)
     """
     if seg_tokens < 1:

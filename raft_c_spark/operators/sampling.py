@@ -23,6 +23,7 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
+from raft_c_spark.functions.diskcache import cached_parquet
 from raft_c_spark.sources.parquet import read_parquet
 
 #: hex digits of the md5 used as the sampling key: 6 digits → fraction
@@ -99,8 +100,7 @@ _EXPENSIVE_NODES = (
 
 
 def _expensive_lineage(df: DataFrame) -> bool:
-    # line-leading node-name match, not bare substring (judge r13 #5:
-    # a column literally named "myJoinKey" must not trigger a full
+    # line-leading node-name match, not bare substring (a column literally named "myJoinKey" must not trigger a full
     # localCheckpoint materialization — this gate's false positive is
     # a real cost, not merely a skipped shortcut)
     from raft_c_spark.functions.planshape import plan_has_node
@@ -144,9 +144,9 @@ def pack_sequences(
     # Python-kernel upstream (ds_pipeline_e2e's 4-stage pipeline,
     # ds_pack_bpe's tokenizer) it doubles the most expensive part of
     # the query — so such inputs are materialized ONCE to executor-
-    # local blocks first and both passes read the blocks (r13, guide
-    # §1.2/§5: don't compute things twice; localCheckpoint as the
-    # cheap lineage cut). Output is identical either way: the blocks
+    # local blocks first and both passes read the blocks (don't
+    # compute things twice; localCheckpoint as the cheap lineage
+    # cut). Output is identical either way: the blocks
     # hold exactly df's rows, and the prefix-sum result is
     # partitioning-independent.
     # Block lifetime: both localCheckpoints' blocks are
@@ -402,7 +402,7 @@ def temperature_sample(
     before the hex-string compare (see TEMP_DIGITS note), so the
     selection is bit-reproducible in any engine with md5.
 
-    Grid floor regime (advisor r7): a stratum whose rate floors
+    Grid floor regime: a stratum whose rate floors
     below 1/16^digits would get thr = 0 and contribute ZERO rows —
     a silent total-drop when its exact expected draw count
     n_s = rate·count_s is still ≥ 1 (large strata under tight
@@ -484,7 +484,7 @@ def epoch_repeats(
         / (F.col("_w") * F.col("_cnt"))
     )
     base = F.floor(epochs).cast("int")
-    # same grid-floor clamp as temperature_sample (advisor r7): a
+    # same grid-floor clamp as temperature_sample: a
     # sub-epoch stratum (base = 0) whose fraction floors to 0 would
     # vanish entirely even with n_s = e_s·count_s ≥ 1 expected draws
     frac_thr = F.greatest(
@@ -567,95 +567,91 @@ def importance_weights(
     weights are derived state every downstream consumer — selection,
     resampling, mixture design — reads repeatedly, so scoring is paid
     once per corpus, not per query."""
+    key = None
     if cache_key is not None:
-        from raft_c_spark.functions.diskcache import lookup
-
         key = (
             f"dsirweights_{cache_key}_{id_col}_{text_col}_{target_col}"
             f"_b{num_buckets}_v1"
         )
-        if (hit := lookup(key)) is not None:
-            return read_parquet(df.sparkSession, hit)
-    toks = F.regexp_extract_all(
-        F.lower(F.col(text_col)), F.lit("[a-z0-9]+"), F.lit(0)
-    )
-    base = df.select(
-        F.col(id_col).alias("doc"),
-        F.col(target_col).cast("boolean").alias("is_tgt"),
-        toks.alias("toks"),
-    )
-    idxs = F.filter(
-        F.sequence(F.lit(1), F.greatest(F.size("toks") - 1, F.lit(1))),
-        lambda i: (i + 1) <= F.size("toks"),
-    )
-    bigrams = F.transform(
-        idxs,
-        lambda i: F.concat_ws(
-            " ", F.element_at("toks", i), F.element_at("toks", i + 1)
-        ),
-    )
-    occ = (
-        base.select(
-            "doc",
-            "is_tgt",
-            F.explode(F.concat(F.col("toks"), bigrams)).alias("g"),
-        )
-        .select(
-            "doc",
-            "is_tgt",
-            F.pmod(
-                F.conv(
-                    F.substring(F.md5(F.col("g").cast("binary")), 1, 8),
-                    16,
-                    10,
-                ).cast("long"),
-                F.lit(num_buckets),
-            ).alias("b"),
-        )
-        .cache()
-    )
-    cnt = occ.groupBy("b").agg(
-        F.count(F.lit(1)).alias("c_raw"),
-        F.sum(F.col("is_tgt").cast("long")).alias("c_tgt"),
-    )
-    tot = cnt.agg(
-        F.sum("c_raw").alias("n_raw"), F.sum("c_tgt").alias("n_tgt")
-    )
-    lr = F.log(
-        (F.col("c_tgt") + 1).cast("double")
-        / (F.col("n_tgt") + num_buckets).cast("double")
-    ) - F.log(
-        (F.col("c_raw") + 1).cast("double")
-        / (F.col("n_raw") + num_buckets).cast("double")
-    )
-    rates = cnt.crossJoin(F.broadcast(tot)).select(
-        "b", F.round(lr, 8).cast("decimal(18,8)").alias("lr")
-    )
-    scored = (
-        occ.join(F.broadcast(rates), ["b"])
-        .groupBy("doc")
-        .agg(
-            F.count(F.lit(1)).alias("n_feats"),
-            F.sum("lr").cast("double").alias("log_weight"),
-        )
-        .select(F.col("doc").alias(id_col), "n_feats", "log_weight")
-    )
-    # docs with no [a-z0-9] tokens produce zero feature rows and would
-    # otherwise vanish from the output entirely; "score EVERY raw
-    # document" means they carry the neutral weight (empty product →
-    # log w = 0) so downstream selection still sees them. Map-only
-    # union — no join back onto the corpus.
-    empty = base.filter(F.size("toks") == 0).select(
-        F.col("doc").alias(id_col),
-        F.lit(0).cast("long").alias("n_feats"),
-        F.lit(0.0).alias("log_weight"),
-    )
-    out = scored.unionByName(empty)
-    if cache_key is not None:
-        from raft_c_spark.functions.diskcache import cached_parquet
 
-        out = cached_parquet(out, key)
-    return out
+    def build():
+        toks = F.regexp_extract_all(
+            F.lower(F.col(text_col)), F.lit("[a-z0-9]+"), F.lit(0)
+        )
+        base = df.select(
+            F.col(id_col).alias("doc"),
+            F.col(target_col).cast("boolean").alias("is_tgt"),
+            toks.alias("toks"),
+        )
+        idxs = F.filter(
+            F.sequence(F.lit(1), F.greatest(F.size("toks") - 1, F.lit(1))),
+            lambda i: (i + 1) <= F.size("toks"),
+        )
+        bigrams = F.transform(
+            idxs,
+            lambda i: F.concat_ws(
+                " ", F.element_at("toks", i), F.element_at("toks", i + 1)
+            ),
+        )
+        occ = (
+            base.select(
+                "doc",
+                "is_tgt",
+                F.explode(F.concat(F.col("toks"), bigrams)).alias("g"),
+            )
+            .select(
+                "doc",
+                "is_tgt",
+                F.pmod(
+                    F.conv(
+                        F.substring(F.md5(F.col("g").cast("binary")), 1, 8),
+                        16,
+                        10,
+                    ).cast("long"),
+                    F.lit(num_buckets),
+                ).alias("b"),
+            )
+            .cache()
+        )
+        cnt = occ.groupBy("b").agg(
+            F.count(F.lit(1)).alias("c_raw"),
+            F.sum(F.col("is_tgt").cast("long")).alias("c_tgt"),
+        )
+        tot = cnt.agg(
+            F.sum("c_raw").alias("n_raw"), F.sum("c_tgt").alias("n_tgt")
+        )
+        lr = F.log(
+            (F.col("c_tgt") + 1).cast("double")
+            / (F.col("n_tgt") + num_buckets).cast("double")
+        ) - F.log(
+            (F.col("c_raw") + 1).cast("double")
+            / (F.col("n_raw") + num_buckets).cast("double")
+        )
+        rates = cnt.crossJoin(F.broadcast(tot)).select(
+            "b", F.round(lr, 8).cast("decimal(18,8)").alias("lr")
+        )
+        scored = (
+            occ.join(F.broadcast(rates), ["b"])
+            .groupBy("doc")
+            .agg(
+                F.count(F.lit(1)).alias("n_feats"),
+                F.sum("lr").cast("double").alias("log_weight"),
+            )
+            .select(F.col("doc").alias(id_col), "n_feats", "log_weight")
+        )
+        # docs with no [a-z0-9] tokens produce zero feature rows and would
+        # otherwise vanish from the output entirely; "score EVERY raw
+        # document" means they carry the neutral weight (empty product →
+        # log w = 0) so downstream selection still sees them. Map-only
+        # union — no join back onto the corpus.
+        empty = base.filter(F.size("toks") == 0).select(
+            F.col("doc").alias(id_col),
+            F.lit(0).cast("long").alias("n_feats"),
+            F.lit(0.0).alias("log_weight"),
+        )
+        return scored.unionByName(empty)
+
+    return cached_parquet(df.sparkSession, key, build)
 
 
 def gumbel_topk(
@@ -794,7 +790,7 @@ def token_budget_mix(
             # a zero-token source is trivially within any budget →
             # taken whole (rate 1.0); without the guard Spark's Divide
             # returns NULL on the 0 divisor and every row of the
-            # source gets NULL rate/selected (reviewer r10)
+            # source gets NULL rate/selected
             F.when(F.col("_src_tokens") == 0, F.lit(1.0)).otherwise(
                 F.least(
                     F.lit(1.0),

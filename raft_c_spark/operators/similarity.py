@@ -21,6 +21,7 @@ import os
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
+from raft_c_spark.functions.metabound import _widen
 from raft_c_spark.sources.parquet import fingerprint, read_parquet
 
 
@@ -32,7 +33,7 @@ from raft_c_spark.sources.parquet import fingerprint, read_parquet
 #: it from the parquet schema (array<float> carries no length), so
 #: each caller paid a first() probe JOB per invocation — five
 #: sim/dedup queries × 0.2-0.8 s of pure job overhead at bench scale
-#: (guide §5: driver actions in the query path). Two advisor-r13
+#: (driver actions in the query path). Two
 #: hardenings: (1) memoization is SKIPPED unless every input file has
 #: a fingerprint — a URI form that is not local (s3://, hdfs://)
 #: would otherwise stat as a constant (-1,-1) and a path
@@ -72,7 +73,7 @@ def vec_dim(df: DataFrame, vec_col: str) -> int:
             stamp = fingerprint(f)
             if stamp is None:
                 # unresolvable stat → no invalidation signal → never
-                # memoize (advisor r13 item 1); probe as before
+                # memoize; probe as before
                 stats = None
                 break
             stats.append((f, stamp))
@@ -115,7 +116,7 @@ def _vec_norm_exprs(
     corpus; per-row values are bit-identical: same cast, same guard,
     same fold order). Guard scope on those rerank paths is therefore
     NARROWER than with_norm over the full corpus: only rows fetched
-    as candidates are length-validated (advisor r13 — see the note in
+    as candidates are length-validated (see the note in
     knn_join_lsh)."""
     vec = F.expr(f"transform({vec_col}, x -> cast(x as double))")
     if dim is not None:
@@ -138,8 +139,8 @@ def with_norm(
     """Project to (doc, vec: array<double>, norm). Casting float→double
     once up front keeps later arithmetic deterministic. When ``dim``
     is given, every vector's length is validated against it (fail
-    fast with the offending doc id — reviewer r8: the parameter was
-    previously accepted by every caller and silently ignored, so a
+    fast with the offending doc id — the parameter was once
+    accepted by every caller and silently ignored, so a
     ragged embedding column surfaced as a wrong dot product or a deep
     numpy shape error instead of this message)."""
     vec, norm = _vec_norm_exprs(vec_col, id_col, dim)
@@ -203,15 +204,12 @@ def quantize_int8(
 # verification ships the matrix as a Spark broadcast variable and runs
 # a vectorized numpy kernel — the manual analog of a broadcast hash
 # join. Above it the verify falls back to equi-joins that shuffle on
-# doc id (the corpus-scale shape). Default 400 MB: the r5 500k-doc
-# soak measured the old 100 MB cap turning a 3.3× data step into a
+# doc id (the corpus-scale shape). 400 MB: a 500k-doc soak
+# measured the old 100 MB cap turning a 3.3× data step into a
 # 15× cost step the moment the matrix crossed it (102 MB at 200k
 # 64-dim vectors) — a torrent broadcast of a few hundred MB is cheap
 # next to shuffling every candidate pair with two vectors attached.
-# Deployers with small executors can lower it via env.
-_VERIFY_BROADCAST_BYTES = (
-    int(os.environ.get("RAFT_C_SPARK_VERIFY_BROADCAST_MB", "400")) << 20
-)
+_VERIFY_BROADCAST_BYTES = 400 << 20
 
 
 def _corpus_pack(df: DataFrame, id_col: str, vec_col: str):
@@ -297,7 +295,7 @@ def verify_pairs_cosine(
     # computes the cosine with the same dimension-at-a-time float64
     # accumulation as the broadcast kernel and the SQL fold. This
     # replaced a zip_with/aggregate column fold that ran interpreted
-    # at ~15 µs/row — on the r5 500k-doc soak the fold made crossing
+    # at ~15 µs/row — on a 500k-doc soak the fold made crossing
     # the broadcast cap a 15× cliff; the Arrow kernel shrinks the
     # above-cap step to the shuffle cost alone.
     v = with_norm(df, id_col, vec_col, dim)
@@ -469,7 +467,7 @@ def semantic_dedup_pairs(
     from raft_c_spark.functions.metabound import rows_upper_bound
 
     # the count only gates the verify kernel's broadcast cap — the
-    # free footer bound proves it for scan-shaped corpora (r13)
+    # free footer bound proves it for scan-shaped corpora
     n_rows = rows_upper_bound(df)
     if n_rows is None or n_rows * dim * 8 > _VERIFY_BROADCAST_BYTES:
         n_rows = df.count()
@@ -509,14 +507,12 @@ def knn_join(
     import numpy as np
     import pandas as pd
 
-    from raft_c_spark.operators.dedup import _widen
-
     dim = vec_dim(corpus_df, vec_col)
     for side, frame in (("queries", queries_df), ("corpus", corpus_df)):
         t = frame.schema[id_col].dataType.simpleString()
         if t not in ("bigint", "int"):
             # the numpy pack/searchsorted kernels require integral ids
-            # (reviewer r8: a string id previously surfaced as an
+            # (a string id once surfaced as an
             # opaque ValueError deep inside pandas, executor-side)
             raise TypeError(
                 f"knn_join requires integral ids; {side} {id_col!r} "
@@ -616,13 +612,13 @@ def knn_join_lsh(
     if exclude_self:
         cand = cand.filter(F.col("q") != F.col("doc"))
     # rerank: fetch raw candidate vectors FIRST, compute the cast +
-    # norm fold on matches only (r13, guide §1.2: the previous shape
+    # norm fold on matches only (the previous shape
     # projected with_norm over the WHOLE corpus below the join, so
     # every corpus row paid the 2·dim-op fold to feed a candidate set
     # that is |Q|·tables·bucket-sized — at 100 TB that is a full-corpus
     # compute pass for a sample-sized rerank). _vec_norm_exprs keeps
     # the per-row arithmetic bit-identical to with_norm's.
-    # NOTE (advisor r13): this narrows with_norm's r8 fail-fast
+    # NOTE: this narrows with_norm's fail-fast
     # contract — corpus rows that never surface as candidates are no
     # longer length-validated on this path, and a ragged row now
     # first hits the numpy signature kernel's shape error (an opaque
@@ -976,8 +972,6 @@ def pair_signatures(
                 }
             )
 
-    from raft_c_spark.operators.dedup import _widen
-
     return _widen(df.select(F.col(id_col), F.col(vec_col))).mapInPandas(
         kernel, "doc long, table int, sig long"
     )
@@ -1034,7 +1028,7 @@ def auto_lsh_allocation(
     work ~15:1, so smaller is faster until tables inflate. Measured
     at the 500k soak (200k 64-dim vectors, threshold 0.9): target 32
     → 101.9M candidates / 31.1s; target 16 → 18.7s with the same 0.95
-    recall product — and the r6 soak's 150k→500k ratio drops from
+    recall product — and the 150k→500k soak ratio drops from
     4.2× to 2.9× (sub-linear) per 3.33× data.
 
     Returns [(bits, tables, table_offset), ...] (1 or 2 groups;
@@ -1246,7 +1240,7 @@ def lsh_bucketed_topk(
 
 
 # ---------------------------------------------------------------------------
-# ANN recall certification with parameter auto-tuning (judge r9 ask #6)
+# ANN recall certification with parameter auto-tuning
 # ---------------------------------------------------------------------------
 
 #: deterministic (bits, tables) ladder, cheap-to-expensive: recall and
@@ -1356,12 +1350,12 @@ def certify_lsh_recall(
     n_corpus = corpus_df.count()
     budget = int(n_queries * n_corpus * budget_frac)
 
-    # Driver-side planted-query pack (r13): ONE bounded collect of the
+    # Driver-side planted-query pack: ONE bounded collect of the
     # n_queries base vectors (the same gated scalar-probe class as the
     # topk query vector), noise and norms replayed with the identical
     # IEEE op sequence as the codegen/kernel path. Each rung's query
     # signatures and rerank vectors then enter the plan as
-    # LocalRelations — the r12 shape paid a Python mapInPandas stage
+    # LocalRelations — an earlier shape paid a Python mapInPandas stage
     # plus a second broadcast-exchange subtree PER RUNG to recompute
     # 20 rows it could carry as literals (guide §4: the Python
     # boundary is for volume, not for 20 rows; §5: tiny driver
@@ -1378,7 +1372,7 @@ def certify_lsh_recall(
     )
     # raw corpus projection for the rerank fetch: the cast + norm fold
     # is applied AFTER the candidate join (matches only), not over the
-    # whole corpus per rung (r13 — same reorder as knn_join_lsh; the
+    # whole corpus per rung (same reorder as knn_join_lsh; the
     # arithmetic is _vec_norm_exprs, bit-identical to with_norm)
     craw = corpus_df.select(
         F.col(id_col).alias("doc"), F.col(vec_col).alias("_craw")
@@ -1527,7 +1521,7 @@ def _certify_walk(
         # hit = winner.doc == q. The ≤n_queries-row collect is a
         # scalar probe. The cast + norm fold runs on FETCHED
         # candidates only (_vec_norm_exprs — bit-identical to
-        # with_norm), not over the whole corpus per rung (r13).
+        # with_norm), not over the whole corpus per rung.
         cvec, cnorm = _vec_norm_exprs("_craw", "doc", dim)
         per_q = (
             cand.join(craw, "doc")

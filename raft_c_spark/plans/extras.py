@@ -7,6 +7,7 @@ tests/test_entry_contract.py as in-window queries."""
 
 from __future__ import annotations
 
+from raft_c_spark.functions.diskcache import data_cache_key
 from raft_c_spark.plans.multimodal import (
     frame_index_expected_parquet_path,
     frames_expected_parquet_path,
@@ -38,13 +39,11 @@ def q_dedup_ngram_word(spark, sf_dir):
     from raft_c_spark.operators import dedup
     from raft_c_spark.sources.testdata import load_table
 
-    from raft_c_spark.plans.dedup import _data_cache_key
-
     docs = load_table(spark, sf_dir, "documents")
     return dedup.ngram_jaccard_pairs(
         docs, "doc_id", "text", n=WORD_JACCARD_N, threshold=WORD_JACCARD_T,
         strategy="prefix", unit="word",
-        cache_key=_data_cache_key(sf_dir, "documents"),
+        cache_key=data_cache_key(sf_dir, "documents"),
     )
 
 
@@ -58,7 +57,7 @@ def q_dedup_minhash_incr(spark, sf_dir):
     from pyspark.sql import functions as F
 
     from raft_c_spark.operators import dedup
-    from raft_c_spark.plans.dedup import JACCARD_THRESHOLD, _data_cache_key
+    from raft_c_spark.plans.dedup import JACCARD_THRESHOLD
     from raft_c_spark.sources.testdata import load_table
 
     docs = load_table(spark, sf_dir, "documents")
@@ -67,10 +66,10 @@ def q_dedup_minhash_incr(spark, sf_dir):
     return dedup.minhash_lsh_pairs_between(
         new, corpus, "doc_id", "text", n=3, num_perm=64, bands=8,
         threshold=JACCARD_THRESHOLD,
-        corpus_cache_key=_data_cache_key(sf_dir, "documents") + "_even",
+        corpus_cache_key=data_cache_key(sf_dir, "documents") + "_even",
         # identifies both frames: the odd/even doc_id split of this
         # exact corpus fingerprint
-        pair_cache_key=_data_cache_key(sf_dir, "documents") + "_oddveven",
+        pair_cache_key=data_cache_key(sf_dir, "documents") + "_oddveven",
     )
 
 
@@ -84,7 +83,6 @@ def q_sim_topk_ivf_full(spark, sf_dir):
     stays recall-pinned in pytest; this one is hash-oracled with the
     brute-force SQL."""
     from raft_c_spark.operators import similarity
-    from raft_c_spark.plans.dedup import _data_cache_key
     from raft_c_spark.plans.similarity import TOP_K, _query_vec
     from raft_c_spark.sources.testdata import load_table
 
@@ -95,7 +93,7 @@ def q_sim_topk_ivf_full(spark, sf_dir):
         k=TOP_K,
         n_lists=16,
         n_probe=16,
-        cache_key=_data_cache_key(sf_dir, "embeddings"),
+        cache_key=data_cache_key(sf_dir, "embeddings"),
     )
 
 
@@ -112,14 +110,13 @@ def q_sim_knn_join_lsh(spark, sf_dir):
     from pyspark.sql import functions as F
 
     from raft_c_spark.operators import similarity
-    from raft_c_spark.plans.dedup import _data_cache_key
     from raft_c_spark.sources.testdata import load_table
 
     emb = load_table(spark, sf_dir, "embeddings")
     queries = emb.filter(F.col("vec_id") < KNN_QUERIES)
     return similarity.knn_join_lsh(
         queries, emb, k=KNN_K, bits=8, tables=16,
-        cache_key=_data_cache_key(sf_dir, "embeddings"),
+        cache_key=data_cache_key(sf_dir, "embeddings"),
     )
 
 
@@ -178,12 +175,10 @@ def q_dedup_repeated_spans(spark, sf_dir):
     from raft_c_spark.operators import dedup
     from raft_c_spark.sources.testdata import load_table
 
-    from raft_c_spark.plans.dedup import _data_cache_key
-
     docs = load_table(spark, sf_dir, "documents")
     return dedup.repeated_substring_spans(
         docs, "doc_id", "text", min_len=SPAN_LEN,
-        cache_key=_data_cache_key(sf_dir, "documents"),
+        cache_key=data_cache_key(sf_dir, "documents"),
     )
 
 
@@ -430,18 +425,18 @@ def q_dedup_best_survivor(spark, sf_dir):
     from pyspark.sql import functions as F
 
     from raft_c_spark.operators import dedup, text
-    from raft_c_spark.plans.dedup import JACCARD_THRESHOLD, _data_cache_key
+    from raft_c_spark.plans.dedup import JACCARD_THRESHOLD
     from raft_c_spark.sources.testdata import load_table
 
     docs = load_table(spark, sf_dir, "documents")
     pairs = dedup.minhash_lsh_pairs(
         docs, "doc_id", "text", n=3, num_perm=64, bands=8,
         threshold=JACCARD_THRESHOLD,
-        cache_key=_data_cache_key(sf_dir, "documents"),
+        cache_key=data_cache_key(sf_dir, "documents"),
     )
     comps = dedup.connected_components(pairs)
-    # score ONLY component members (r14, guide §1.2: don't compute
-    # what you throw away / §8: decide with small rows). text.analyze
+    # score ONLY component members (don't compute what you throw
+    # away; decide with small rows). text.analyze
     # is a pure per-row projection and the comps join is inner, so
     # semi-joining docs to the membership first is results-identical
     # while skipping the quality-regex suite for every doc that is in
@@ -449,7 +444,7 @@ def q_dedup_best_survivor(spark, sf_dir):
     # No broadcast hint: comps is a LocalRelation below
     # driver_max_edges (Catalyst auto-broadcasts it) and a real
     # distributed frame above, where the planner picks the join.
-    # Interleaved A/B (r14, min-of-4): wall 0.805→0.635, CPU 4.0→2.4,
+    # Interleaved A/B (min-of-4): wall 0.805→0.635, CPU 4.0→2.4,
     # identical 242 rows.
     members = comps.select(F.col("doc").alias("doc_id"))
     qual = text.analyze(
@@ -458,8 +453,8 @@ def q_dedup_best_survivor(spark, sf_dir):
     ranked = comps.join(qual, comps["doc"] == qual["doc_id"]).select(
         "component", "doc", "quality"
     )
-    # survivor per component via ONE map-side-combined aggregate (r9:
-    # this was a Window.partitionBy(component) — a boilerplate doc
+    # survivor per component via ONE map-side-combined aggregate (this
+    # was once a Window.partitionBy(component) — a boilerplate doc
     # duplicated millions of times at 100 TB forms ONE component and
     # the window put every member in one partition; the aggregate
     # reduces a hot component to one candidate row per map task
@@ -981,13 +976,12 @@ def q_dedup_containment(spark, sf_dir):
     dedup.ngram_containment_pairs for the prefix-on-the-contained-side
     candidate shape."""
     from raft_c_spark.operators import dedup
-    from raft_c_spark.plans.dedup import _data_cache_key
     from raft_c_spark.sources.testdata import load_table
 
     docs = load_table(spark, sf_dir, "documents")
     return dedup.ngram_containment_pairs(
         docs, "doc_id", "text", n=CONTAIN_N, threshold=CONTAIN_T,
-        unit="word", cache_key=_data_cache_key(sf_dir, "documents"),
+        unit="word", cache_key=data_cache_key(sf_dir, "documents"),
     )
 
 
@@ -1089,12 +1083,10 @@ def q_dedup_cut_spans(spark, sf_dir):
     from raft_c_spark.operators import dedup
     from raft_c_spark.sources.testdata import load_table
 
-    from raft_c_spark.plans.dedup import _data_cache_key
-
     docs = load_table(spark, sf_dir, "documents")
     return dedup.cut_repeated_spans(
         docs, "doc_id", "text", min_len=SPAN_LEN,
-        cache_key=_data_cache_key(sf_dir, "documents"),
+        cache_key=data_cache_key(sf_dir, "documents"),
     )
 
 
@@ -1137,7 +1129,7 @@ ORACLES["dedup_cut_spans"] = f"""
 
 
 def q_sim_knn_recall_tuned(spark, sf_dir):
-    """ANN parameter AUTO-TUNING (judge r9 ask #6 — the loop
+    """ANN parameter AUTO-TUNING (the loop
     ``sim_knn_recall``'s measurement implies): walk the deterministic
     (bits, tables) ladder on a planted-near-dup query batch, take the
     first rung whose measured recall@1 clears 0.9 inside the
@@ -1145,12 +1137,11 @@ def q_sim_knn_recall_tuned(spark, sf_dir):
     rung; the chosen row certifies recall ≥ 0.9 with tuned params.
     See operators/similarity.certify_lsh_recall for the scale shape."""
     from raft_c_spark.operators import similarity
-    from raft_c_spark.plans.dedup import _data_cache_key
     from raft_c_spark.sources.testdata import load_table
 
     emb = load_table(spark, sf_dir, "embeddings")
     return similarity.certify_lsh_recall(
-        emb, cache_key=_data_cache_key(sf_dir, "embeddings")
+        emb, cache_key=data_cache_key(sf_dir, "embeddings")
     )
 
 

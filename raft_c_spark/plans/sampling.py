@@ -6,6 +6,7 @@ engines compute identically.
 
 from __future__ import annotations
 
+from raft_c_spark.functions.diskcache import data_cache_key
 from raft_c_spark.operators import sampling
 from raft_c_spark.sources.testdata import load_table
 
@@ -162,13 +163,13 @@ def q_ds_split_leakage_safe(spark, sf_dir):
     replays pair generation + recursive-CTE reachability + the same
     hash thresholds in SQL."""
     from raft_c_spark.operators import dedup
-    from raft_c_spark.plans.dedup import JACCARD_THRESHOLD, _data_cache_key
+    from raft_c_spark.plans.dedup import JACCARD_THRESHOLD
 
     docs = load_table(spark, sf_dir, "documents")
     pairs = dedup.minhash_lsh_pairs(
         docs, "doc_id", "text", n=3, num_perm=64, bands=8,
         threshold=JACCARD_THRESHOLD,
-        cache_key=_data_cache_key(sf_dir, "documents"),
+        cache_key=data_cache_key(sf_dir, "documents"),
     )
     return sampling.leakage_safe_split(
         docs, "doc_id", pairs, SPLITS
@@ -358,14 +359,12 @@ def q_ds_importance_dsir(spark, sf_dir):
     downstream selects top-k by log_weight or Gumbel-resamples."""
     from pyspark.sql import functions as F
 
-    from raft_c_spark.plans.dedup import _data_cache_key
-
     docs = load_table(spark, sf_dir, "documents").withColumn(
         "is_tgt", F.col("source").isin(*DSIR_TARGET_SOURCES)
     )
     return sampling.importance_weights(
         docs, "doc_id", "text", "is_tgt",
-        cache_key=_data_cache_key(sf_dir, "documents"),
+        cache_key=data_cache_key(sf_dir, "documents"),
     )
 
 
@@ -433,14 +432,12 @@ def q_ds_dsir_resample(spark, sf_dir):
     TakeOrderedAndProject (no global sort) plan shape."""
     from pyspark.sql import functions as F
 
-    from raft_c_spark.plans.dedup import _data_cache_key
-
     docs = load_table(spark, sf_dir, "documents").withColumn(
         "is_tgt", F.col("source").isin(*DSIR_TARGET_SOURCES)
     )
     w = sampling.importance_weights(
         docs, "doc_id", "text", "is_tgt",
-        cache_key=_data_cache_key(sf_dir, "documents"),
+        cache_key=data_cache_key(sf_dir, "documents"),
     )
     return sampling.gumbel_topk(w, "doc_id", "log_weight", DSIR_K).select(
         "doc_id", "n_feats", "log_weight", "gumbel_key"

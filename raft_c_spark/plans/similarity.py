@@ -11,6 +11,7 @@ from __future__ import annotations
 
 from pyspark.sql import functions as F
 
+from raft_c_spark.functions.diskcache import data_cache_key
 from raft_c_spark.operators import similarity
 from raft_c_spark.sources.testdata import load_table
 
@@ -21,15 +22,6 @@ def _query_vec(spark, sf_dir) -> list[float]:
     emb = load_table(spark, sf_dir, "embeddings")
     return list(emb.filter(F.col("vec_id") == 0).collect()[0]["embedding"])
 
-
-
-def _data_cache_key(sf_dir: str, table: str) -> str:
-    """Alias of functions.diskcache.data_cache_key — the single
-    definition of the staleness contract (reviewer r8: this was one
-    of two verbatim copies)."""
-    from raft_c_spark.functions.diskcache import data_cache_key
-
-    return data_cache_key(sf_dir, table)
 
 def q_sim_topk_exact(spark, sf_dir):
     """Brute-force cosine top-20 against vec 0 — single scan,
@@ -53,7 +45,7 @@ def q_sim_topk_lsh(spark, sf_dir):
         k=TOP_K,
         bits=8,
         tables=16,
-        cache_key=_data_cache_key(sf_dir, "embeddings"),
+        cache_key=data_cache_key(sf_dir, "embeddings"),
     )
 
 
@@ -74,7 +66,7 @@ def q_sim_topk_ivf(spark, sf_dir):
         k=TOP_K,
         n_lists=16,
         n_probe=4,
-        cache_key=_data_cache_key(sf_dir, "embeddings"),
+        cache_key=data_cache_key(sf_dir, "embeddings"),
     )
 
 
@@ -308,7 +300,7 @@ def ivf_expected_parquet_path() -> str:
     from raft_c_spark.plans.multimodal import _ground_truth_parquet
 
     tags = "_".join(
-        _data_cache_key(os.path.dirname(p), "embeddings")
+        data_cache_key(os.path.dirname(p), "embeddings")
         for p in _embedding_corpus_paths()
     )
     return _ground_truth_parquet(

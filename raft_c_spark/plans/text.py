@@ -7,6 +7,7 @@ from __future__ import annotations
 
 from pyspark.sql import functions as F
 
+from raft_c_spark.functions.diskcache import data_cache_key
 from raft_c_spark.functions.exact import dec, sql_dec
 from raft_c_spark.operators import text
 from raft_c_spark.operators.text import STOPWORDS
@@ -50,8 +51,8 @@ def q_text_lang_profile(spark, sf_dir):
 CLEAN_MIN_QUALITY = 0.5
 CLEAN_MIN_TOKENS = 20
 CLEAN_LANGS = ("en", "de", "es", "fr", "zh")
-#: SQL literal list interpolated into the oracle (reviewer r8: the
-#: oracle hard-coded the list, so editing CLEAN_LANGS silently
+#: SQL literal list interpolated into the oracle (the oracle once
+#: hard-coded the list, so editing CLEAN_LANGS silently
 #: diverged the Spark filter from the replay)
 _CLEAN_LANGS_SQL = ", ".join(f"'{l}'" for l in CLEAN_LANGS)
 
@@ -415,12 +416,10 @@ def q_text_lm_score(spark, sf_dir):
     corpus self-scoring) — see text.ngram_lm_score for the two-count
     + two-natural-key-join scale shape and the decimal-quantized-log
     determinism contract."""
-    from raft_c_spark.plans.dedup import _data_cache_key
-
     docs = load_table(spark, sf_dir, "documents")
     return text.ngram_lm_score(
         docs, "doc_id", "text",
-        cache_key=_data_cache_key(sf_dir, "documents"),
+        cache_key=data_cache_key(sf_dir, "documents"),
     )
 
 
@@ -698,7 +697,7 @@ LANG_KL_ORACLE_SQL = """
     )
     -- left join from the totals so a zero-token language (nothing
     -- for the [a-z0-9]+ tokenizer) emits n_tokens=0 / kl_nats=NULL
-    -- instead of vanishing (advisor r10), mirroring the operator
+    -- instead of vanishing, mirroring the operator
     SELECT lang_tot.lang,
            CAST(t_l AS BIGINT) AS n_tokens,
            CAST(COALESCE(n_types, 0) AS BIGINT) AS n_types,
@@ -715,11 +714,9 @@ def q_ds_ccnet_buckets(spark, sf_dir):
     """CCNet perplexity bucketing: bigram-LM score per doc, per-lang
     exact-percentile cuts at 0.25/0.75, per (lang, bucket) counts +
     median/min/max — see operators.text.ccnet_perplexity_buckets."""
-    from raft_c_spark.plans.dedup import _data_cache_key
-
     docs = load_table(spark, sf_dir, "documents")
     return text.ccnet_perplexity_buckets(
-        docs, cache_key=_data_cache_key(sf_dir, "documents")
+        docs, cache_key=data_cache_key(sf_dir, "documents")
     )
 
 
@@ -756,17 +753,15 @@ ORACLES["ds_ccnet_buckets"] = f"""
 
 def q_ds_ccnet_buckets_approx(spark, sf_dir):
     """The percentile_approx (GK sketch) path of the CCNet cuts, made
-    executable + rank-certified (judge r10 ask #7 — the 100 TB swap
+    executable + rank-certified (the 100 TB swap
     was prose; this runs it). Emits per-lang exact doc counts plus
     booleans certifying each approx cut's rank interval sits inside
     the sketch's own ±1/accuracy (+2/N slack) error band — sketch
     VALUES are engine-specific, so the certified contract is what
     crosses the driver hash. See text.ccnet_buckets_approx_certify."""
-    from raft_c_spark.plans.dedup import _data_cache_key
-
     docs = load_table(spark, sf_dir, "documents")
     return text.ccnet_buckets_approx_certify(
-        docs, cache_key=_data_cache_key(sf_dir, "documents")
+        docs, cache_key=data_cache_key(sf_dir, "documents")
     )
 
 
@@ -893,7 +888,7 @@ ORACLES["text_char_entropy"] = """
 """
 
 
-# --- round-11 operators: vocabulary growth + per-doc novelty ---------------
+# --- vocabulary growth + per-doc novelty -----------------------------------
 
 NOVELTY_N = 3
 

@@ -1,4 +1,4 @@
-"""Driver queries for the BPE tokenizer (judge r9 ask #7):
+"""Driver queries for the BPE tokenizer:
 ``text_bpe_tokens`` (per-doc token counts under a corpus-derived
 deterministic BPE vocab) and ``ds_pack_bpe`` (sequence packing by BPE
 token budget instead of whitespace/char counts — what real
@@ -20,8 +20,8 @@ from __future__ import annotations
 
 from collections.abc import Mapping
 
+from raft_c_spark.functions.diskcache import cached_parquet, data_cache_key
 from raft_c_spark.operators import bpe, sampling
-from raft_c_spark.sources.parquet import read_parquet
 from raft_c_spark.sources.testdata import load_table
 
 #: training/encode parameters (also baked into cache + ground-truth
@@ -104,7 +104,6 @@ def expected_parquet_path() -> str:
 
     import pyarrow as pa
 
-    from raft_c_spark.functions.diskcache import data_cache_key
     from raft_c_spark.plans.multimodal import _ground_truth_parquet
 
     tags = "_".join(
@@ -137,30 +136,21 @@ def bpe_counts_frame(spark, sf_dir: str):
     once per corpus via the lm-score/DSIR ``cached_parquet`` pattern —
     ``text_bpe_tokens`` and ``ds_pack_bpe`` read the same parquet (the
     bench's shared_cache_queries marker flags both)."""
-    from raft_c_spark.functions.diskcache import (
-        cached_parquet,
-        data_cache_key,
-        lookup,
-    )
-
     ck = data_cache_key(sf_dir, "documents")
     key = f"bpecounts_{ck}_m{NUM_MERGES}_w{MAX_WORDS}_v{bpe.BPE_VERSION}"
-    # hit-check BEFORE building: bpe_token_counts is construction-EAGER
-    # (the measured-cap count runs a corpus job), so building it just
-    # to have cached_parquet discard the frame would re-run that job on
-    # every warm call — the lm-score pattern (reviewer r10)
-    if (hit := lookup(key)) is not None:
-        return read_parquet(spark, hit)
-    docs = load_table(spark, sf_dir, "documents")
-    merges = bpe.train_bpe(
-        docs,
-        "text",
-        num_merges=NUM_MERGES,
-        max_words=MAX_WORDS,
-        cache_key=ck,
-    )
-    out = bpe.bpe_token_counts(docs, "doc_id", "text", merges)
-    return cached_parquet(out, key)
+
+    def build():
+        docs = load_table(spark, sf_dir, "documents")
+        merges = bpe.train_bpe(
+            docs,
+            "text",
+            num_merges=NUM_MERGES,
+            max_words=MAX_WORDS,
+            cache_key=ck,
+        )
+        return bpe.bpe_token_counts(docs, "doc_id", "text", merges)
+
+    return cached_parquet(spark, key, build)
 
 
 def q_text_bpe_tokens(spark, sf_dir: str):

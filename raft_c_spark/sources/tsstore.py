@@ -126,11 +126,12 @@ def _write_points(day_dir: str, points: pa.Table) -> None:
     """``points`` (``_FILE_SCHEMA``, sorted by timestamp) as one parquet
     file in a ``day=`` directory, written under a dot name (Spark's file
     index skips names starting with '.' or '_', so readers never list a
-    half-written file) and published by rename."""
+    half-written file) and published by rename. The Arrow schema is not
+    embedded: readers take the store's fixed columns by name."""
     os.makedirs(day_dir, exist_ok=True)
     name = f"part-{uuid.uuid4()}.snappy.parquet"
     staging = os.path.join(day_dir, f".{name}.tmp")
-    pq.write_table(points, staging, compression="snappy")
+    pq.write_table(points, staging, compression="snappy", store_schema=False)
     publish_atomic(staging, os.path.join(day_dir, name))
 
 

@@ -84,12 +84,8 @@ def test_serve_from_config_binds_configured_host(spark, tmp_path):
         server.shutdown()
 
 
-#: the package's only environment knobs; an A/B switch does not belong here
-_ALLOWED_ENV = {
-    "RAFT_C_SPARK_CACHE_DIR",
-    "RAFT_C_SPARK_SIG_BROADCAST_ROWS",
-    "RAFT_C_SPARK_VERIFY_BROADCAST_MB",
-}
+#: the package's only environment knob; an A/B switch does not belong here
+_ALLOWED_ENV = {"RAFT_C_SPARK_CACHE_DIR"}
 _ENV_NAME = re.compile(r"RAFT_C_SPARK_\w*")
 
 
@@ -119,20 +115,15 @@ def test_no_env_switch_outside_allowlist():
 
 
 _ROUND_TAG = re.compile(r"round\d|_r\d")
-# Round-named modules that keep their name for now so their test IDs
-# stay stable across one change; each is folded by a later one
-# (ROADMAP open items). Nothing may be added here.
-_ROUND_MODULES_KEPT = {"test_round7_ops.py"}
 
 
 def test_no_test_module_named_for_a_round():
     """Tests live in the file of the operator family (or subsystem)
-    they check, never in a file named for the round that added them;
-    the only exceptions are the modules on ``_ROUND_MODULES_KEPT``."""
+    they check, never in a file named for the round that added them."""
     tests = os.path.dirname(os.path.abspath(__file__))
     tagged = sorted(
         name
         for name in os.listdir(tests)
         if name.startswith("test_") and name.endswith(".py") and _ROUND_TAG.search(name[:-3])
     )
-    assert tagged == sorted(_ROUND_MODULES_KEPT)
+    assert tagged == []

@@ -1,7 +1,8 @@
 """Dedup operator quality tests: the hash-based scale paths (MinHash
 LSH, SimHash) are verified against the exact n-gram Jaccard baseline;
 exact dedup on planted duplicates; substring spans and segment dedup
-against pure-python replays."""
+against pure-python replays; n-gram containment pairs against a
+naive all-pairs fold."""
 
 from __future__ import annotations
 
@@ -10,6 +11,7 @@ from collections import Counter
 import pytest
 from hypothesis import given
 from hypothesis import strategies as st
+from pyspark.sql import Row
 from pyspark.sql import functions as F
 
 from raft_c_spark.operators import dedup
@@ -521,8 +523,8 @@ def test_simhash_more_chunks_complete_superset(spark, docs):
 def test_ascii_ws_normalization_matches_sql(spark):
     """The kernels' Python normalization must agree with the SQL
     lower(trim(regexp_replace(text, '\\s+', ' '))) on NON-ASCII
-    whitespace (U+00A0 is data to Java/RE2 \\s — reviewer r8:
-    str.split() collapsed it and the kernels diverged from their own
+    whitespace (U+00A0 is data to Java/RE2 \\s — str.split() once
+    collapsed it and the kernels diverged from their own
     oracles)."""
     from raft_c_spark.functions.norm import norm_ascii_ws
 
@@ -694,8 +696,8 @@ class TestCutRepeatedSpans:
 def test_spans_bloom_fallback_exact(spark, monkeypatch):
     """Force the over-cap join-back path (cap -> 0) and assert the
     bloom-prefiltered fallback returns EXACTLY the broadcast path's
-    spans — false positives must die in the exact equi-join (r10
-    fourth-decade soak catch #7)."""
+    spans — false positives must die in the exact equi-join (a catch
+    of the 500k→1.5M-doc soak)."""
     from raft_c_spark.operators import dedup
 
     docs = spark.read.parquet(
@@ -720,8 +722,7 @@ def test_dedup_exact_bloom_fallback_exact(spark, monkeypatch):
     """Force dedup_exact's over-cap join-back (cap -> 0) and assert
     the composite (content-key, id) bloom fallback keeps EXACTLY the
     broadcast path's survivors — false positives and composite-hash
-    collisions must die in the exact id == keep filter (judge r10
-    ask #5: the keep-test is sparse on the composite even though the
+    collisions must die in the exact id == keep filter (the keep-test is sparse on the composite even though the
     equi-join key alone is dense)."""
     from raft_c_spark.operators import dedup
 
@@ -830,3 +831,70 @@ class TestClusterImpact:
             F.count(F.lit(1)).alias("d"), F.sum("n_chars").alias("w")
         ).collect()[0]
         assert (tot["d"], tot["w"]) == (got["d"], got["w"])
+
+
+# -------- n-gram containment pairs
+
+
+def test_containment_detects_quote_jaccard_misses(spark):
+    """A 6-word doc embedded verbatim in a 60-word doc: containment
+    (a→b) = 1.0 while Jaccard is far below any dedup threshold."""
+    short = "the quick brown fox jumps high"
+    long = (
+        "filler one two three four five six seven eight nine ten "
+        + short
+        + " more filler words follow here in a long tail that keeps going "
+        "with additional unique content padding the container document out"
+    )
+    df = spark.createDataFrame(
+        [Row(doc_id=1, text=short), Row(doc_id=2, text=long)]
+    )
+    pairs = dedup.ngram_containment_pairs(
+        df, "doc_id", "text", n=3, threshold=0.9, unit="word"
+    ).collect()
+    assert [(p["a"], p["b"]) for p in pairs] == [(1, 2)]
+    assert pairs[0]["containment"] == 1.0
+    jac = dedup.ngram_jaccard_pairs(
+        df, "doc_id", "text", n=3, threshold=0.5, strategy="prefix", unit="word"
+    )
+    assert jac.count() == 0
+
+
+def test_containment_exact_dup_is_bidirectional(spark):
+    t = "alpha beta gamma delta epsilon zeta eta theta"
+    df = spark.createDataFrame(
+        [Row(doc_id=1, text=t), Row(doc_id=2, text=t), Row(doc_id=3, text="totally different words here entirely unrelated")]
+    )
+    got = sorted(
+        (p["a"], p["b"])
+        for p in dedup.ngram_containment_pairs(
+            df, "doc_id", "text", n=3, threshold=0.9, unit="word"
+        ).collect()
+    )
+    assert got == [(1, 2), (2, 1)]
+
+
+def test_containment_matches_naive_python(spark, docs):
+    """Exactness: the prefix-probe candidate generation must equal the
+    all-pairs fold on a real corpus slice."""
+    sub = docs.filter(F.col("doc_id") < 120).select("doc_id", "text")
+    got = sorted(
+        (p["a"], p["b"], p["common"])
+        for p in dedup.ngram_containment_pairs(
+            sub, "doc_id", "text", n=5, threshold=0.8, unit="word"
+        ).collect()
+    )
+    rows = sub.collect()
+
+    def grams(t, n=5):
+        toks = " ".join(t.lower().split()).split(" ")
+        return {" ".join(toks[i : i + n]) for i in range(len(toks) - n + 1)}
+
+    sets = {r["doc_id"]: grams(r["text"]) for r in rows}
+    exp = sorted(
+        (a, b, len(sa & sets[b]))
+        for a, sa in sets.items()
+        for b in sets
+        if a != b and sa and len(sa & sets[b]) / len(sa) >= 0.8
+    )
+    assert got == exp

@@ -4,7 +4,8 @@ Each fault test injects one failure a hand-rolled exists → write →
 publish sequence mishandles, and checks that ``lookup`` /
 ``materialize`` still serve the correct entry: two builders of one key
 at once, a crashed writer's staging directory, and a truncated cached
-parquet file. The guard test keeps cache and staging paths inside
+parquet file. The ``cached_parquet`` tests pin that its builder runs
+only on a miss. The guard test keeps cache and staging paths inside
 ``diskcache``.
 """
 
@@ -23,7 +24,7 @@ import pyarrow.parquet as pq
 import pytest
 
 from raft_c_spark.functions import diskcache
-from tests.harness import assert_matches_oracle
+from tests.harness import assert_matches_oracle, jobs_in
 
 PKG = os.path.join(os.path.dirname(os.path.dirname(__file__)), "raft_c_spark")
 
@@ -117,15 +118,55 @@ def test_each_consult_reports_its_key_once(cache_dir):
     assert keys == ["obs"] * 4
 
 
+def test_cached_parquet_hit_never_builds(spark, cache_dir):
+    """A hit reads the entry back without calling ``build`` and without
+    a Spark job, so a builder's eager jobs never run on a warm call."""
+    df = spark.range(30).selectExpr("id", "id * 2 AS v")
+    first = sorted(diskcache.cached_parquet(spark, "hit", lambda: df).collect())
+
+    def build():
+        raise AssertionError("build called on a hit")
+
+    n, out = jobs_in(spark, lambda: diskcache.cached_parquet(spark, "hit", build))
+    assert n == 0
+    assert sorted(out.collect()) == first
+
+
+def test_cached_parquet_without_key_is_the_build(spark, cache_dir):
+    df = spark.range(3)
+    assert diskcache.cached_parquet(spark, None, lambda: df) is df
+    assert os.listdir(cache_dir) == []
+
+
+def test_cached_parquet_miss_builds_once(spark, cache_dir):
+    """A miss calls ``build`` once, publishes the entry and reports its
+    key to the observer once."""
+    calls, keys = [], []
+
+    def build():
+        calls.append(1)
+        return spark.range(40).selectExpr("id", "id % 7 AS v")
+
+    diskcache.set_key_observer(keys.append)
+    try:
+        out = diskcache.cached_parquet(spark, "miss", build)
+    finally:
+        diskcache.set_key_observer(None)
+    assert calls == [1]
+    assert keys == ["miss"]
+    assert os.listdir(cache_dir) == ["miss"]
+    assert sorted(r["id"] for r in out.collect()) == list(range(40))
+
+
 def test_truncated_cached_parquet_is_rebuilt(spark, cache_dir):
     df = spark.range(200).selectExpr("id", "id * 3 AS v").repartition(4)
-    first = sorted(diskcache.cached_parquet(df, "trunc").collect())
+    first = sorted(diskcache.cached_parquet(spark, "trunc", lambda: df).collect())
     entry = cache_dir / "trunc"
     parts = sorted(p for p in os.listdir(entry) if p.endswith(".parquet"))
     assert parts
     _cut_footer(str(entry / parts[0]))
 
-    again = sorted(diskcache.cached_parquet(df, "trunc").collect())
+    again = sorted(diskcache.cached_parquet(spark, "trunc", lambda: df).collect())
     assert again == first
     assert len(first) == 200
     assert _staging_left(cache_dir) == []

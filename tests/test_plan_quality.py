@@ -32,7 +32,7 @@ def wide_sf_dir(spark, sf_dir, tmp_path_factory) -> str:
     """``sf_dir`` with ``documents`` rewritten as at least 64 parquet
     files (and at least one per task thread), the other tables linked.
     Such a scan already runs at the session's parallelism, so
-    ``dedup._widen`` leaves it as it is and the plan is the one a
+    ``metabound._widen`` leaves it as it is and the plan is the one a
     cluster-scale corpus gets."""
     import pyarrow.parquet as pq
 
@@ -231,9 +231,9 @@ def test_widen_skips_rdd_probe_on_non_scan_frames(spark, sf_dir):
     """_effective_splits must short-circuit on frames that are not
     bare scan projections: touching df.rdd on an AQE plan finalizes
     it, executing every upstream shuffle stage as real jobs at
-    plan-construction time (the r13 profile caught ds_pipeline_e2e
+    plan-construction time (a build/execute profile caught ds_pipeline_e2e
     paying 5 extra build jobs for exactly this)."""
-    from raft_c_spark.operators.dedup import _effective_splits, _widen
+    from raft_c_spark.functions.metabound import _effective_splits, _widen
 
     docs = load_table(spark, sf_dir, "documents")
     agg = docs.groupBy("lang").count()
@@ -495,8 +495,8 @@ def test_touched_partition_prune_plan_constant_in_touched_count(
     spark, tmp_path
 ):
     """DP_IGNORE/DP_UPDATE's touched-partition restriction must not
-    grow a Catalyst predicate tree with the touched-pair count (the r5
-    judge flagged the per-pair OR-chain: thousands of touched
+    grow a Catalyst predicate tree with the touched-pair count (a
+    review flagged the per-pair OR-chain: thousands of touched
     partitions built a thousands-deep boolean tree). The shipped form
     is one InSet per partition column + a broadcast left-semi join on
     the exact pairs — Or-node count in the plan stays ZERO no matter
@@ -608,7 +608,7 @@ def test_ahash_pairs_equi_join_no_cartesian(spark):
 
 def test_repeated_spans_skew_immune_gram_count(spark, sf_dir):
     """The corpus-wide gram count must be the map-side-combined
-    aggregate on the 128-bit gram hash (judge r7 ask #3), never a
+    aggregate on the 128-bit gram hash, never a
     window partitioned by gram: a hot boilerplate gram under
     Window.partitionBy(gram) lands in ONE partition — the skew shape
     this pin forbids. The repeated-key set must be persisted (the
@@ -671,8 +671,8 @@ def test_segment_dedup_aggregate_no_hot_key_window(spark, sf_dir):
     hash) would put every occurrence of a hot boilerplate segment
     into one partition (the Zipfian 100 TB hazard). The segment
     STRINGS must hash on the map side and never join: the only join
-    in the plan is the final unique-key corpus join on doc (the r9
-    500k soak measured the earlier keep-test join super-linear —
+    in the plan is the final unique-key corpus join on doc (a
+    500k-doc soak measured the earlier keep-test join super-linear —
     8.4 M seg strings through an SMJ)."""
     from raft_c_spark.operators.dedup import segment_dedup
 
@@ -728,7 +728,7 @@ def test_ccnet_buckets_broadcast_cuts(spark, sf_dir):
 
 
 def test_ccnet_buckets_approx_plan(spark, sf_dir):
-    """The rank-certified percentile_approx path (judge r10 ask #7):
+    """The rank-certified percentile_approx path:
     the cuts must come from the GK sketch aggregate — never an exact
     percentile over the score distribution, never a global sort of it
     (the only range partitioning allowed is the final L-row
@@ -993,7 +993,7 @@ def test_effective_splits_ignores_column_named_sortjoin(spark, tmp_path):
     """A bare scan whose columns are named after plan nodes must still
     take the footer row-group path (return a small split count), not
     short-circuit to 'wide enough'."""
-    from raft_c_spark.operators.dedup import _effective_splits
+    from raft_c_spark.functions.metabound import _effective_splits
 
     p = str(tmp_path / "sortjoin.parquet")
     spark.createDataFrame(

@@ -3,7 +3,8 @@ hash-Bernoulli mixtures, per-stratum top-k, sequence packing,
 importance weights, training order, connected components — including
 hypothesis properties (nesting over arbitrary rate pairs, packing vs
 the sequential fold over arbitrary length lists, pure-python replays
-on random small inputs)."""
+on random small inputs), and temperature mixture sampling and epoch
+upsampling pinned against hand fixtures."""
 
 from __future__ import annotations
 
@@ -14,6 +15,7 @@ from collections import Counter
 import pytest
 from hypothesis import given
 from hypothesis import strategies as st
+from pyspark.sql import Row
 from pyspark.sql import functions as F
 
 from raft_c_spark.operators import dedup, sampling
@@ -235,7 +237,7 @@ def test_connected_components_vs_union_find(spark):
 def test_components_over_exact_pairs_ground_truth(spark, duck):
     """The registered ``dedup_components`` query rides the LSH pair
     graph (the scale path — the exact input measured 15.2x per 10x
-    data in the round-4 soak); this test keeps the exact-all-pairs
+    data in the 10× scaling soak); this test keeps the exact-all-pairs
     composition as the ground truth, pinned against recursive-CTE
     reachability, so the swap can never hide a clustering regression."""
     from raft_c_spark.plans.dedup import (
@@ -468,8 +470,7 @@ def test_gumbel_topk_exact_k_partition_stable_and_weight_sensitive(spark):
 
 def test_dsir_importance_scores_tokenless_docs_neutral(spark):
     """Docs with no [a-z0-9] tokens must appear with the neutral
-    weight (empty product -> log w = 0), not vanish from the output
-    (reviewer r8)."""
+    weight (empty product -> log w = 0), not vanish from the output."""
     from raft_c_spark.operators import sampling as s
 
     rows = [(1, "alpha beta", True), (2, "alpha gamma", False),
@@ -600,3 +601,182 @@ def test_training_order_matches_brute_force(spark, ids, rows):
         for rank, i in enumerate(order)
     }
     assert got == want
+
+
+# -------- temperature mixture sampling and epoch upsampling
+
+
+def test_temperature_partition_stable_and_deterministic(spark, docs):
+    a = {
+        r["doc_id"]
+        for r in sampling.temperature_sample(docs, "doc_id", "source").collect()
+    }
+    b = {
+        r["doc_id"]
+        for r in sampling.temperature_sample(
+            docs.repartition(7), "doc_id", "source"
+        ).collect()
+    }
+    assert a == b and a
+
+
+def test_temperature_alpha1_is_flat_budget(spark, docs):
+    """α=1 ⇒ every stratum keeps the same rate = budget_frac: the
+    per-stratum thresholds must all equal floor(budget_frac·4096)."""
+    out = sampling.temperature_sample(
+        docs, "doc_id", "source", alpha=1.0, budget_frac=0.5
+    )
+    thrs = {r["thr"] for r in out.select("thr").distinct().collect()}
+    assert thrs == {2048}
+
+
+def test_temperature_upweights_tail(spark):
+    """α=0.5 keep-rates must be monotone DECREASING in stratum size
+    (that is the point of temperature sampling); a 10-row stratum next
+    to a 1000-row one should keep rate 1 vs ~budgeted."""
+    rows = [Row(id=i, s="big") for i in range(1000)] + [
+        Row(id=1000 + i, s="small") for i in range(10)
+    ]
+    df = spark.createDataFrame(rows)
+    out = sampling.temperature_sample(
+        df, "id", "s", alpha=0.5, budget_frac=0.5
+    )
+    thr = {
+        r["s"]: r["thr"]
+        for r in out.select("s", "thr").distinct().collect()
+    }
+    # expected: w_big=sqrt(1000), w_small=sqrt(10); budget=505
+    w_big, w_small = math.sqrt(1000.0), math.sqrt(10.0)
+    tot = w_big + w_small
+    f_big = min(1.0, 505.0 * w_big / (tot * 1000.0))
+    f_small = min(1.0, 505.0 * w_small / (tot * 10.0))
+    assert f_small == 1.0 and thr["small"] == 4096
+    assert thr["big"] == math.floor(f_big * 4096)
+
+
+def test_temperature_budget_roughly_met(spark, docs):
+    n = docs.count()
+    k = sampling.temperature_sample(
+        docs, "doc_id", "source", budget_frac=0.5
+    ).count()
+    assert abs(k / n - 0.5) < 0.15
+
+
+def test_temperature_nested_in_budget(spark, docs):
+    """Raising the budget keeps previously selected rows (hash-
+    Bernoulli nesting — reproducible mixture scale-ups)."""
+    lo = {
+        r["doc_id"]
+        for r in sampling.temperature_sample(
+            docs, "doc_id", "source", budget_frac=0.3
+        ).collect()
+    }
+    hi = {
+        r["doc_id"]
+        for r in sampling.temperature_sample(
+            docs, "doc_id", "source", budget_frac=0.7
+        ).collect()
+    }
+    assert lo <= hi
+
+
+def test_temperature_tiny_rate_clamps_not_drops(spark):
+    """A stratum whose keep-rate floors below the 1/4096
+    grid must NOT silently contribute zero rows when its exact
+    expected draw count n_s >= 1 — the threshold clamps to the
+    minimum grid cell instead (thr = 1 > 0)."""
+    # 20k-row stratum, tiny budget: rate ≈ 0.0001 < 1/4096 but
+    # n_s = rate·20000 ≈ 2 ≥ 1
+    rows = [Row(id=i, s="big") for i in range(20_000)]
+    out = sampling.temperature_sample(
+        spark.createDataFrame(rows), "id", "s",
+        alpha=1.0, budget_frac=0.0001,
+    )
+    thr = out.select("thr").distinct().collect()
+    # clamped to 1, and the selection is non-empty with high
+    # probability (expected ≈ 20000/4096 ≈ 5 rows at thr=1)
+    assert [r["thr"] for r in thr] == [1]
+    assert out.count() > 0
+
+
+def test_epoch_repeats_sub_epoch_stratum_not_dropped(spark):
+    """Same clamp on epoch_repeats' fractional part: a base=0 stratum
+    whose fraction floors to 0 keeps frac_thr = 1 when it still owes
+    n_s >= 1 expected draws."""
+    rows = [Row(id=i, s="big") for i in range(20_000)] + [
+        Row(id=100_000 + i, s="tiny") for i in range(4)
+    ]
+    rep = sampling.epoch_repeats(
+        spark.createDataFrame(rows), "id", "s",
+        alpha=0.0, budget_epochs=0.0001,
+    )
+    big = rep.filter("s = 'big'").select("base_epochs", "frac_thr").distinct().collect()
+    assert [(r["base_epochs"], r["frac_thr"]) for r in big] == [(0, 1)]
+
+
+def test_epoch_upsample_matches_temperature_when_sub_epoch(spark, docs):
+    """budget_epochs < 1 degenerates to temperature_sample exactly:
+    base 0 everywhere, and the +1 fraction is the SAME md5 selection
+    (same key, same grid) as the keep set."""
+    kept = {
+        r["doc_id"]
+        for r in sampling.temperature_sample(
+            docs, "doc_id", "source", budget_frac=0.5
+        ).collect()
+    }
+    rep = sampling.epoch_repeats(
+        docs, "doc_id", "source", budget_epochs=0.5
+    ).collect()
+    assert all(r["base_epochs"] == 0 for r in rep)
+    assert {r["doc_id"] for r in rep if r["n_repeats"] == 1} == kept
+
+
+def test_epoch_upsample_total_near_budget(spark, docs):
+    n = docs.count()
+    rep = sampling.epoch_repeats(
+        docs, "doc_id", "source", budget_epochs=1.5
+    )
+    total = rep.agg(F.sum("n_repeats")).first()[0]
+    assert abs(total / (1.5 * n) - 1.0) < 0.1
+
+
+def test_epoch_upsample_tail_gets_more_epochs(spark):
+    """α=0.5: the small stratum's epoch target must exceed the big
+    stratum's (that is the upsampling direction)."""
+    rows = [Row(id=i, s="big") for i in range(1000)] + [
+        Row(id=1000 + i, s="small") for i in range(10)
+    ]
+    df = spark.createDataFrame(rows)
+    out = sampling.epoch_repeats(df, "id", "s", alpha=0.5, budget_epochs=1.0)
+    eff = {
+        r["s"]: r["base_epochs"] + r["frac_thr"] / 4096.0
+        for r in out.select("s", "base_epochs", "frac_thr")
+        .distinct()
+        .collect()
+    }
+    assert eff["small"] > 1.0 > eff["big"]
+
+
+@spark_property(10)
+@given(
+    b1=st.floats(min_value=0.05, max_value=3.0),
+    b2=st.floats(min_value=0.05, max_value=3.0),
+)
+def test_epoch_repeats_monotone_in_budget(spark, docs, b1, b2):
+    """For ANY budget pair, every row's n_repeats is monotone
+    non-decreasing in the budget (floor + nested hash carry are both
+    monotone) — raising a mixture's epoch budget never drops data."""
+    lo, hi = sorted([b1, b2])
+    a = {
+        r["doc_id"]: r["n_repeats"]
+        for r in sampling.epoch_repeats(
+            docs, "doc_id", "source", budget_epochs=lo
+        ).collect()
+    }
+    b = {
+        r["doc_id"]: r["n_repeats"]
+        for r in sampling.epoch_repeats(
+            docs, "doc_id", "source", budget_epochs=hi
+        ).collect()
+    }
+    assert all(b[k] >= v for k, v in a.items())

@@ -580,6 +580,42 @@ def test_bulk_insert_runs_one_job(spark, tmp_path, monkeypatch):
         assert same_bits(got, want)
 
 
+def test_driver_written_file_has_no_arrow_schema(spark, tmp_path, monkeypatch):
+    """A file ``insert_rows`` writes carries no embedded Arrow schema
+    (readers take the store's fixed columns by name), and its points
+    read back bit for bit on the driver (``_read_points``) and through
+    the Spark scan: NaN, ±inf, -0.0 and duplicate-ns points included."""
+    rows = [(BASE + i * HOUR_NS, float(i) / 3) for i in range(20)]
+    rows += [
+        (BASE, float("nan")),
+        (BASE + HOUR_NS, float("inf")),
+        (BASE + 2 * HOUR_NS, -float("inf")),
+        (-DAY_NS - 1, -0.0),
+    ]
+    st = TimeSeriesStore(spark, str(tmp_path / "wh"))
+    st.insert_rows("d", "s", rows)
+    base = os.path.join(st.warehouse, "d", "points")
+    files = [
+        os.path.join(base, d, f)
+        for d in _point_dirs(st)
+        for f in os.listdir(os.path.join(base, d))
+    ]
+    assert files
+    for f in files:
+        assert b"ARROW:schema" not in (pq.read_metadata(f).metadata or {}), f
+    want = sorted((("s", t, v) for t, v in rows), key=lambda r: (r[1], repr(r[2])))
+
+    def canon(pts):
+        return sorted(pts, key=lambda r: (r[1], repr(r[2])))
+
+    driver = tsstore._read_points("s", files, None, None).to_pylist()
+    assert same_bits(canon((r["series"], r["timestamp"], r["value"]) for r in driver), want)
+    monkeypatch.setattr(tsstore, "ONE_TASK_MAX_FILES", 0)
+    df = st.read("d", "s")
+    assert "FileScan" in _plan(df)
+    assert same_bits(canon((r["series"], r["timestamp"], r["value"]) for r in df.collect()), want)
+
+
 def test_concurrent_inserts_all_land(spark, tmp_path):
     """INSERTs from two connections at once, into different series of
     one store: every call succeeds and every point reads back. As Spark
