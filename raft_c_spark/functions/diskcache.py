@@ -5,9 +5,9 @@ query-language warehouses, expected multimodal decode stats).
 This is the local stand-in for the 100 TB deployment's stored-column /
 materialized-index layout: expensive derived state is computed once
 per corpus and read back by every subsequent run. The module is the
-one owner of that state: :func:`materialize` is the only builder (it
-probes first) and :func:`lookup` a probe that builds nothing, so no
-other module names a cache or staging path. A cached Spark frame goes
+one owner of that state: :func:`materialize` is its one entry point
+(it probes first and builds only on a miss), so no other module names
+a cache or staging path. A cached Spark frame goes
 through :func:`cached_parquet`, which takes a builder instead of a
 frame and calls it only on a miss: probing before building is the
 cache's rule, not each caller's, so a warm call never pays a
@@ -64,7 +64,7 @@ def cache_root() -> str:
 
 
 #: optional observer called once with the key of every
-#: :func:`lookup` / :func:`materialize` consult. bench.py installs one
+#: :func:`materialize` consult. bench.py installs one
 #: per query so BENCH_FULL can flag queries whose warm timing shares a
 #: materialization with another query (a shared-cache consumer's warm
 #: min measures a parquet read, not the operator's compute).
@@ -128,12 +128,6 @@ def _valid(final: str) -> bool:
         _VALID.clear()
     _VALID[final] = fp
     return True
-
-
-def lookup(key: str) -> str | None:
-    """Path of the valid entry for ``key``, or ``None`` on a miss."""
-    final = _entry_path(key)
-    return final if _valid(final) else None
 
 
 def _alive(pid: int) -> bool:

@@ -8,8 +8,9 @@ Scale design (100 TB corpora):
   small-scale baseline; the scale path is MinHash+LSH: candidate
   generation is an equi-join on (band, band_hash) — only colliding
   docs meet, so cost tracks true-duplicate density, not n²;
-- hot shingles (stop-trigrams) are capped via a document-frequency
-  cut to stop candidate-pair explosion on skewed buckets;
+- exact Jaccard on hot shingles (stop-trigrams) avoids the plain
+  shingle equi-join, whose cost is Σ df²: a bitmap popcount for small
+  vocabularies, prefix-filter candidates otherwise;
 - exact paths are built-in expressions + joins (JVM codegen);
   minhash signatures are a *narrow* vectorized Arrow kernel (text in,
   signature out — no shuffle until banding).
@@ -38,6 +39,9 @@ _MERSENNE_P = (1 << 31) - 1
 # are cached and counted anyway for plan-reuse reasons).
 _BROADCAST_MAX_BANDED_ROWS = 4_000_000  # (doc, band, bucket) ≈ 20 B/row
 
+#: vocabulary cap of ngram_jaccard_pairs' bitmap strategy: a larger
+#: char-gram vocabulary takes the prefix strategy
+_MAX_BITMAP_SHINGLES = 65536
 #: byte cap on the bitmap mask frame for the above-numpy-cap theta
 #: join's broadcast hint; beyond it ngram_jaccard_pairs
 #: falls back to the prefix strategy
@@ -227,16 +231,14 @@ def ngram_jaccard_pairs(
     text_col: str,
     n: int = 3,
     threshold: float = 0.6,
-    max_shingle_df: int | None = None,
-    strategy: str = "auto",
-    max_bitmap_shingles: int = 65536,
     unit: str = "char",
     cache_key: str | None = None,
 ) -> DataFrame:
     """All document pairs (a < b) with n-gram Jaccard ≥ threshold.
     Exact result; the physical strategy adapts to the corpus:
 
-    - **bitmap** (vocabulary ≤ ``max_bitmap_shingles``): each doc's
+    - **bitmap** (char grams, integral ids, vocabulary ≤
+      ``_MAX_BITMAP_SHINGLES``): each doc's
       shingle set becomes a fixed-width bit vector computed in ONE
       narrow Arrow kernel pass (text in → mask out, no explode, no
       shuffle); |A∩B| is AND+popcount on a broadcast nested-loop
@@ -245,7 +247,8 @@ def ngram_jaccard_pairs(
       join-based candidate generation degenerates to ≈all-pairs
       (measured: the driver corpus has 377 distinct trigrams with
       median df 1062/5000 docs).
-    - **prefix** (large vocabularies — real Zipfian text): AllPairs-
+    - **prefix** (everything else — large vocabularies, word grams,
+      string ids): AllPairs-
       style prefix filtering. Shingles get a global rarity order (df
       ascending); a doc with |A| shingles only needs its
       |A|-⌈t·|A|⌉+1 *rarest* shingles as join keys — any partner with
@@ -257,10 +260,10 @@ def ngram_jaccard_pairs(
       linear shuffles, no all-pairs, no driver-side state: the shape
       that survives 100 TB (where natural-text vocab far exceeds any
       bitmap cap).
-    - **join**: plain shingle equi-join counting |A∩B| per pair —
-      the independent verifier strategy (Σ df² cost on hot shingles);
-      ``max_shingle_df`` optionally drops stop-shingles (df cap →
-      approximation) to bound that skew.
+
+    Both agree exactly with ``_jaccard_join``, the plain shingle
+    equi-join counting |A∩B| per pair, which the tests keep as the
+    independent reference.
 
     ``unit`` picks the shingle alphabet: ``"char"`` n-grams (the
     reference-style fuzzy unit; universe ≤ charset^n, a few thousand
@@ -277,9 +280,9 @@ def ngram_jaccard_pairs(
     corpus-scale exact dedup should use ``unit="word"``, and the
     sub-quadratic char-similarity tool is ``minhash_lsh_pairs``.
 
-    ``strategy="auto"`` probes the vocabulary size with a single
-    capped distinct (≤ cap+1 rows collected) and dispatches; word
-    unit skips the bitmap probe (its universe never fits)."""
+    The bitmap branch probes the vocabulary size with a single
+    capped distinct (≤ cap+1 rows collected); word grams skip the
+    probe (their universe never fits)."""
     if unit not in ("char", "word"):
         raise ValueError(f"unit must be 'char' or 'word', got {unit!r}")
     spark = df.sparkSession
@@ -288,48 +291,21 @@ def ngram_jaccard_pairs(
         # pair-level cache, the same stored-derived-column pattern as
         # minhash_lsh_pairs: the verified pair frame persists per
         # (corpus, columns, params) so repeat runs read a tiny parquet
-        # instead of re-running the all-pairs/prefix verify. The key
-        # folds every dispatch-affecting parameter; the requested
-        # strategy (pre-auto-resolution) is deterministic per corpus,
-        # so it is a valid key component.
+        # instead of re-running the all-pairs/prefix verify. Both
+        # strategies are exact, so the one they pick is not part of
+        # the key.
         thr = str(threshold).replace(".", "p")
         pair_key = (
             f"ngrampairs_{cache_key}_{id_col}_{text_col}_n{n}_t{thr}"
-            f"_{strategy}_{unit}_df{max_shingle_df}_mb{max_bitmap_shingles}"
-            f"_v1"
+            f"_{unit}_v1"
         )
 
     def build():
-        nonlocal strategy
-        if unit == "word" and strategy == "auto":
-            strategy = "prefix"
-        if unit == "word" and strategy == "bitmap":
-            raise ValueError("bitmap strategy requires unit='char'")
-        if strategy in ("auto", "bitmap") and max_shingle_df is not None:
-            # the bitmap executor computes exact Jaccard over ALL
-            # shingles — it cannot honor a stop-shingle df-cap (auto
-            # used to silently ignore the caller's cap when the
-            # vocabulary was small, returning a different pair set
-            # than prefix/join with identical arguments)
-            if strategy == "bitmap":
-                raise ValueError(
-                    "bitmap strategy cannot honor max_shingle_df; "
-                    "use strategy='prefix' or 'join'"
-                )
-            strategy = "prefix"
-        if strategy in ("auto", "bitmap") and df.schema[
+        # the bitmap kernels pack ids as int64; the prefix join
+        # handles any id type
+        if unit == "char" and df.schema[
             id_col
-        ].dataType.simpleString() not in ("bigint", "int"):
-            # the bitmap kernels pack ids as int64 (string ids used to
-            # die with an opaque Arrow error executor-side); the SQL
-            # strategies handle any id type
-            if strategy == "bitmap":
-                raise TypeError(
-                    f"bitmap strategy requires integral ids; {id_col!r} "
-                    f"is {df.schema[id_col].dataType.simpleString()}"
-                )
-            strategy = "prefix"
-        if strategy in ("auto", "bitmap"):
+        ].dataType.simpleString() in ("bigint", "int"):
             # one text-parse pass: per-doc shingle-code arrays, cached —
             # the vocab probe and the mask build both read from it. With
             # cache_key the code arrays persist per corpus (the
@@ -343,7 +319,7 @@ def ngram_jaccard_pairs(
                 lambda: _doc_codes(df, id_col, text_col, n),
             ).cache()
             codes.count()
-            vocab = _collect_vocab_codes(codes, max_bitmap_shingles)
+            vocab = _collect_vocab_codes(codes, _MAX_BITMAP_SHINGLES)
             pairs = (
                 _jaccard_bitmap(codes, vocab, threshold)
                 if vocab is not None
@@ -352,31 +328,13 @@ def ngram_jaccard_pairs(
             if pairs is not None:
                 return pairs
             codes.unpersist()
-            if strategy == "bitmap":
-                raise ValueError(
-                    f"bitmap strategy needs ≤{max_bitmap_shingles} distinct "
-                    "shingles and a mask frame under the broadcast byte cap"
-                )
-            strategy = "prefix"
         # with cache_key the (doc, shingle) relation persists per corpus
         # — the same stored-column layout as the code arrays above: the
         # text parse + distinct is paid once, every later run starts at
         # the ranking joins
-        sh = _shingles(df, id_col, text_col, n, unit, cache_key)
-        if max_shingle_df is not None:
-            sh = sh.cache()
-            rare = (
-                sh.groupBy("shingle")
-                .agg(F.count(F.lit(1)).alias("df"))
-                .filter(F.col("df") <= max_shingle_df)
-                .select("shingle")
-            )
-            sh = sh.join(rare, "shingle")
-        if strategy == "prefix":
-            return _jaccard_prefix(sh, threshold)
-        if strategy == "join":
-            return _jaccard_join(sh, threshold)
-        raise ValueError(f"unknown strategy {strategy!r}")
+        return _jaccard_prefix(
+            _shingles(df, id_col, text_col, n, unit, cache_key), threshold
+        )
 
     return cached_parquet(spark, pair_key, build)
 
@@ -576,7 +534,7 @@ def _jaccard_bitmap(codes: DataFrame, vocab_codes, threshold: float) -> DataFram
     # exact failure the module header says every hint must be gated
     # against). Beyond the cap, exact bitmap Jaccard is the wrong
     # tool: return None and the caller falls back to the prefix
-    # strategy (auto) or raises (explicit bitmap).
+    # strategy.
     if n_docs * (n_words * 8 + 24) > _BITMAP_BROADCAST_BYTES:
         masks.unpersist()
         return None
@@ -760,6 +718,9 @@ def _jaccard_prefix(sh: DataFrame, threshold: float) -> DataFrame:
 
 
 def _jaccard_join(sh: DataFrame, threshold: float) -> DataFrame:
+    """Exact Jaccard pairs by a plain shingle equi-join counting |A∩B|
+    per pair (Σ df² cost on hot shingles): no query runs it; the tests
+    compare the bitmap and prefix strategies against it."""
     sh = sh.cache()
     sizes = sh.groupBy("doc").agg(F.count(F.lit(1)).alias("sz"))
     a = sh.select(F.col("doc").alias("a"), "shingle")

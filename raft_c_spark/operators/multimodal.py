@@ -2,21 +2,21 @@
 columns with typed metadata, processed via Arrow-batched pandas
 iterators (mapInPandas).
 
-Decode modes:
+Each operator has one decode mode, the one its query runs:
 
-- ``decode=\"fake\"`` (default in tests): a deterministic fake that
-  derives features from the bytes (md5-seeded) — exercises the REAL
-  Spark plumbing (schema, Arrow batching, partitioning, UDF
-  signatures) end-to-end without interpreting the payload;
-- ``decode=\"real\"``: genuinely decodes the payload. Images go
-  through the stdlib-only PNG codec (functions/png.py — zlib +
-  struct, all five scanline filters), audio through the stdlib
-  ``wave`` module, and video through the stdlib-only y4m codec
-  (functions/y4m.py — uncompressed YUV4MPEG2 frame streams); all
-  compute features from actual pixels/samples/frames. Compressed
-  containers (mp4/webm/JPEG) have no stdlib codec and fail loudly
-  at the decode seam, marking exactly where a production codec
-  (ffmpeg/av) plugs in.
+- ``extract_features`` and ``sample_frames`` derive features from the
+  bytes with a deterministic md5-seeded fake — they exercise the real
+  Spark plumbing (schema, Arrow batching, partitioning, row
+  explosion) without interpreting the payload;
+- ``resize_images``, ``decode_stats``, ``frame_stats`` and the
+  ``*_ahash`` operators genuinely decode: images through the
+  stdlib-only PNG codec (functions/png.py — zlib + struct, all five
+  scanline filters), audio through the stdlib ``wave`` module, and
+  video through the stdlib-only y4m codec (functions/y4m.py —
+  uncompressed YUV4MPEG2 frame streams). Compressed containers
+  (mp4/webm/JPEG) have no stdlib codec and fail loudly at the decode
+  seam, marking exactly where a production codec (ffmpeg/av) plugs
+  in.
 
 Scale notes: media bytes never pass through a shuffle — all kernels
 are narrow mapInPandas transforms; only extracted features (small,
@@ -67,106 +67,7 @@ def _fake_features(payload: bytes, dim: int = FEATURE_DIM) -> list[float]:
     return [float(x) for x in rng.uniform(-1.0, 1.0, dim)]
 
 
-def _real_image_features(payload: bytes, dim: int = FEATURE_DIM) -> list[float]:
-    """Decode the PNG and summarize actual pixels: per-RGB-channel
-    mean/std (6), an 8-bin luminance histogram (8), overall mean/std
-    (2) → 16 floats. Grayscale replicates its channel stats."""
-    from raft_c_spark.functions.png import png_decode
-
-    px = png_decode(payload).astype(np.float64) / 255.0
-    if px.shape[2] == 1:
-        rgb = np.repeat(px, 3, axis=2)
-    elif px.shape[2] == 2:
-        # grayscale+alpha (PNG color type 4, which png_decode
-        # supports): replicate the gray plane, drop alpha — the old
-        # px[:, :, :3] slice left 2 channels and the luma mix raised
-        # IndexError, killing the whole kernel task (reviewer r8)
-        rgb = np.repeat(px[:, :, :1], 3, axis=2)
-    else:
-        rgb = px[:, :, :3]
-    luma = 0.299 * rgb[:, :, 0] + 0.587 * rgb[:, :, 1] + 0.114 * rgb[:, :, 2]
-    hist, _ = np.histogram(luma, bins=8, range=(0.0, 1.0))
-    hist = hist / luma.size
-    feats = np.concatenate(
-        [
-            rgb.mean(axis=(0, 1)),
-            rgb.std(axis=(0, 1)),
-            hist,
-            [rgb.mean(), rgb.std()],
-        ]
-    )
-    return [float(x) for x in feats[:dim]]
-
-
-def _real_audio_features(payload: bytes, dim: int = FEATURE_DIM) -> list[float]:
-    """Decode 16-bit PCM WAV (stdlib ``wave``) and summarize actual
-    samples: rms, zero-crossing rate, mean/std/peak of |x|, an 8-bin
-    |x| histogram, duration seconds, channel count, sample rate / 1e5
-    → 16 floats."""
-    import io
-    import wave
-
-    with wave.open(io.BytesIO(payload), "rb") as wf:
-        n, rate, ch = wf.getnframes(), wf.getframerate(), wf.getnchannels()
-        if wf.getsampwidth() != 2:
-            raise ValueError("only 16-bit PCM WAV supported")
-        x = np.frombuffer(wf.readframes(n), dtype=np.int16).astype(np.float64)
-    if len(x) == 0:
-        # a zero-frame WAV is valid; all-zero features instead of the
-        # ValueError ax.max() would raise on an empty array (one
-        # malformed row must not fail the whole mapInPandas task)
-        return [0.0] * dim
-    x /= 32768.0
-    ax = np.abs(x)
-    zcr = float(np.mean(np.signbit(x[:-1]) != np.signbit(x[1:]))) if len(x) > 1 else 0.0
-    hist, _ = np.histogram(ax, bins=8, range=(0.0, 1.0))
-    hist = hist / max(len(x), 1)
-    feats = np.concatenate(
-        [
-            [np.sqrt(np.mean(x * x)), zcr, ax.mean(), ax.std(), ax.max()],
-            hist,
-            [n / rate, float(ch), rate / 1e5],
-        ]
-    )
-    return [float(v) for v in feats[:dim]]
-
-
-def _real_video_features(payload: bytes, dim: int = FEATURE_DIM) -> list[float]:
-    """Decode the y4m stream (stdlib codec — functions/y4m.py) and
-    summarize actual frames: per-plane mean/std for Y/Cb/Cr (6), an
-    8-bin Y histogram (8), frame count and fps (2) → 16 floats.
-    Compressed containers (mp4/webm) need a codec library (ffmpeg/av)
-    this container doesn't ship — y4m_decode raises ValueError on
-    them, marking exactly where a production codec plugs in."""
-    from raft_c_spark.functions.y4m import y4m_decode
-
-    frames, (fnum, fden) = y4m_decode(payload)
-    if frames.size == 0:
-        return [0.0] * dim
-    planes = frames.astype(np.float64) / 255.0
-    y = planes[:, :, :, 0]
-    hist, _ = np.histogram(y, bins=8, range=(0.0, 1.0))
-    hist = hist / y.size
-    feats = np.concatenate(
-        [
-            planes.mean(axis=(0, 1, 2)),
-            planes.std(axis=(0, 1, 2)),
-            hist,
-            [float(len(frames)), fnum / max(fden, 1)],
-        ]
-    )
-    return [float(v) for v in feats[:dim]]
-
-
-def _real_features(kind: str, payload: bytes) -> list[float]:
-    if kind == "image":
-        return _real_image_features(payload)
-    if kind == "audio":
-        return _real_audio_features(payload)
-    return _real_video_features(payload)
-
-
-def extract_features(df: DataFrame, decode: str = "fake") -> DataFrame:
+def extract_features(df: DataFrame) -> DataFrame:
     """payload → fixed-size feature vector, per-batch via mapInPandas
     (Arrow transfer, no per-row python overhead)."""
     out_schema = Ty.StructType(
@@ -176,13 +77,7 @@ def extract_features(df: DataFrame, decode: str = "fake") -> DataFrame:
 
     def kernel(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in batches:
-            if decode == "real":
-                feats = [
-                    _real_features(str(k), bytes(p))
-                    for k, p in zip(pdf["kind"], pdf["payload"])
-                ]
-            else:
-                feats = [_fake_features(bytes(p)) for p in pdf["payload"]]
+            feats = [_fake_features(bytes(p)) for p in pdf["payload"]]
             yield pdf[cols].assign(features=feats)
 
     return df.mapInPandas(kernel, out_schema)
@@ -306,42 +201,36 @@ def expected_decode_stats(n: int = 64, seed: int = 42) -> list[dict]:
     return out
 
 
-def resize_images(df: DataFrame, width: int, height: int, decode: str = "fake") -> DataFrame:
-    """Image resize kernel. Fake mode passes bytes through and updates
-    the metadata (the plumbing under test: binary in/out schema, batch
-    shape); real mode decodes the PNG, nearest-neighbor resizes the
-    pixel array, and re-encodes."""
+def resize_images(df: DataFrame, width: int, height: int) -> DataFrame:
+    """Image resize kernel: decodes each PNG, nearest-neighbor resizes
+    the pixel array, re-encodes it, and updates the width/height
+    metadata."""
 
     def kernel(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        if decode == "real":
-            from raft_c_spark.functions.png import (
-                png_decode,
-                png_encode,
-                resize_nearest,
-            )
+        from raft_c_spark.functions.png import (
+            png_decode,
+            png_encode,
+            resize_nearest,
+        )
+
         for pdf in batches:
-            if decode == "real":
-                pdf = pdf.assign(
-                    payload=[
-                        png_encode(resize_nearest(png_decode(bytes(p)), width, height))
-                        for p in pdf["payload"]
-                    ]
-                )
+            pdf = pdf.assign(
+                payload=[
+                    png_encode(resize_nearest(png_decode(bytes(p)), width, height))
+                    for p in pdf["payload"]
+                ]
+            )
             yield pdf.assign(width=width, height=height)
 
     return df.filter(F.col("kind") == "image").mapInPandas(kernel, df.schema)
 
 
-def sample_frames(
-    df: DataFrame, every_ms: int, decode: str = "fake"
-) -> DataFrame:
+def sample_frames(df: DataFrame, every_ms: int) -> DataFrame:
     """Video frame sampling: one output row per sampled frame
-    (media_id, frame_idx, frame_ts_ms, features). Fake mode derives
-    frame count from duration_ms and features from (payload,
+    (media_id, frame_idx, frame_ts_ms, features). The frame count
+    comes from duration_ms and the features from (payload,
     frame_idx) — the real row-explosion shape without touching the
-    payload. Real mode decodes the y4m stream and computes features
-    from the actual sampled frame's planes; ``frame_idx`` is then the
-    index into the decoded stream (ts × fps)."""
+    payload (``frame_stats`` decodes the stream)."""
     out_schema = Ty.StructType(
         [
             Ty.StructField("media_id", Ty.LongType(), False),
@@ -352,33 +241,19 @@ def sample_frames(
     )
 
     def kernel(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        if decode == "real":
-            from raft_c_spark.functions.y4m import y4m_decode
         for pdf in batches:
             rows = []
             for _, r in pdf.iterrows():
                 dur = int(r["duration_ms"] or 0)
-                if decode == "real":
-                    frames, (fnum, fden) = y4m_decode(bytes(r["payload"]))
-                    if len(frames) == 0:
-                        continue  # zero-frame stream: nothing to sample
                 for idx, ts in enumerate(range(0, max(dur, 1), every_ms)):
-                    if decode == "real":
-                        fi = min(
-                            len(frames) - 1, ts * fnum // (1000 * max(fden, 1))
-                        )
-                        feats = _frame_features(frames[fi])
-                    else:
-                        fi = idx
-                        feats = _fake_features(
-                            bytes(r["payload"]) + idx.to_bytes(4, "big")
-                        )
                     rows.append(
                         {
                             "media_id": r["media_id"],
-                            "frame_idx": fi,
+                            "frame_idx": idx,
                             "frame_ts_ms": ts,
-                            "features": feats,
+                            "features": _fake_features(
+                                bytes(r["payload"]) + idx.to_bytes(4, "big")
+                            ),
                         }
                     )
             yield pd.DataFrame(
@@ -386,23 +261,6 @@ def sample_frames(
             )
 
     return df.filter(F.col("kind") == "video").mapInPandas(kernel, out_schema)
-
-
-def _frame_features(frame: "np.ndarray", dim: int = FEATURE_DIM) -> list[float]:
-    """Single-frame summary: per-plane mean/std (6), 8-bin Y
-    histogram (8), dims/100 (2) → 16 floats."""
-    planes = frame.astype(np.float64) / 255.0
-    y = planes[:, :, 0]
-    hist, _ = np.histogram(y, bins=8, range=(0.0, 1.0))
-    feats = np.concatenate(
-        [
-            planes.mean(axis=(0, 1)),
-            planes.std(axis=(0, 1)),
-            hist / y.size,
-            [frame.shape[1] / 100.0, frame.shape[0] / 100.0],
-        ]
-    )
-    return [float(v) for v in feats[:dim]]
 
 
 #: exact-integer per-sampled-frame summary (oracle-verifiable like
@@ -627,8 +485,8 @@ def synthetic_media(spark, n: int = 64, seed: int = 42) -> DataFrame:
     """Deterministic synthetic media table for pipeline tests (the
     driver ships no media parquet). Image payloads are real PNGs,
     audio payloads real WAVs, and video payloads real y4m streams —
-    the ``decode="real"`` kernels genuinely decode all three for
-    actual pixel/sample/frame features. Served as a parquet scan (see
+    the decoding operators genuinely decode all three for actual
+    pixel/sample/frame statistics. Served as a parquet scan (see
     synthetic_media_path)."""
     return read_parquet(spark, synthetic_media_path(n, seed))
 

@@ -28,20 +28,17 @@ def interval_join(
     start_col: str = "start",
     end_col: str = "end",
     bucket_ns: int = 3_600_000_000_000,
-    how: str = "inner",
 ) -> DataFrame:
-    """Join each point to every interval of the same key containing
-    it (inclusive bounds). ``how='left'`` keeps unmatched points with
-    NULL interval columns."""
-    if how not in ("inner", "left"):
-        raise ValueError(f"unsupported join type {how!r}")
+    """Inner join of each point to every interval of the same key
+    containing it (inclusive bounds); a point inside no interval has
+    no output row."""
     p = points.withColumn("_bucket", F.expr(f"{ts_col} div {bucket_ns}L"))
     iv_cols = [c for c in intervals.columns]
     # inverted intervals (end < start) match nothing — filtered BEFORE
-    # the bucket explode (reviewer r8: F.sequence on a descending pair
-    # generates the whole DESCENDING bucket list — one corrupt row
-    # exploded ~half a million rows per epoch-magnitude inversion
-    # before the bound filter discarded them all)
+    # the bucket explode (F.sequence on a descending pair generates
+    # the whole DESCENDING bucket list — one corrupt row exploded ~half
+    # a million rows per epoch-magnitude inversion before the bound
+    # filter discarded them all)
     iv = (
         intervals.filter(F.col(end_col) >= F.col(start_col))
         .withColumn(
@@ -60,15 +57,4 @@ def interval_join(
         & (F.col(ts_col) <= F.col(end_col))
     )
     joined = p.join(iv, cond, "inner").drop(iv[key]).drop(iv["_bucket"])
-    joined = joined.drop("_bucket")
-    if how == "inner":
-        return joined
-    # left join: re-attach unmatched points
-    matched_keys = joined.select(ts_col, key).distinct()
-    unmatched = points.join(matched_keys, [ts_col, key], "left_anti")
-    for c in iv_cols:
-        if c != key:
-            unmatched = unmatched.withColumn(
-                c, F.lit(None).cast(dict(intervals.dtypes)[c])
-            )
-    return joined.unionByName(unmatched)
+    return joined.drop("_bucket")

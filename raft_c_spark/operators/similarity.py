@@ -483,13 +483,13 @@ def knn_join(
     k: int = 10,
     id_col: str = "vec_id",
     vec_col: str = "embedding",
-    exclude_self: bool = True,
 ) -> DataFrame:
     """Exact batch k-NN join: the ``k`` nearest corpus vectors (by
     cosine) for EVERY query vector — the primitive behind semantic
     dedup and retrieval-based filtering, where a whole batch of
     queries runs against the corpus at once rather than one
-    ``cosine_topk`` per query.
+    ``cosine_topk`` per query. A corpus row with the query's own id is
+    never one of its neighbours.
 
     Physical shape for the typical regime (queries ≪ corpus): the
     packed query matrix broadcasts (cap-enforced), the corpus streams
@@ -545,8 +545,7 @@ def knn_join(
             for i in range(dim):
                 acc += np.outer(cm[:, i], m_q[:, i])
             cos = acc / np.outer(cn, n_q_)
-            if exclude_self:
-                cos[cids[:, None] == ids_q[None, :]] = -np.inf
+            cos[cids[:, None] == ids_q[None, :]] = -np.inf
             keep = min(k, len(cids))
             # per-query top-k within the batch under the final total
             # order (cosine desc, corpus id asc)
@@ -582,14 +581,14 @@ def knn_join_lsh(
     bits: int = 8,
     tables: int = 16,
     cache_key: str | None = None,
-    exclude_self: bool = True,
 ) -> DataFrame:
     """Approximate batch k-NN join — the 100 TB batch-retrieval
     shape: the query batch's signatures bucket-equi-join the
     multi-table LSH index (persisted when ``cache_key`` is given —
     the corpus side is a stored column, only the batch computes
     signatures), candidates get an exact-cosine rerank, and one
-    window merge picks per-query top-k.
+    window merge picks per-query top-k. As in :func:`knn_join`, a
+    query never matches its own id.
 
     Unlike the exact :func:`knn_join` (corpus scan × all queries),
     cost here tracks bucket collisions: candidates ≈ batch ×
@@ -608,9 +607,8 @@ def knn_join_lsh(
         .join(idx, ["table", "sig"])
         .select("q", "doc")
         .distinct()
+        .filter(F.col("q") != F.col("doc"))
     )
-    if exclude_self:
-        cand = cand.filter(F.col("q") != F.col("doc"))
     # rerank: fetch raw candidate vectors FIRST, compute the cast +
     # norm fold on matches only (the previous shape
     # projected with_norm over the WHOLE corpus below the join, so

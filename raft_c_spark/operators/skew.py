@@ -36,7 +36,6 @@ def salted_agg(
             # SQL count('*') counts rows; count(col) skips NULLs —
             # the old F.count(lit(1)) ignored the column argument and
             # diverged from the unsalted groupBy this decomposes
-            # (reviewer r8)
             cnt = F.count(F.lit(1)) if col == "*" else F.count(col)
             stage1_cols.append(cnt.alias(f"_{name}_cnt"))
             stage2_cols.append(F.sum(f"_{name}_cnt").alias(name))
@@ -66,9 +65,8 @@ def salted_join(
     right: DataFrame,
     key: str | list[str],
     n_salts: int = 16,
-    how: str = "inner",
 ) -> DataFrame:
-    """Skew-safe equi-join: split each left-side key into ``n_salts``
+    """Skew-safe inner equi-join: split each left-side key into ``n_salts``
     deterministic subkeys (hash of the whole left row — not rand(),
     so retried tasks salt identically and the result is reproducible)
     and replicate the right side once per salt, turning one hot-key
@@ -80,16 +78,14 @@ def salted_join(
     multiplies the right side ×n_salts — use with a dimension-or-
     smaller right side; for fact×fact skew prefer AQE.
 
-    Supported ``how``: inner / left — right-side multiplicity is
-    preserved because each right row is replicated exactly once per
-    salt and each left row carries exactly one salt."""
+    Right-side multiplicity is preserved because each right row is
+    replicated exactly once per salt and each left row carries exactly
+    one salt."""
     keys = [key] if isinstance(key, str) else list(key)
-    if how not in ("inner", "left"):
-        raise ValueError(f"salted_join supports inner/left, got {how!r}")
     lsalt = F.pmod(F.xxhash64(*[F.col(c) for c in left.columns]), F.lit(n_salts))
     l = left.withColumn("_salt", lsalt.cast("int"))
     r = right.withColumn(
         "_salt", F.explode(F.array(*[F.lit(i) for i in range(n_salts)]))
     )
-    out = l.join(r, keys + ["_salt"], how)
+    out = l.join(r, keys + ["_salt"])
     return out.drop("_salt")

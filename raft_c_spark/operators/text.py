@@ -20,6 +20,12 @@ from pyspark.sql import functions as F
 from raft_c_spark.functions.diskcache import cached_parquet
 from raft_c_spark.functions.metabound import _widen
 
+# The per-row-heavy operators below scan through ``_widen``: a small
+# local file set reads as one task, and widening it only changes row
+# placement, never values. Every consumer is a per-row projection or a
+# key-grouped aggregate (the family's DECIMAL-quantization rule makes
+# every sum order-independent), so results are identical either way.
+
 #: small per-language stopword probes (word-boundary matched, lowercased)
 STOPWORDS: dict[str, list[str]] = {
     "en": ["the", "and", "of", "to", "is", "in"],
@@ -29,21 +35,6 @@ STOPWORDS: dict[str, list[str]] = {
 }
 
 TOKEN_PATTERN = r"[A-Za-z0-9]+|[^A-Za-z0-9\s]"  # BPE-ish: words + punct marks
-
-
-def _scan_wide(df: DataFrame) -> DataFrame:
-    """Corpus-scan parallelism guard for the per-row-heavy text
-    operators: a small local file set reads as ONE task (a parquet row
-    group is the indivisible split unit), serializing the whole
-    regex/gram/kernel pipeline on one core while the session's other
-    cores idle. Repartition up to the session parallelism in exactly
-    that case — delegated to ``metabound._widen``, which is a no-op at
-    many-file (cluster) scale, so nothing extra shuffles at 100 TB.
-    Round-robin repartition only changes row placement, never values:
-    every consumer is a per-row projection or a key-grouped aggregate
-    (the family's DECIMAL-quantization rule makes every sum
-    order-independent), so results are identical either way."""
-    return _widen(df)
 
 
 def whitespace_token_count(col: Column) -> Column:
@@ -136,7 +127,7 @@ def redact_pii(df: DataFrame, text_col: str = "text") -> DataFrame:
     shuffle, no UDF); patterns applied email → url → phone so counts
     refer to the original text and replacements cannot cascade."""
     c = F.col(text_col)
-    out = _scan_wide(df)
+    out = _widen(df)
     for kind, pat in PII_PATTERNS.items():
         out = out.withColumn(
             f"n_{kind}s", F.size(F.regexp_extract_all(c, F.lit(pat), F.lit(0)))
@@ -149,9 +140,9 @@ def redact_pii(df: DataFrame, text_col: str = "text") -> DataFrame:
 
 def analyze(df: DataFrame, text_col: str = "text") -> DataFrame:
     """One-pass enrichment with every text metric — single projection,
-    no shuffle (``_scan_wide`` adds one only where the local scan
+    no shuffle (``_widen`` adds one only where the local scan
     cannot parallelize at all)."""
-    df = _scan_wide(df)
+    df = _widen(df)
     c = F.col(text_col)
     return df.select(
         "*",
@@ -187,7 +178,7 @@ def heavy_hitter_ngrams(
     fix lands everywhere at once (this body once duplicated it
     verbatim).
     """
-    grams = _word_ngrams(_scan_wide(df), id_col, text_col, n).withColumnRenamed(
+    grams = _word_ngrams(_widen(df), id_col, text_col, n).withColumnRenamed(
         "gram", "ngram"
     )
     per_doc = grams.groupBy("doc", "ngram").agg(F.count(F.lit(1)).alias("n"))
@@ -225,7 +216,7 @@ def chunk_documents(
     if not 0 < stride <= chunk:
         raise ValueError("require 0 < stride <= chunk")
     toks = F.regexp_extract_all(F.col(text_col), F.lit(r"\S+"), F.lit(0))
-    # NOT _scan_wide: chunking is emit-heavy, not expression-heavy —
+    # NOT _widen: chunking is emit-heavy, not expression-heavy —
     # an interleaved A/B read the widen exchange as a wash (1.06×)
     # and reverting keeps the operator's zero-Exchange plan pin.
     base = df.select(F.col(id_col).alias("_id"), toks.alias("toks"))
@@ -275,7 +266,7 @@ def tfidf_top_terms(
     """
     from pyspark.sql import Window
 
-    # NOT _scan_wide: an interleaved A/B measured the widen
+    # NOT _widen: an interleaved A/B measured the widen
     # exchange 1.89× SLOWER here — the cost sits in the window/join
     # stages after the tf aggregate, not the tokenize, and the extra
     # round-robin exchange of raw text only added overhead.
@@ -388,7 +379,7 @@ def decontaminate(
     if _estimated_bytes(eval_df) <= broadcast_max_eval_bytes:
         right = F.broadcast(eval_grams)
     return (
-        _word_ngrams(_scan_wide(train), id_col, text_col, n)
+        _word_ngrams(_widen(train), id_col, text_col, n)
         .join(right, "gram")
         .groupBy("doc")
         .agg(F.count_distinct(F.col("gram")).alias("overlap_grams"))
@@ -413,7 +404,7 @@ def repetition_metrics(
     toks = F.regexp_extract_all(
         F.lower(F.col(text_col)), F.lit("[a-z0-9]+"), F.lit(0)
     )
-    base = _scan_wide(df).select(F.col(id_col), toks.alias("toks"))
+    base = _widen(df).select(F.col(id_col), toks.alias("toks"))
 
     def grams(n: int) -> F.Column:
         if n == 1:
@@ -487,7 +478,6 @@ def winnow_fingerprints(
     text_col: str = "text",
     k: int = 8,
     w: int = 4,
-    as_sets: bool = False,
 ) -> DataFrame:
     """Winnowing document fingerprints (Schleimer/Wilkerson/Aiken,
     SIGMOD'03 — the MOSS algorithm): polynomial rolling hashes of
@@ -498,10 +488,9 @@ def winnow_fingerprints(
     of the hashes.
 
     Output per doc: the fingerprint count and an md5 digest of the
-    ordered "pos:hash" pairs (compact, fully deterministic); with
-    ``as_sets`` the raw selected hash-value set instead (for pair
-    joins / intersection tests). Docs shorter than k fingerprint as
-    the empty set.
+    ordered "pos:hash" pairs (compact, fully deterministic);
+    ``_winnow_packed`` is the same selection for one text. Docs
+    shorter than k fingerprint as the empty set.
 
     Scale shape: one narrow Arrow kernel pass (mapInPandas) — text
     in, fingerprints out, no shuffle; the rolling hashes and window
@@ -513,39 +502,14 @@ def winnow_fingerprints(
     oracle (list comprehensions + the same power-of-B literals)."""
     import hashlib
 
-    import numpy as np
     import pandas as pd
-
-    def _fps(text: str) -> "np.ndarray":
-        return _winnow_packed(text, k, w)
-
-    if as_sets:
-
-        def kernel_sets(batches):
-            for pdf in batches:
-                mask = (1 << 31) - 1
-                yield pd.DataFrame(
-                    {
-                        "doc": pdf[id_col],
-                        "fps": [
-                            sorted({int(v) & mask for v in _fps(t)})
-                            for t in pdf[text_col]
-                        ],
-                    }
-                )
-
-        return (
-            _widen(df.select(F.col(id_col), F.col(text_col)))
-            .mapInPandas(kernel_sets, "doc long, fps array<long>")
-            .select(F.col("doc").alias(id_col), "fps")
-        )
 
     def kernel(batches):
         mask = (1 << 31) - 1
         for pdf in batches:
             out_doc, out_n, out_dig = [], [], []
             for doc, t in zip(pdf[id_col], pdf[text_col]):
-                sel = _fps(t)
+                sel = _winnow_packed(t, k, w)
                 src = ",".join(f"{int(v) >> 31}:{int(v) & mask}" for v in sel)
                 out_doc.append(doc)
                 out_n.append(len(sel))
@@ -668,7 +632,7 @@ def bloom_decontaminate(
     bc = train.sparkSession.sparkContext.broadcast(bits)
 
     h1, h2 = _bloom_hashes(F.col("gram"))
-    grams = _word_ngrams(_scan_wide(train), id_col, text_col, n).select(
+    grams = _word_ngrams(_widen(train), id_col, text_col, n).select(
         "doc", h1.alias("h1"), h2.alias("h2")
     )
 
@@ -725,7 +689,7 @@ def quality_classifier(
     toks = F.regexp_extract_all(
         F.lower(F.col(text_col)), F.lit("[a-z0-9]+"), F.lit(0)
     )
-    base = _scan_wide(df).select(F.col(id_col).alias("doc"), toks.alias("toks"))
+    base = _widen(df).select(F.col(id_col).alias("doc"), toks.alias("toks"))
     bigram_idx = F.filter(
         F.sequence(F.lit(1), F.greatest(F.size("toks") - 1, F.lit(1))),
         lambda i: (i + 1) <= F.size("toks"),
@@ -821,7 +785,7 @@ def ngram_lm_score(
         toks = F.regexp_extract_all(
             F.lower(F.col(text_col)), F.lit("[a-z0-9]+"), F.lit(0)
         )
-        # NOT _scan_wide: occ has two heavy consumers (the c12 aggregate
+        # NOT _widen: occ has two heavy consumers (the c12 aggregate
         # and the scoring join) — the multi-consumer shape an
         # interleaved A/B measured the widen LOSING on every time (tfidf
         # 1.89×, collocations 1.31×, lang_kl 2.07×, vocab_growth 1.91×);
@@ -928,7 +892,7 @@ def gopher_rules(
     )
     gopher_sw = r"\b(the|be|to|of|and|that|have|with)\b"
     sw_hits = F.regexp_count(F.lower(F.col(text_col)), F.lit(gopher_sw))
-    df = _scan_wide(df)
+    df = _widen(df)
     r_words = (words >= min_words) & (words <= max_words)
     r_wordlen = (mean_wl >= min_mean_word_len) & (
         mean_wl <= max_mean_word_len
@@ -1264,7 +1228,7 @@ def bm25_topk(
         F.lower(F.col(text_col)), F.lit("[a-z0-9]+"), F.lit(0)
     )
     terms_arr = F.array(*[F.lit(t) for t in terms])
-    # NOT _scan_wide: two consumers (matched + the corpus-stats agg)
+    # NOT _widen: two consumers (matched + the corpus-stats agg)
     # re-execute the lineage; an interleaved A/B read the widen
     # 2.2× slower (epoch-noisy reps, but both clean samples agreed).
     base = df.select(F.col(id_col).alias("doc"), toks.alias("toks"))
@@ -1345,7 +1309,7 @@ def char_entropy(
     projection (functionally dependent on doc) — no join, no window,
     no Python.
     """
-    # NOT _scan_wide: the char explode multiplies rows ~300× before
+    # NOT _widen: the char explode multiplies rows ~300× before
     # the (doc, char) aggregate, so the exchange already parallelizes
     # the heavy phase; an interleaved A/B read the widen at
     # 1.09× (slower).
@@ -1422,7 +1386,7 @@ def lang_unigram_kl(
     toks = F.regexp_extract_all(
         F.lower(F.col(text_col)), F.lit("[a-z0-9]+"), F.lit(0)
     )
-    # NOT _scan_wide: four aggregate consumers re-execute the lineage
+    # NOT _widen: four aggregate consumers re-execute the lineage
     # (the collocations single-consumer rule) and an interleaved
     # A/B measured the widen exchange 2.07× SLOWER end-to-end.
     # ALSO measured and rejected: persisting the (lang, word)
@@ -1526,7 +1490,7 @@ def collocations(
     toks = F.regexp_extract_all(
         F.lower(F.col(text_col)), F.lit("[a-z0-9]+"), F.lit(0)
     )
-    # NOT _scan_wide: three consumers each re-execute the lineage (see
+    # NOT _widen: three consumers each re-execute the lineage (see
     # the stats note below), and an interleaved A/B measured the
     # widen exchange 1.31× SLOWER end-to-end.
     base = df.select(toks.alias("toks"))
@@ -1650,7 +1614,7 @@ def vocab_growth(
     toks = F.regexp_extract_all(
         F.lower(F.col(text_col)), F.lit("[a-z0-9]+"), F.lit(0)
     )
-    # NOT _scan_wide: two aggregate consumers re-execute the lineage
+    # NOT _widen: two aggregate consumers re-execute the lineage
     # and the (grp, word) exchange already parallelizes the heavy
     # phase; an interleaved A/B measured the widen 1.91× SLOWER.
     base = df.select(F.col(group_col).alias("grp"), toks.alias("toks"))
@@ -1732,7 +1696,7 @@ def novelty(
     toks = F.regexp_extract_all(
         F.lower(F.col(text_col)), F.lit("[a-z0-9]+"), F.lit(0)
     )
-    base = _scan_wide(df).select(F.col(id_col).alias("doc"), toks.alias("toks"))
+    base = _widen(df).select(F.col(id_col).alias("doc"), toks.alias("toks"))
     g = F.transform(
         F.sequence(F.lit(1), F.size("toks") - (n - 1)),
         lambda i: F.concat_ws(" ", F.slice("toks", i, n)),

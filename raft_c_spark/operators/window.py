@@ -60,10 +60,9 @@ def asof_join(
     left_ts: str = "timestamp",
     right_ts: str = "timestamp",
     right_cols: list[str] | None = None,
-    strict: bool = False,
 ) -> DataFrame:
     """As-of join: for each left row, the most recent right row with
-    ``right.ts <= left.ts`` (or ``<`` when strict) on the same key.
+    ``right.ts <= left.ts`` on the same key.
 
     Spark lacks a native as-of join; the scalable composition is the
     union-and-carry trick: tag both sides, union, sort within key by
@@ -73,9 +72,9 @@ def asof_join(
     O(|L|·|R|) per key).
 
     Duplicate right rows at the same (key, ts) are totally ordered by
-    the right value struct itself (reviewer r8: with only (ts, side)
-    in the sort, WHICH duplicate's values were carried depended on
-    partition-local order — nondeterministic across runs). The struct
+    the right value struct itself (with only (ts, side) in the sort,
+    WHICH duplicate's values were carried depended on partition-local
+    order — nondeterministic across runs). The struct
     compares field-by-field in ``right_cols`` order, so the carried
     row is the lexicographic maximum — deterministic on any engine.
     Right sides containing non-orderable columns (maps) must exclude
@@ -84,8 +83,8 @@ def asof_join(
     right_cols = right_cols or [
         c for c in right.columns if c not in (key, right_ts)
     ]
-    # side 0 sorts before side 1 at equal ts → with strict=False the
-    # right row at ts == left ts is visible to the left row
+    # side 0 sorts before side 1 at equal ts → the right row at
+    # ts == left ts is visible to the left row
     r_tag = right.select(
         F.col(key).alias("_k"),
         F.col(right_ts).alias("_ts"),
@@ -106,10 +105,6 @@ def asof_join(
         F.lit(None).cast(l2.schema["_l"].dataType).alias("_l"),
         "_r",
     )
-    # strict: right rows at equal ts must NOT be visible → they sort
-    # after left rows (side 2)
-    if strict:
-        r2 = r2.withColumn("_side", F.lit(2))
     u = l2.unionByName(r2)
     w = (
         Window.partitionBy("_k")
@@ -278,7 +273,7 @@ def mad_anomalies(
     doubles, and the threshold compare and robust z are single IEEE
     ops — the whole predicate replays bit-exactly cross-engine.
 
-    Degenerate regime (advisor r7): a series where ≥ 50% of values
+    Degenerate regime: a series where ≥ 50% of values
     equal the median has MAD = 0, making |x − med| > k·0 flag every
     non-median point regardless of ``k`` and robust_z = ±Inf. Such a
     series has no robust scale to judge against, so it is EXCLUDED

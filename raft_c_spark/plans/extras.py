@@ -42,7 +42,7 @@ def q_dedup_ngram_word(spark, sf_dir):
     docs = load_table(spark, sf_dir, "documents")
     return dedup.ngram_jaccard_pairs(
         docs, "doc_id", "text", n=WORD_JACCARD_N, threshold=WORD_JACCARD_T,
-        strategy="prefix", unit="word",
+        unit="word",
         cache_key=data_cache_key(sf_dir, "documents"),
     )
 

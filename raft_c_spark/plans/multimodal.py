@@ -179,9 +179,7 @@ def q_mm_real_resize(spark, sf_dir):
     arrays, never touching the codec), so a hash match proves the
     decode→resize→encode→decode chain is lossless."""
     media = mm.synthetic_media(spark, n=MM_N, seed=MM_SEED)
-    resized = mm.resize_images(
-        media, MM_RESIZE_W, MM_RESIZE_H, decode="real"
-    )
+    resized = mm.resize_images(media, MM_RESIZE_W, MM_RESIZE_H)
     return mm.decode_stats(resized)
 
 
@@ -316,7 +314,7 @@ ORACLES: dict[str, str] = {
 }
 
 
-# ---- image near-dup dedup (round 7): REAL decode → aHash → pairs ----
+# ---- image near-dup dedup: REAL decode → aHash → pairs ----
 
 MM_DEDUP_N = 48  # image-only dup corpus size
 MM_DEDUP_SEED = 43
@@ -452,7 +450,7 @@ ORACLES["mm_image_dedup"] = f"""
 """
 
 
-# ---- audio near-dup dedup (round 7): REAL WAV decode → energy hash ----
+# ---- audio near-dup dedup: REAL WAV decode → energy hash ----
 
 MM_ADEDUP_N = 48
 MM_ADEDUP_SEED = 47
@@ -603,7 +601,7 @@ ORACLES["mm_audio_dedup"] = f"""
 """
 
 
-# ---- video near-dup dedup (round 7): REAL y4m decode → frame hash ----
+# ---- video near-dup dedup: REAL y4m decode → frame hash ----
 
 MM_VDEDUP_N = 36
 MM_VDEDUP_SEED = 53

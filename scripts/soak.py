@@ -83,7 +83,7 @@ def gen_documents(n_docs: int, seed: int, out_dir: str) -> None:
     # real row groups (8k rows): parquet row groups are the
     # indivisible read unit, so a single-row-group 88 MB file scans
     # in ONE task no matter how many byte-range splits Spark makes —
-    # the r6 soak found every shuffle-free operator serialized on the
+    # an earlier soak found every shuffle-free operator serialized on the
     # 500k corpus (winnow: linear kernel measuring 41x). Production
     # files have many groups/files; the soak data must too.
     pq.write_table(
@@ -316,8 +316,7 @@ def _q_ngram_word(spark, sf_dir):
 
     docs = load_table(spark, sf_dir, "documents")
     return dedup.ngram_jaccard_pairs(
-        docs, "doc_id", "text", n=3, threshold=0.6, strategy="prefix",
-        unit="word",
+        docs, "doc_id", "text", n=3, threshold=0.6, unit="word",
     )
 
 
@@ -385,8 +384,8 @@ def _q_bm25_soak(spark, sf_dir):
     return bm25_topk(docs, terms, k=20)
 
 
-# (the r10 ds_lang_kl_staged soak callable is gone: round 11
-# registered the query, so the registry resolves it by name)
+# (ds_lang_kl_staged has no soak callable of its own: it is a
+# registered query, so the registry resolves it by name)
 
 
 #: (label, registry-name-or-callable, scaling expectation note)
@@ -399,7 +398,7 @@ SOAK_QUERIES = [
     ("embedding_lsh_auto", _q_embedding_lsh_auto,
      "near-linear (auto-sized hyperplane buckets)"),
     ("dedup_components", None,
-     "near-linear (LSH pair graph + min-label clustering; re-pointed r5"
+     "near-linear (LSH pair graph + min-label clustering; re-pointed"
      " off the quadratic exact-pair baseline)"),
     ("text_analyze", None, "linear (codegen column exprs)"),
     ("text_winnow", None, "linear (Arrow numpy kernel)"),
@@ -423,8 +422,7 @@ SOAK_QUERIES = [
      "linear (five chained linear stages under one plan)"),
     ("dedup_best_survivor", None,
      "near-linear (banded pairs + components + one map-side-combined "
-     "survivor aggregate — r9: the per-component window is gone)"),
-    # -- round-7 operators --
+     "survivor aggregate — the per-component window is gone)"),
     ("text_lm_score", None,
      "near-linear (bigram stream + two map-side-combined count "
      "aggregates + natural-key joins; occurrences ~ tokens)"),
@@ -435,10 +433,8 @@ SOAK_QUERIES = [
     ("dedup_containment", None,
      "near-linear (contained-side prefix probes ⋈ full index; "
      "word-5-gram df≈1 keeps candidates ~ dup rate)"),
-    # -- round-8 window (judge r7 ask #4: the r7 newcomers that
-    # missed the new-op soak) --
     ("dedup_repeated_spans", None,
-     "near-linear (r8 skew-immune plan: map-side-combined 128-bit "
+     "near-linear (skew-immune plan: map-side-combined 128-bit "
      "gram-hash aggregate + measured-cap broadcast join-back; "
      "occurrences ~ corpus chars)"),
     ("ds_dataset_card", None,
@@ -467,19 +463,18 @@ SOAK_QUERIES = [
     ("ds_dsir_resample", None,
      "linear scan + TakeOrderedAndProject (per-partition k-heaps, "
      "k fixed at 100 — the merge never grows with the corpus)"),
-    # -- round-9 operators --
     ("dedup_segments", None,
      "near-linear (map-side-combined min(struct) per distinct "
      "segment; kept-position lists rebuild text via ONE unique-key "
-     "corpus join — no keep-test join, r9 500k soak fix)"),
+     "corpus join — no keep-test join, a 500k soak fix)"),
     ("text_gopher_rules", None,
      "linear (map-only codegen rules, zero shuffles)"),
     ("ds_contamination_overlap", None,
      "near-flat (per-doc gram dedup is map-side array_distinct; the "
-     "only train shuffle is per-doc counts — r9 500k soak fix)"),
+     "only train shuffle is per-doc counts — a 500k soak fix)"),
     ("ds_ccnet_buckets", None,
      "near-linear (lm_score v3: two scan-bound parses, only the "
-     "vocab-sized bits frame persists — r9 500k soak fix)"),
+     "vocab-sized bits frame persists — a 500k soak fix)"),
     ("sim_knn_recall", None,
      "exact side linear in corpus (broadcast-queries Arrow kernel), "
      "approx side ~ bucket density; overlap join k·|Q| rows"),
@@ -489,7 +484,6 @@ SOAK_QUERIES = [
     ("ds_training_order", None,
      "linear (two-phase prefix rank over the md5 key; the P-row "
      "driver prefix is constant)"),
-    # -- round-10 operators --
     ("text_bpe_tokens", None,
      "linear scan + vocabulary-sized work (train on the word-count "
      "table, encode the distinct-word frame in one Arrow kernel, "
@@ -502,7 +496,6 @@ SOAK_QUERIES = [
      "per rung: index build linear in corpus, probe ~ bucket "
      "density x query batch (batch fixed at 20); tuning cost = the "
      "ladder prefix sum, bounded by the chosen rung"),
-    # -- round-10 second batch --
     ("text_bm25_topk", _q_bm25_soak,
      "linear scan; shuffle = matched tokens only (|terms| ≪ vocab); "
      "df table ≤ |terms| rows broadcast; top-k via per-partition "
@@ -518,7 +511,6 @@ SOAK_QUERIES = [
      "the shared banded pair graph + components, then one unique-key "
      "equi-join and two shrinking aggregates (per-cluster, then "
      "per-size) — the added stages cannot dominate pair generation"),
-    # -- round-10 third batch --
     ("text_collocations", None,
      "linear scan + two vocab-shaped count aggregates; the min_count "
      "filter bounds the joined pair frame; top-k via per-partition "
@@ -535,7 +527,6 @@ SOAK_QUERIES = [
      "linear scan x2 (the (lang,word) and word aggregates each have "
      "ONE consumer) + two cheap no-explode length aggregates; the "
      "join is vocab-shaped, output L rows"),
-    # -- round-11 batch --
     ("ds_ccnet_buckets_approx", None,
      "the shared lm-score plan + one GK-sketch aggregate (bounded "
      "memory per lang) + the L-row broadcast certification counts"),
@@ -551,7 +542,6 @@ SOAK_QUERIES = [
      "two user-keyed windows (bounded per-key state — the sessionize "
      "class) + a map-side 4-row credit stack collapsing to ≤ "
      "4·|types| rows"),
-    # -- round-12 batch --
     ("text_compression", None,
      "linear in corpus bytes (one narrow Arrow DEFLATE kernel at "
      "scan parallelism; text dies inside the kernel batch — no "
@@ -625,11 +615,10 @@ def main() -> None:
             raise SystemExit(f"unknown soak labels: {sorted(missing)}")
 
     # per-scale calibration: the same CPU-bound probe bench.py uses,
-    # sampled before/after each scale's window and medianed — the r6
-    # bench A/B measured 1.8x same-box same-hour swings on a
-    # single-sample probe, so cross-window ratios are only
-    # box-independent when each window carries its own calib
-    # (judge's r5 ask #8)
+    # sampled before/after each scale's window and medianed — a bench
+    # A/B measured 1.8x same-box same-hour swings on a single-sample
+    # probe, so cross-window ratios are only box-independent when each
+    # window carries its own calib
     from pyspark.sql import functions as _F
 
     def calib_probe() -> float:
@@ -644,7 +633,7 @@ def main() -> None:
     # the soak measures the ALGORITHM's scaling, so every timed pass
     # must rebuild derived state from scratch: point the diskcache at
     # a soak-private dir and wipe it before each pass — otherwise the
-    # pair-level caches (r6) turn pass 2 (and, across soak runs,
+    # pair-level caches turn pass 2 (and, across soak runs,
     # pass 1 too) into a parquet read of the previous run's pair
     # frame and the ratio measures cache-read scaling instead (this
     # run's first attempt measured simhash at 150k at 0.34s vs the 6.15s
@@ -662,8 +651,8 @@ def main() -> None:
         except Exception:
             pass
 
-    # INTERLEAVED measurement (r7): each query is timed at BOTH scales
-    # back-to-back, bracketed by calib probes. The r7 first attempt ran
+    # INTERLEAVED measurement: each query is timed at BOTH scales
+    # back-to-back, bracketed by calib probes. A first attempt ran
     # scale-major (all-small then all-big) and the box drifted 2.6x
     # between the windows (small-window calib median 0.827s vs big
     # 0.316s) — several queries measured *faster* at 3.3x the data,

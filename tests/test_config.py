@@ -127,3 +127,49 @@ def test_no_test_module_named_for_a_round():
         if name.startswith("test_") and name.endswith(".py") and _ROUND_TAG.search(name[:-3])
     )
     assert tagged == []
+
+
+def _py_files(*paths):
+    for path in paths:
+        if path.endswith(".py"):
+            yield path
+            continue
+        for root, _dirs, files in os.walk(path):
+            yield from (os.path.join(root, n) for n in files if n.endswith(".py"))
+
+
+def test_no_unselected_bool_operator_flag():
+    """A ``bool`` keyword of a public operator selects a second code
+    path, so some query, the engine or a script must pass its
+    non-default value; a flag that only tests flip keeps a branch
+    alive that no workload runs."""
+    repo = os.path.dirname(PKG)
+    flags = {}
+    for f in _py_files(os.path.join(PKG, "operators")):
+        with open(f, encoding="utf-8") as fh:
+            tree = ast.parse(fh.read(), f)
+        for node in tree.body:
+            if not isinstance(node, ast.FunctionDef) or node.name.startswith("_"):
+                continue
+            a = node.args
+            pairs = list(zip(a.args[len(a.args) - len(a.defaults):], a.defaults))
+            pairs += list(zip(a.kwonlyargs, a.kw_defaults))
+            for arg, default in pairs:
+                if isinstance(default, ast.Constant) and isinstance(default.value, bool):
+                    flags.setdefault((arg.arg, not default.value), []).append(
+                        f"{os.path.basename(f)}:{node.name}"
+                    )
+    passed = set()
+    callers = (
+        os.path.join(PKG, "plans"),
+        os.path.join(PKG, "engine.py"),
+        os.path.join(repo, "scripts"),
+    )
+    for f in _py_files(*callers):
+        with open(f, encoding="utf-8") as fh:
+            tree = ast.parse(fh.read(), f)
+        for node in ast.walk(tree):
+            if isinstance(node, ast.keyword) and isinstance(node.value, ast.Constant):
+                passed.add((node.arg, node.value.value))
+    assert flags, "the scan found no bool operator keyword"
+    assert {k: v for k, v in flags.items() if k not in passed} == {}

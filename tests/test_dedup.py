@@ -175,62 +175,69 @@ def test_simhash_deterministic(docs):
     assert a == b
 
 
+def _reference_pairs(docs, threshold, n=3, unit="char"):
+    """The plain shingle equi-join verifier over the same shingles."""
+    sh = dedup._shingles(docs, "doc_id", "text", n, unit, None)
+    return dedup._jaccard_join(sh, threshold)
+
+
 @pytest.mark.parametrize("threshold", [0.8, 0.5])
-def test_exact_strategies_agree(docs, threshold):
-    """All three exact physical strategies (Arrow-kernel bitmap NLJ,
-    prefix-filter candidates, plain shingle equi-join) must return
-    identical pair sets — completeness proof of the bitmap packing and
-    the prefix filter on real data, at a high and a low threshold
+def test_exact_strategies_agree(docs, threshold, monkeypatch):
+    """Both exact physical strategies (Arrow-kernel bitmap NLJ, which
+    the low-vocabulary corpus takes, and prefix-filter candidates,
+    forced by a zero vocabulary cap) must return the pair set of the
+    plain shingle equi-join — completeness proof of the bitmap packing
+    and the prefix filter on real data, at a high and a low threshold
     (longer prefixes, denser candidates — the regime where an
     off-by-one in the prefix length would show)."""
-    by_strategy = {
-        s: _pairs(
-            dedup.ngram_jaccard_pairs(
-                docs, "doc_id", "text", threshold=threshold, strategy=s
-            )
-        )
-        for s in ("bitmap", "prefix", "join")
-    }
-    assert by_strategy["bitmap"] == by_strategy["join"]
-    assert by_strategy["prefix"] == by_strategy["join"]
-
-
-def test_auto_strategy_dispatch(docs):
-    """auto → bitmap on the low-vocab corpus; a tiny cap forces the
-    prefix path; both remain exact."""
-    auto = dedup.ngram_jaccard_pairs(docs, "doc_id", "text", threshold=0.8)
-    forced_prefix = dedup.ngram_jaccard_pairs(
-        docs, "doc_id", "text", threshold=0.8, max_bitmap_shingles=10
+    ref = _pairs(_reference_pairs(docs, threshold))
+    bitmap = _pairs(
+        dedup.ngram_jaccard_pairs(docs, "doc_id", "text", threshold=threshold)
     )
+    monkeypatch.setattr(dedup, "_MAX_BITMAP_SHINGLES", 0)
+    prefix = _pairs(
+        dedup.ngram_jaccard_pairs(docs, "doc_id", "text", threshold=threshold)
+    )
+    assert bitmap == ref
+    assert prefix == ref
+
+
+def test_auto_strategy_dispatch(docs, monkeypatch):
+    """The vocabulary probe picks bitmap on the low-vocab corpus; a
+    tiny cap sends the same call to the prefix path; both remain
+    exact."""
+    calls = []
+    for name in ("_jaccard_bitmap", "_jaccard_prefix"):
+        real = getattr(dedup, name)
+        monkeypatch.setattr(
+            dedup, name,
+            lambda *a, _n=name, _f=real: calls.append(_n) or _f(*a),
+        )
+    auto = dedup.ngram_jaccard_pairs(docs, "doc_id", "text", threshold=0.8)
+    monkeypatch.setattr(dedup, "_MAX_BITMAP_SHINGLES", 10)
+    forced_prefix = dedup.ngram_jaccard_pairs(
+        docs, "doc_id", "text", threshold=0.8
+    )
+    assert calls == ["_jaccard_bitmap", "_jaccard_prefix"]
     assert _pairs(auto) == _pairs(forced_prefix)
 
 
-def test_shingle_df_cap_is_usable(docs):
-    capped = dedup.ngram_jaccard_pairs(
-        docs, "doc_id", "text", threshold=0.8, max_shingle_df=100,
-        strategy="join",
-    )
-    uncapped = dedup.ngram_jaccard_pairs(docs, "doc_id", "text", threshold=0.8)
-    # the cap is an approximation: it must still find most planted pairs
-    t, c = _pairs(uncapped), _pairs(capped)
-    assert len(t & c) / len(t) >= 0.8
-
-
 def test_word_unit_prefix_matches_join(docs):
-    """Word-gram shingles (the corpus-dedup standard unit): the
-    prefix-filter path must agree exactly with the plain equi-join
-    verifier."""
-    got = {}
-    for s in ("prefix", "join"):
-        got[s] = {
-            (r["a"], r["b"], round(r["jaccard"], 9))
-            for r in dedup.ngram_jaccard_pairs(
-                docs, "doc_id", "text", n=3, threshold=0.5,
-                strategy=s, unit="word",
-            ).collect()
-        }
-    assert got["prefix"] == got["join"]
-    assert got["join"], "threshold too high: empty result is vacuous"
+    """Word-gram shingles (the corpus-dedup standard unit) take the
+    prefix-filter path, which must agree exactly with the plain
+    equi-join verifier."""
+    got = {
+        (r["a"], r["b"], round(r["jaccard"], 9))
+        for r in dedup.ngram_jaccard_pairs(
+            docs, "doc_id", "text", n=3, threshold=0.5, unit="word",
+        ).collect()
+    }
+    want = {
+        (r["a"], r["b"], round(r["jaccard"], 9))
+        for r in _reference_pairs(docs, 0.5, unit="word").collect()
+    }
+    assert got == want
+    assert want, "threshold too high: empty result is vacuous"
 
 
 def test_minhash_between_matches_cross_subset_of_self_join(docs):
@@ -855,7 +862,7 @@ def test_containment_detects_quote_jaccard_misses(spark):
     assert [(p["a"], p["b"]) for p in pairs] == [(1, 2)]
     assert pairs[0]["containment"] == 1.0
     jac = dedup.ngram_jaccard_pairs(
-        df, "doc_id", "text", n=3, threshold=0.5, strategy="prefix", unit="word"
+        df, "doc_id", "text", n=3, threshold=0.5, unit="word"
     )
     assert jac.count() == 0
 

@@ -1,8 +1,8 @@
 """``functions.diskcache``: the one owner of derived on-disk state.
 
 Each fault test injects one failure a hand-rolled exists → write →
-publish sequence mishandles, and checks that ``lookup`` /
-``materialize`` still serve the correct entry: two builders of one key
+publish sequence mishandles, and checks that ``materialize`` still
+serves the correct entry: two builders of one key
 at once, a crashed writer's staging directory, and a truncated cached
 parquet file. The ``cached_parquet`` tests pin that its builder runs
 only on a miss. The guard test keeps cache and staging paths inside
@@ -108,14 +108,16 @@ def test_failed_write_leaves_no_staging(cache_dir):
 def test_each_consult_reports_its_key_once(cache_dir):
     keys = []
     diskcache.set_key_observer(keys.append)
+    def no_write(staging):
+        raise AssertionError("a hit must not build")
+
     try:
-        assert diskcache.lookup("obs") is None
-        diskcache.materialize("obs", _write_dir)
-        assert diskcache.lookup("obs") == str(cache_dir / "obs")
-        diskcache.materialize("obs", _write_dir)
+        assert not (cache_dir / "obs").exists()
+        assert diskcache.materialize("obs", _write_dir) == str(cache_dir / "obs")
+        assert diskcache.materialize("obs", no_write) == str(cache_dir / "obs")
     finally:
         diskcache.set_key_observer(None)
-    assert keys == ["obs"] * 4
+    assert keys == ["obs"] * 2
 
 
 def test_cached_parquet_hit_never_builds(spark, cache_dir):
@@ -216,8 +218,8 @@ _CACHE_PATHS = re.compile(r"cache_path\(|cache_root\(|\.tmp\.\{")
 
 
 def test_no_cache_or_staging_path_outside_diskcache():
-    """Every cache entry is probed with ``lookup`` and built with
-    ``materialize``; a module that names a cache path or a
+    """Every cache entry is probed and built by ``materialize``; a
+    module that names a cache path or a
     ``.tmp.{...}`` staging path would bring back the exists-only
     validity check and the shared-staging race."""
     offenders = []

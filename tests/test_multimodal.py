@@ -1,6 +1,8 @@
-"""Multimodal plumbing tests: the decode kernels are deterministic
-fakes (no media libs in the container), but the Spark mechanics —
-schema, Arrow batching, row explosion, binary columns — are real."""
+"""Multimodal tests: the feature and frame-sampling kernels are
+deterministic fakes whose Spark mechanics — schema, Arrow batching,
+row explosion, binary columns — are real; resize, decode stats, frame
+stats and the perceptual hashes decode the payloads with the stdlib
+PNG, WAV and y4m codecs."""
 
 from __future__ import annotations
 
@@ -61,25 +63,6 @@ def test_frame_sampling_explodes_rows(media):
         assert idxs == list(range(len(frs)))
 
 
-def test_real_decode_images_and_audio(media):
-    """decode='real' genuinely decodes: image features are pixel
-    statistics (bounded in [0,1]-ish ranges), audio features are
-    sample statistics — and both differ from the fake md5 features."""
-    ia = media.filter(F.col("kind").isin("image", "audio"))
-    real = {r["media_id"]: r for r in mm.extract_features(ia, decode="real").collect()}
-    fake = {r["media_id"]: r for r in mm.extract_features(ia).collect()}
-    assert len(real) == len(fake) > 0
-    for mid, r in real.items():
-        assert len(r["features"]) == mm.FEATURE_DIM
-        assert r["features"] != fake[mid]["features"]
-        if r["kind"] == "image":
-            # channel means of uniform-random pixels: near 0.5
-            assert all(0.3 < v < 0.7 for v in r["features"][:3]), r
-        else:
-            # rms of a 0.7-amp sine + 0.2-amp harmonic: ~0.51
-            assert 0.3 < r["features"][0] < 0.7, r
-
-
 def test_decode_stats_matches_preencode_ground_truth(media):
     """decode_stats (encode→PNG/WAV→decode→integer stats) must equal
     expected_decode_stats (stats straight off the pre-encode arrays):
@@ -94,37 +77,9 @@ def test_decode_stats_matches_preencode_ground_truth(media):
         assert got[mid] == w, (mid, got[mid], w)
 
 
-def test_audio_features_empty_wav_guard():
-    """A zero-frame WAV yields all-zero features, not a ValueError."""
-    import io
-    import wave
-
-    buf = io.BytesIO()
-    with wave.open(buf, "wb") as wf:
-        wf.setnchannels(1)
-        wf.setsampwidth(2)
-        wf.setframerate(8000)
-        wf.writeframes(b"")
-    feats = mm._real_audio_features(buf.getvalue())
-    assert feats == [0.0] * mm.FEATURE_DIM
-
-
-def test_real_video_decode(media):
-    """Video decode='real' genuinely decodes the y4m stream: features
-    are frame statistics (uniform-random planes → means near 0.5) and
-    the frame-count feature matches duration×fps."""
-    vid = media.filter(F.col("kind") == "video")
-    rows = mm.extract_features(vid, decode="real").collect()
-    assert rows
-    for r in rows:
-        assert all(0.3 < v < 0.7 for v in r["features"][:3]), r
-        dur = r["duration_ms"]
-        assert r["features"][14] == max(1, dur * mm.VIDEO_FPS // 1000)
-
-
 def test_compressed_video_raises_value_error(spark):
-    """A non-y4m payload (e.g. real mp4 bytes) fails loudly at the
-    codec seam, naming the unsupported format."""
+    """A non-y4m payload (e.g. real mp4 bytes) fails loudly at
+    ``frame_stats``' codec seam, naming the unsupported format."""
     import pandas as pd
 
     pdf = pd.DataFrame(
@@ -134,7 +89,7 @@ def test_compressed_video_raises_value_error(spark):
     ).astype(object)
     df = spark.createDataFrame(pdf, mm.MEDIA_SCHEMA)
     with pytest.raises(Exception) as ei:
-        mm.extract_features(df, decode="real").collect()
+        mm.frame_stats(df, every_ms=500).collect()
     assert "YUV4MPEG2" in str(ei.value)
 
 
@@ -208,7 +163,7 @@ def test_real_resize_reencodes_pixels(media):
 
     out = {
         r["media_id"]: r
-        for r in mm.resize_images(media, 16, 12, decode="real").collect()
+        for r in mm.resize_images(media, 16, 12).collect()
     }
     orig = {
         r["media_id"]: r

@@ -199,7 +199,7 @@ def test_tpch_q6_filter_pushdown(spark, sf_dir):
 def test_whole_stage_codegen_covers_text_analysis(spark, wide_sf_dir):
     """Text analysis must stay inside whole-stage codegen (no Python
     UDF stages in the plan). Pinned on a many-file corpus, where the
-    _scan_wide parallelism guard adds nothing; its round-robin exchange
+    metabound._widen parallelism guard adds nothing; its round-robin exchange
     on a single small file is pinned separately by
     test_scan_wide_exchange_is_round_robin_only."""
     from raft_c_spark.operators import text
@@ -212,8 +212,8 @@ def test_whole_stage_codegen_covers_text_analysis(spark, wide_sf_dir):
 
 
 def test_scan_wide_exchange_is_round_robin_only(spark, sf_dir):
-    """With the guard ON (the default), the ONLY Exchange the widened
-    map-only text operators gain is the guard's round-robin
+    """The ONLY Exchange the widened map-only text operators gain from
+    the ``metabound._widen`` guard is its round-robin
     repartition — never a hash/range shuffle (values and results are
     placement-independent; the guard is a no-op on many-file scans)."""
     import re
@@ -361,7 +361,7 @@ def test_decontaminate_broadcast_filter_no_train_preshuffle(spark, wide_sf_dir):
     a shuffle of its own (the join is a broadcast map-side filter;
     only hit rows shuffle into the count). A distinct/exchange on the
     train side before the join would shuffle the whole corpus's grams
-    at scale. On a many-file corpus: the _scan_wide round-robin
+    at scale. On a many-file corpus: the metabound._widen round-robin
     exchange a single small file gets is a local scan-parallelism fix,
     not a gram shuffle (pinned round-robin-only elsewhere)."""
     from raft_c_spark.plans.sampling import q_ds_decontaminate

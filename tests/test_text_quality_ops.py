@@ -16,6 +16,7 @@ from pyspark.sql import Row
 from pyspark.sql import functions as F
 
 from raft_c_spark.operators import text
+from raft_c_spark.operators.text import _winnow_packed
 from raft_c_spark.sources.testdata import load_table
 from tests.harness import spark_property
 
@@ -126,27 +127,24 @@ class TestWinnowFingerprints:
         assert by_id[1]["fp_digest"] == by_id[2]["fp_digest"]
         assert by_id[1]["n_fps"] == by_id[2]["n_fps"] > 0
 
-    def test_winnowing_guarantee_on_shared_substring(self, spark):
+    @staticmethod
+    def _hashes(t, k=8, w=4):
+        """The selected hash values of one text (positions dropped)."""
+        return {int(v) & ((1 << 31) - 1) for v in _winnow_packed(t, k, w)}
+
+    def test_winnowing_guarantee_on_shared_substring(self):
         """The winnowing guarantee: any shared substring of length
         ≥ k + w - 1 (= 11 here) produces at least one shared
         selected hash between the two documents."""
         shared = "abcdefghijklmnop"  # 16 chars >> 11
-        out = text.winnow_fingerprints(
-            _docs(spark, [(1, "xx " + shared + " yy"),
-                          (2, "completely other prefix " + shared)]),
-            k=8, w=4, as_sets=True,
-        ).collect()
-        sets = {r["doc_id"]: set(r["fps"]) for r in out}
-        assert sets[1] & sets[2], "guarantee violated: no shared fingerprint"
+        a = self._hashes("xx " + shared + " yy")
+        b = self._hashes("completely other prefix " + shared)
+        assert a & b, "guarantee violated: no shared fingerprint"
 
-    def test_disjoint_texts_disjoint_fingerprints(self, spark):
-        out = text.winnow_fingerprints(
-            _docs(spark, [(1, "aaaa bbbb cccc dddd eeee"),
-                          (2, "zzzz yyyy xxxx wwww vvvv")]),
-            as_sets=True,
-        ).collect()
-        sets = {r["doc_id"]: set(r["fps"]) for r in out}
-        assert sets[1] and sets[2] and not (sets[1] & sets[2])
+    def test_disjoint_texts_disjoint_fingerprints(self):
+        a = self._hashes("aaaa bbbb cccc dddd eeee")
+        b = self._hashes("zzzz yyyy xxxx wwww vvvv")
+        assert a and b and not (a & b)
 
     def test_short_docs_empty_fingerprints(self, spark):
         out = {r["doc_id"]: r for r in text.winnow_fingerprints(
@@ -189,8 +187,6 @@ class TestWinnowKernelProperties:
         from hypothesis import given, settings
         from hypothesis import strategies as st
 
-        from raft_c_spark.operators.text import _winnow_packed
-
         @settings(max_examples=300, deadline=None)
         @given(
             text=st.text(
@@ -209,8 +205,6 @@ class TestWinnowKernelProperties:
     def test_kernel_handles_repeated_chars(self):
         # constant text → all hashes equal → rightmost-min rule picks
         # the LAST position of every window; selections collapse
-        from raft_c_spark.operators.text import _winnow_packed
-
         got = _winnow_packed("aaaaaaaaaaaaaaaa", 8, 4)
         ref = self._reference("aaaaaaaaaaaaaaaa", 8, 4)
         assert [int(v) for v in got] == ref
